@@ -557,14 +557,13 @@ def q_f_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus haversine km (HogGeograph.scala:35-58) on synthesized
     coordinates, rounded to 1e-4."""
     cust = _t(spark, sf_dir, "customer")
-    ip = F.concat_ws(
-        ".",
-        F.lit("10"),
-        (F.col("c_custkey") % 256).cast("string"),
-        ((F.col("c_custkey") / 256).cast("long") % 256).cast("string"),
-        (F.col("c_nationkey") % 256).cast("string"),
+    ip_sql = (
+        "CASE WHEN c_custkey % 97 = 0 THEN 'not-an-ip' ELSE concat_ws('.', "
+        "'10', CAST(c_custkey % 256 AS STRING), "
+        "CAST(CAST(c_custkey / 256 AS BIGINT) % 256 AS STRING), "
+        "CAST(c_nationkey % 256 AS STRING)) END"
     )
-    ipcol = F.when(F.col("c_custkey") % 97 == 0, F.lit("not-an-ip")).otherwise(ip)
+    ipcol = F.expr(ip_sql)
     lat1 = (F.col("c_custkey") % 180 - 90).cast("double")
     lon1 = (F.col("c_custkey") % 360 - 180).cast("double")
     lat2 = (F.col("c_nationkey") * 7 % 180 - 90).cast("double")
@@ -572,7 +571,7 @@ def q_f_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cust.select(
         "c_custkey",
         HF.ip_significant_network(ipcol).alias("net"),
-        F.lower(F.hex(HF.ip_to_bytes(ipcol))).alias("ip_hex"),
+        F.lower(F.hex(HF.ip_to_bytes(ip_sql))).alias("ip_hex"),
         F.round(HF.haversine_km(lat1, lon1, lat2, lon2), 4).alias("dist_km"),
     )
 
@@ -976,14 +975,14 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4 rule-based corpus quality filter (Rae et al. 2021 App.
     A1.1; Raffel et al. 2020 §2.2): word/line stats, symbol and bullet
     ratios, duplicate-line fractions, top-bigram coverage, and the
-    combined gopher_pass flag.  Pure per-row array expressions — zero
+    combined gopher_pass flag.  One per-row Arrow kernel — zero
     shuffles in the operator (see operators/quality.py docstring for
     the 100 TB plan); spread_small_scan floors the parallelism when the
     input is an unsplittable single-row-group file (no-op at scale)."""
     from hogzilla_spark.operators import quality as QL
 
     docs = spread_small_scan(_t(spark, sf_dir, "documents"))
-    return QL.doc_quality_signals(docs)
+    return QL.doc_quality_signals_kernel(docs)
 
 def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document text analysis: token stats, punctuation/stopword

@@ -75,10 +75,9 @@ def prepare_auth(auth: DataFrame, ua_count_hint: int | None = None) -> DataFrame
     shuffle is already queued."""
     raw_ua = F.coalesce("userAgent", F.lit(""))
     auth = auth.withColumn("__ua_raw", raw_ua)
-    # parsed-SQL twin of ua_family (one round trip vs ~1,700 for the
-    # 171-rule Column chain — 1.12 s of build time per call, r12);
-    # plan/value-identical, twin-tested on the vendored uap-core
-    # vectors (tests/test_scalar_sql_twins.py)
+    # the 171-rule CASE tree parses in one round trip (a Column-chain
+    # build cost 1.12 s per call, r12); row goldens on the vendored
+    # uap-core vectors live in tests/test_auth.py
     fams = (
         auth.select("__ua_raw")
         .distinct()

@@ -13,8 +13,6 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hogzilla_spark.functions.scalar import ip_to_bytes
-
 @dataclass(frozen=True)
 class Signature:
     """HogSignature(class, name, priority, revision, id, group)
@@ -88,14 +86,11 @@ def mk_alert(
 
     Build shape (r12): the caller's Columns are bound to stable names
     in one aliased select, then the whole alert projection is parsed
-    from SQL text in one selectExpr.  The old fully-Column form cost
-    ~1,700 py4j driver round trips per call site (~0.4 s of build time
-    each, ×19 call sites across the registry — guide §1's "time the
-    computation" includes plan build, and the driver's bench does
-    too).  The two projections collapse to the identical expression
-    tree (ip_to_bytes/human_bytes SQL twins are value-identical by
-    tests/test_scalar_sql_twins.py; alert goldens and the detector
-    oracles pin the end-to-end values).
+    from SQL text in one selectExpr built from the scalar library's
+    `*_sql` builders.  A fully-Column build costs ~1,700 py4j round
+    trips per call site (~0.4 s of build time each, ×19 call
+    sites across the registry).  Row goldens in tests/test_functions.py
+    and the detector oracles pin the values.
     """
     from hogzilla_spark.functions.scalar import (
         human_bytes_sql,

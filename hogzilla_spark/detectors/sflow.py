@@ -115,7 +115,7 @@ def smtp_talkers(
             F.lit("HZ: SMTP talker identified ("),
             F.col("connections"),
             F.lit(" flows, "),
-            human_bytes(F.col("bytesUp") * F.col("sampleRate")),
+            human_bytes("bytesUp * sampleRate"),
             F.lit(")"),
         ),
         {
@@ -340,7 +340,7 @@ def dns_tunnel(
         F.lit("255.255.255.255"),
         F.concat(
             F.lit("HZ: DNS tunnel ("),
-            human_bytes((F.col("bytesUp") + F.col("bytesDown")) * F.col("sampleRate")),
+            human_bytes("(bytesUp + bytesDown) * sampleRate"),
             F.lit(")"),
         ),
         {
@@ -675,7 +675,7 @@ def top_talkers(
         F.lit("255.255.255.255"),
         F.concat(
             F.lit("HZ: Top talker identified ("),
-            human_bytes(F.col("bytesUp") * F.col("sampleRate")),
+            human_bytes("bytesUp * sampleRate"),
             F.lit(")"),
         ),
         {

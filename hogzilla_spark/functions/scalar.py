@@ -1,14 +1,19 @@
 """Scalar function library (SURVEY.md §2.8 F1-F15).
 
-All implemented as native Column expressions (JVM-side, codegen-able) —
-no Python UDFs in the hot path.  Semantics match the reference where it
+All implemented as native expressions (JVM-side, codegen-able) — no
+Python UDFs in the hot path.  Semantics match the reference where it
 matters (sentinels, error defaults), with citations.
+
+The larger functions (`human_bytes`, `ip_to_bytes`, `is_my_ip`,
+`ua_family`) have ONE implementation each: a `*_sql` builder that
+returns Spark SQL text over an expression text `x`.  Hot paths splice
+that text into one parsed selectExpr (a Column-API chain costs one py4j
+round trip per node — ~0.1 s per humanBytes call site and ~1.1 s per
+ua_family compile, r12 profile); the Column names are one-line
+`F.expr(...)` wrappers over the same builder.
 """
 
 from __future__ import annotations
-
-from functools import reduce
-from operator import or_
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -42,20 +47,6 @@ def round6u(c: Column, digits: int = 6) -> Column:
 
 _UNITS = ["b", "K", "M", "G", "T", "P"]
 
-def human_bytes(c: Column | str) -> Column:
-    """bytes → "1.5G"-style display string (presentation only).
-
-    Mirrors HogSFlow.humanBytes: log-1024 bucket, one decimal.
-    """
-    c = _col(c).cast("double")
-    exp = F.when(c < 1024, F.lit(0)).otherwise(
-        F.floor(F.log(c) / F.log(F.lit(1024.0)))
-    )
-    exp = F.least(exp, F.lit(len(_UNITS) - 1)).cast("int")
-    unit = F.element_at(F.array(*[F.lit(u) for u in _UNITS]), exp + 1)
-    scaled = c / F.pow(F.lit(1024.0), exp.cast("double"))
-    return F.concat(F.format_number(scaled, 1), unit)
-
 def sql_quote(s: str) -> str:
     """Python string → Spark SQL single-quoted literal (default
     escapedStringLiterals=false backslash escaping)."""
@@ -66,14 +57,10 @@ def sql_quote(s: str) -> str:
     )
 
 def human_bytes_sql(x: str) -> str:
-    """SQL-text twin of `human_bytes` over the expression text `x` —
-    same functions on the same doubles, so values are identical.
+    """bytes → "1.5G"-style display string (presentation only), as SQL
+    text over the expression text `x`.
 
-    Exists because mk_alert builds its whole projection as ONE parsed
-    selectExpr (a Column-API humanBytes chain costs ~50 py4j driver
-    round trips per call site — ~0.1 s of pure build time, r12
-    profile).  `human_bytes` stays the reference the twin test
-    (tests/test_scalar_sql_twins.py) compares against.
+    Mirrors HogSFlow.humanBytes: log-1024 bucket, one decimal.
     """
     c = f"CAST({x} AS DOUBLE)"
     exp = (
@@ -86,40 +73,18 @@ def human_bytes_sql(x: str) -> str:
         f"concat(format_number({scaled}, 1), element_at({units}, {exp} + 1))"
     )
 
+def human_bytes(x: str) -> Column:
+    return F.expr(human_bytes_sql(x))
+
 # --- F2: formatIPtoBytes (HogSFlow.scala:715-722, HogEvent.scala:44-58) -----
 
-def ip_to_bytes(c: Column | str) -> Column:
-    """Dotted-quad → 4-byte binary; IPv6 → 255.255.6.6; bogus → 255.255.1.1.
-
-    Keeps the reference's sentinel semantics exactly.
-    """
-    c = _col(c)
-    parts = F.split(c, r"\.")
-    is_v4 = c.rlike(r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$")
-    is_v6 = c.contains(":")
-    def octets_to_bin(o1, o2, o3, o4):
-        # build via conv to hex then unhex for a pure-expression binary
-        hx = F.concat(
-            *[F.lpad(F.conv(o.cast("string"), 10, 16), 2, "0") for o in (o1, o2, o3, o4)]
-        )
-        return F.unhex(hx)
-    v4 = octets_to_bin(
-        # F.get: 0-indexed and null-tolerant under ANSI mode
-        F.get(parts, 0).try_cast("int"),
-        F.get(parts, 1).try_cast("int"),
-        F.get(parts, 2).try_cast("int"),
-        F.get(parts, 3).try_cast("int"),
-    )
-    v6_sentinel = F.unhex(F.lit("FFFF0606"))
-    bogus_sentinel = F.unhex(F.lit("FFFF0101"))
-    return F.when(is_v4, v4).when(is_v6, v6_sentinel).otherwise(bogus_sentinel)
-
 def ip_to_bytes_sql(x: str) -> str:
-    """SQL-text twin of `ip_to_bytes` over the expression text `x` —
-    same function tree (rlike gate, per-octet try_cast→conv→lpad,
-    unhex, sentinel branches), so values are identical.  Same
-    build-time rationale as `human_bytes_sql`; twin-tested against the
-    Column form."""
+    """Dotted-quad → 4-byte binary; IPv6 → 255.255.6.6; bogus →
+    255.255.1.1, as SQL text over the expression text `x`.
+
+    Keeps the reference's sentinel semantics exactly; per-octet
+    try_cast/get stay null-tolerant under ANSI mode.
+    """
     octets = ", ".join(
         f"lpad(conv(CAST(try_cast(get(split({x}, '\\\\.'), {i}) AS INT) "
         f"AS STRING), 10, 16), 2, '0')"
@@ -131,6 +96,9 @@ def ip_to_bytes_sql(x: str) -> str:
         f"WHEN contains({x}, ':') THEN unhex('FFFF0606') "
         f"ELSE unhex('FFFF0101') END"
     )
+
+def ip_to_bytes(x: str) -> Column:
+    return F.expr(ip_to_bytes_sql(x))
 
 # --- F3: ipSignificantNetwork (HogSFlow.scala:733-742) ----------------------
 
@@ -148,15 +116,20 @@ def ip_significant_network(c: Column | str) -> Column:
 
 # --- F4/P6: isMyIP prefix test (HogSFlow.scala:725-731) ---------------------
 
-def is_my_ip(c: Column | str, my_nets: list[str]) -> Column:
-    """ip startsWith any(myNets).  For small operator-managed prefix lists
-    this folds to an OR chain of startswith — Catalyst keeps it codegen'd.
-    For large lists use operators.joins.prefix_match_join instead.
+def is_my_ip_sql(x: str, my_nets: list[str]) -> str:
+    """ip startsWith any(myNets), as parenthesized SQL text over the
+    expression text `x`.  For small operator-managed prefix lists this
+    is an OR chain of startswith — Catalyst keeps it codegen'd.  For
+    large lists use operators.joins.prefix_match_join instead.
     """
-    c = _col(c)
     if not my_nets:
-        return F.lit(False)
-    return reduce(or_, [c.startswith(p) for p in my_nets])
+        return "(false)"
+    return "(" + " OR ".join(
+        f"startswith({x}, {sql_quote(p)})" for p in my_nets
+    ) + ")"
+
+def is_my_ip(x: str, my_nets: list[str]) -> Column:
+    return F.expr(is_my_ip_sql(x, my_nets))
 
 # --- F5: log-scale binning (HogSFlow.scala:1791,1898,2009) ------------------
 
@@ -222,53 +195,12 @@ def strip_accents(c: Column | str) -> Column:
 # CASE of `rlike`s / `regexp_extract`s — whole-stage codegen, no UDF.
 # Swapping in the full uap-core dataset is a ua_data.py-only change.
 
-def _compile_parsers(
-    c: Column, parsers: list[dict[str, str]], replacement_key: str
-) -> Column:
-    out = F.lit("Other")
-    for p in reversed(parsers):
-        rx = p["regex"]
-        repl = p.get(replacement_key)
-        if repl is None:
-            fam: Column = F.regexp_extract(c, rx, 1)
-        elif "$1" in repl:
-            pre, post = repl.split("$1", 1)
-            fam = F.concat(
-                F.lit(pre), F.regexp_extract(c, rx, 1), F.lit(post)
-            )
-        else:
-            fam = F.lit(repl)
-        out = F.when(c.rlike(rx), fam).otherwise(out)
-    return out
-
-def ua_family(c: Column | str) -> Column:
-    """Raw user-agent → "OS family/browser family" label, the value the
-    reference stores per auth event (uap-scala Parser.default → family
-    only, HogAuth.scala:293-298).  Ordered first-match-wins regex rules
-    in the uap-core style; unknown sides → "Other"; empty/null → ""
-    (the reference short-circuits length==0 to "")."""
-    from hogzilla_spark.functions.ua_data import OS_PARSERS, USER_AGENT_PARSERS
-
-    c = _col(c)
-    return F.when(
-        c.isNull() | (c == ""), F.lit("")
-    ).otherwise(
-        F.concat(
-            _compile_parsers(c, OS_PARSERS, "os_replacement"),
-            F.lit("/"),
-            _compile_parsers(c, USER_AGENT_PARSERS, "family_replacement"),
-        )
-    )
-
 def _compile_parsers_sql(
     x: str, parsers: list[dict[str, str]], replacement_key: str
 ) -> str:
-    """SQL-text twin of `_compile_parsers` over the expression text
-    `x`: the identical nested first-match-wins CASE tree, parsed in
-    one round trip instead of ~10 py4j calls per rule (171 rules =
-    ~0.56 s of driver build time per compile, r12 profile).  Twin
-    value-identity pinned by tests/test_scalar_sql_twins.py against
-    the vendored uap-core vectors."""
+    """One parser table as a nested first-match-wins CASE over the
+    expression text `x`: missing replacement → capture group 1, "$1"
+    substitutes it, no match → "Other"."""
     out = "'Other'"
     for p in reversed(parsers):
         rx = sql_quote(p["regex"])
@@ -287,10 +219,12 @@ def _compile_parsers_sql(
     return out
 
 def ua_family_sql(x: str) -> str:
-    """SQL-text twin of `ua_family` over the expression text `x` —
-    same rule tables, same nested CASE trees, same empty/null
-    short-circuit; `ua_family` stays the Column reference the twin
-    test compares against."""
+    """Raw user-agent → "OS family/browser family" label, the value the
+    reference stores per auth event (uap-scala Parser.default → family
+    only, HogAuth.scala:293-298), as SQL text over the expression text
+    `x`.  Ordered first-match-wins regex rules in the uap-core style;
+    unknown sides → "Other"; empty/null → "" (the reference
+    short-circuits length==0 to "")."""
     from hogzilla_spark.functions.ua_data import OS_PARSERS, USER_AGENT_PARSERS
 
     os_side = _compile_parsers_sql(x, OS_PARSERS, "os_replacement")
@@ -300,10 +234,13 @@ def ua_family_sql(x: str) -> str:
         f"ELSE concat({os_side}, '/', {ua_side}) END"
     )
 
+def ua_family(x: str) -> Column:
+    return F.expr(ua_family_sql(x))
+
 def _compile_device(
     c: Column, parsers: list[dict[str, str]], key: str, unmatched: str
 ) -> Column:
-    """Device-table compiler: like _compile_parsers but with uap-core's
+    """Device-table compiler: like _compile_parsers_sql but with uap-core's
     device defaults (device/model fall back to capture group 1, brand
     to empty when the replacement key is absent)."""
     out = F.lit(unmatched)

@@ -3,7 +3,7 @@
 The reference builds ``sflowSummary`` — the shared input of every sFlow
 detector — by orienting each sampled packet into the (myIP, alienIP)
 frame and reducing on the 5-tuple (HogSFlow.scala:789-882).  Here it is
-one declarative groupBy over a ``when``-chain projection; Catalyst plans
+one declarative groupBy over a CASE-chain projection; Catalyst plans
 a partial+final hash aggregate (same shape as the reference's
 ``reduceByKey``, minus the hand-scheduling).
 
@@ -22,20 +22,10 @@ from hogzilla_spark.functions.scalar import (
     TCP_PSHACK,
     TCP_SYN,
     TCP_SYNACK,
+    is_my_ip_sql,
 )
 
 UNKNOWN, LEFTRIGHT, RIGHTLEFT, OCCURRED = 0, 1, -1, 1
-
-def _is_my_ip_sql(col: str, my_nets: list[str]) -> str:
-    """SQL-text twin of `is_my_ip` (same left-folded OR of startswith
-    predicates), parenthesized for safe embedding."""
-    from hogzilla_spark.functions.scalar import sql_quote
-
-    if not my_nets:
-        return "(false)"
-    return "(" + " OR ".join(
-        f"startswith({col}, {sql_quote(p)})" for p in my_nets
-    ) + ")"
 
 def orient_flows(sflows: DataFrame, my_nets: list[str]) -> DataFrame:
     """P7: per-packet direction/status inference + (myIP, alienIP) orientation.
@@ -48,14 +38,10 @@ def orient_flows(sflows: DataFrame, my_nets: list[str]) -> DataFrame:
       - If src is not a my-net IP the tuple is flipped to (dst, src) and
         the direction vote is negated; bytes land on bytesDown.
     """
-    # Built as ONE parsed selectExpr (r12): the Column-chain form cost
+    # Built as ONE parsed selectExpr (r12): a Column-chain build costs
     # ~0.2 s of py4j driver round trips per call, ×14 call sites across
-    # the registry.  The parsed text yields the byte-identical physical
-    # plan modulo expression ids (plans/r12 diff = 0 lines for every
-    # consumer query), so values are unchanged by construction; the old
-    # Column build is kept verbatim as the reference twin in
-    # tests/test_rollup_sql_build.py.
-    sm = _is_my_ip_sql("srcIP", my_nets)
+    # the registry.  Row goldens in tests/test_rollup.py pin the output.
+    sm = is_my_ip_sql("srcIP", my_nets)
 
     # port heuristic only when flags decided nothing.  The reference's
     # two sequential `if`s (HogSFlow.scala:838-845) are last-write-wins:
@@ -117,8 +103,8 @@ def sflow_summary(sflows: DataFrame, my_nets: list[str]) -> DataFrame:
 def icmp_summary(sflows: DataFrame, my_nets: list[str]) -> DataFrame:
     """A2: ICMP/ICMPv6 variant keyed (myIP, icmpType, alienIP, icmpCode,
     proto); srcPort/dstPort carry type/code (HogSFlow.scala:885-939)."""
-    # same parsed-selectExpr build shape (and twin test) as orient_flows
-    sm = _is_my_ip_sql("srcIP", my_nets)
+    # same parsed-selectExpr build shape (and row golden) as orient_flows
+    sm = is_my_ip_sql("srcIP", my_nets)
     oriented = sflows.filter(F.col("IPprotocol").isin("1", "58")).selectExpr(
         f"CASE WHEN {sm} THEN srcIP ELSE dstIP END AS myIP",
         f"CASE WHEN {sm} THEN srcPort ELSE dstPort END AS icmpType",

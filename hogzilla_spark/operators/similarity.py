@@ -119,12 +119,13 @@ def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
 
     # int32 bit weights overflow at 1<<31 (numpy>=2 raises; older numpy
     # wraps negative), and widening to int64 would silently change the
-    # signature column's Spark type — assert the latent bound instead
+    # signature column's Spark type — reject the latent bound instead
     # (ADVICE r12; callers today pass <=4 planes)
-    assert len(planes) < 31, (
-        f"hyperplane_signature supports at most 30 planes (int32 bucket); "
-        f"got {len(planes)}"
-    )
+    if len(planes) >= 31:
+        raise ValueError(
+            f"hyperplane_signature supports at most 30 planes (int32 bucket); "
+            f"got {len(planes)}"
+        )
     pmat = F.array(*[_const_array(p) for p in planes])
     weights = F.lit(np.asarray([1 << i for i in range(len(planes))], dtype=np.int32))
     bits = F.transform(

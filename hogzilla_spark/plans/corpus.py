@@ -156,11 +156,8 @@ def prepare_corpus(
         dup_ngram_char_fractions,
     )
 
-    # Arrow kernel twin of doc_quality_signals (r13, VERDICT r12 task 3):
-    # row-identical by pinned twin tests; the interpreted Column folds
-    # measured 28 s per 500 k docs at sf10 in this stage.  The registry
-    # query q_doc_quality keeps the expression path (the oracle-gated
-    # reference).
+    # the same Arrow kernel the registry query q_doc_quality runs, so
+    # the DuckDB oracle gates this stage's signals too
     sig = doc_quality_signals_kernel(docs).select(
         "doc_id", "n_tok", "gopher_pass"
     )

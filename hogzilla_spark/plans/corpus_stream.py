@@ -8,8 +8,8 @@ the streaming operators into the same shape as batch stages 1/3/4:
   clean stream     raw docs → streaming exact dedup (first-arrival-wins
                    on the batch fingerprint, `streaming/dedup_stream`)
                    → per-batch Gopher/C4 quality signals (a narrow map,
-                   `operators/quality.doc_quality_signals`, joined back
-                   inside foreachBatch) → `clean_docs` parquet sink
+                   `operators/quality.doc_quality_signals_kernel`, joined
+                   back inside foreachBatch) → `clean_docs` parquet sink
   candidate stream raw docs → streaming MinHash-LSH band index
                    (`streaming/neardup_stream`) → `neardup_candidates`
                    parquet sink
@@ -24,7 +24,7 @@ restart independently with no replay (asserted by the restart test).
 
 State bounds are the component operators': fingerprint state = rate ×
 watermark horizon; band-bucket state = FIFO-capped signatures per
-bucket.  The quality stage is stateless (per-row folds).  Exactly the
+bucket.  The quality stage is stateless (a per-row kernel).  Exactly the
 batch/stream split the batch pipeline documents: a periodic
 `plans/corpus.py` sweep catches what eviction let through, and the
 fingerprints/signatures agree bit-for-bit by construction.
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from hogzilla_spark.operators.quality import doc_quality_signals
+from hogzilla_spark.operators.quality import doc_quality_signals_kernel
 from hogzilla_spark.operators.text import LMModel, lm_score, perplexity_col
 from hogzilla_spark.streaming.dedup_stream import dedup_stream
 from hogzilla_spark.streaming.neardup_stream import minhash_pair_stream
@@ -110,7 +110,9 @@ def corpus_ingest_stream(
         # write must be idempotent PER batch_id — each batch overwrites
         # its own partition directory (a plain append would duplicate
         # the batch's rows, exact duplicates in an exact-dedup output).
-        sig = doc_quality_signals(batch_df, text_col=text_col, id_col=id_col)
+        sig = doc_quality_signals_kernel(
+            batch_df, text_col=text_col, id_col=id_col
+        )
         out = batch_df.join(sig, id_col)
         if lm_model is not None:
             lm = lm_score(batch_df, lm_model, id_col=id_col, text_col=text_col)

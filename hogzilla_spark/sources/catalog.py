@@ -151,8 +151,10 @@ def spread_small_scan(
     callers (regex shingling, vector probe folds — measured wins at the
     graded config) keep the plain floor with the defaults.  Inputs with
     unavailable size estimates keep the old unconditional behaviour.
+    The estimate (several py4j round trips) is computed only when one of
+    those gates is set.
     """
-    est = plan_input_bytes(df)
+    est = plan_input_bytes(df) if (min_bytes or bytes_per_task) else None
     if min_bytes and est is not None and est < min_bytes:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism

@@ -44,7 +44,7 @@ def start_auth_stream(
     Replay-idempotent: foreachBatch is at-least-once, so a crash
     between the state commit and the checkpoint commit re-delivers the
     batch on restart.  The last-applied batch id travels inside the
-    state store's atomic pointer swap (store.save(batch_id=...)) and
+    state store's atomic pointer swap (store.upsert(batch_id=...)) and
     replayed batches are skipped; alerts land under a per-batch
     ``batch_id=<n>`` path with overwrite, so a replay that DID lose the
     state commit rewrites the same alert files instead of appending
@@ -99,9 +99,7 @@ def start_auth_stream(
         alerts.write.mode("overwrite").parquet(
             os.path.join(alerts_dir, f"batch_id={batch_id}")
         )
-        store.save(
-            store.apply_updates(saved, updates), state_path, batch_id=batch_id
-        )
+        store.upsert(spark, updates, state_path, batch_id=batch_id, saved=saved)
         saved.unpersist()
         batch_df.unpersist()
 

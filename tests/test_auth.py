@@ -276,6 +276,24 @@ def test_ua_family_realistic_fixture(spark):
     ]
     assert not mism, mism
 
+# Edge inputs for ua_family, with the retired Column-chain form's output
+# frozen as the expected value (the realistic fixture above pins the
+# rest): NULL/empty short-circuit, and regex-special characters that
+# must survive SQL quoting.
+_UA_EDGE_GOLDEN = [
+    (None, ""),
+    ("", ""),
+    ("quote ' backslash \\ in UA", "Other/Other"),
+    ("Mozilla/5.0 (Windows NT 10.0) Chrome/120.0 Safari/537.36", "Windows/Chrome"),
+    ("curl/7.79.1", "Other/curl"),
+    ("random text", "Other/Other"),
+]
+
+def test_ua_family_edge_golden(spark):
+    df = spark.createDataFrame([(ua,) for ua, _ in _UA_EDGE_GOLDEN], "ua string")
+    got = [r.f for r in df.select(ua_family("ua").alias("f")).collect()]
+    assert got == [fam for _, fam in _UA_EDGE_GOLDEN]
+
 # UA → expected device (family, brand, model) under the uap-core-style
 # DEVICE_PARSERS table: Spider-first ordering, brand model-token rules,
 # the Build/ catch-all and its modern no-Build twin, desktop → Other.

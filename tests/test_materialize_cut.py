@@ -105,3 +105,18 @@ def test_dedup_eager_pair_sets_still_materialize(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan
     assert "Exchange" not in plan
+
+def test_spread_small_scan_default_skips_size_estimate(spark, monkeypatch):
+    """ADVICE (catalog.py:155): with neither gate set the estimate is
+    never used, so its py4j round trips must not be paid."""
+    from hogzilla_spark.sources import catalog
+
+    calls = []
+    monkeypatch.setattr(
+        catalog, "plan_input_bytes", lambda df: calls.append(df) or 1
+    )
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    catalog.spread_small_scan(docs)
+    assert calls == []
+    catalog.spread_small_scan(docs, min_bytes=1)
+    assert len(calls) == 1

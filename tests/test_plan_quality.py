@@ -190,11 +190,11 @@ def _operator_plan(spark, build):
     return plan
 
 def test_doc_quality_single_narrow_map(spark):
-    """All Gopher/C4 signals fold per-row: no keyed exchange anywhere —
-    the operator pipelines into the (spread) scan."""
-    from hogzilla_spark.operators.quality import doc_quality_signals
+    """All Gopher/C4 signals come from one per-row kernel: no keyed
+    exchange anywhere — the operator pipelines into the (spread) scan."""
+    from hogzilla_spark.operators.quality import doc_quality_signals_kernel
 
-    _operator_plan(spark, doc_quality_signals)
+    _operator_plan(spark, doc_quality_signals_kernel)
 
 def test_chunk_documents_no_shuffle(spark):
     """Chunking is a narrow projection + explode: no keyed exchange, so

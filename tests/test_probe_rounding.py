@@ -86,7 +86,8 @@ def test_probed_lists_preserves_id_type(spark):
 
 def test_hyperplane_signature_plane_count_guard():
     """ADVICE r12: >=31 planes would overflow the int32 bit weights —
-    the operator must refuse instead of wrapping/raising deep in numpy."""
+    the operator must refuse instead of wrapping/raising deep in numpy,
+    with an exception that survives ``python -O``."""
     planes = [[1.0, 0.0]] * 31
-    with pytest.raises(AssertionError, match="at most 30 planes"):
+    with pytest.raises(ValueError, match="at most 30 planes"):
         SIM.hyperplane_signature(F.col("v"), planes)

@@ -7,12 +7,12 @@ lines).
 
 from __future__ import annotations
 
-from hogzilla_spark.operators.quality import doc_quality_signals
+from hogzilla_spark.operators.quality import doc_quality_signals_kernel
 
 
 def _rows(spark, docs):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    out = doc_quality_signals(df).collect()
+    out = doc_quality_signals_kernel(df).collect()
     return {r["doc_id"]: r.asDict() for r in out}
 
 
@@ -92,7 +92,7 @@ def test_gopher_fail_reasons(spark):
 def test_no_shuffle_plan(spark):
     """The whole operator must stay a narrow map: no exchange in the plan."""
     df = spark.createDataFrame([(0, "a b c")], ["doc_id", "text"])
-    plan = doc_quality_signals(df)._jdf.queryExecution().executedPlan().toString()
+    plan = doc_quality_signals_kernel(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
 
@@ -174,9 +174,9 @@ def test_paragraph_and_ngram_repetition_signals(spark):
     para = "alpha beta gamma"
     text = f"{para}\n\n{para}\n\nunique delta epsilon"
     docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    from hogzilla_spark.operators.quality import doc_quality_signals
+    from hogzilla_spark.operators.quality import doc_quality_signals_kernel
 
-    r = doc_quality_signals(docs).collect()[0]
+    r = doc_quality_signals_kernel(docs).collect()[0]
     # 3 paragraphs, one duplicated pair
     assert r.dup_para_frac == round(1 - 2 / 3, 6)
     dup_chars = 2 * len(para)

@@ -2,7 +2,8 @@
 
 import pytest
 
-from hogzilla_spark.operators.rollup import icmp_summary, sflow_summary
+import __spark_entry__ as E
+from hogzilla_spark.operators.rollup import icmp_summary, orient_flows, sflow_summary
 
 MYNETS = ["10.1."]
 
@@ -98,3 +99,90 @@ def test_both_alien_assumes_dst_mine(spark):
     row = sflow_summary(df, MYNETS).collect()[0]
     assert (row.myIP, row.alienIP) == ("8.8.8.8", "7.7.7.7")
     assert row.direction == -1  # −LEFTRIGHT
+
+# ---------------------------------------------------------------------------
+# Row goldens on the synth sFlow corpora (sf0.001).  The expected digests
+# are those of the retired Column-chain builds of orient_flows,
+# icmp_summary and _synth_sflows on the same inputs, frozen when those
+# builds were deleted: sha256 over the sorted row reprs, plus the schema
+# and row count.
+# ---------------------------------------------------------------------------
+
+SF = E.SF_DEFAULT
+
+_FLOW_SCHEMA = (
+    "struct<myIP:string,myPort:string,alienIP:string,alienPort:string,"
+    "proto:string,bytesUp:bigint,bytesDown:bigint,numberPkts:bigint,"
+    "direction:int,beginTime:bigint,endTime:bigint,IPprotocol:string,"
+    "sampleRate:bigint,status:int>"
+)
+_SYNTH_SCHEMA = (
+    "struct<srcIP:string,srcPort:string,dstIP:string,dstPort:string,"
+    "IPprotocol:string,packetSize:bigint,samplingRate:bigint,"
+    "tcpFlags:string,timestamp:bigint>"
+)
+
+
+def _digest(df):
+    import hashlib
+
+    rows = sorted(map(repr, df.collect()))
+    return (
+        df.schema.simpleString(),
+        len(rows),
+        hashlib.sha256("\n".join(rows).encode()).hexdigest(),
+    )
+
+
+def test_orient_flows_golden(spark):
+    got = _digest(orient_flows(E._synth_sflows(spark, SF), MYNETS))
+    assert got == (
+        _FLOW_SCHEMA,
+        1000,
+        "e2badf54660a7c47dd4a74e413bb9a00f54f324b7f2a9687e45012306a5f9e1f",
+    )
+
+
+def test_orient_flows_empty_mynets(spark):
+    got = _digest(orient_flows(E._synth_sflows(spark, SF).limit(50), []))
+    assert got == (
+        _FLOW_SCHEMA,
+        50,
+        "8390eaec2f6b4349268e7e47e9e76096effc2b80c692c05647af7edc87abfe53",
+    )
+
+
+def test_icmp_summary_golden(spark):
+    got = _digest(icmp_summary(E._synth_sflows2(spark, SF), MYNETS))
+    assert got == (
+        "struct<myIP:string,icmpType:string,alienIP:string,icmpCode:string,"
+        "proto:string,bytesUp:bigint,bytesDown:bigint,numberPkts:bigint,"
+        "direction:bigint,beginTime:bigint,endTime:bigint,sampleRate:double>",
+        15,
+        "9fa55d0e3dbd6c79364bb481c09b2eb7031872a453579b9649dd7575fcd66387",
+    )
+
+
+def test_synth_sflows_golden(spark):
+    assert _digest(E._synth_sflows(spark, SF)) == (
+        _SYNTH_SCHEMA,
+        1000,
+        "b58b06d5cc5715d1edff4b45dd50a4b5175c33af4cf0b844c5d91a32cb25f019",
+    )
+
+
+def test_synth_sflows_golden_shape(spark):
+    """The parsed-SQL synth builders keep their documented output
+    schema and deterministic values (spot-pin one row per builder; the
+    DuckDB _SYNTH_SQL twins and every detector oracle pin the rest)."""
+    p1 = E._synth_sflows(spark, SF)
+    assert [f.name for f in p1.schema.fields] == [
+        "srcIP", "srcPort", "dstIP", "dstPort", "IPprotocol",
+        "packetSize", "samplingRate", "tcpFlags", "timestamp",
+    ]
+    p2 = E._synth_sflows2(spark, SF)
+    assert [f.name for f in p2.schema.fields] == [
+        "srcIP", "srcPort", "dstIP", "dstPort", "IPprotocol",
+        "packetSize", "samplingRate", "tcpFlags", "timestamp",
+    ]
+    assert p1.count() == p2.count() > 0
