@@ -1073,7 +1073,8 @@ IVF_CENTROID_IDS = (3, 67, 131, 195, 259, 323, 387, 451)
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate NN (nprobe=2) — the clustered scale path beside
     LSH.  Fixed data-derived centroids (IVF_CENTROID_IDS) so DuckDB can
-    replay the exact quantizer; probe selection is expression-side."""
+    replay the exact quantizer; probe selection (corpus assignment and
+    the query probes) is the `probed_lists` Arrow kernel."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     centroids = [
@@ -1118,9 +1119,9 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is below the threshold, where both parts run and the static SQL
     twin stays exact."""
     docs = _t(spark, sf_dir, "documents")
-    # ONE hashing pass feeds both variants: the 128-bit kernel's
-    # (w0, w1) are bit-identical to the 64-bit (hi, lo), so the s64
-    # half runs on a projection of the shared signature table
+    # ONE hashing pass feeds both variants: the 64-bit signature is
+    # the 128-bit kernel's (w0, w1), so the s64 half runs on a
+    # projection of the shared signature table
     sigs = DD.simhash128_sigs_kernel(docs).localCheckpoint(eager=True)
     s128 = DD.simhash128_pairs(docs, max_hamming=3, sigs=sigs).select(
         F.lit("s128").alias("part"), "id_a", "id_b", "hamming"
@@ -4203,8 +4204,8 @@ def oracle_sql() -> dict[str, str]:
     # Replays the fixed-centroid IVF quantizer (IVF_CENTROID_IDS): corpus
     # rows go to their argmin-distance list, queries probe the 2 nearest
     # lists, exact cosine ranks inside the probed lists.  Distances are
-    # round-6 before ordering (ties break on list id) to mirror
-    # nearest_lists_expr's engine-portable comparisons.
+    # round-6 before ordering (ties break on list id) to mirror the
+    # probed_lists kernel's comparisons.
     _ann_ivf_sql = """
         WITH v AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),

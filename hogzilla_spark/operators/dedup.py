@@ -143,21 +143,38 @@ def _minhash_sig_table(base: DataFrame, num_hashes: int) -> DataFrame:
         ]
     )
 
-def minhash_bands(sig: Column, num_bands: int = 4, rows_per_band: int = 4) -> Column:
-    """Bands as array<struct<band:int, key:string>>; key = md5 of the
-    band's concatenated minhashes."""
+def _band_keys(hashes: list[Column], num_bands: int) -> Column:
+    """array<struct<band:int, key:string>> over K minhash Columns: band
+    b's key is md5 of its r = K // num_bands minhashes joined by "|".
+    The one definition of the LSH band key — the stream
+    (`minhash_bands`), the batch self-join and the persisted index
+    (`_band_rows`) all build it here, so they agree by construction."""
+    rows = len(hashes) // num_bands
     return F.array(
         *[
             F.struct(
                 F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.get(sig, b * rows_per_band + r) for r in range(rows_per_band)]
-                    )
-                ).alias("key"),
+                F.md5(F.concat_ws("|", *hashes[b * rows : (b + 1) * rows])).alias("key"),
             )
             for b in range(num_bands)
         ]
+    )
+
+def minhash_bands(sig: Column, num_bands: int = 4, rows_per_band: int = 4) -> Column:
+    """Bands of an array<long> signature Column (`minhash_signature`)
+    as array<struct<band:int, key:string>> — the map-side form the
+    streams use."""
+    return _band_keys(
+        [F.get(sig, i) for i in range(num_bands * rows_per_band)], num_bands
+    )
+
+def _band_rows(base: DataFrame, num_hashes: int, num_bands: int) -> DataFrame:
+    """(id, band, key) rows of an (id, sh) shingle table: the
+    `_minhash_sig_table` signatures exploded into their band keys."""
+    sig = _minhash_sig_table(base, num_hashes)
+    keys = _band_keys([F.col(f"mh{i}") for i in range(num_hashes)], num_bands)
+    return sig.select("id", F.explode(keys).alias("b")).select(
+        "id", F.col("b.band").alias("band"), F.col("b.key").alias("key")
     )
 
 def minhash_lsh_pairs(
@@ -186,7 +203,6 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= min_jaccard.
     """
-    rows = num_hashes // num_bands
     # the regex shingle kernel is the heavy per-row stage: floor its
     # parallelism when the corpus arrives as an unsplittable small scan
     # (r12: 4.5 s single-core at sf0.1 with 31 cores idle; structural
@@ -199,26 +215,10 @@ def minhash_lsh_pairs(
         # the verify join); persist so the scan+shingle work runs once
         .persist()
     )
-    sig = _minhash_sig_table(base, num_hashes)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.col(f"mh{b * rows + r}") for r in range(rows)]
-                    )
-                ).alias("key"),
-            )
-            for b in range(num_bands)
-        ]
-    )
     # Buckets carry only (id, band, key): candidate generation shuffles
     # ids, never shingle arrays — at 100 TB that is the difference
     # between shuffling ~32 bytes/row and the whole document signature.
-    exploded = sig.select("id", F.explode(band_structs).alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.key").alias("key")
-    )
+    exploded = _band_rows(base, num_hashes, num_bands)
     left = exploded.alias("l")
     right = exploded.alias("r")
     cand = (
@@ -264,29 +264,12 @@ def minhash_band_index(
     writes it partitioned/bucketed by (band, key), and each new batch
     joins its own (tiny) band rows against it — no corpus re-shingle,
     no full self-join."""
-    rows = num_hashes // num_bands
     base = (
         spread_small_scan(df.select(F.col(id_col).alias("id"), F.col(text_col)))
         .select("id", word_shingles(text_col, shingle_k).alias("sh"))
         .filter(F.size("sh") > 0)
     )
-    sig = _minhash_sig_table(base, num_hashes)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.col(f"mh{b * rows + r}") for r in range(rows)]
-                    )
-                ).alias("key"),
-            )
-            for b in range(num_bands)
-        ]
-    )
-    return sig.select("id", F.explode(band_structs).alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.key").alias("key")
-    )
+    return _band_rows(base, num_hashes, num_bands)
 
 def minhash_lsh_pairs_incremental(
     new_docs: DataFrame,
@@ -662,126 +645,6 @@ def ngram_jaccard_pairs_dual(
 
 # --- SimHash ----------------------------------------------------------------
 
-def simhash_sig(text: Column | str) -> Column:
-    """64-bit SimHash over word tokens as struct(hi, lo) — two 32-bit
-    halves so every arithmetic step stays inside portable signed-64
-    ranges (1<<63 overflows BIGINT in SQL engines).
-
-    Per token: md5 hex chars [1,8] → hi-half hash, [9,16] → lo-half;
-    each of the 64 bits votes +1/−1; signature bit set iff votes > 0.
-    The hash arrays are BOUND once per row (no codegen subexpression
-    elimination in HOFs — see word_shingles).
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.filter(F.split(F.trim(F.lower(c)), r"\s+"), lambda t: t != "")
-
-    def half(offset: int) -> Column:
-        hashes = F.transform(
-            toks,
-            lambda t: F.conv(F.substring(F.md5(t), offset, 8), 16, 10).cast("long"),
-        )
-
-        powers = F.array(*[F.lit(1 << j).cast("long") for j in range(32)])
-
-        def sig_of(hs: Column) -> Column:
-            # ONE aggregate pass builds all 32 set-bit counters (the
-            # naive per-bit form is 32 interpreted passes over the hash
-            # array); votes_j = 2·set_j − n, bit set iff votes > 0.
-            # The counter array is itself BOUND before the 32 reads —
-            # HOF expressions re-evaluate per reference otherwise.
-            counts = F.aggregate(
-                hs,
-                F.array_repeat(F.lit(0), 32),
-                lambda acc, h: F.zip_with(
-                    acc,
-                    powers,
-                    lambda a, p: a + F.when(h.bitwiseAND(p) > 0, 1).otherwise(0),
-                ),
-            )
-            n = F.size(hs)
-
-            def fold_sig(cn: Column) -> Column:
-                sig = F.lit(0).cast("long")
-                for j in range(32):
-                    sig = sig + F.when(2 * F.get(cn, j) - n > 0, F.lit(1 << j)).otherwise(
-                        F.lit(0)
-                    ).cast("long")
-                return sig
-
-            return F.get(F.transform(F.array(counts), fold_sig), 0)
-
-        return F.get(F.transform(F.array(hashes), sig_of), 0)
-
-    return F.struct(half(1).alias("hi"), half(9).alias("lo"))
-
-def simhash64(text: Column | str, bits: int = 32) -> Column:
-    """Backward-compatible single-half signature (`bits` ≤ 32); prefer
-    simhash_sig for the full 64-bit version."""
-    return simhash_sig(text)["hi"]
-
-def simhash_sigs_kernel(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Arrow/numpy signature kernel: same md5-derived two-half 64-bit
-    SimHash as simhash_sig, computed per batch in vectorized numpy
-    (hashlib md5 == Spark md5 on UTF-8, verified by the SQL oracle).
-    Interpreted HOF expressions cost ~9s warm on 5k docs; this kernel is
-    the hot-path form.  Returns (id, hi, lo)."""
-    import hashlib
-    import re
-
-    import numpy as np
-    import pandas as pd
-
-    tok_re = re.compile(r"\s+")
-
-    def run(batches):
-        # token→(hi, lo) memo shared across the task's batches: corpora
-        # follow Zipf, so the md5 of a common token is computed once per
-        # task instead of once per occurrence (~10× fewer digest calls)
-        memo: dict[str, tuple[int, int]] = {}
-
-        def tok_hash(t: str) -> tuple[int, int]:
-            v = memo.get(t)
-            if v is None:
-                h = hashlib.md5(t.encode("utf-8")).hexdigest()
-                v = (int(h[:8], 16), int(h[8:16], 16))
-                memo[t] = v
-            return v
-
-        shifts = np.arange(32)
-        for pdf in batches:
-            ids, his, los = [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in tok_re.split((text or "").strip().lower()) if t]
-                if not toks:
-                    ids.append(doc_id); his.append(0); los.append(0)
-                    continue
-                pairs = np.array([tok_hash(t) for t in toks], dtype=np.int64)
-                n = len(toks)
-                hi_counts = ((pairs[:, 0:1] >> shifts) & 1).sum(axis=0)
-                lo_counts = ((pairs[:, 1:2] >> shifts) & 1).sum(axis=0)
-                hi_sig = int(((2 * hi_counts - n > 0).astype(np.int64) << shifts).sum())
-                lo_sig = int(((2 * lo_counts - n > 0).astype(np.int64) << shifts).sum())
-                ids.append(doc_id); his.append(hi_sig); los.append(lo_sig)
-            if len(memo) > 2_000_000:  # bound task memory on adversarial vocab
-                memo.clear()
-            yield pd.DataFrame(
-                {
-                    "id": np.array(ids, dtype=np.int64),
-                    "hi": np.array(his, dtype=np.int64),
-                    "lo": np.array(los, dtype=np.int64),
-                }
-            )
-
-    src = df.select(id_col, text_col)
-    # small inputs arrive as one parquet split → single-threaded hashing;
-    # spread them (at scale the input already has many splits)
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < min(8, target):
-        src = src.repartition(target)
-    return src.mapInPandas(run, "id long, hi long, lo long")
-
 #: corpus size above which the 64-bit signature's 16-bit pigeonhole
 #: chunks saturate: E[random-collision candidates] ≈ 4·n²/2^17, which
 #: crosses ~3e7 pairs at 1 M docs and reached 7.6e8 at 5 M (the sf100
@@ -809,11 +672,11 @@ def simhash_pairs(
     identical recall, so the default is the minimum blocks the pigeonhole
     bound allows for max_hamming=3.
 
-    Pass `sigs` (columns id, hi, lo — e.g. a persisted signature table,
-    or `simhash128_sigs_kernel` output, whose (w0, w1) are accepted
-    directly as the bit-identical 64-bit halves) to skip the hashing
-    pass; signatures are the natural artifact a real pipeline persists
-    anyway.
+    The 64-bit signature is the (w0, w1) half of `simhash128_sigs_kernel`
+    (md5 hex chars [0:16) of each token), taken as (hi, lo).  Pass `sigs`
+    (columns id, w0..w3, or id, hi, lo — e.g. a persisted signature
+    table) to skip the hashing pass; signatures are the natural artifact
+    a real pipeline persists anyway.
 
     `width` guards the scale boundary: the 16-bit chunk key space
     saturates once n ≫ 2^16 (E[random candidates] ≈ 4·n²/2^17 — a
@@ -821,7 +684,7 @@ def simhash_pairs(
     default "auto" counts the corpus (parquet footers make that cheap)
     and dispatches to the 128-bit `simhash128_pairs` above
     `SIMHASH_W64_MAX_DOCS`; pass 64 or 128 to pin a width explicitly
-    (64 is the small-corpus fast path — half the hashing work).
+    (64 is the small-corpus default).
 
     Returns (id_a, id_b, hamming <= max_hamming).
     """
@@ -838,14 +701,16 @@ def simhash_pairs(
         return simhash128_pairs(df, id_col, text_col, max_hamming, sigs=sigs)
     if width != 64:
         raise ValueError(f"width must be 'auto', 64 or 128: {width!r}")
-    assert max_hamming < blocks, "pigeonhole needs max_hamming < blocks"
+    if max_hamming >= blocks:
+        raise ValueError(
+            f"pigeonhole needs max_hamming < blocks; got {max_hamming} >= {blocks}"
+        )
     per_half = blocks // 2
     bits = 32 // per_half
     mask = (1 << bits) - 1
     if sigs is None:
-        sigs = simhash_sigs_kernel(df, id_col, text_col)
-    elif "hi" not in sigs.columns:
-        # 128-bit signature table: (w0, w1) are bit-identical to (hi, lo)
+        sigs = simhash128_sigs_kernel(df, id_col, text_col)
+    if "hi" not in sigs.columns:
         sigs = sigs.select("id", F.col("w0").alias("hi"), F.col("w1").alias("lo"))
     chunk_cols = []
     for i in range(per_half):
@@ -885,12 +750,14 @@ def simhash_pairs(
 def simhash128_sigs_kernel(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """128-bit SimHash signatures as four 32-bit words (w0..w3) — the
-    large-corpus variant.  Per token the FULL md5 digest feeds the
-    votes: hex chars [0:8) → w0 ... [24:32) → w3, so (w0, w1) are
-    bit-identical to `simhash_sigs_kernel`'s (hi, lo) (same chars,
-    same vote rule — pinned by a unit test).  Same Zipf memo and
-    vectorized vote counting as the 64-bit kernel."""
+    """SimHash signatures as four 32-bit words (w0..w3), computed per
+    Arrow batch in vectorized numpy — the one signature kernel behind
+    both `simhash_pairs` widths.  Per token the FULL md5 digest feeds
+    the votes: hex chars [0:8) → w0 ... [24:32) → w3; each of a word's
+    32 bits votes +1/−1 and the signature bit is set iff votes > 0.
+    (w0, w1) is the 64-bit signature's (hi, lo).  hashlib md5 == Spark
+    md5 on UTF-8; all four words are pinned against a hashlib
+    reference by a unit test.  Returns (id, w0, w1, w2, w3)."""
     import hashlib
     import re
 
@@ -900,6 +767,9 @@ def simhash128_sigs_kernel(
     tok_re = re.compile(r"\s+")
 
     def run(batches):
+        # token→words memo shared across the task's batches: corpora
+        # follow Zipf, so the md5 of a common token is computed once per
+        # task instead of once per occurrence (~10× fewer digest calls)
         memo: dict[str, tuple[int, int, int, int]] = {}
 
         def tok_hash(t: str):
@@ -928,7 +798,7 @@ def simhash128_sigs_kernel(
                     words[k].append(
                         int(((2 * counts - n > 0).astype(np.int64) << shifts).sum())
                     )
-            if len(memo) > 2_000_000:
+            if len(memo) > 2_000_000:  # bound task memory on adversarial vocab
                 memo.clear()
             yield pd.DataFrame(
                 {
@@ -941,6 +811,8 @@ def simhash128_sigs_kernel(
             )
 
     src = df.select(id_col, text_col)
+    # small inputs arrive as one parquet split → single-threaded hashing;
+    # spread them (at scale the input already has many splits)
     target = df.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < min(8, target):
         src = src.repartition(target)
@@ -970,7 +842,10 @@ def simhash128_pairs(
     `simhash_pairs`.
 
     Returns (id_a, id_b, hamming <= max_hamming)."""
-    assert max_hamming < 4, "pigeonhole over 4 word-blocks needs max_hamming < 4"
+    if max_hamming >= 4:
+        raise ValueError(
+            f"pigeonhole over 4 word-blocks needs max_hamming < 4; got {max_hamming}"
+        )
     if sigs is None:
         sigs = simhash128_sigs_kernel(df, id_col, text_col)
     word_cols = [

@@ -549,11 +549,18 @@ class _BitReader:
         return v
 
     def align_past_restart(self) -> None:
-        """Consume the RSTn marker at the current byte position."""
+        """Byte-align: drop buffered bits, skip forward to the next RSTn
+        marker and consume it."""
+        data, pos = self.data, self.pos
+        while pos + 1 < len(data) and not (
+            data[pos] == 0xFF and 0xD0 <= data[pos + 1] <= 0xD7
+        ):
+            pos += 1
+        if pos + 1 >= len(data):
+            raise ValueError("missing RSTn marker")
         self.acc = 0
         self.n = 0
-        assert self.data[self.pos] == 0xFF and 0xD0 <= self.data[self.pos + 1] <= 0xD7
-        self.pos += 2
+        self.pos = pos + 2
 
 class _RestartMarker(Exception):
     def __init__(self, marker: int) -> None:
@@ -700,14 +707,6 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     for my in range(mcuy):
         for mx in range(mcux):
             if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                # byte-align and consume the RSTn marker
-                while True:
-                    if (
-                        payload[br.pos] == 0xFF
-                        and 0xD0 <= payload[br.pos + 1] <= 0xD7
-                    ):
-                        break
-                    br.pos += 1
                 br.align_past_restart()
                 for c in scan:
                     c["pred"] = 0
@@ -904,13 +903,6 @@ def _decode_prog_scan(
             and unit_count
             and unit_count % restart_interval == 0
         ):
-            while True:
-                if (
-                    payload[br.pos] == 0xFF
-                    and 0xD0 <= payload[br.pos + 1] <= 0xD7
-                ):
-                    break
-                br.pos += 1
             br.align_past_restart()
             for c in scan:
                 c["pred"] = 0

@@ -3,8 +3,10 @@
 Baseline: brute-force cosine top-k (exact, the correctness oracle).
 Scale path: LSH (random-hyperplane) bucketing so the candidate join is
 bucket-local, plus an IVF variant (KMeans coarse quantizer) for recall
-control.  Vector math is array<double> expressions (zip_with/aggregate)
-— JVM-side, no Python in the row loop.
+control.  The top-k ranking cosines and the hyperplane signatures are
+array<double> expressions (zip_with/aggregate), JVM-side.  The IVF probe
+stage (`probed_lists`) and the per-list/per-cluster cosine scoring are
+Arrow-batched numpy kernels (mapInPandas / applyInPandas).
 """
 
 from __future__ import annotations
@@ -12,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hogzilla_spark.functions.scalar import round6u
+from hogzilla_spark.sources.catalog import spread_small_scan
 
 def _const_array(values) -> Column:
     """Constant array<double> literal in ONE py4j round trip.
@@ -69,8 +71,6 @@ def knn_brute_force(
     # inside every pair's cosine (the per-pair interpreted work drops
     # ~3×; dot/(qn·cn) is the same op order on the same doubles, so the
     # round-6 value is bit-identical to the inline cosine_expr form)
-    from hogzilla_spark.sources.catalog import spread_small_scan
-
     q = queries.select(
         F.col(id_col).alias(query_id_col), _as_double(vec_col).alias("qv")
     ).withColumn("qn", norm_expr(F.col("qv")))
@@ -149,8 +149,6 @@ def ann_lsh_topk(
     partition's worth of vectors."""
     from pyspark.sql import Window
 
-    from hogzilla_spark.sources.catalog import spread_small_scan
-
     # parallelism floor before the per-row signature/norm folds — same
     # rationale and A/B as knn_brute_force (no-op at scale)
     c = spread_small_scan(corpus.select(id_col, vec_col)).select(
@@ -186,58 +184,6 @@ def ann_lsh_topk(
         .select(query_id_col, "neighbor_id", "cosine", F.col("rk").alias("rank"))
     )
 
-def sqdist_expr(a: Column, b: Column) -> Column:
-    """Σ(x−y)² as a sequential fold — engine-portable accumulation order."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-def nearest_lists_expr(vec: Column, centroids: list[list[float]], nprobe: int) -> Column:
-    """array<int> of the `nprobe` list ids whose centroids are nearest to
-    `vec` (squared L2, ties broken by list id).  Centroids are a tiny
-    driver-side constant (n_lists × dim) baked into the plan — the
-    expression-side replacement for per-query driver loops, so the query
-    side never funnels through the driver."""
-    # loop over the constant centroid matrix with ONE transform lambda
-    # instead of unrolling K sqdist folds (K×2 lambda constructions ≈
-    # K×45 ms of py4j build time, r12 profile).  Per-element evaluation
-    # is the identical sequential fold; round-6 before comparing so the
-    # ordering (and its list-id tie-break) is reproducible across
-    # engines.  The index var i is the same IntegerType the unrolled
-    # form's F.lit(i) carried.
-    #
-    # round6u, NOT F.round (r13, ADVICE r12): this d is ordering-only
-    # (never output), and the three probe-selection implementations
-    # must round the SAME way at a 6th-decimal half or a tie can flip
-    # which list a vector probes between paths.  F.round is BigDecimal
-    # HALF_UP over Double.toString; the Arrow kernel's old np.round was
-    # scaled half-even float math; the DuckDB oracle's ROUND is scaled
-    # float half-away.  round6u (floor(d·1e6+0.5)) is the repo's
-    # portable convention — the identical IEEE multiply/add/floor in
-    # Spark, numpy and the SQL twin (see functions.scalar.round6u; the
-    # r11 sf100 doc_quality digest measured 1,026/5M values diverging
-    # on exactly this class).  Verified value-neutral on every tested
-    # scale: all four conventions produce identical probe orderings on
-    # sf0.001/0.01/0.1 embeddings (zero near-half cells), so declared
-    # query results are unchanged; the unification matters at sf100.
-    cmat = F.array(*[_const_array(c) for c in centroids])
-    entries = F.transform(
-        cmat,
-        lambda c, i: F.struct(
-            round6u(sqdist_expr(vec, c)).alias("d"), i.alias("list_id")
-        ),
-    )
-    return F.transform(
-        F.slice(F.array_sort(entries), 1, nprobe), lambda e: e["list_id"]
-    )
-
-def assign_lists(centroids: list[list[float]], vec_expr: Column) -> Column:
-    """list_id for each row: argmin squared distance to the centroids
-    (= nearest_lists with nprobe=1)."""
-    return nearest_lists_expr(vec_expr, centroids, 1)[0]
-
 def ann_ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -249,7 +195,6 @@ def ann_ivf_topk(
     query_id_col: str = "query_id",
     seed: int = 42,
     centroids: list[list[float]] | None = None,
-    expr_max_k: int = 0,
 ) -> DataFrame:
     """IVF approximate top-k: a coarse quantizer buckets the corpus; each
     query probes its `nprobe` nearest lists and ranks exactly inside
@@ -259,8 +204,12 @@ def ann_ivf_topk(
     The quantizer is KMeans (seeded) by default; passing `centroids`
     skips the fit and quantizes against the given vectors — fully
     deterministic and expressible in ANSI SQL, which is what the oracle
-    gate exercises.  Probe selection is a Column expression over the
-    broadcast centroid constants in both paths: no per-query driver loop.
+    gate exercises.  Probe selection is the `probed_lists` kernel on
+    both sides (corpus assignment at nprobe=1, the broadcast query set
+    at `nprobe`): no per-query driver loop.  Only the corpus side gets
+    the parallelism floor: repartitioning a handful of query rows costs
+    more than probing them in one task (measured +0.6 s per warm
+    ann_topk run at sf0.01, local[4] on 4 vCPUs).
     """
     from pyspark.sql import Window
 
@@ -273,24 +222,24 @@ def ann_ivf_topk(
             "list_id",
         )
     else:
-        # fixed-centroid assignment through the shared probe stage
-        # (nprobe=1): Arrow kernel by default, bit-identical to the
-        # assign_lists expression twin (probed_lists docstring)
         c = probed_lists(
-            corpus.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v")),
+            spread_small_scan(
+                corpus.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
+            ),
             centroids,
             1,
-            expr_max_k=expr_max_k,
         ).select(
             F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "list_id"
         )
-    q = (
-        queries.select(F.col(id_col).alias(query_id_col), _as_double(vec_col).alias("qv"))
-        .withColumn("qn", norm_expr(F.col("qv")))
-        .withColumn(
-            "list_id",
-            F.explode(nearest_lists_expr(F.col("qv"), centroids, nprobe)),
-        )
+    q = probed_lists(
+        queries.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v")),
+        centroids,
+        nprobe,
+    ).select(
+        F.col("id").alias(query_id_col),
+        F.col("v").alias("qv"),
+        norm_expr(F.col("v")).alias("qn"),
+        "list_id",
     )
     c = c.withColumn("cn", norm_expr(F.col("cv")))
     scored = (
@@ -384,9 +333,6 @@ def adaptive_centroid_ids(n: int, target_list_rows: int = 2500, min_k: int = 8) 
         )
     return ids
 
-def _maybe_broadcast(df: DataFrame, do: bool) -> DataFrame:
-    return F.broadcast(df) if do else df
-
 def adaptive_nprobe(k: int) -> int:
     """Recall-targeted probe count paired with the adaptive codebook:
     nprobe = max(3, floor(k/135 + 0.5)) — the half-up linear rule
@@ -413,37 +359,22 @@ def probed_lists(
     v: DataFrame,
     centroids: list[list[float]],
     nprobe: int,
-    expr_max_k: int = 0,
 ) -> DataFrame:
     """(id, v) → (id, v, probes array<int>, list_id int): every vector
     fanned out to its `nprobe` nearest lists (round-6 squared L2, ties
-    on list id) — the shared IVF probe/assignment stage behind
+    on list id) — the one IVF probe/assignment rule behind
     `ann_candidate_pairs`, `ann_ivf_topk` and `semantic_dedup`
-    (nprobe=1 = plain assignment).
+    (nprobe=1 = plain assignment).  The DuckDB oracle replays the same
+    rule in SQL.
 
-    Runs as an Arrow-batched kernel by default (expr_max_k=0, r12): the
-    Column-expression twin folds K×64 interpreted higher-order ops per
-    row (2.1 s vs 0.8 s at sf0.1's K=8), while the kernel accumulates
-    the SAME sequential per-dim op order — bit-identical, pinned by
-    test_kernel_assignment_matches_expression_path.  Pass expr_max_k>=K
-    to force the pure-expression path (UDF-free environments; it
-    remains the semantic reference the DuckDB twin replays).  Also
-    floors the input's parallelism (spread_small_scan): the probe fold
-    is the heavy per-row stage and a small single-row-group parquet
-    arrives as ONE split; no-op at scale.
+    An Arrow-batched numpy kernel: the centroid matrix is broadcast once
+    and each batch scores all K lists in vectorized passes.  Corpus-side
+    callers pass their input through `spread_small_scan` first: the
+    probe fold is the heavy per-row stage and a small single-row-group
+    parquet arrives as ONE split (no-op at scale).
     """
     import numpy as np
     import pandas as pd
-
-    from hogzilla_spark.sources.catalog import spread_small_scan
-
-    v = spread_small_scan(v)
-    if len(centroids) <= expr_max_k:
-        return v.select(
-            "id",
-            "v",
-            nearest_lists_expr(F.col("v"), centroids, nprobe).alias("probes"),
-        ).select("id", "v", "probes", F.explode("probes").alias("list_id"))
 
     cmat = np.array(centroids, dtype=np.float64)
     bc = v.sparkSession.sparkContext.broadcast(cmat)
@@ -453,27 +384,18 @@ def probed_lists(
         cents = bc.value
         for pdf in batches:
             m = np.array(list(pdf["v"]), dtype=np.float64)
-            # same rule as nearest_lists_expr: round-6 squared L2,
-            # ties broken by list id (argsort is stable on d).
-            # Distance is Σ(v−c)² accumulated as a SEQUENTIAL fold
-            # over the dim axis (acc += (v_k−c_k)², k ascending) —
-            # bit-identical to sqdist_expr's F.aggregate left fold
-            # and the SQL twin's list_dot_product over the diff
-            # list, so a round-6 tie at a probe boundary cannot
-            # flip between paths (ADVICE r11: einsum's SIMD/
-            # pairwise partial sums carried a last-ulp residual the
-            # old comment wrongly called bit-identical).  Not the
-            # expanded |v|²−2v·c+|c|² form either, whose
-            # cancellation changes the value outright.  Slabbed so
-            # the per-dim (rows × K) temporary stays ~64 MB/dim.
-            # Rounding (r13, ADVICE r12): floor(d·1e6+0.5) — the
-            # round6u convention nearest_lists_expr now shares —
-            # NOT np.round, whose scaled half-even could flip a
-            # 6th-decimal half-tie against the expression twin.
-            # The scaled integer orders identically to round6u's
-            # /1e6 form (division by a constant is monotone and
-            # distinct scaled ints stay distinct doubles here), so
-            # the /1e6 is skipped.
+            # round-6 squared L2, ties broken by list id (argsort is
+            # stable on d).  Distance is Σ(v−c)² accumulated as a
+            # SEQUENTIAL fold over the dim axis (acc += (v_k−c_k)², k
+            # ascending) — the oracle SQL's list_dot_product over the
+            # diff list, so a round-6 tie at a probe boundary cannot
+            # flip (einsum's SIMD/pairwise partial sums carry a
+            # last-ulp residual; the expanded |v|²−2v·c+|c|² form
+            # changes the value outright).  Slabbed so the per-dim
+            # (rows × K) temporary stays ~64 MB/dim.  Rounding is
+            # floor(d·1e6+0.5), the round6u convention, not np.round's
+            # scaled half-even; the scaled integer orders identically
+            # to round6u's /1e6 form, so the /1e6 is skipped.
             slab = max(1, (64 * 1024 * 1024) // (cents.shape[0] * cents.shape[1] * 8))
             d = np.empty((len(m), cents.shape[0]), dtype=np.float64)
             for lo in range(0, len(m), slab):
@@ -497,9 +419,7 @@ def probed_lists(
             )
 
     # derive the id field's type from the input instead of hardcoding
-    # 'long' (ADVICE r12): the expression twin preserves any id type,
-    # so string/int doc ids must not break or silently coerce on the
-    # default kernel path
+    # 'long': string/int doc ids must not break or silently coerce
     id_type = v.schema["id"].dataType.simpleString()
     return v.mapInPandas(
         assign, f"id {id_type}, v array<double>, probes array<int>, list_id int"
@@ -512,7 +432,6 @@ def ann_candidate_pairs(
     min_cosine: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    expr_max_k: int = 0,
 ) -> DataFrame:
     """ANN near-dup pairs: IVF multi-probe candidate generation composed
     with EXACT cosine verification (the runnable form of the "ANN is
@@ -545,15 +464,8 @@ def ann_candidate_pairs(
     candidate counts per list stay constant while total work stays
     ~linear · nprobe².  A hot list is the skew knob: raise K.
 
-    Centroid assignment runs as an Arrow-batched kernel by default
-    (expr_max_k=0, r12): the Column-expression twin folds K×64
-    interpreted higher-order ops per row (2.1 s vs 0.8 s at sf0.1's
-    K=8), while the kernel accumulates the SAME sequential per-dim op
-    order — bit-identical, pinned by
-    test_kernel_assignment_matches_expression_path.  Pass
-    expr_max_k>=K to force the pure-expression path (UDF-free
-    environments; it remains the semantic reference the DuckDB twin
-    replays).
+    Centroid assignment is the `probed_lists` kernel; its output on a
+    40-list codebook is pinned by a row golden in tests/test_ann_swap.py.
     """
     import numpy as np
     import pandas as pd
@@ -565,10 +477,11 @@ def ann_candidate_pairs(
     )
 
     probed = probed_lists(
-        emb.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v")),
+        spread_small_scan(
+            emb.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
+        ),
         centroids,
         nprobe,
-        expr_max_k=expr_max_k,
     )
 
     slab_budget = _SIMS_SLAB_BYTES  # captured at plan build
@@ -604,8 +517,8 @@ def ann_candidate_pairs(
         for lo in range(0, len(ids), step):
             hi = min(lo + step, len(ids))
             # dot on UNNORMALIZED rows then one divide by na*nb — the
-            # op order of semantic_dedup's kernel/expr paths AND the
-            # SQL oracle (dot/(na·nb)), chosen so the DuckDB twin
+            # op order of semantic_dedup's kernel AND the SQL oracle
+            # (dot/(na·nb)), chosen so the DuckDB twin
             # replays this value exactly.  embedding_neardup's kernels
             # normalize rows BEFORE the matmul — a different FP op
             # order whose last-ulp residual can flip a round-6 value
@@ -652,7 +565,6 @@ def semantic_dedup(
     fine_centroids: list[list[float]] | None = None,
     nprobe: int = 3,
     candidate_pairs: DataFrame | None = None,
-    broadcast_clusters: bool | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus with a coarse quantizer, then
@@ -670,13 +582,10 @@ def semantic_dedup(
 
     Scale shape — the whole point of SemDeDup's clustering: candidates
     are Σ|cluster|² instead of n², and the intra-cluster scoring is a
-    BLAS matmul, not a per-pair expression.  Centroid assignment runs
-    through the shared probe stage (`probed_lists`, nprobe=1): the
-    Arrow kernel by default, the bit-identical `assign_lists` Column
-    expression under strategy='expr' (keeping that path UDF-free end to
-    end) — the corpus is never collected and the cluster key is
-    available map-side, so each vector shuffles once into its cluster's
-    task.
+    BLAS matmul, not a per-pair expression.  Centroid assignment is the
+    shared probe kernel (`probed_lists`, nprobe=1) — the corpus is never
+    collected and the cluster key is available map-side, so each vector
+    shuffles once into its cluster's task.
 
     strategy='kernel' (default): applyInPandas per cluster_id — the
     cluster's matrix scores itself in `block_rows`-row blocks (one
@@ -684,10 +593,8 @@ def semantic_dedup(
     at sf1 took 206 s, the matmul takes ~1 s).  Memory per task is
     block_rows×|c| doubles; a cluster whose |c| breaks that budget is
     the skew knob — raise n_lists until clusters fit (the paper runs
-    50k clusters for LAION-440M).  strategy='expr' keeps the pure
-    Column-expression twin (norms cached per row, one fold per pair) —
-    oracle-portable and UDF-free for environments that want it;
-    equivalence of the two paths is pinned by a unit test.
+    50k clusters for LAION-440M).  The DuckDB oracle's self-join replay
+    is the reference.
 
     strategy='ann' (the runnable scale swap, VERDICT r9 task 1): when a
     cluster is too large for Σ|c|² — the operator's declared failure
@@ -698,7 +605,8 @@ def semantic_dedup(
     dominance rule).  Approximate: dropped ⊆ the kernel path's dropped
     (so kept ⊇ kept-exact); the drop recall is pinned by
     tests/test_ann_swap.py.  Per-task memory becomes one fine list, not
-    one coarse cluster.
+    one coarse cluster.  The (id, cluster) map is broadcast to both
+    sides of the pair join up to 4 M vectors, and shuffle-joined above.
 
     ``candidate_pairs`` (ann only): a pre-computed
     `ann_candidate_pairs`-shaped frame (id_a, id_b, cosine) generated
@@ -713,23 +621,22 @@ def semantic_dedup(
     frame itself, ADVICE r11): the frame was generated at min_cosine
     <= `threshold` (a tighter frame silently under-drops) and over the
     codebook the caller intends (a wrong-codebook frame changes which
-    pairs were ever candidates).  Passing it with any other strategy
-    raises — the kernel/expr paths would silently ignore it."""
+    pairs were ever candidates).  Passing it with strategy='kernel'
+    raises — that path would silently ignore it."""
+    if strategy not in ("kernel", "ann"):
+        raise ValueError(f"unknown strategy {strategy!r}")
     if candidate_pairs is not None and strategy != "ann":
         raise ValueError(
             "candidate_pairs is only consumed by strategy='ann'; the "
             f"'{strategy}' path would silently ignore it"
         )
-    # cluster assignment through the shared probe stage (nprobe=1):
-    # Arrow kernel by default, bit-identical to the assign_lists
-    # expression twin (probed_lists docstring; parallelism floor
-    # included).  strategy='expr' promises a UDF-free plan end to end,
-    # so it keeps the pure-expression assignment too.
+    # cluster assignment through the shared probe stage (nprobe=1)
     assigned = probed_lists(
-        emb.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v")),
+        spread_small_scan(
+            emb.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
+        ),
         centroids,
         1,
-        expr_max_k=len(centroids) if strategy == "expr" else 0,
     ).select(F.col("id").alias(id_col), "v", F.col("list_id").alias("cluster_id"))
     if strategy == "ann":
         if candidate_pairs is not None:
@@ -740,37 +647,24 @@ def semantic_dedup(
             pairs = ann_candidate_pairs(
                 emb, fine_centroids, nprobe, threshold, id_col, vec_col
             )
-        clusters = assigned.select(id_col, "cluster_id")
         # The candidate set is the BIG side (pairs >> vectors, always);
         # a shuffle join would move every candidate pair TWICE (once
         # per id side) — at sf100/nprobe=6 those two exchanges helped
         # blow the disk budget (r12).  The cluster map is (id, int32)
         # rows — ~30 MB at 2 M vectors — so broadcast it and keep the
-        # pair stream entirely map-side.  Auto rule: broadcast up to
-        # 4 M vectors (~64 MB plan-side); beyond that the caller
-        # decides (on a real cluster the executor count, not this
-        # bound, sets the broadcast economics).
-        if broadcast_clusters is None:
-            broadcast_clusters = emb.count() <= 4_000_000
+        # pair stream entirely map-side, up to 4 M vectors (~64 MB
+        # plan-side); beyond that the shuffle join takes over.
+        small = emb.count() <= 4_000_000
+
+        def cluster_of(id_name: str, cluster_name: str) -> DataFrame:
+            m = assigned.select(
+                F.col(id_col).alias(id_name), F.col("cluster_id").alias(cluster_name)
+            )
+            return F.broadcast(m) if small else m
+
         dropped = (
-            pairs.join(
-                _maybe_broadcast(
-                    clusters.withColumnRenamed(id_col, "id_a").withColumnRenamed(
-                        "cluster_id", "ca"
-                    ),
-                    broadcast_clusters,
-                ),
-                "id_a",
-            )
-            .join(
-                _maybe_broadcast(
-                    clusters.withColumnRenamed(id_col, "id_b").withColumnRenamed(
-                        "cluster_id", "cb"
-                    ),
-                    broadcast_clusters,
-                ),
-                "id_b",
-            )
+            pairs.join(cluster_of("id_a", "ca"), "id_a")
+            .join(cluster_of("id_b", "cb"), "id_b")
             .filter(F.col("ca") == F.col("cb"))  # same-primary-cluster dominance
             .select(F.col("id_b").alias(id_col))
             .distinct()
@@ -782,92 +676,56 @@ def semantic_dedup(
             "cluster_id",
             F.coalesce(~F.col("d"), F.lit(True)).alias("kept"),
         )
-    if strategy == "kernel":
-        import numpy as np
-        import pandas as pd
 
-        from hogzilla_spark.operators.dedup import (
-            _SIMS_SLAB_BYTES,
-            _round6_select,
-            _slab_rows,
+    import numpy as np
+    import pandas as pd
+
+    from hogzilla_spark.operators.dedup import (
+        _SIMS_SLAB_BYTES,
+        _round6_select,
+        _slab_rows,
+    )
+
+    slab_budget = _SIMS_SLAB_BYTES  # captured at plan build
+
+    def score(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
+        ids = pdf[id_col].to_numpy()[order]
+        m = np.array(list(pdf["v"]), dtype=np.float64)[order]
+        norms = np.linalg.norm(m, axis=1, keepdims=True)
+        nsafe = np.where(norms == 0, 1.0, norms)
+        dropped = np.zeros(len(ids), dtype=bool)
+        # bound the slab absolutely, not just by block_rows: on a huge
+        # cluster block_rows×|c| doubles can exceed executor memory
+        # (the sf10 lesson shared with embedding_neardup)
+        step = min(block_rows, _slab_rows(len(ids), slab_budget))
+        for lo in range(0, len(ids), step):
+            hi = min(lo + step, len(ids))
+            # dot(a,b) on UNNORMALIZED rows, then ONE divide by na*nb —
+            # the oracle's op order (dot/(na*nb)), so the ROUND(...,6)
+            # boundary cannot flip from pre-normalization rounding.
+            # (Residual tolerance: BLAS accumulates the dot sum in a
+            # different order than a sequential fold — that last-ulp
+            # difference is shared by every matmul kernel in this module
+            # and covered by the 1e-9 slack in _round6_select.)
+            sims = m[lo:hi] @ m.T
+            # in-place divide: the naive expression holds product,
+            # divisor AND quotient at once (3 slabs — defeating the
+            # budget); this peaks at 2 (sims + the outer product)
+            np.divide(sims, nsafe[lo:hi] * nsafe.T, out=sims)
+            # candidate-select then exact SQL-ROUND-6, matching the
+            # oracle (see _round6_select)
+            ii, jj, _ = _round6_select(sims, threshold)
+            hit = ids[jj] < ids[lo + ii]  # a lower id dominates
+            dropped[lo + ii[hit]] = True
+        return pd.DataFrame(
+            {
+                id_col: ids,
+                "cluster_id": pdf["cluster_id"].iloc[0],
+                "kept": ~dropped,
+            }
         )
 
-        slab_budget = _SIMS_SLAB_BYTES  # captured at plan build
-
-        def score(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-            ids = pdf[id_col].to_numpy()[order]
-            m = np.array(list(pdf["v"]), dtype=np.float64)[order]
-            norms = np.linalg.norm(m, axis=1, keepdims=True)
-            nsafe = np.where(norms == 0, 1.0, norms)
-            dropped = np.zeros(len(ids), dtype=bool)
-            # bound the slab absolutely, not just by block_rows: on a
-            # huge cluster block_rows×|c| doubles can exceed executor
-            # memory (the sf10 lesson shared with embedding_neardup)
-            step = min(block_rows, _slab_rows(len(ids), slab_budget))
-            for lo in range(0, len(ids), step):
-                hi = min(lo + step, len(ids))
-                # dot(a,b) on UNNORMALIZED rows, then ONE divide by
-                # na*nb — the same op order as the 'expr' twin and the
-                # oracle (dot/(na*nb)), so the ROUND(...,6) boundary
-                # cannot flip between paths from pre-normalization
-                # rounding.  (Residual tolerance: BLAS accumulates the
-                # dot sum in a different order than a sequential fold —
-                # that last-ulp difference is shared by every matmul
-                # kernel in this module and covered by the 1e-9 slack
-                # in _round6_select.)
-                sims = m[lo:hi] @ m.T
-                # in-place divide: the naive expression holds product,
-                # divisor AND quotient at once (3 slabs — defeating the
-                # budget); this peaks at 2 (sims + the outer product)
-                np.divide(sims, nsafe[lo:hi] * nsafe.T, out=sims)
-                # candidate-select then exact SQL-ROUND-6, matching the
-                # expression twin and the oracle (see _round6_select)
-                ii, jj, _ = _round6_select(sims, threshold)
-                hit = ids[jj] < ids[lo + ii]  # a lower id dominates
-                dropped[lo + ii[hit]] = True
-            return pd.DataFrame(
-                {
-                    id_col: ids,
-                    "cluster_id": pdf["cluster_id"].iloc[0],
-                    "kept": ~dropped,
-                }
-            )
-
-        return assigned.groupBy("cluster_id").applyInPandas(
-            score, f"{id_col} long, cluster_id int, kept boolean"
-        )
-
-    if strategy != "expr":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    # Per-row norm is computed ONCE here, not per pair: cosine below is
-    # dot/(na*nb) with the cached norms — bit-identical to the oracle's
-    # dot(a,b)/(sqrt(dot(a,a))*sqrt(dot(b,b))) (same float ops, same
-    # order), but the interpreted fold work per candidate pair drops
-    # from three 64-element scans to one.
-    withn = assigned.withColumn("n", norm_expr(F.col("v")))
-    left = withn.select(
-        F.col(id_col).alias("id_a"), F.col("v").alias("va"),
-        F.col("n").alias("na"), "cluster_id",
-    )
-    right = withn.select(
-        F.col(id_col).alias("id_b"), F.col("v").alias("vb"),
-        F.col("n").alias("nb"), "cluster_id",
-    )
-    dropped = (
-        left.join(right, "cluster_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.round(
-                dot_expr(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            )
-            >= threshold
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    return withn.join(dropped.withColumn("d", F.lit(True)), id_col, "left").select(
-        id_col,
-        "cluster_id",
-        F.coalesce(~F.col("d"), F.lit(True)).alias("kept"),
+    return assigned.groupBy("cluster_id").applyInPandas(
+        score, f"{id_col} long, cluster_id int, kept boolean"
     )

@@ -7,9 +7,10 @@ corpus/batch are near-dups".  At ingest the question inverts: "is THIS
 arriving document a near-dup of anything seen so far" — without
 re-scanning the corpus.  This operator keeps the LSH band index AS
 STREAMING STATE: each arriving document fans out to its band rows
-map-side (built with the same `minhash_signature`/`minhash_bands`
-expressions as batch, so signatures agree bit-for-bit with the batch
-index and the DuckDB oracle), each band bucket's state holds the
+map-side (`minhash_signature`, then `minhash_bands`, whose band key is
+the one `dedup._band_keys` builder the batch self-join and the persisted
+band index also use — so stream, batch index and the DuckDB oracle
+agree on every key), each band bucket's state holds the
 (id, signature) list seen so far, and a bucket collision emits a
 candidate pair scored by the minhash match fraction — the standard
 unbiased Jaccard estimate.

@@ -73,6 +73,14 @@ def test_jpeg_rejects_mangled_and_garbage():
         J.decode_jpeg(bytes(good))
     with pytest.raises(ValueError):
         J.decode_jpeg(b"\x00\x01\x02")
+    # a restart interval of 1 MCU (DRI before SOS) over a 2-MCU stream
+    # that carries no RSTn markers: the restart scan must stop at the end
+    # of the payload with a ValueError, not an IndexError
+    two_mcu = J.encode_jpeg(_gradient(8, 16))
+    sos = two_mcu.find(b"\xff\xda")
+    dri = b"\xff\xdd" + struct.pack(">HH", 4, 1)
+    with pytest.raises(ValueError, match="missing RSTn marker"):
+        J.decode_jpeg(two_mcu[:sos] + dri + two_mcu[sos:])
 
 def test_jpeg_420_subsampled_decode():
     """Hand-assemble a 16x16 4:2:0 stream (one MCU: 4 Y + 1 Cb + 1 Cr)

@@ -93,7 +93,9 @@ def test_simhash_width_guard(spark):
     dispatches to the 128-bit plan above it (the sf100 disk-filler
     guard); explicit widths are honored; a 64-bit signature table
     cannot be silently widened; 128-bit signature tables feed the
-    64-bit path via their bit-identical (w0, w1)."""
+    64-bit path via their (w0, w1); pigeonhole bounds raise.  The
+    64-bit pair set {(1, 2, 2)} is the retired 64-bit signature
+    kernel's output on these docs, frozen when it was deleted."""
     import pytest
 
     base = " ".join(
@@ -110,7 +112,7 @@ def test_simhash_width_guard(spark):
         (p.id_a, p.id_b, p.hamming)
         for p in DD.simhash_pairs(df, width=64).collect()
     }
-    assert auto == w64 == {(1, 2, next(iter(auto))[2])}
+    assert auto == w64 == {(1, 2, 2)}
     # above the threshold auto == the 128-bit plan (shrink the
     # threshold rather than build a million-row frame)
     orig = DD.SIMHASH_W64_MAX_DOCS
@@ -127,26 +129,29 @@ def test_simhash_width_guard(spark):
     }
     assert auto_big == w128
     # a persisted 128-bit signature table serves both widths
-    sigs = DD.simhash128_sigs_kernel(df)
+    sigs128 = DD.simhash128_sigs_kernel(df)
     assert {
         (p.id_a, p.id_b, p.hamming)
-        for p in DD.simhash_pairs(df, width=64, sigs=sigs).collect()
+        for p in DD.simhash_pairs(df, width=64, sigs=sigs128).collect()
     } == w64
     # but a 64-bit table cannot be widened
-    sigs64 = DD.simhash_sigs_kernel(df)
+    sigs64 = sigs128.select("id", F.col("w0").alias("hi"), F.col("w1").alias("lo"))
     with pytest.raises(ValueError, match="cannot be widened"):
         DD.simhash_pairs(df, width=128, sigs=sigs64)
     with pytest.raises(ValueError, match="width"):
         DD.simhash_pairs(df, width=96)
+    # the pigeonhole needs max_hamming < blocks (4 word-blocks at 128)
+    with pytest.raises(ValueError, match="pigeonhole"):
+        DD.simhash_pairs(df, width=64, max_hamming=4, blocks=4)
+    with pytest.raises(ValueError, match="pigeonhole"):
+        DD.simhash128_pairs(df, max_hamming=4)
 
-def test_simhash128_hamming_and_64bit_prefix(spark):
+def test_simhash128_hamming(spark):
     """The 128-bit variant finds a genuine hamming<=3 near-dup (a doc
-    with a few appended tokens), rejects the unrelated doc, and its
-    (w0, w1) words are bit-identical to the 64-bit kernel's (hi, lo) —
-    same md5 chars, same vote rule.  (A one-word substitution in a
-    short doc lands at hamming ~6 over 128 bits — correctly OUTSIDE
-    the 4-block pigeonhole guarantee; 128 bits is a finer instrument
-    than 64, so the same edit costs more bits.)"""
+    with a few appended tokens) and rejects the unrelated doc.  (A
+    one-word substitution in a short doc lands at hamming ~6 over 128
+    bits — correctly OUTSIDE the 4-block pigeonhole guarantee; 128 bits
+    is a finer instrument than 64, so the same edit costs more bits.)"""
     base = " ".join(
         "the quick brown fox jumps over the lazy dog again and again today".split() * 4
     )
@@ -158,9 +163,6 @@ def test_simhash128_hamming_and_64bit_prefix(spark):
     pairs = DD.simhash128_pairs(df, max_hamming=3).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
     assert 0 < pairs[0].hamming <= 3
-    w = {r.id: (r.w0, r.w1) for r in DD.simhash128_sigs_kernel(df).collect()}
-    old = {r.id: (r.hi, r.lo) for r in DD.simhash_sigs_kernel(df).collect()}
-    assert w == old
 
 def test_simhash128_ground_truth(spark):
     """All four words against a sequential hashlib reference."""
@@ -406,37 +408,6 @@ def test_sibling_hof_lambda_hazard(spark):
     for doc_id, text in docs:
         assert got_expr[doc_id] == expect(text)
         assert got_table[doc_id] == expect(text)
-
-def test_simhash_expression_twin_ground_truth(spark):
-    """The portable expression form (simhash_sig) must match hashlib
-    ground truth — its two transform siblings differ only in a substring
-    offset, adjacent to the sibling-HOF hazard shape, so pin it."""
-    import hashlib
-
-    docs = [(1, "the quick brown fox jumps over the lazy dog"),
-            (2, "pack my box with five dozen liquor jugs")]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.s.hi, r.s.lo)
-        for r in df.select("doc_id", DD.simhash_sig("text").alias("s")).collect()
-    }
-
-    def expect(text):
-        toks = [t for t in text.strip().lower().split() if t]
-        hx = [hashlib.md5(t.encode()).hexdigest() for t in toks]
-
-        def half(off):
-            vals = [int(h[off - 1 : off + 7], 16) for h in hx]
-            sig = 0
-            for j in range(32):
-                if 2 * sum((v >> j) & 1 for v in vals) - len(vals) > 0:
-                    sig |= 1 << j
-            return sig
-
-        return (half(1), half(9))
-
-    for doc_id, text in docs:
-        assert got[doc_id] == expect(text)
 
 def test_minhash_incremental_matches_full(spark, tmp_path):
     """Incremental (new-batch vs band index) must equal the full
@@ -800,8 +771,12 @@ def test_chunk_documents_overlap_covers_everything(spark):
     assert [c for c, _ in rows] == list(range(len(rows)))
 
 def test_semantic_dedup_kernel_matches_expr(spark):
-    """The BLAS kernel path and the pure-expression path are the same
-    operator — identical (vec_id, cluster_id, kept) on real testdata."""
+    """The BLAS kernel reproduces the retired pure-expression path's
+    (vec_id, cluster_id, kept) rows on real testdata — frozen when that
+    path was deleted as sha256 over the sorted row reprs, plus the
+    schema and row count (the kernel matched it at that commit)."""
+    import hashlib
+
     from hogzilla_spark.operators.similarity import semantic_dedup
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -809,11 +784,18 @@ def test_semantic_dedup_kernel_matches_expr(spark):
         [float(x) for x in r.embedding]
         for r in emb.filter(emb.vec_id.isin(3, 67, 131, 195)).orderBy("vec_id").collect()
     ]
-    as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
-    kern = as_set(semantic_dedup(emb, cents, threshold=0.35, strategy="kernel"))
-    expr = as_set(semantic_dedup(emb, cents, threshold=0.35, strategy="expr"))
-    assert kern == expr
-    assert any(not k for _, _, k in kern)  # the drop path is exercised
+    out = semantic_dedup(emb, cents, threshold=0.35)
+    rows = out.collect()
+    assert (
+        out.schema.simpleString(),
+        len(rows),
+        hashlib.sha256("\n".join(sorted(map(repr, rows))).encode()).hexdigest(),
+    ) == (
+        "struct<vec_id:bigint,cluster_id:int,kept:boolean>",
+        500,
+        "d3a97001d8cb0a3a979a3fbc512fc90303cc5d863549f2ab5e4566eb20ac6184",
+    )
+    assert any(not r.kept for r in rows)  # the drop path is exercised
 
 def test_bm25_hand_computed(spark):
     """BM25 microunit scores against a by-hand computation (Lucene idf

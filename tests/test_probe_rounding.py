@@ -1,7 +1,7 @@
 """r13 ADVICE fixes on the ANN probe stage: ONE rounding convention for
-probe distances across the Arrow kernel, the Column-expression twin and
-the SQL oracle (round6u: floor(d*1e6+0.5)); id-type derivation in the
-kernel's schema; and the hyperplane plane-count guard."""
+probe distances (round6u: floor(d*1e6+0.5)) in the Arrow probe kernel;
+id-type derivation in the kernel's schema; and the hyperplane
+plane-count guard."""
 
 import numpy as np
 import pytest
@@ -25,10 +25,9 @@ def _tie_values():
 
 def test_kernel_rounding_is_round6u_not_npround(spark):
     """At an exact scaled half, the kernel's floor(d*1e6+0.5) must agree
-    with the round6u expression (the convention nearest_lists_expr now
-    uses and the DuckDB twin's float-math ROUND class) — and np.round
-    (half-even) provably disagrees on this set, so the unification has
-    teeth."""
+    with the round6u expression (the repo's portable convention and the
+    DuckDB twin's float-math ROUND class) — and np.round (half-even)
+    provably disagrees on this set, so the unification has teeth."""
     ties = _tie_values()
     kern = np.floor(np.array(ties) * 1e6 + 0.5)
     # the Spark-side round6u on the same literals
@@ -42,11 +41,25 @@ def test_kernel_rounding_is_round6u_not_npround(spark):
         np.round(d, 6) != f / 1e6 for d, f in zip(ties, kern)
     ), "tie set did not exercise the half-even divergence"
 
-def test_nearest_lists_expr_matches_kernel_on_ties(spark):
+#: Ordered probe lists (nearest first) of the 64 tie-grid vectors, by id:
+#: the output of the retired Column-expression probe path (array_sort
+#: over (round6u distance, list id)), frozen when that path was deleted.
+#: The kernel produced the same lists at that commit.
+_TIE_GRID_PROBES = [
+    (0, 2), (3, 1), (0, 1), (1, 2), (1, 0), (1, 0), (3, 2), (2, 1),
+    (1, 2), (2, 0), (0, 2), (0, 1), (1, 0), (3, 0), (1, 2), (2, 0),
+    (1, 2), (2, 3), (2, 0), (3, 0), (2, 1), (2, 3), (1, 0), (3, 1),
+    (1, 0), (1, 3), (0, 2), (3, 0), (2, 0), (2, 0), (1, 2), (1, 0),
+    (1, 2), (0, 3), (3, 0), (3, 2), (0, 1), (0, 3), (2, 3), (3, 0),
+    (1, 0), (1, 3), (1, 0), (0, 1), (0, 1), (3, 1), (0, 3), (3, 0),
+    (1, 2), (1, 0), (1, 0), (1, 2), (0, 2), (0, 3), (0, 3), (1, 0),
+    (0, 1), (3, 1), (2, 0), (2, 3), (1, 0), (2, 1), (1, 3), (2, 0),
+]
+
+def test_probe_kernel_on_ties_golden(spark):
     """End-to-end probe selection on vectors ENGINEERED to produce
-    half-tie distances: the kernel path and the expression path must
-    pick identical probe lists (r12's np.round-vs-F.round combination
-    could flip these)."""
+    half-tie distances: the kernel must pick the frozen probe lists
+    (r12's np.round-vs-F.round combination could flip these)."""
     dim = 64
     # coordinates on a 1/16 grid -> sequential-fold distances are exact
     # dyadics; many land on scaled halves (verified non-vacuously below)
@@ -63,15 +76,11 @@ def test_nearest_lists_expr_matches_kernel_on_ties(spark):
 
     rows = [(int(i), [float(x) for x in m[i]]) for i in range(len(m))]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    kern = {
-        (r.id, r.list_id)
-        for r in SIM.probed_lists(df, cents, 2, expr_max_k=0).collect()
+    out = SIM.probed_lists(df, cents, 2).collect()
+    assert {(r.id, tuple(r.probes)) for r in out} == set(enumerate(_TIE_GRID_PROBES))
+    assert {(r.id, r.list_id) for r in out} == {
+        (i, l) for i, p in enumerate(_TIE_GRID_PROBES) for l in p
     }
-    expr = {
-        (r.id, r.list_id)
-        for r in SIM.probed_lists(df, cents, 2, expr_max_k=64).collect()
-    }
-    assert kern == expr and kern
 
 def test_probed_lists_preserves_id_type(spark):
     """ADVICE r12: the kernel schema must derive the id type from the
@@ -79,7 +88,7 @@ def test_probed_lists_preserves_id_type(spark):
     rows = [(f"doc-{i}", [float(i % 3), 1.0, 0.5]) for i in range(30)]
     df = spark.createDataFrame(rows, "id string, v array<double>")
     cents = [[0.0, 1.0, 0.5], [2.0, 1.0, 0.5]]
-    out = SIM.probed_lists(df, cents, 1, expr_max_k=0)
+    out = SIM.probed_lists(df, cents, 1)
     assert out.schema["id"].dataType.simpleString() == "string"
     got = {r.id for r in out.collect()}
     assert got == {f"doc-{i}" for i in range(30)}
