@@ -49,9 +49,12 @@ def prepare_auth(auth: DataFrame, ua_count_hint: int | None = None) -> DataFrame
     plan-construction time to pick the dictionary-join strategy.
     Callers that (a) loop per micro-batch or (b) read a
     non-deterministic source should persist the input and/or pass a
-    carried `ua_count_hint` (see streaming/auth_stream.py) so the gate,
-    the dictionary, and the fact join all observe the same data and the
-    probe isn't re-paid per call.
+    carried `ua_count_hint` so the gate, the dictionary, and the fact
+    join all observe the same data and the probe isn't re-paid per
+    call.  streaming/auth_stream.py does both, and also persists this
+    function's OUTPUT, which `score_auth` reads for the alerts and for
+    each update family: the dictionary join and the CASE tree run once
+    per micro-batch, not once per consumer.
 
     UA parsing is dictionary-encoded: the ~140-rule uap-core rlike
     chain evaluates once per DISTINCT user-agent string and the
@@ -123,10 +126,26 @@ def auth_profile(
     batch_time: int = 0,
     ua_count_hint: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """One batch pass: returns (combined alerts 826001204, state updates
-    for HIST20/21/22).  `ua_count_hint` forwards to `prepare_auth` —
-    when given, plan construction is fully lazy (no probe job)."""
-    rec = prepare_auth(auth, ua_count_hint=ua_count_hint)
+    """One batch pass over raw auth records: returns (combined alerts
+    826001204, state updates for HIST20/21/22).  `ua_count_hint`
+    forwards to `prepare_auth` — when given, plan construction is fully
+    lazy (no probe job)."""
+    return score_auth(
+        prepare_auth(auth, ua_count_hint=ua_count_hint), histograms, cfg, hcfg, batch_time
+    )
+
+def score_auth(
+    rec: DataFrame,
+    histograms: DataFrame,
+    cfg: AuthConfig,
+    hcfg: HistogramConfig,
+    batch_time: int = 0,
+) -> tuple[DataFrame, DataFrame]:
+    """Score `prepare_auth`'s output against saved state: returns
+    (combined alerts 826001204, state updates for HIST20/21/22).  The
+    alerts and all three update families read `rec`; a caller that
+    persists it (streaming/auth_stream.py) runs the UA dictionary join
+    and the CASE tree once for all four."""
     loc_label = F.concat(
         F.regexp_replace(F.trim("city"), " ", "_"),
         F.lit("/"),

@@ -198,11 +198,13 @@ def strip_accents(c: Column | str) -> Column:
 def _compile_parsers_sql(
     x: str, parsers: list[dict[str, str]], replacement_key: str
 ) -> str:
-    """One parser table as a nested first-match-wins CASE over the
+    """One parser table as a flat first-match-wins CASE over the
     expression text `x`: missing replacement → capture group 1, "$1"
-    substitutes it, no match → "Other"."""
-    out = "'Other'"
-    for p in reversed(parsers):
+    substitutes it, no match → "Other".  One CASE with a WHEN arm per
+    rule, not a CASE nested in each ELSE: a cold session parses and
+    analyses the ~100-deep nesting about 1.5 s slower (4-vCPU VM)."""
+    arms = []
+    for p in parsers:
         rx = sql_quote(p["regex"])
         repl = p.get(replacement_key)
         if repl is None:
@@ -215,8 +217,8 @@ def _compile_parsers_sql(
             )
         else:
             fam = sql_quote(repl)
-        out = f"CASE WHEN {x} RLIKE {rx} THEN {fam} ELSE {out} END"
-    return out
+        arms.append(f"WHEN {x} RLIKE {rx} THEN {fam}")
+    return f"CASE {' '.join(arms)} ELSE 'Other' END"
 
 def ua_family_sql(x: str) -> str:
     """Raw user-agent → "OS family/browser family" label, the value the

@@ -4,9 +4,10 @@ The reference does a per-entity HBase Get before scoring and a Put after
 merging (HogHBaseHistogram.scala:75-136) — per-row RPCs inside foreach.
 The engine's contract (SURVEY.md §4 custom-work item 1): scoring reads
 are an equi-join against the saved state table, and writes are ONE
-batched upsert per family per run: :func:`upsert` is load →
-full-outer-join merge (:func:`apply_updates`) → staged parquet rewrite
-(:func:`save`), crash-safe through the atomic generation pointer.
+batched upsert per family per run: :func:`upsert` is load → one
+projection over a full-outer join (:func:`apply_updates`) → staged
+parquet rewrite (:func:`save`), crash-safe through the atomic
+generation pointer.
 
 Update modes:
   - "merge":     weighted mean + decay (Histograms.merge, H5)
@@ -85,8 +86,15 @@ def load(spark: SparkSession, path: str | None) -> DataFrame:
 
 def apply_updates(saved: DataFrame, updates: DataFrame) -> DataFrame:
     """One batched upsert: full-outer join saved ↔ batch updates on
-    hist_name, merge per the row's mode.  updates columns:
-    (hist_name, size, values, labels, mode)."""
+    hist_name, then ONE projection picks each row's output.  updates
+    columns: (hist_name, size, values, labels, mode).
+
+    A row with no update keeps its saved histogram; a row with no saved
+    size, or a ``replace``, takes the update; otherwise the saved and
+    update histograms merge per ``mode``.  One projection, not a union
+    of filtered branches: a lazy ``updates`` plan (a whole detector
+    batch) is evaluated once, and every joined row comes out exactly
+    once."""
     s = saved.select(
         F.col("hist_name"),
         F.col("size").alias("s_size"),
@@ -101,35 +109,26 @@ def apply_updates(saved: DataFrame, updates: DataFrame) -> DataFrame:
         F.col("mode"),
     )
     j = s.join(u, "hist_name", "full_outer")
-    both = j.filter(F.col("s_size").isNotNull() & F.col("u_size").isNotNull())
-    only_saved = j.filter(F.col("u_size").isNull()).select(
+    keep = F.col("u_size").isNull()
+    take = F.col("s_size").isNull() | (F.col("mode") == "replace")
+    is_max = F.col("mode") == "merge_max"
+    return j.select(
         "hist_name",
-        F.col("s_size").alias("size"),
-        F.col("s_values").alias("values"),
-        F.col("s_labels").alias("labels"),
-    )
-    only_new = j.filter(F.col("s_size").isNull()).select(
-        "hist_name",
-        F.col("u_size").alias("size"),
-        F.col("u_values").alias("values"),
-        F.col("u_labels").alias("labels"),
-    )
-    mode = F.col("mode")
-    merged = both.select(
-        "hist_name",
-        F.when(mode == "replace", F.col("u_size"))
-        .when(mode == "merge_max", F.col("s_size") + F.col("u_size"))
+        F.when(keep, F.col("s_size"))
+        .when(take, F.col("u_size"))
+        .when(is_max, F.col("s_size") + F.col("u_size"))
         .otherwise(merged_size("s_size", "u_size"))
         .alias("size"),
-        F.when(mode == "replace", F.col("u_values"))
-        .when(mode == "merge_max", merge_max("s_values", "u_values"))
+        F.when(keep, F.col("s_values"))
+        .when(take, F.col("u_values"))
+        .when(is_max, merge_max("s_values", "u_values"))
         .otherwise(merge_histograms("s_values", "s_size", "u_values", "u_size"))
         .alias("values"),
-        F.when(mode == "replace", F.col("u_labels"))
+        F.when(keep, F.col("s_labels"))
+        .when(take, F.col("u_labels"))
         .otherwise(merge_labels("s_labels", "u_labels"))
         .alias("labels"),
     )
-    return merged.unionByName(only_saved).unionByName(only_new)
 
 def save(df: DataFrame, path: str, batch_id: int | None = None) -> None:
     """Generation-based commit (parquet has no MERGE):

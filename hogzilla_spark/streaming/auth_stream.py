@@ -6,9 +6,12 @@ at-most-once reads.  The engine replaces that with a streaming source +
 checkpoint: exactly-once batch tracking, no destructive reads, same
 10-second micro-batch cadence via processingTime trigger.
 
-Each micro-batch runs the same auth_profile plan as the batch path and
-MERGEs state via foreachBatch — the Spark-idiomatic shape of the
-reference's read-score-merge loop.
+Each micro-batch (foreachBatch — the Spark-idiomatic shape of the
+reference's read-score-merge loop) prepares its records once
+(`prepare_auth`, persisted), scores that frame with the same
+`score_auth` as the batch path, writes the alerts, and commits the
+HIST20-22 updates through one `store.upsert` (load → one-pass merge →
+generation swap).
 """
 
 from __future__ import annotations
@@ -19,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from hogzilla_spark.config import DEFAULT, EngineConfig
-from hogzilla_spark.detectors.auth import auth_profile
+from hogzilla_spark.detectors.auth import prepare_auth, score_auth
 from hogzilla_spark.schemas import AUTHRECORDS
 from hogzilla_spark.state import store
 
@@ -77,31 +80,46 @@ def start_auth_stream(
             return  # replay of an already-committed batch
         if batch_df.isEmpty():
             return
-        # persist: the gate probe (when due), the dictionary build, the
-        # alert scoring, and the three histogram updates all re-read
-        # this frame — and a re-scan of a non-deterministic source
-        # could otherwise observe different data per consumer
+        sc = spark.sparkContext
+        outer_desc = sc.getLocalProperty("spark.job.description")
+        # persist the raw batch: the gate probe (when due) and the
+        # preparation's dictionary build and fact join all read it, and
+        # a re-scan of a non-deterministic source could otherwise
+        # observe different data per consumer.  Persist the PREPARED
+        # batch too: the alert write and the three histogram updates
+        # all read it, so the UA dictionary join and CASE tree run once.
         batch_df = batch_df.persist()
-        if probe["n_ua"] is None or probe["since"] + 1 >= ua_probe_every:
-            from pyspark.sql import functions as F
-
-            probe["n_ua"] = batch_df.agg(
-                F.approx_count_distinct(F.coalesce("userAgent", F.lit("")))
-            ).first()[0]
-            probe["since"] = 0
-        else:
-            probe["since"] += 1
         saved = store.load(spark, state_path).persist()
-        alerts, updates = auth_profile(
-            batch_df, saved, cfg.auth, cfg.hist, batch_time=batch_id,
-            ua_count_hint=probe["n_ua"],
-        )
-        alerts.write.mode("overwrite").parquet(
-            os.path.join(alerts_dir, f"batch_id={batch_id}")
-        )
-        store.upsert(spark, updates, state_path, batch_id=batch_id, saved=saved)
-        saved.unpersist()
-        batch_df.unpersist()
+        rec = None
+        try:
+            sc.setJobDescription("auth_stream.score")
+            if probe["n_ua"] is None or probe["since"] + 1 >= ua_probe_every:
+                from pyspark.sql import functions as F
+
+                probe["n_ua"] = batch_df.agg(
+                    F.approx_count_distinct(F.coalesce("userAgent", F.lit("")))
+                ).first()[0]
+                probe["since"] = 0
+            else:
+                probe["since"] += 1
+            rec = prepare_auth(batch_df, ua_count_hint=probe["n_ua"]).persist()
+            alerts, updates = score_auth(
+                rec, saved, cfg.auth, cfg.hist, batch_time=batch_id
+            )
+            # the alert write is the first reader of `rec`: its jobs
+            # fill the cache (an eager count here would add two jobs)
+            sc.setJobDescription("auth_stream.alerts")
+            alerts.write.mode("overwrite").parquet(
+                os.path.join(alerts_dir, f"batch_id={batch_id}")
+            )
+            sc.setJobDescription("auth_stream.upsert")
+            store.upsert(spark, updates, state_path, batch_id=batch_id, saved=saved)
+        finally:
+            sc.setJobDescription(outer_desc)
+            if rec is not None:
+                rec.unpersist()
+            saved.unpersist()
+            batch_df.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -94,6 +94,40 @@ def test_prepare_auth_count_hint_is_lazy(spark):
     fams = {r.userAgent for r in df.select("userAgent").distinct().collect()}
     assert "Windows/Chrome" in fams and "Other/curl" in fams
 
+def _plan_text_outside_cache(df):
+    """simpleString of every optimized-plan node, not descending into
+    an InMemoryRelation's cached plan."""
+    out, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        out.append(node.simpleString(10_000))
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return "\n".join(out)
+
+def test_score_auth_reads_prepared_frame_once(spark):
+    """The stream's shape: updates scored from a persisted prepare_auth
+    frame re-run neither the UA CASE tree nor any rlike when the store
+    merges them; both live only inside the cached relation."""
+    from hogzilla_spark.detectors.auth import prepare_auth, score_auth
+    from hogzilla_spark.state import store
+
+    saved = datagen.auth_histograms_df(spark)
+    lazy = prepare_auth(datagen.auth_df(spark), ua_count_hint=3)
+    _, updates = score_auth(lazy, saved, DEFAULT.auth, DEFAULT.hist)
+    # control: without the persist, the UA parse sits in the merge plan
+    assert "RLIKE" in _plan_text_outside_cache(store.apply_updates(saved, updates)).upper()
+
+    rec = prepare_auth(datagen.auth_df(spark), ua_count_hint=3).persist()
+    try:
+        _, updates = score_auth(rec, saved, DEFAULT.auth, DEFAULT.hist)
+        text = _plan_text_outside_cache(store.apply_updates(saved, updates))
+        assert "InMemoryRelation" in text
+        assert "RLIKE" not in text.upper()
+        assert "__ua_raw" not in text  # the UA CASE tree's input column
+    finally:
+        rec.unpersist()
+
 def test_ua_family_expression(spark):
     df = spark.createDataFrame(
         [

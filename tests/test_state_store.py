@@ -8,6 +8,8 @@ Contract under test:
   - DataFrames loaded before a save still resolve after it (the old
     generation survives one cycle)
   - upsert() is load → apply_updates → save
+  - apply_updates() is one projection over one full-outer join: each
+    row merges per its mode, and the updates plan is evaluated once
 """
 
 from __future__ import annotations
@@ -104,7 +106,95 @@ def _mk_updates(spark, rows):
     )
 
 
-def test_upsert_falls_back_to_parquet_store(spark, tmp_path):
+def _rows(df):
+    """(hist_name, size, values, labels) tuples sorted by hist_name, maps
+    as sorted dicts."""
+    def srt(m):
+        return None if m is None else dict(sorted(m.items()))
+
+    return sorted(
+        ((r["hist_name"], r["size"], srt(r["values"]), srt(r["labels"]))
+         for r in df.collect()),
+        key=lambda t: t[0],
+    )
+
+
+# One input per path through apply_updates: merge (with and without the
+# decay past 1,000), merge_max, replace, label precedence, a saved-only
+# row, and new-only rows of each mode (NULL labels become empty maps).
+_MIXED_SAVED = [
+    ("HIST01-a", 10, {"80": 1.0}, {}),
+    ("HIST01-decay", 2000, {"80": 0.5, "22": 0.5}, {}),
+    ("HIST07-m", 4, {"22": 2.0, "80": 1.0}, {}),
+    ("HIST02-r", 7, {"x": 1.0}, {"x": "lx"}),
+    ("HIST20-l", 5, {"c1": 1.0}, {"c1": "city1"}),
+    ("HIST01-kept", 3, {"53": 1.0}, {"53": "dns"}),
+]
+_MIXED_UPDATES = [
+    ("HIST01-a", 6, {"80": "0.5", "443": "0.5"}, {}, "merge"),
+    ("HIST01-decay", 10, {"22": "1.0"}, None, "merge"),
+    ("HIST07-m", 3, {"22": "1.0", "25": "4.0"}, {}, "merge_max"),
+    ("HIST02-r", 2, {"y": "1.0"}, {"y": "ly"}, "replace"),
+    ("HIST20-l", 2, {"c1": "0.5", "c2": "0.5"}, {"c1": "other", "c2": "city2"}, "merge"),
+    ("HIST01-new", 4, {"80": "1.0"}, None, "merge"),
+    ("HIST07-new", 1, {"22": "3.0"}, {"22": "ssh"}, "merge_max"),
+    ("HIST02-new", 1, {"z": "1.0"}, None, "replace"),
+]
+# Recorded from the filter-and-union merge that preceded the single
+# projection; the projection must reproduce it row for row.
+_MIXED_GOLDEN = [
+    ("HIST01-a", 16, {"443": 0.1875, "80": 0.8125}, {}),
+    ("HIST01-decay", 1010, {"22": 0.504950495049505, "80": 0.49504950495049505}, {}),
+    ("HIST01-kept", 3, {"53": 1.0}, {"53": "dns"}),
+    ("HIST01-new", 4, {"80": 1.0}, {}),
+    ("HIST02-new", 1, {"z": 1.0}, {}),
+    ("HIST02-r", 2, {"y": 1.0}, {"y": "ly"}),
+    ("HIST07-m", 7, {"22": 2.0, "25": 4.0, "80": 1.0}, {}),
+    ("HIST07-new", 1, {"22": 3.0}, {"22": "ssh"}),
+    ("HIST20-l", 7, {"c1": 0.8571428571428571, "c2": 0.14285714285714285},
+     {"c1": "city1", "c2": "city2"}),
+]
+
+
+def test_apply_updates_mixed_modes_golden(spark):
+    saved = spark.createDataFrame(_MIXED_SAVED, HISTOGRAMS)
+    merged = store.apply_updates(saved, _mk_updates(spark, _MIXED_UPDATES))
+    assert _rows(merged) == _MIXED_GOLDEN
+
+
+def test_apply_updates_null_size_saved_row_emitted_once(spark):
+    """A saved row whose size is NULL and that no update touches comes out
+    once, with its saved values (a filter-per-branch merge matched it in
+    both its saved-only and its new-only branch)."""
+    saved = spark.createDataFrame(
+        [("HIST01-a", None, {"80": 1.0}, {}), ("HIST01-b", 10, {"80": 1.0}, {})],
+        HISTOGRAMS,
+    )
+    upd = _mk_updates(spark, [("HIST01-b", 2, {"80": "1.0"}, {}, "merge")])
+    got = _rows(store.apply_updates(saved, upd))
+    assert [r[0] for r in got] == ["HIST01-a", "HIST01-b"]
+    assert got[0] == ("HIST01-a", None, {"80": 1.0}, {})
+
+
+def test_apply_updates_reads_updates_plan_once(spark):
+    """The updates plan appears as one leaf of the merge plan: a lazy
+    (unpersisted) batch is evaluated once per upsert, not once per
+    merge branch."""
+    from pyspark.sql import functions as F
+
+    saved = spark.createDataFrame(_MIXED_SAVED, HISTOGRAMS)
+    updates = spark.range(5).select(
+        F.concat(F.lit("HIST01-"), F.col("id").cast("string")).alias("hist_name"),
+        F.col("id").alias("size"),
+        F.create_map(F.lit("80"), F.lit(1.0)).alias("values"),
+        F.create_map(F.lit("80"), F.lit("http")).alias("labels"),
+        F.lit("merge").alias("mode"),
+    )
+    plan = store.apply_updates(saved, updates)._jdf.queryExecution().optimizedPlan()
+    assert plan.toString().count("Range (") == 1
+
+
+def test_upsert_equals_load_apply_save(spark, tmp_path):
     """upsert() == load + apply_updates + save, row for row."""
     path_a = str(tmp_path / "via_upsert")
     path_b = str(tmp_path / "via_explicit")
