@@ -1895,19 +1895,34 @@ def q_hz_sflow_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return sflow_summary(_synth_sflows(spark, sf_dir), ["10.1."])
 
+def _sflow_rules(
+    summary: DataFrame, cfg, *names: str, icmp: DataFrame | None = None
+) -> dict[str, DataFrame]:
+    """Alerts of the named rules of detectors/sflow's stateless table
+    (every other rule disabled) over a synth rollup, with no saved state
+    and no C&C blacklist."""
+    from dataclasses import replace
+
+    from hogzilla_spark.detectors.sflow import NAMES, stateless_alerts
+
+    only = replace(cfg, disabled=frozenset(NAMES) - set(names))
+    per, _p2p_ips, _media_ips = stateless_alerts(
+        summary, icmp, ["10.1."], only, None, None
+    )
+    return per
+
 def q_hz_top_talkers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A REAL detector (826001001 top talker, detectors/sflow
-    .top_talkers — disabled in the reference, HogSFlow.scala:967-1020,
+    """A REAL detector (826001001 top talker, the top_talkers rule of
+    detectors/sflow — disabled in the reference, HogSFlow.scala:967-1020,
     implemented for surface completeness) scored against a SQL oracle:
     per-host sampled upload volume over a threshold tuned so the synth
     corpus trips ~p90 hosts (genuine gate, not fire-on-everything)."""
     from hogzilla_spark.config import SFlowConfig
-    from hogzilla_spark.detectors.sflow import top_talkers
     from hogzilla_spark.operators.rollup import sflow_summary
 
     cfg = SFlowConfig(top_talkers_min_bytes=200_000_000)
     summary = sflow_summary(_synth_sflows(spark, sf_dir), ["10.1."])
-    alerts = top_talkers(summary, ["10.1."], cfg)
+    alerts = _sflow_rules(summary, cfg, "top_talkers")["top_talkers"]
     return alerts.select(
         F.element_at("data", "hostname").alias("hostname"),
         F.element_at("data", "bytesUp").try_cast("long").alias("bytes_up"),
@@ -1916,16 +1931,15 @@ def q_hz_top_talkers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def q_hz_dns_tunnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A REAL detector (826001012, detectors/sflow.dns_tunnel) scored
-    against a SQL oracle: per-flow double-sided volume filter, per-host
-    rollup, deterministic top-30."""
+    """A REAL detector (826001012, the dns_tunnel rule of
+    detectors/sflow) scored against a SQL oracle: per-flow double-sided
+    volume filter, per-host rollup, deterministic top-30."""
     from hogzilla_spark.config import SFlowConfig
-    from hogzilla_spark.detectors.sflow import dns_tunnel
     from hogzilla_spark.operators.rollup import sflow_summary
 
     cfg = SFlowConfig(dns_tunnel_min_bytes=1_000_000)
     summary = sflow_summary(_synth_sflows(spark, sf_dir), ["10.1."])
-    alerts = dns_tunnel(summary, ["10.1."], cfg)
+    alerts = _sflow_rules(summary, cfg, "dns_tunnel")["dns_tunnel"]
     return alerts.select(
         F.col("lower_ip_str").alias("hostname"),
         F.element_at("data", "bytesUp").try_cast("long").alias("bytes_up"),
@@ -1935,15 +1949,14 @@ def q_hz_dns_tunnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 def q_hz_p2p(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A REAL detector (826001008, detectors/sflow.p2p_talkers) scored
-    against a SQL oracle: BOTH reference methods — high-port pair mesh
-    (HogSFlow.scala:1144-1216) and mid-range UDP mesh with the
+    """A REAL detector (826001008, the two p2p rules of detectors/sflow)
+    scored against a SQL oracle: BOTH reference methods — high-port pair
+    mesh (HogSFlow.scala:1144-1216) and mid-range UDP mesh with the
     distinct-alien-port gate (:1221-1285), method-2 suppressing
-    method-1 hosts.  FTP-talker/-server suppressions run but are empty
-    under the synth mapping (no port-21 traffic), which the oracle
-    mirrors by omission."""
+    method-1 hosts.  The FTP-pair suppression runs but is empty under
+    the synth mapping (no port-21 traffic) and there is no saved state
+    (no FTP servers), which the oracle mirrors by omission."""
     from hogzilla_spark.config import SFlowConfig
-    from hogzilla_spark.detectors.sflow import ftp_talkers, p2p_talkers
     from hogzilla_spark.operators.rollup import sflow_summary
 
     cfg = SFlowConfig(
@@ -1954,16 +1967,11 @@ def q_hz_p2p(spark: SparkSession, sf_dir: str) -> DataFrame:
         p2p_min_bytes_2nd=50_000,
     )
     # materialize the shared rollup once, as the production batch DAG
-    # does (plans/batch.py:60) — m1, m2 and the ftp suppression would
-    # otherwise each re-derive the full synth+rollup subtree
+    # does (plans/batch.py)
     summary = sflow_summary(
         _synth_sflows(spark, sf_dir), ["10.1."]
     ).localCheckpoint(eager=True)
-    ftp_pairs = ftp_talkers(summary)
-    ftp_servers = spark.createDataFrame([], "myIP string")
-    alerts, _talkers = p2p_talkers(
-        summary, ["10.1."], cfg, ftp_pairs, ftp_servers
-    )
+    alerts = _sflow_rules(summary, cfg, "p2p")["p2p"]
     return alerts.select(
         F.col("lower_ip_str").alias("hostname"),
         F.element_at("data", "numberOfPairs").try_cast("long").alias("n_pairs"),
@@ -2829,20 +2837,13 @@ def q_hz_stateless_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:2215-2269), media streaming client (:1288-1363), ICMP tunnel
     (:2330-2386), DDoS incl. the drop-3-largest inter-arrival
     regularity gate (:2648-2758), and alien-accessing-too-many-hosts
-    (:2079-2142).  Engine side runs detectors/sflow.py verbatim over
-    the dedicated _synth_sflows2 corpus; the P2P-talker suppression
-    inputs (media, DDoS) are provably empty on this corpus — no lane
-    produces high/high or mid-range-UDP port pairs — which the oracle
-    mirrors by omission (the hz_p2p ftp precedent)."""
+    (:2079-2142).  Engine side runs those six rules of detectors/sflow's
+    rule table over the dedicated _synth_sflows2 corpus; the p2p rules
+    are off, so the P2P-talker suppressions (media, DDoS) are empty —
+    as they would be anyway, since no lane produces high/high or
+    mid-range-UDP port pairs — which the oracle mirrors by omission
+    (the hz_p2p ftp precedent)."""
     from hogzilla_spark.config import SFlowConfig
-    from hogzilla_spark.detectors.sflow import (
-        abused_smtp,
-        alien_accessing_many_hosts,
-        ddos_attack,
-        icmp_tunnel,
-        media_streaming_clients,
-        udp_amplifier,
-    )
     from hogzilla_spark.operators.rollup import icmp_summary, sflow_summary
 
     cfg = SFlowConfig(
@@ -2859,17 +2860,12 @@ def q_hz_stateless_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     mynets = ["10.1."]
     pkts = _synth_sflows2(spark, sf_dir)
     # materialize the shared rollup once (the production batch DAG
-    # persists it too, plans/batch.py) — six detectors fan out of it
+    # persists it too, plans/batch.py) — six rules fan out of it
     summary = sflow_summary(pkts, mynets).localCheckpoint(eager=True)
-    icmp = icmp_summary(pkts, mynets)
-    no_p2p = spark.createDataFrame([], "myIP string")
-
-    amp = udp_amplifier(summary, mynets, cfg)
-    smtp = abused_smtp(summary, mynets, cfg)
-    media_alerts, _ips = media_streaming_clients(summary, mynets, cfg, no_p2p)
-    icmp_alerts = icmp_tunnel(icmp, cfg)
-    ddos_alerts = ddos_attack(summary, mynets, cfg, no_p2p)
-    alien_alerts = alien_accessing_many_hosts(summary, mynets, cfg)
+    per = _sflow_rules(
+        summary, cfg, "udp_amplifier", "abused_smtp", "media_client",
+        "icmp_tunnel", "ddos", "alien_many_hosts", icmp=icmp_summary(pkts, mynets),
+    )
 
     def shape(alerts: DataFrame, part: str, cnt_key: str, peer) -> DataFrame:
         return alerts.select(
@@ -2884,13 +2880,18 @@ def q_hz_stateless_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     null_peer = F.lit(None)
     return (
-        shape(amp, "amp", "connections", null_peer)
-        .unionByName(shape(smtp, "smtp", "connections", F.col("upper_ip_str")))
-        .unionByName(shape(media_alerts, "media", "numberOfPairs", null_peer))
-        .unionByName(shape(icmp_alerts, "icmp", "connections", null_peer))
-        .unionByName(shape(ddos_alerts, "ddos", "numberOfAttackers", null_peer))
+        shape(per["udp_amplifier"], "amp", "connections", null_peer)
         .unionByName(
-            shape(alien_alerts, "alien", "numberOfPairs", F.element_at("data", "ports"))
+            shape(per["abused_smtp"], "smtp", "connections", F.col("upper_ip_str"))
+        )
+        .unionByName(shape(per["media_client"], "media", "numberOfPairs", null_peer))
+        .unionByName(shape(per["icmp_tunnel"], "icmp", "connections", null_peer))
+        .unionByName(shape(per["ddos"], "ddos", "numberOfAttackers", null_peer))
+        .unionByName(
+            shape(
+                per["alien_many_hosts"], "alien", "numberOfPairs",
+                F.element_at("data", "ports"),
+            )
         )
     )
 

@@ -11,7 +11,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 @dataclass(frozen=True)
 class Signature:
@@ -139,29 +138,3 @@ def mk_alert(
         f"{map_sql} AS data",
         f"concat({', '.join(note_parts)}) AS note",
     )
-
-def flow_struct() -> Column:
-    """The 13-field flow tuple the reference accumulates per alert
-    (HogSFlow flowSet; bytes first for deterministic desc rendering)."""
-    return F.struct(
-        (F.col("bytesUp") + F.col("bytesDown")).alias("totalBytes"),
-        F.col("myIP"),
-        F.col("myPort"),
-        F.col("alienIP"),
-        F.col("alienPort"),
-        F.col("proto"),
-        F.col("bytesUp"),
-        F.col("bytesDown"),
-        F.col("numberPkts"),
-        F.col("direction"),
-        F.col("beginTime"),
-        F.col("endTime"),
-        F.col("status"),
-    )
-
-def collect_flows(limit: int = 1000) -> Column:
-    """A4+O3: bounded deterministic flow list for alert rendering
-    (alert.maxFlowList=1000, HogSFlow.scala:662-696)."""
-    return F.slice(
-        F.reverse(F.array_sort(F.collect_list(flow_struct()))), 1, limit
-    ).alias("flows")

@@ -49,7 +49,7 @@ def interarrival_stats(
     by n−4.  This operator's knob counts dropped DIFFS, so the exact
     reference semantics would be drop_largest=3 (and a n>6 group-size
     gate); the bit-exact reference variant, including its n−4 divisor,
-    lives in detectors/sflow.py (ddos_victims, oracle-replayed by
+    lives in detectors/sflow.py (the ddos rule, oracle-replayed by
     hz_stateless_suite 'ddos').  The drop_largest=4 registry entry
     (a14_interarrival) is the generalized operator under its own
     oracle, not a claim about the reference constant.

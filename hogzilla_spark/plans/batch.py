@@ -4,22 +4,25 @@
 Dependency DAG (SURVEY.md §4 custom-work item 3; build order preserved
 from the reference):
 
-    sflow_summary ──┬─ ftp_talkers ─┬─ p2p ─┬─ media ─┬─ atypical_*
-                    │               │       │         ├─ ddos
-                    │  ftp_servers ─┘       │         └─ alien profile
-                    ├─ smtp_talkers (state guard)
-                    ├─ dns/icmp/udp/abused/alien/cc/os (stateless)
-                    └─ hPortScan / vPortScan (state)
+    sflow_summary ──┬─ stateless rule table (detectors/sflow.py): one
+                    │  (myIP, alienIP) aggregate → host rows → ftp
+                    │  servers → p2p → media / DDoS; smtp state guard;
+                    │  C&C prefix join; dns/icmp/udp/abused/alien/top
+                    │     ├─ p2p talker IPs ───┬─ atypical_* / alien profile
+                    │     └─ media client IPs ─┘  / portscans (state)
+                    ├─ ftp_talkers ─────────── atypical_* / alien profile
+                    └─ os inventory
 
 The reference funnels every inter-detector dependency through
 ``collect()`` on the driver; here the only driver materialization is
 the tiny talker-IP lists (broadcast side of anti-joins), and even those
 stay DataFrames.
 
-Scale notes: ``summary`` is persisted once and fanned out to ~15
-consumers (the reference caches too, HogSFlow.scala:882); every
-dimension input is broadcast; state scoring is one equi-join per
-family; state writing is one upsert per run.
+Scale notes: ``summary`` is persisted once (the reference caches too,
+HogSFlow.scala:882); the stateless suite shuffles it once, and the
+stateful detectors fan out of it; every dimension input is broadcast;
+state scoring is one equi-join per family; state writing is one upsert
+per run.
 """
 
 from __future__ import annotations
@@ -67,7 +70,6 @@ def run_sflow_batch(
 
     # dependency dimensions
     ftp_pairs = D.ftp_talkers(summary)
-    ftp_ips = D.ftp_servers(histograms)
     proxy_servers = [
         r.prefix for r in rep_list("ProxyServer", "whitelist").collect()
     ]
@@ -75,42 +77,12 @@ def run_sflow_batch(
         r.prefix for r in rep_list("BigProvider", "whitelist").collect()
     ]
 
-    def enabled(name: str) -> bool:
-        return name not in scfg.disabled
-
-    per: dict[str, DataFrame] = {}
-    if enabled("smtp_talkers"):
-        per["smtp_talkers"] = D.smtp_talkers(
-            summary, my_nets, scfg, histograms, batch_time
-        )
-    p2p_alerts, p2p_ips = D.p2p_talkers(
-        summary, my_nets, scfg, ftp_pairs, ftp_ips, batch_time
+    # stateless suite: one rule table over one (myIP, alienIP) aggregate;
+    # names in scfg.disabled drop their rules
+    per, p2p_ips, media_ips = D.stateless_alerts(
+        summary, icmp, my_nets, scfg, histograms,
+        rep_list("CCBotNet", "blacklist"), batch_time,
     )
-    per["p2p"] = p2p_alerts
-    media_alerts, media_ips = D.media_streaming_clients(
-        summary, my_nets, scfg, p2p_ips, batch_time
-    )
-    per["media_client"] = media_alerts
-    if enabled("dns_tunnel"):
-        per["dns_tunnel"] = D.dns_tunnel(summary, my_nets, scfg, batch_time)
-    if enabled("icmp_tunnel"):
-        per["icmp_tunnel"] = D.icmp_tunnel(icmp, scfg, batch_time)
-    if enabled("udp_amplifier"):
-        per["udp_amplifier"] = D.udp_amplifier(summary, my_nets, scfg, batch_time)
-    if enabled("abused_smtp"):
-        per["abused_smtp"] = D.abused_smtp(summary, my_nets, scfg, batch_time)
-    if enabled("alien_many_hosts"):
-        per["alien_many_hosts"] = D.alien_accessing_many_hosts(
-            summary, my_nets, scfg, batch_time
-        )
-    if enabled("cc_botnet"):
-        per["cc_botnet"] = D.cc_botnet(
-            summary, rep_list("CCBotNet", "blacklist"), scfg, batch_time
-        )
-    if enabled("ddos"):
-        per["ddos"] = D.ddos_attack(summary, my_nets, scfg, p2p_ips, batch_time)
-    if enabled("top_talkers"):
-        per["top_talkers"] = D.top_talkers(summary, my_nets, scfg, batch_time)
 
     # stateful suite
     at_alerts, at_updates, new_proxies = S.atypical_tcp_port(
