@@ -1,5 +1,8 @@
 """Join / window / aggregate / dedup / similarity operator tests."""
 
+import hashlib
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -609,6 +612,53 @@ def test_ngram_jaccard_freq_cap_unbiased(spark):
     assert capped == {(1, 2): 1.0, (3, 4): 0.5}
     # default cap (10k) never fires on this corpus → identical to uncapped
     assert pairs(10_000) == pairs(None)
+
+#: row digests of the eight bucket-join pair functions on the sf0.01
+#: documents, recorded from the per-family implementations they replace
+DEDUP_GOLDENS = {
+    "minhash_lsh_pairs": "8b4aed86e3bc27a0",
+    "minhash_lsh_pairs_incremental": "5740ecd761204b70",
+    "decontaminate": "d321f6914dee85c9",
+    "ngram_jaccard_pairs_cap5": "597e9d23518587ca",
+    "ngram_jaccard_pairs_uncapped": "8b4aed86e3bc27a0",
+    "ngram_jaccard_pairs_dual": "8db8c1759c5ffec2",
+    "simhash_pairs_64": "109b6629b8ac7b69",
+    "simhash128_pairs": "8a384e122412e797",
+}
+
+def _dedup_golden_call(name, docs):
+    new, old = docs.filter(F.col("doc_id") % 5 == 0), docs.filter(F.col("doc_id") % 5 != 0)
+    heldout = docs.filter(F.col("doc_id") % 100 < 2)
+    corpus = docs.filter(F.col("doc_id") % 100 >= 2)
+    return {
+        "minhash_lsh_pairs": lambda: DD.minhash_lsh_pairs(docs, min_jaccard=0.3),
+        "minhash_lsh_pairs_incremental": lambda: DD.minhash_lsh_pairs_incremental(
+            new, old, min_jaccard=0.3
+        ),
+        "decontaminate": lambda: DD.decontaminate(corpus, heldout, min_jaccard=0.3),
+        "ngram_jaccard_pairs_cap5": lambda: DD.ngram_jaccard_pairs(
+            docs, min_jaccard=0.3, max_shingle_freq=5
+        ),
+        "ngram_jaccard_pairs_uncapped": lambda: DD.ngram_jaccard_pairs(
+            docs, min_jaccard=0.3, max_shingle_freq=None
+        ),
+        "ngram_jaccard_pairs_dual": lambda: DD.ngram_jaccard_pairs_dual(
+            docs, min_jaccard=0.3, max_shingle_freq=5
+        ),
+        "simhash_pairs_64": lambda: DD.simhash_pairs(docs, max_hamming=3, width=64),
+        "simhash128_pairs": lambda: DD.simhash128_pairs(docs, max_hamming=3),
+    }[name]()
+
+@pytest.mark.parametrize("name", sorted(DEDUP_GOLDENS))
+def test_dedup_pair_goldens(spark, name):
+    """Each pair function's rows on sf0.01 are digest-identical to the
+    recorded output: sha256 of the sorted row tuples' repr."""
+    import __spark_entry__ as E
+
+    sf = os.path.join(os.path.dirname(E.SF_DEFAULT), "sf0.01")
+    docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
+    rows = sorted(tuple(r) for r in _dedup_golden_call(name, docs).collect())
+    assert hashlib.sha256(repr(rows).encode()).hexdigest()[:16] == DEDUP_GOLDENS[name]
 
 def test_embedding_neardup_blocked_matches_broadcast(spark):
     """The scale path (block-pair fan-out, no driver collect) must
