@@ -1,15 +1,28 @@
 """Deduplication operators for training-data pipelines.
 
-Exact, MinHash+LSH, SimHash, and n-gram-Jaccard near-dup — all designed
-scale-first:
+Exact dedup is one hash-groupBy on a fingerprint computed map-side, so
+only (hash, id) pairs move, never the text.
 
-  - exact: one hash-groupBy on a fingerprint (no full-text shuffle; the
-    md5 is computed map-side and only (hash, id) pairs move).
-  - MinHash+LSH: shingle → K minhashes → B bands; candidate pairs come
-    from a self-join on (band_id, band_hash) buckets, so the shuffle key
-    space is the bucket, never the O(n²) pair space.
-  - hash functions are md5-based and engine-portable: the DuckDB oracle
-    can reproduce every signature bit-for-bit.
+Every near-duplicate family finds its candidates with one operator,
+`_bucket_pairs`: a family maps each document to bucket keys, the
+operator equi-joins the (id, key) rows on the key, orders each pair and
+reduces it to distinct pairs or a per-pair count of shared buckets, and
+the family verifies what comes out.  The shuffle key space is the
+bucket, never the O(n²) pair space.
+
+  - MinHash-LSH (`minhash_lsh_pairs`, `minhash_lsh_pairs_incremental`,
+    `decontaminate`): buckets are (band, md5 of the band's minhashes);
+    candidates are verified by exact shingle-set Jaccard
+    (`_jaccard_verify`).
+  - exact n-gram Jaccard (`ngram_jaccard_pairs`, `ngram_jaccard_pairs_dual`):
+    buckets are the shingles themselves, so the shared-bucket count IS
+    |A∩B| and there is nothing to verify.
+  - SimHash (`simhash_pairs`, `simhash128_pairs`): buckets are the
+    signature's pigeonhole chunks; candidates are verified by the exact
+    hamming distance (`_hamming_pairs`).
+
+Hash functions are md5-based and engine-portable: the DuckDB oracle
+reproduces every signature bit-for-bit.
 """
 
 from __future__ import annotations
@@ -45,7 +58,9 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 # --- shingling --------------------------------------------------------------
 
 def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """Distinct word k-grams as array<string> ("a b c" style).
+    """Distinct word k-grams as array<string> ("a b c" style); empty for
+    NULL text and for documents of fewer than k tokens, which therefore
+    never pair.
 
     The token array is BOUND once via a single-element-array transform:
     higher-order functions are interpreted (no codegen subexpression
@@ -57,16 +72,79 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
     toks = F.filter(F.split(F.trim(F.lower(c)), r"\s+"), lambda t: t != "")
 
     def shingles_of(tk: Column) -> Column:
-        n = F.size(tk)
-        idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0)))
+        # one slot per k-gram start: max(n − k + 1, 0) of them
+        starts = F.array_repeat(F.lit(0), F.greatest(F.size(tk) - (k - 1), F.lit(0)))
         return F.array_distinct(
             F.transform(
-                idx,
-                lambda i: F.concat_ws(" ", *[F.get(tk, i + j - 1) for j in range(k)]),
+                starts,
+                lambda _, i: F.concat_ws(" ", *[F.get(tk, i + j) for j in range(k)]),
             )
         )
 
     return F.get(F.transform(F.array(toks), shingles_of), 0)
+
+def _shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(id, sh) shingle sets of the documents that have any.  The regex
+    shingle kernel is the heavy per-row stage, so its parallelism is
+    floored when the corpus arrives as an unsplittable small scan
+    (r12: 4.5 s single-core at sf0.1 with 31 cores idle)."""
+    return (
+        spread_small_scan(df.select(F.col(id_col).alias("id"), F.col(text_col)))
+        .select("id", word_shingles(text_col, k).alias("sh"))
+        .filter(F.size("sh") > 0)
+    )
+
+# --- bucket pairs -----------------------------------------------------------
+
+def _bucket_pairs(
+    keys: DataFrame,
+    on: list[str],
+    other: DataFrame | None = None,
+    ordered: bool = False,
+    carry: tuple[str, ...] = (),
+    agg: list[Column] | None = None,
+) -> DataFrame:
+    """Candidate (id_a, id_b) pairs of documents that share a bucket —
+    the one bucket equi-join behind every near-duplicate family here.
+
+    `keys` holds one (id, *on) row per document per bucket.  Alone it is
+    self-joined on `on` and each pair comes once, as id_a < id_b.  With
+    `other` (id, *on), each `keys` row pairs with the `other` rows of its
+    bucket: as (keys id, other id) when `ordered`, otherwise as
+    (least, greatest) with equal ids dropped.
+
+    `carry` names columns that depend only on the id (n-gram sizes,
+    SimHash words); they come out as <c>_a and <c>_b beside their id
+    (self-join and `ordered` pairs; the least/greatest swap does not
+    move them).  Any other column of `keys` is a bucket attribute that
+    `agg` may read.
+
+    Without `agg` the result is the distinct pairs with their carried
+    columns; with it, the rows grouped by pair and carried columns and
+    aggregated by `agg` — `F.count(F.lit(1))` counts the shared buckets.
+    """
+    def side(df: DataFrame, s: str, rest: list[str]) -> DataFrame:
+        return df.select(
+            F.col("id").alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            *rest,
+        )
+
+    a = side(keys, "a", [c for c in keys.columns if c not in ("id", *carry)])
+    pairs = a.join(side(keys if other is None else other, "b", on), on)
+    id_a, id_b = F.col("id_a"), F.col("id_b")
+    if other is None:
+        pairs = pairs.filter(id_a < id_b)
+    elif not ordered:
+        pairs = pairs.filter(id_a != id_b)
+        id_a, id_b = F.least(id_a, id_b), F.greatest(id_a, id_b)
+    cols = [
+        id_a.alias("id_a"), id_b.alias("id_b"),
+        *[f"{c}_{s}" for s in "ab" for c in carry],
+    ]
+    if agg is None:
+        return pairs.select(*cols).dropDuplicates(["id_a", "id_b"])
+    return pairs.groupBy(*cols).agg(*agg)
 
 # --- MinHash + LSH ----------------------------------------------------------
 
@@ -177,6 +255,31 @@ def _band_rows(base: DataFrame, num_hashes: int, num_bands: int) -> DataFrame:
         "id", F.col("b.band").alias("band"), F.col("b.key").alias("key")
     )
 
+def _candidate_shingles(
+    docs: DataFrame, ids: DataFrame, id_col: str, text_col: str, k: int
+) -> DataFrame:
+    """(id, sh) shingle sets of just the documents whose id is in `ids`
+    (column __cid): verification re-shingles candidates, not the corpus."""
+    return docs.join(ids, F.col(id_col) == F.col("__cid"), "left_semi").select(
+        F.col(id_col).alias("id"), word_shingles(text_col, k).alias("sh")
+    )
+
+def _jaccard_verify(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, min_jaccard: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) of candidate pairs: exact Jaccard of the
+    (id, sh) shingle sets `sh_a` holds for id_a and `sh_b` for id_b,
+    kept at jaccard >= min_jaccard."""
+    def side(sh: DataFrame, s: str) -> DataFrame:
+        return sh.select(F.col("id").alias(f"id_{s}"), F.col("sh").alias(f"sh_{s}"))
+
+    pairs = cand.join(side(sh_a, "a"), "id_a").join(side(sh_b, "b"), "id_b")
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    return pairs.select(
+        "id_a", "id_b", round6u(inter / union).alias("jaccard")
+    ).filter(F.col("jaccard") >= min_jaccard)
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -185,70 +288,27 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     num_bands: int = 4,
     min_jaccard: float = 0.5,
-    eager: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH, verified with exact Jaccard.
 
-    Plan shape (scale path): shingle+sign map-side → explode bands →
-    self-join on (band,key) bucket → distinct candidate pairs → exact
-    Jaccard via shingle-set intersect/union on just the candidates.
-    Shuffles are on band buckets and candidate ids — never all-pairs.
-
-    NOTE: with ``eager=True`` (default) the call RUNS the query and
-    returns a localCheckpoint of the (small) verified pair set, so the
-    O(corpus) shingle cache is released before returning.  Callers
-    composing a larger lazy plan can pass ``eager=False`` to get the
-    unexecuted plan instead — they then own the cached shingle
-    partitions' lifetime (unpersisted only when the session drops them).
+    The call RUNS the query and returns a checkpoint of the (small)
+    verified pair set, so the O(corpus) shingle cache is released before
+    returning: repeated calls in a long-lived session accumulate no
+    cached partitions.  The cut fires at every size (the pair set
+    funnels the whole query); big inputs go through a RELIABLE
+    checkpoint, since severed executor-local lineage would let one lost
+    executor kill the 100 TB run this operator is shaped for
+    (sources.catalog.materialize_cut).
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= min_jaccard.
     """
-    # the regex shingle kernel is the heavy per-row stage: floor its
-    # parallelism when the corpus arrives as an unsplittable small scan
-    # (r12: 4.5 s single-core at sf0.1 with 31 cores idle; structural
-    # no-op at scale — see spread_small_scan)
-    base = (
-        spread_small_scan(df.select(F.col(id_col).alias("id"), F.col(text_col)))
-        .select("id", word_shingles(text_col, shingle_k).alias("sh"))
-        .filter(F.size("sh") > 0)
-        # shingling feeds three consumers (signatures, and both sides of
-        # the verify join); persist so the scan+shingle work runs once
-        .persist()
-    )
-    # Buckets carry only (id, band, key): candidate generation shuffles
-    # ids, never shingle arrays — at 100 TB that is the difference
-    # between shuffling ~32 bytes/row and the whole document signature.
-    exploded = _band_rows(base, num_hashes, num_bands)
-    left = exploded.alias("l")
-    right = exploded.alias("r")
-    cand = (
-        left.join(right, on=["band", "key"])
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    shingle_sets = base.select("id", "sh")
-    pairs = cand.join(
-        shingle_sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(
-        shingle_sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b"
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = pairs.select(
-        "id_a", "id_b", round6u(inter / union).alias("jaccard")
-    ).filter(F.col("jaccard") >= min_jaccard)
-    # Materialize the (small) verified pair set eagerly so the O(corpus)
-    # shingle cache can be released before returning — otherwise repeated
-    # invocations in a long-lived session accumulate cached partitions.
-    # r13 (VERDICT r12 task 2): the cut fires at every size (the pair
-    # set funnels the whole query), but big inputs go through a RELIABLE
-    # checkpoint instead of localCheckpoint — severed executor-local
-    # lineage would let one lost executor kill the 100 TB run this
-    # operator is shaped for (sources.catalog.materialize_cut).
-    if eager:
-        out = materialize_cut(out, always=True)
-        base.unpersist()
+    # the shingle sets feed the signatures and both verify sides
+    base = _shingle_sets(df, id_col, text_col, shingle_k).persist()
+    # buckets carry only (id, band, key): candidate generation shuffles
+    # ids, never shingle arrays
+    cand = _bucket_pairs(_band_rows(base, num_hashes, num_bands), ["band", "key"])
+    out = materialize_cut(_jaccard_verify(cand, base, base, min_jaccard), always=True)
+    base.unpersist()
     return out
 
 def minhash_band_index(
@@ -264,12 +324,7 @@ def minhash_band_index(
     writes it partitioned/bucketed by (band, key), and each new batch
     joins its own (tiny) band rows against it — no corpus re-shingle,
     no full self-join."""
-    base = (
-        spread_small_scan(df.select(F.col(id_col).alias("id"), F.col(text_col)))
-        .select("id", word_shingles(text_col, shingle_k).alias("sh"))
-        .filter(F.size("sh") > 0)
-    )
-    return _band_rows(base, num_hashes, num_bands)
+    return _band_rows(_shingle_sets(df, id_col, text_col, shingle_k), num_hashes, num_bands)
 
 def minhash_lsh_pairs_incremental(
     new_docs: DataFrame,
@@ -281,7 +336,6 @@ def minhash_lsh_pairs_incremental(
     num_hashes: int = 16,
     num_bands: int = 4,
     min_jaccard: float = 0.5,
-    eager: bool = True,
 ) -> DataFrame:
     """Incremental MinHash-LSH: near-dup pairs TOUCHING the new batch
     (new↔corpus and new↔new), the shape a continuous ingest runs.
@@ -293,13 +347,11 @@ def minhash_lsh_pairs_incremental(
     `minhash_lsh_pairs(corpus ∪ new)` filtered to pairs with a new-batch
     member.
 
-    With ``eager=True`` (default) the candidate id-pair set — small by
-    LSH construction — is materialized via localCheckpoint before the
-    verify stage: it feeds three consumers (both id sides of the verify
-    join and the semi-join id list), and without the cut the planner
-    re-derives the whole banding subtree per consumer (measured 31
-    scans of the source in one plan).  ``eager=False`` keeps the fully
-    lazy plan.
+    The candidate id-pair set — small by LSH construction — is
+    materialized before the verify stage: it feeds three consumers (both
+    id sides of the verify join and the semi-join id list), and without
+    the cut the planner re-derives the whole banding subtree per
+    consumer (measured 31 scans of the source in one plan).
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= min_jaccard.
     """
@@ -310,40 +362,16 @@ def minhash_lsh_pairs_incremental(
     new_bands = minhash_band_index(
         new_docs, id_col, text_col, shingle_k, num_hashes, num_bands
     )
-    searchable = band_index.unionByName(new_bands)
-    cand = (
-        new_bands.select("band", "key", F.col("id").alias("id_n"))
-        .join(searchable.select("band", "key", F.col("id").alias("id_o")), ["band", "key"])
-        .filter(F.col("id_n") != F.col("id_o"))
-        .select(
-            F.least("id_n", "id_o").alias("id_a"),
-            F.greatest("id_n", "id_o").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cand = materialize_cut(
+        _bucket_pairs(new_bands, ["band", "key"], band_index.unionByName(new_bands)),
+        always=True,
     )
-    if eager:
-        cand = materialize_cut(cand, always=True)
     docs = corpus.select(id_col, text_col).unionByName(new_docs.select(id_col, text_col))
-    cand_ids = cand.select(F.col("id_a").alias("id")).unionByName(
-        cand.select(F.col("id_b").alias("id"))
+    ids = cand.select(F.col("id_a").alias("__cid")).unionByName(
+        cand.select(F.col("id_b").alias("__cid"))
     ).distinct()
-    verify_sh = (
-        docs.join(cand_ids, docs[id_col] == cand_ids["id"], "left_semi")
-        .select(
-            F.col(id_col).alias("id"),
-            word_shingles(text_col, shingle_k).alias("sh"),
-        )
-    )
-    pairs = cand.join(
-        verify_sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(
-        verify_sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b"
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return pairs.select(
-        "id_a", "id_b", round6u(inter / union).alias("jaccard")
-    ).filter(F.col("jaccard") >= min_jaccard)
+    sh = _candidate_shingles(docs, ids, id_col, text_col, shingle_k)
+    return _jaccard_verify(cand, sh, sh, min_jaccard)
 
 def decontaminate(
     corpus: DataFrame,
@@ -354,13 +382,10 @@ def decontaminate(
     num_hashes: int = 16,
     num_bands: int = 4,
     min_jaccard: float = 0.5,
-    eager: bool = True,
 ) -> DataFrame:
     """Test-set decontamination: corpus documents that near-duplicate a
     held-out/eval document — the train/test contamination sweep every
-    training pipeline runs before a release.  ``eager=True`` (default)
-    checkpoints the small candidate set so its banding subtree isn't
-    re-derived per verify consumer (the siblings' contract).
+    training pipeline runs before a release.
 
     Cross-corpus LSH: corpus band rows join ONLY the heldout band rows
     (never corpus↔corpus), so the work is O(corpus bands) + candidate
@@ -368,6 +393,8 @@ def decontaminate(
     definition — and is broadcast.  Verification re-shingles just the
     candidate corpus documents.  Equivalent to
     ``minhash_lsh_pairs(corpus ∪ heldout)`` restricted to cross pairs.
+    The small candidate set is checkpointed so its banding subtree isn't
+    re-derived per verify consumer.
 
     Returns (corpus_id, heldout_id, jaccard) with jaccard >= min_jaccard.
     """
@@ -377,40 +404,49 @@ def decontaminate(
     h_bands = minhash_band_index(
         heldout, id_col, text_col, shingle_k, num_hashes, num_bands
     )
-    cand = (
-        c_bands.select("band", "key", F.col("id").alias("corpus_id"))
-        .join(
-            F.broadcast(
-                h_bands.select("band", "key", F.col("id").alias("heldout_id"))
-            ),
-            ["band", "key"],
-        )
-        .select("corpus_id", "heldout_id")
-        .dropDuplicates()
-    )
-    if eager:
-        cand = cand.localCheckpoint(eager=True)
-    c_sh = (
-        corpus.join(
-            cand.select(F.col("corpus_id").alias("__cid")).distinct(),
-            F.col(id_col) == F.col("__cid"),
-            "left_semi",
-        )
-        .select(
-            F.col(id_col).alias("corpus_id"),
-            word_shingles(text_col, shingle_k).alias("sh_c"),
-        )
+    cand = _bucket_pairs(
+        c_bands, ["band", "key"], F.broadcast(h_bands), ordered=True
+    ).localCheckpoint(eager=True)
+    c_sh = _candidate_shingles(
+        corpus, cand.select(F.col("id_a").alias("__cid")).distinct(),
+        id_col, text_col, shingle_k,
     )
     h_sh = heldout.select(
-        F.col(id_col).alias("heldout_id"),
-        word_shingles(text_col, shingle_k).alias("sh_h"),
+        F.col(id_col).alias("id"), word_shingles(text_col, shingle_k).alias("sh")
     )
-    pairs = cand.join(c_sh, "corpus_id").join(F.broadcast(h_sh), "heldout_id")
-    inter = F.size(F.array_intersect("sh_c", "sh_h")).cast("double")
-    union = F.size(F.array_union("sh_c", "sh_h")).cast("double")
-    return pairs.select(
-        "corpus_id", "heldout_id", round6u(inter / union).alias("jaccard")
-    ).filter(F.col("jaccard") >= min_jaccard)
+    return _jaccard_verify(cand, c_sh, F.broadcast(h_sh), min_jaccard).select(
+        F.col("id_a").alias("corpus_id"), F.col("id_b").alias("heldout_id"), "jaccard"
+    )
+
+# --- exact n-gram Jaccard ---------------------------------------------------
+
+def _ngram_rows(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(id, n, s): one row per distinct shingle s of each document, n =
+    the document's shingle count; persisted — it feeds the frequency
+    counts, the hot-shingle correction and both join sides, and Spark
+    does not reuse the scan across them (measured 8 scans without)."""
+    return (
+        _shingle_sets(df, id_col, text_col, k)
+        .select("id", F.size("sh").alias("n"), F.explode("sh").alias("s"))
+        .persist()
+    )
+
+def _hot_drops(sh: DataFrame, counts: DataFrame, max_shingle_freq: int) -> DataFrame:
+    """(id, __n_drop): per document, how many of its shingles occur in
+    more than `max_shingle_freq` documents (`counts`: s, __f).  The
+    over-cap set is tiny, so this correction table stays small (one row
+    per boilerplate-carrying doc)."""
+    hot = counts.filter(F.col("__f") > max_shingle_freq).select("s")
+    return sh.join(hot, "s", "left_semi").groupBy("id").agg(
+        F.count(F.lit(1)).alias("__n_drop")
+    )
+
+def _count_jaccard(inter: str, n_a: str, n_b: str) -> Column:
+    """round6 of |A∩B| / (|A| + |B| − |A∩B|)."""
+    return round6u(
+        F.col(inter).cast("double")
+        / (F.col(n_a) + F.col(n_b) - F.col(inter)).cast("double")
+    )
 
 def ngram_jaccard_pairs(
     df: DataFrame,
@@ -419,95 +455,54 @@ def ngram_jaccard_pairs(
     shingle_k: int = 3,
     min_jaccard: float = 0.5,
     max_shingle_freq: int | None = 10_000,
-    eager: bool = True,
 ) -> DataFrame:
     """EXACT n-gram-Jaccard near-dup pairs, fully relational.
 
-    Explode (id, shingle) and self-join on the shingle: the per-pair
-    match count IS |A∩B|, and |A∪B| = |A|+|B|−|A∩B| — no candidate
-    generation, no approximation, recall 1 by construction.  The
-    shingle table is cached once and reused by every consumer; the
-    self-join input drops singleton shingles (bit-identical results,
-    see inline comments).
+    Each shingle is a bucket: the per-pair shared-bucket count IS |A∩B|,
+    and |A∪B| = |A|+|B|−|A∩B| — no candidate generation, no
+    approximation, recall 1 by construction.  The self-join input drops
+    singleton shingles (they never match; bit-identical results).
 
     Scale guard: a shingle shared by m documents emits m² join rows
     (quadratic on hot shingles, e.g. boilerplate headers), so shingles
     more frequent than `max_shingle_freq` are DROPPED by default (10k —
     a 10k-doc shingle alone would emit 1e8 join rows).  Jaccard is then
     EXACT over the filtered shingle universe: per-doc sizes are
-    recomputed after the filter, so a capped run equals an uncapped run
-    for every pair whose shingles all survive the cap, and boilerplate
-    shared by >cap docs simply doesn't count toward similarity (the
-    standard near-dup trade).  Docs whose every shingle is dropped
-    can't pair.  Pass None for exact results on bounded corpora.
+    corrected by each doc's hot-shingle count, so a capped run equals an
+    uncapped run for every pair whose shingles all survive the cap, and
+    boilerplate shared by >cap docs simply doesn't count toward
+    similarity (the standard near-dup trade).  Docs whose every shingle
+    is dropped can't pair.  Pass None for exact results on bounded
+    corpora.
+
+    The call RUNS the query, checkpoints the (small) pair set and
+    releases the shingle cache, like `minhash_lsh_pairs`.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= min_jaccard.
     """
-    sh = (
-        spread_small_scan(df.select(F.col(id_col).alias("id"), F.col(text_col)))
-        .select("id", word_shingles(text_col, shingle_k).alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select("id", F.size("sh").alias("n"), F.explode("sh").alias("s"))
-    )
-    if eager:
-        # the exploded table feeds four consumers (freq counts, pair
-        # semi-join, hot attribution, both self-join sides) and Spark
-        # does not reuse the scan across them — without the cache the
-        # regex shingling re-runs per consumer (measured 8 scans).
-        # Same eager contract as minhash_lsh_pairs: the call RUNS the
-        # query, checkpoints the (small) pair set, and releases the
-        # cache; eager=False returns the lazy plan and the caller owns
-        # recomputation.
-        sh = sh.persist()
+    sh = _ngram_rows(df, id_col, text_col, shingle_k)
     counts = sh.groupBy("s").agg(F.count(F.lit(1)).alias("__f"))
-    # The self-join input needs only shingles that CAN pair: freq >= 2
-    # (singletons never match — in a Zipfian corpus they are the bulk
-    # of distinct shingles) and freq <= cap (the m² guard).  Per-doc
-    # sizes n stay exact over the CAPPED universe (counting them
-    # pre-cap would deflate jaccard for partially-boilerplate
-    # overlaps): instead of re-aggregating the filtered universe, n is
-    # corrected by each doc's occurrence count in the HOT list — the
-    # over-cap shingle set is tiny, so the correction table stays small
-    # (one row per boilerplate-carrying doc; AQE broadcasts it while it
-    # fits, falls back to a shuffled join keyed on id otherwise).
-    # Singleton-dropping needs no n correction at all (singletons still
-    # count toward the union denominator).
     cond = F.col("__f") >= 2
     if max_shingle_freq is not None:
         cond = cond & (F.col("__f") <= max_shingle_freq)
-    pair_shingles = counts.filter(cond).select("s")
-    joinable = sh.join(pair_shingles, "s", "left_semi")
+    joinable = sh.join(counts.filter(cond).select("s"), "s", "left_semi")
     if max_shingle_freq is not None:
-        hot = counts.filter(F.col("__f") > max_shingle_freq).select("s")
-        n_drop = (
-            sh.join(hot, "s", "left_semi")
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("__n_drop"))
-        )
+        # n counted pre-cap would deflate jaccard for partially-
+        # boilerplate overlaps; singletons need no correction (they
+        # still count toward the union)
         joinable = (
-            joinable.join(n_drop, "id", "left")
-            .withColumn(
-                "n", F.col("n") - F.coalesce(F.col("__n_drop"), F.lit(0))
-            )
+            joinable.join(_hot_drops(sh, counts, max_shingle_freq), "id", "left")
+            .withColumn("n", F.col("n") - F.coalesce(F.col("__n_drop"), F.lit(0)))
             .drop("__n_drop")
         )
-    l = joinable.select(F.col("id").alias("id_a"), F.col("n").alias("n_a"), "s")
-    r = joinable.select(F.col("id").alias("id_b"), F.col("n").alias("n_b"), "s")
-    inter = (
-        l.join(r, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    inter = _bucket_pairs(
+        joinable, ["s"], carry=("n",), agg=[F.count(F.lit(1)).alias("inter")]
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("inter")
-    ).cast("double")
     out = inter.select(
-        "id_a", "id_b", round6u(jac).alias("jaccard")
+        "id_a", "id_b", _count_jaccard("inter", "n_a", "n_b").alias("jaccard")
     ).filter(F.col("jaccard") >= min_jaccard)
-    if eager:
-        out = materialize_cut(out, always=True)
-        sh.unpersist()
+    out = materialize_cut(out, always=True)
+    sh.unpersist()
     return out
 
 def ngram_jaccard_pairs_dual(
@@ -547,13 +542,7 @@ def ngram_jaccard_pairs_dual(
 
     Returns (part 'uncapped'|'capped', id_a, id_b, jaccard).
     """
-    sh = (
-        spread_small_scan(df.select(F.col(id_col).alias("id"), F.col(text_col)))
-        .select("id", word_shingles(text_col, shingle_k).alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select("id", F.size("sh").alias("n"), F.explode("sh").alias("s"))
-        .persist()
-    )
+    sh = _ngram_rows(df, id_col, text_col, shingle_k)
     # fill the cache BEFORE the consumers fan out: the broadcast-build
     # jobs below launch concurrently, and concurrent first readers of a
     # lazy cache each recompute the partition (measured: six identical
@@ -563,46 +552,29 @@ def ngram_jaccard_pairs_dual(
     # separate broadcast-build job — cached so the groupBy exchange
     # runs once, not once per build (measured: 4 × 3.7 MiB at sf0.1)
     counts = sh.groupBy("s").agg(F.count(F.lit(1)).alias("__f")).persist()
-    # per-doc sizes: n from the shingle scan, n_c corrected by the hot
-    # occurrence count — one row per doc; materialized eagerly so the
-    # two per-side joins below don't each recompute the chain (this
-    # serial job also fills the counts cache before the concurrent
-    # broadcast builds of the main job race it)
-    hot = counts.filter(F.col("__f") > max_shingle_freq).select("s")
-    n_drop = (
-        sh.join(hot, "s", "left_semi")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("__n_drop"))
-    )
+    # per-doc sizes, materialized eagerly so the two per-side joins
+    # below don't each recompute the chain (this serial job also fills
+    # the counts cache before the concurrent broadcast builds race it)
     sizes = (
         sh.groupBy("id")
         .agg(F.max("n").alias("n"))
-        .join(n_drop, "id", "left")
+        .join(_hot_drops(sh, counts, max_shingle_freq), "id", "left")
         .select(
             "id", "n",
             (F.col("n") - F.coalesce(F.col("__n_drop"), F.lit(0))).alias("n_c"),
         )
     )
-    # fault-tolerant at scale, localCheckpoint below the gate (task 2)
     sizes = materialize_cut(sizes, always=True)
-    # one row per joinable shingle; the flag replaces carrying __f
     pair_shingles = counts.filter(F.col("__f") >= 2).select(
         "s", (F.col("__f") <= max_shingle_freq).alias("__in_cap")
     )
-    joinable = sh.join(pair_shingles, "s").select("id", "s", "__in_cap")
-    # BOTH sides project the same columns so the two shuffle exchanges
-    # canonicalize identically and can share one shuffle write
-    # (ReusedExchange) when the join does shuffle both sides at scale
-    l = joinable.select(F.col("id").alias("id_a"), "s", "__in_cap")
-    r = joinable.select(F.col("id").alias("id_b"), "s", "__in_cap")
-    pairs = (
-        l.join(r, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(
+    pairs = _bucket_pairs(
+        sh.join(pair_shingles, "s").select("id", "s", "__in_cap"),
+        ["s"],
+        agg=[
             F.count(F.lit(1)).alias("inter"),
-            F.count(F.when(l["__in_cap"], 1)).alias("inter_c"),
-        )
+            F.count(F.when(F.col("__in_cap"), 1)).alias("inter_c"),
+        ],
     )
     inter = pairs.join(
         sizes.select(
@@ -620,25 +592,18 @@ def ngram_jaccard_pairs_dual(
     # materialize the joined pair set ONCE: the un/cap union branches
     # are otherwise two full copies of the pairs-aggregate subtree and
     # the m²-join exchange executes per branch (measured: 2 × ~9 MiB
-    # shuffle writes for one logical aggregation at sf0.1); reliable
-    # above the size gate (task 2), localCheckpoint below
+    # shuffle writes for one logical aggregation at sf0.1)
     inter = materialize_cut(inter, always=True)
-    jac_un = F.col("inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("inter")
-    ).cast("double")
-    jac_c = F.col("inter_c").cast("double") / (
-        F.col("n_ca") + F.col("n_cb") - F.col("inter_c")
-    ).cast("double")
     un = inter.select(
         F.lit("uncapped").alias("part"), "id_a", "id_b",
-        round6u(jac_un).alias("jaccard"),
+        _count_jaccard("inter", "n_a", "n_b").alias("jaccard"),
     ).filter(F.col("jaccard") >= min_jaccard)
     cap = inter.filter(F.col("inter_c") > 0).select(
         F.lit("capped").alias("part"), "id_a", "id_b",
-        round6u(jac_c).alias("jaccard"),
+        _count_jaccard("inter_c", "n_ca", "n_cb").alias("jaccard"),
     ).filter(F.col("jaccard") >= min_jaccard)
-    # no final checkpoint: both branches are cheap projections over the
-    # already-checkpointed pair set, safe to recompute after unpersist
+    # both branches are cheap projections over the checkpointed pair
+    # set, safe to recompute after unpersist
     counts.unpersist()
     sh.unpersist()
     return un.unionByName(cap)
@@ -652,6 +617,24 @@ def ngram_jaccard_pairs_dual(
 #: default width="auto" switches to the 128-bit variant beyond this.
 SIMHASH_W64_MAX_DOCS = 1_000_000
 
+def _hamming_pairs(
+    sigs: DataFrame, words: list[str], chunks: list[Column], max_hamming: int
+) -> DataFrame:
+    """(id_a, id_b, hamming) of signatures (id, *words) that share a
+    pigeonhole chunk — `chunks` are struct(blk, chunk) Columns over the
+    words — kept at exact hamming distance <= max_hamming."""
+    keys = sigs.select("id", *words, F.explode(F.array(*chunks)).alias("c")).select(
+        "id", *words, F.col("c.blk").alias("blk"), F.col("c.chunk").alias("chunk")
+    )
+    cand = _bucket_pairs(keys, ["blk", "chunk"], carry=tuple(words))
+    ham = sum(
+        (F.bit_count(F.col(f"{w}_a").bitwiseXOR(F.col(f"{w}_b"))) for w in words),
+        start=F.lit(0),
+    )
+    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
+    )
+
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -664,7 +647,7 @@ def simhash_pairs(
     """Near-dup pairs by 64-bit SimHash with block-based candidates: the
     signature splits into `blocks` equal chunks (blocks/2 per half); by
     pigeonhole any pair within max_hamming (< blocks) shares a chunk, so
-    the self-join key is (block_idx, chunk) — never all pairs.
+    the bucket key is (block_idx, chunk) — never all pairs.
 
     Fewer blocks → wider chunks → a larger key space and far fewer
     bucket collisions: at 50k docs, 4×16-bit chunks generate ~40× fewer
@@ -712,40 +695,15 @@ def simhash_pairs(
         sigs = simhash128_sigs_kernel(df, id_col, text_col)
     if "hi" not in sigs.columns:
         sigs = sigs.select("id", F.col("w0").alias("hi"), F.col("w1").alias("lo"))
-    chunk_cols = []
-    for i in range(per_half):
-        chunk_cols.append(
-            F.struct(
-                F.lit(i).alias("blk"),
-                F.shiftright("hi", i * bits).bitwiseAND(F.lit(mask)).alias("chunk"),
-            )
+    chunks = [
+        F.struct(
+            F.lit(i + h * per_half).alias("blk"),
+            F.shiftright(word, i * bits).bitwiseAND(F.lit(mask)).alias("chunk"),
         )
-        chunk_cols.append(
-            F.struct(
-                F.lit(i + per_half).alias("blk"),
-                F.shiftright("lo", i * bits).bitwiseAND(F.lit(mask)).alias("chunk"),
-            )
-        )
-    chunks = sigs.select(
-        "id", "hi", "lo", F.explode(F.array(*chunk_cols)).alias("c")
-    ).select("id", "hi", "lo", F.col("c.blk").alias("blk"), F.col("c.chunk").alias("chunk"))
-    l, r = chunks.alias("l"), chunks.alias("r")
-    cand = (
-        l.join(r, on=["blk", "chunk"])
-        .filter(F.col("l.id") < F.col("r.id"))
-        .select(
-            F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-            F.col("l.hi").alias("hi_a"), F.col("l.lo").alias("lo_a"),
-            F.col("r.hi").alias("hi_b"), F.col("r.lo").alias("lo_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ham = F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b"))) + F.bit_count(
-        F.col("lo_a").bitwiseXOR(F.col("lo_b"))
-    )
-    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
+        for i in range(per_half)
+        for h, word in enumerate(("hi", "lo"))
+    ]
+    return _hamming_pairs(sigs, ["hi", "lo"], chunks, max_hamming)
 
 def simhash128_sigs_kernel(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
@@ -810,13 +768,10 @@ def simhash128_sigs_kernel(
                 }
             )
 
-    src = df.select(id_col, text_col)
-    # small inputs arrive as one parquet split → single-threaded hashing;
-    # spread them (at scale the input already has many splits)
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < min(8, target):
-        src = src.repartition(target)
-    return src.mapInPandas(run, "id long, w0 long, w1 long, w2 long, w3 long")
+    # small inputs arrive as one parquet split → single-threaded hashing
+    return spread_small_scan(df.select(id_col, text_col)).mapInPandas(
+        run, "id long, w0 long, w1 long, w2 long, w3 long"
+    )
 
 def simhash128_pairs(
     df: DataFrame,
@@ -848,35 +803,9 @@ def simhash128_pairs(
         )
     if sigs is None:
         sigs = simhash128_sigs_kernel(df, id_col, text_col)
-    word_cols = [
-        F.struct(F.lit(k).alias("blk"), F.col(f"w{k}").alias("chunk"))
-        for k in range(4)
-    ]
-    chunks = sigs.select(
-        "id", "w0", "w1", "w2", "w3", F.explode(F.array(*word_cols)).alias("c")
-    ).select(
-        "id", "w0", "w1", "w2", "w3",
-        F.col("c.blk").alias("blk"), F.col("c.chunk").alias("chunk"),
-    )
-    l, r = chunks.alias("l"), chunks.alias("r")
-    cand = (
-        l.join(r, on=["blk", "chunk"])
-        .filter(F.col("l.id") < F.col("r.id"))
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            *[F.col(f"l.w{k}").alias(f"a{k}") for k in range(4)],
-            *[F.col(f"r.w{k}").alias(f"b{k}") for k in range(4)],
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ham = sum(
-        (F.bit_count(F.col(f"a{k}").bitwiseXOR(F.col(f"b{k}"))) for k in range(4)),
-        start=F.lit(0),
-    )
-    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
+    words = [f"w{k}" for k in range(4)]
+    chunks = [F.struct(F.lit(k).alias("blk"), F.col(w).alias("chunk")) for k, w in enumerate(words)]
+    return _hamming_pairs(sigs, words, chunks, max_hamming)
 
 # --- embedding near-dup -----------------------------------------------------
 
@@ -999,14 +928,12 @@ def _embedding_neardup_broadcast(
                     }
                 )
 
-    src = df.select(id_col, vec_col)
     # small inputs arrive as one parquet split → the O(n²) kernel runs on
     # one core; spread the query side so every task scores a slice.  The
     # per-task sims matrix is (rows/P)×n — repartitioning also bounds it.
-    target = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    return src.mapInPandas(run, "id_a long, id_b long, cosine double")
+    return spread_small_scan(df.select(id_col, vec_col)).mapInPandas(
+        run, "id_a long, id_b long, cosine double"
+    )
 
 def _embedding_neardup_blocked(
     df: DataFrame,

@@ -141,10 +141,14 @@ def minhash_pair_stream(
     `dropDuplicates(["id_a", "id_b"])` (or the exact-verify join)
     collapses them.
     """
-    sig = minhash_signature(word_shingles(F.col(text_col)), num_hashes)
     banded = (
-        docs.select(F.col(id_col).cast("long").alias("id"), sig.alias("sig"))
-        .filter(F.size("sig") > 0)
+        docs.select(
+            F.col(id_col).cast("long").alias("id"),
+            word_shingles(F.col(text_col)).alias("sh"),
+        )
+        # docs too short to shingle have no signature: they never pair
+        .filter(F.size("sh") > 0)
+        .select("id", minhash_signature(F.col("sh"), num_hashes).alias("sig"))
         .select(
             "id",
             "sig",

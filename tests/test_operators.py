@@ -660,6 +660,69 @@ def test_dedup_pair_goldens(spark, name):
     rows = sorted(tuple(r) for r in _dedup_golden_call(name, docs).collect())
     assert hashlib.sha256(repr(rows).encode()).hexdigest()[:16] == DEDUP_GOLDENS[name]
 
+def test_short_and_blank_docs_match_oracle(spark, tmp_path):
+    """Documents with fewer than 3 tokens (NULL, empty, blank, one or two
+    words) have no word 3-gram shingles, so they never pair: the engine
+    agrees with the DuckDB oracle's dedup_minhash, dedup_ngram_jaccard
+    and decontaminate SQL, whose shingle CTE keeps only docs with >= 3
+    tokens, on a fixture that also holds real near-duplicates."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    near = "the quick brown fox jumps over the lazy dog again and again today"
+    rows = [
+        (0, None), (1, ""), (2, "   "), (3, None), (4, "hello"), (5, "Hello"),
+        (6, "hello world"), (7, "hello  World"), (8, "\t\n"),
+        (10, near), (11, near.replace("today", "tomorrow")),
+        (100, near.replace("today", "tonight")),
+    ]
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(
+        pa.table(
+            {"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]},
+            schema=pa.schema([("doc_id", pa.int64()), ("text", pa.string())]),
+        ),
+        path,
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+
+    def rounded(rs):
+        return {tuple(r[:-1]) + (round(r[-1], 6),) for r in rs}
+
+    def oracle(q):
+        return rounded(con.execute(E.oracle_sql()[q]).fetchall())
+
+    docs = spark.read.parquet(path)
+    new, old = docs.filter(F.col("doc_id") % 5 == 0), docs.filter(F.col("doc_id") % 5 != 0)
+    heldout = docs.filter(F.col("doc_id") % 100 < 2)
+    corpus = docs.filter(F.col("doc_id") % 100 >= 2)
+
+    def tagged(part, df):
+        return rounded((part, *r) for r in df.collect())
+
+    minhash = tagged("full", DD.minhash_lsh_pairs(docs, min_jaccard=0.3)) | tagged(
+        "incr", DD.minhash_lsh_pairs_incremental(new, old, min_jaccard=0.3)
+    )
+    assert ("full", 10, 11, 0.833333) in minhash
+    assert minhash == oracle("dedup_minhash")
+    ngram = tagged(
+        "uncapped", DD.ngram_jaccard_pairs(docs, min_jaccard=0.3, max_shingle_freq=None)
+    ) | tagged("capped", DD.ngram_jaccard_pairs(docs, min_jaccard=0.3, max_shingle_freq=5))
+    assert ngram == oracle("dedup_ngram_jaccard")
+    dual = rounded(
+        tuple(r)
+        for r in DD.ngram_jaccard_pairs_dual(docs, min_jaccard=0.3, max_shingle_freq=5).collect()
+    )
+    assert dual == ngram
+    decon = rounded(
+        tuple(r) for r in DD.decontaminate(corpus, heldout, min_jaccard=0.3).collect()
+    )
+    assert decon and decon == oracle("decontaminate")
+
 def test_embedding_neardup_blocked_matches_broadcast(spark):
     """The scale path (block-pair fan-out, no driver collect) must
     reproduce the broadcast kernel exactly — both are exact plans."""

@@ -292,8 +292,9 @@ def test_dedup_stream_first_arrival_wins(spark, tmp_path):
 
 def test_minhash_pair_stream_cross_batch_candidates(spark, tmp_path):
     """Streaming LSH: a near-dup arriving in a LATER micro-batch matches
-    the band index held in state; unrelated docs emit nothing; replay
-    of a seen id is ignored."""
+    the band index held in state; unrelated docs emit nothing, nor do
+    docs too short to shingle (NULL, blank, under 3 tokens); replay of
+    a seen id is ignored."""
     from hogzilla_spark.streaming.neardup_stream import minhash_pair_stream
 
     input_dir = str(tmp_path / "nd_in")
@@ -319,7 +320,8 @@ def test_minhash_pair_stream_cross_batch_candidates(spark, tmp_path):
         q.awaitTermination(120)
 
     spark.createDataFrame(
-        [(1, base), (2, "completely unrelated words about databases and joins here")],
+        [(1, base), (2, "completely unrelated words about databases and joins here"),
+         (4, None), (5, ""), (6, "   "), (7, "two words"), (8, "Two  Words")],
         schema,
     ).coalesce(1).write.mode("append").parquet(input_dir)
     drain()
