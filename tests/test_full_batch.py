@@ -1,10 +1,60 @@
 """End-to-end full-batch test: the Hogzilla.main-equivalent DAG with
 sFlow + ML modules + histogram clustering in one pass."""
 
+import hashlib
+
 import pyspark.sql.functions as F
 
 from hogzilla_spark import datagen
-from hogzilla_spark.plans.batch import run_full_batch
+from hogzilla_spark.plans.batch import run_and_persist, run_full_batch
+from hogzilla_spark.state import store
+
+def _canon(v):
+    """Order-free value: maps become sorted (key, value) items."""
+    if isinstance(v, dict):
+        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
+    if isinstance(v, (tuple, list)):
+        return tuple(_canon(x) for x in v)
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v).hex()
+    return v
+
+def _digest(df) -> tuple[int, str]:
+    """(rows, sha256 prefix of the sorted canonical row reprs)."""
+    rows = sorted(repr(_canon(r)) for r in df.collect())
+    return len(rows), hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
+
+# One cycle over the datagen fixtures from an empty store (batch_time=0),
+# frozen before the decision-frame cuts were removed.
+CYCLE_GOLDENS = {
+    "events": (10, "0adeca90a2d3540d"),
+    "state": (18, "ad2ae77addf9fdf4"),
+    "inventory": (1, "f69ce9460c203b3e"),
+    "reputation_learned": (1, "1878455519330231"),
+}
+
+def test_cycle_row_goldens(spark, tmp_path):
+    """`run_and_persist` writes the same events, state, inventory and
+    learned reputation as the recorded cycle."""
+    out = str(tmp_path)
+    state = f"{out}/state/histograms.parquet"
+    run_and_persist(
+        spark,
+        datagen.sflows_df(spark),
+        datagen.mynets_df(spark),
+        datagen.reputation_df(spark),
+        state_path=state,
+        out_dir=out,
+    )
+    got = {
+        "events": _digest(spark.read.parquet(f"{out}/events.parquet")),
+        "state": _digest(store.load(spark, state)),
+        "inventory": _digest(spark.read.parquet(f"{out}/inventory.parquet")),
+        "reputation_learned": _digest(
+            spark.read.parquet(f"{out}/reputation_learned.parquet")
+        ),
+    }
+    assert got == CYCLE_GOLDENS
 
 def test_full_batch_all_modules(spark):
     hists = datagen.histograms_df(spark)
