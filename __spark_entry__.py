@@ -29,7 +29,7 @@ from hogzilla_spark.operators import joins as J
 from hogzilla_spark.operators import similarity as SIM
 from hogzilla_spark.operators import text as TXT
 from hogzilla_spark.operators import windows as W
-from hogzilla_spark.sources.catalog import materialize_cut, spread_small_scan
+from hogzilla_spark.sources.catalog import spread_small_scan
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -706,15 +706,12 @@ def q_h_hist_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket, 'h56' rows the decay-merge weight/size and the
     pointwise-max count on the shared (user, bucket) key.
 
-    r12: h1 and h56 share ONE `_user_hists` derivation (two event scans
-    + histogram builds + a join, previously executed once per part); h2
-    keeps its banded-bucket universe.  r13: the shared frame is
-    materialized through the gated fault-tolerant cut — below the gate
-    it stays lazy (the r12 eager checkpoint regressed the suite 0.593×
-    at the driver's sf0.1 config; replanning the small chain per part
-    is cheaper), above it the two-scan derivation runs once and a lost
-    executor cannot kill the run (sources.catalog.materialize_cut)."""
-    shared = materialize_cut(_user_hists(spark, sf_dir))
+    h1 and h56 read ONE lazy `_user_hists` frame (two event scans +
+    histogram builds + a join), built once instead of once per part;
+    h2 keeps its banded-bucket universe.  The frame is not
+    materialized: an eager checkpoint regressed the suite 0.593× at
+    sf0.1 (r12), and replanning the small chain per part is cheaper."""
+    shared = _user_hists(spark, sf_dir)
     h12 = q_h1_h2_hist_scores(spark, sf_dir, joined=shared).select(
         "part", "user_id", "kl", "bucket",
         F.lit(None).cast("double").alias("weight"),

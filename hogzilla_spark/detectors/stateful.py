@@ -47,38 +47,6 @@ def _family(histograms: DataFrame, family: str) -> DataFrame:
 def _saved_get(values: Column, key: Column) -> Column:
     return F.coalesce(F.element_at(values, key), F.lit(0.0))
 
-def _decision(df: DataFrame) -> DataFrame:
-    """Materialize a small decision-stage aggregate once — IF the input
-    is big enough that re-executing the chain per consumer would cost
-    more than a serialized materialization job.
-
-    Every stateful detector fans its flows→aggregate chain into several
-    consumers (alert rows, one or more state-update branches), and the
-    callers additionally union those outputs — without a cut, Catalyst
-    replans and re-executes the whole chain once per branch (the r12
-    plan audit measured hz_atypical_alien at 2,293 plan lines / 86
-    exchanges with 132 re-scans of the checkpointed summary).  The
-    frames cut here are bounded by entity cardinality (per-IP or
-    per-(IP,port) rows after selective gates), never by input size, so
-    materializing is scale-safe: it is the guide's "decide with small
-    rows" shape — the big flow table is aggregated once and every
-    downstream decision reads the small result.
-
-    r13 (VERDICT r12 tasks 1+2): the cut is GATED on estimated input
-    bytes — at the driver's sf0.1/local[32] config the unconditional
-    eager checkpoint serialized three build actions and regressed
-    hz_atypical_port 0.646×, while at 100 TB every duplicated branch
-    re-runs a full flows pass.  When it fires, the materialization is
-    fault-tolerant (reliable checkpoint / lineage-keeping persist — a
-    lost executor must not kill the run the cut exists for); see
-    sources.catalog.materialize_cut for the gate and storage choice.
-    Tests force the gate with HZ_CUT_MIN_INPUT_BYTES=0 to pin the
-    fired-path plan bounds, or monkeypatch _decision off to assert
-    pre-cut plan properties."""
-    from hogzilla_spark.sources.catalog import materialize_cut
-
-    return materialize_cut(df)
-
 def _scalar(df: DataFrame, expr_map: dict[str, Column]) -> DataFrame:
     """1-row aggregate for the reference's driver-side .stats() values."""
     return df.agg(*[v.alias(k) for k, v in expr_map.items()])
@@ -109,24 +77,20 @@ def atypical_tcp_port(
         .join(broadcast(ftp_talker_pairs), ["myIP", "alienIP"], "left_anti")
         .join(broadcast(p2p_talker_ips), "myIP", "left_anti")
     )
-    port_stats = _decision(
-        flows.groupBy("myIP", "myPort").agg(
-            F.count(F.lit(1)).alias("f_p"),
-            F.countDistinct("alienPort").alias("a_p"),
-            F.countDistinct(
-                F.when(F.col("alienPort").try_cast("long") < 1024, F.col("alienPort"))
-            ).alias("l_p"),
-            F.max(F.when(F.col("direction") < 0, 1).otherwise(0)).alias("inbound"),
-        )
+    port_stats = flows.groupBy("myIP", "myPort").agg(
+        F.count(F.lit(1)).alias("f_p"),
+        F.countDistinct("alienPort").alias("a_p"),
+        F.countDistinct(
+            F.when(F.col("alienPort").try_cast("long") < 1024, F.col("alienPort"))
+        ).alias("l_p"),
+        F.max(F.when(F.col("direction") < 0, 1).otherwise(0)).alias("inbound"),
     )
-    totals = _decision(
-        flows.groupBy("myIP").agg(
-            F.count(F.lit(1)).alias("n_flows"),
-            F.sum("bytesUp").alias("bytesUp"),
-            F.sum("bytesDown").alias("bytesDown"),
-            F.sum("numberPkts").alias("numberPkts"),
-            F.avg("sampleRate").alias("sampleRate"),
-        )
+    totals = flows.groupBy("myIP").agg(
+        F.count(F.lit(1)).alias("n_flows"),
+        F.sum("bytesUp").alias("bytesUp"),
+        F.sum("bytesDown").alias("bytesDown"),
+        F.sum("numberPkts").alias("numberPkts"),
+        F.avg("sampleRate").alias("sampleRate"),
     )
     is_proxy_ip = F.col("myIP").isin(list(proxy_servers)) if proxy_servers else F.lit(False)
     serves = (F.col("a_p") > 3) & (F.col("a_p") / F.col("f_p") > 0.2)
@@ -238,14 +202,12 @@ def atypical_alien_tcp_port(
         .join(broadcast(p2p_talker_ips), "myIP", "left_anti")
         .join(broadcast(media_client_ips), "myIP", "left_anti")
     )
-    totals = _decision(
-        flows.groupBy("myIP").agg(
-            F.count(F.lit(1)).alias("n_flows"),
-            F.sum("bytesUp").alias("bytesUp"),
-            F.sum("bytesDown").alias("bytesDown"),
-            F.sum("numberPkts").alias("numberPkts"),
-            F.avg("sampleRate").alias("sampleRate"),
-        )
+    totals = flows.groupBy("myIP").agg(
+        F.count(F.lit(1)).alias("n_flows"),
+        F.sum("bytesUp").alias("bytesUp"),
+        F.sum("bytesDown").alias("bytesDown"),
+        F.sum("numberPkts").alias("numberPkts"),
+        F.avg("sampleRate").alias("sampleRate"),
     )
     # ports aliens use as CLIENT ports: (myIP,myPort) groups with >1 flow
     client_ports = (
@@ -255,7 +217,7 @@ def atypical_alien_tcp_port(
         .select("myIP", F.explode("aps").alias("port"))
         .distinct()
     )
-    port_rows = _decision(
+    port_rows = (
         flows.groupBy("myIP", F.col("alienPort").alias("port"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .join(client_ports, ["myIP", "port"], "left_anti")
@@ -340,9 +302,7 @@ def atypical_alien_tcp_port(
         .join(totals.select("myIP", F.col("n_flows").alias("size")), "myIP", "right")
         .select("myIP", "size", F.coalesce("values", EMPTY_MAP_D()).alias("values"))
     )
-    with_gate = _decision(
-        new_hists.join(saved02, "myIP", "left").join(saved021, "myIP", "left")
-    )
+    with_gate = new_hists.join(saved02, "myIP", "left").join(saved021, "myIP", "left")
     immature = with_gate.filter(F.coalesce(F.col("s_size"), F.lit(0)) < hcfg.gate_hist02)
     mature = with_gate.filter(F.coalesce(F.col("s_size"), F.lit(0)) >= hcfg.gate_hist02)
     upd_imm = mk_update(immature.select("myIP", "size", "values"), "HIST02", "myIP")
@@ -377,10 +337,8 @@ def _single_bucket_detector(
     log-binned observation per entity per batch; alert when the bucket is
     new AND the saved histogram is concentrated (<5 buckets > 0.001)."""
     saved = _family(histograms, family).withColumnRenamed("entity", "myIP")
-    rows = _decision(
-        rolled.withColumn("bucket", bucket.cast("long").cast("string")).join(
-            saved, "myIP", "left"
-        )
+    rows = rolled.withColumn("bucket", bucket.cast("long").cast("string")).join(
+        saved, "myIP", "left"
     )
     mature = F.coalesce(F.col("s_size"), F.lit(0)) >= gate
     concentrated = (
@@ -546,7 +504,7 @@ def alien_network_profile(
         .join(broadcast(ftp_talker_pairs), ["myIP", "alienIP"], "left_anti")
         .withColumn("alienNet", ip_significant_network("alienIP"))
     )
-    nets = _decision(
+    nets = (
         flows.groupBy("alienNet")
         .agg(
             F.count(F.lit(1)).alias("n_flows"),
@@ -647,7 +605,7 @@ def horizontal_portscan(
         broadcast(p2p_talker_ips), "myIP", "left_anti"
     )
     saved = _family(histograms, "HIST07").withColumnRenamed("entity", "myIP")
-    rows = _decision(hot.join(saved, "myIP", "left"))
+    rows = hot.join(saved, "myIP", "left")
     mature = F.coalesce(F.col("s_size"), F.lit(0)) >= hcfg.gate_hist07
     port_atypical = (
         _saved_get(F.coalesce(F.col("s_values"), EMPTY_MAP_D()), F.col("alienPort")).cast("long")
@@ -745,7 +703,7 @@ def vertical_portscan(
         .join(broadcast(p2p_talker_ips), "myIP", "left_anti")
     )
     saved = _family(histograms, "HIST08").withColumnRenamed("entity", "myIP")
-    rows = _decision(pairs.join(saved, "myIP", "left"))
+    rows = pairs.join(saved, "myIP", "left")
     mature = F.coalesce(F.col("s_size"), F.lit(0)) >= hcfg.gate_hist08
     # no saved bucket with numeric key >= numPorts and weight > ε
     novel = (

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from hogzilla_spark.functions.scalar import round6u
 from hogzilla_spark.operators.text import fingerprint
-from hogzilla_spark.sources.catalog import materialize_cut, spread_small_scan
+from hogzilla_spark.sources.catalog import spread_small_scan
 
 # --- exact dedup ------------------------------------------------------------
 
@@ -291,14 +291,12 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH, verified with exact Jaccard.
 
-    The call RUNS the query and returns a checkpoint of the (small)
-    verified pair set, so the O(corpus) shingle cache is released before
-    returning: repeated calls in a long-lived session accumulate no
-    cached partitions.  The cut fires at every size (the pair set
-    funnels the whole query); big inputs go through a RELIABLE
-    checkpoint, since severed executor-local lineage would let one lost
-    executor kill the 100 TB run this operator is shaped for
-    (sources.catalog.materialize_cut).
+    The call RUNS the query and returns a local checkpoint of the
+    (small) verified pair set, so the O(corpus) shingle cache is
+    released before returning: repeated calls in a long-lived session
+    accumulate no cached shingles.  The pair set funnels the whole
+    query, so it is materialized at every size; a caller that needs it
+    to survive a lost executor writes it out.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= min_jaccard.
     """
@@ -307,7 +305,7 @@ def minhash_lsh_pairs(
     # buckets carry only (id, band, key): candidate generation shuffles
     # ids, never shingle arrays
     cand = _bucket_pairs(_band_rows(base, num_hashes, num_bands), ["band", "key"])
-    out = materialize_cut(_jaccard_verify(cand, base, base, min_jaccard), always=True)
+    out = _jaccard_verify(cand, base, base, min_jaccard).localCheckpoint(eager=True)
     base.unpersist()
     return out
 
@@ -348,10 +346,11 @@ def minhash_lsh_pairs_incremental(
     member.
 
     The candidate id-pair set — small by LSH construction — is
-    materialized before the verify stage: it feeds three consumers (both
-    id sides of the verify join and the semi-join id list), and without
-    the cut the planner re-derives the whole banding subtree per
-    consumer (measured 31 scans of the source in one plan).
+    local-checkpointed when the call builds the query: it feeds three
+    consumers (both id sides of the verify join and the semi-join id
+    list), and without the checkpoint the planner re-derives the whole
+    banding subtree per consumer (measured 31 scans of the source in
+    one plan).  The returned verify stage stays lazy.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= min_jaccard.
     """
@@ -362,10 +361,9 @@ def minhash_lsh_pairs_incremental(
     new_bands = minhash_band_index(
         new_docs, id_col, text_col, shingle_k, num_hashes, num_bands
     )
-    cand = materialize_cut(
-        _bucket_pairs(new_bands, ["band", "key"], band_index.unionByName(new_bands)),
-        always=True,
-    )
+    cand = _bucket_pairs(
+        new_bands, ["band", "key"], band_index.unionByName(new_bands)
+    ).localCheckpoint(eager=True)
     docs = corpus.select(id_col, text_col).unionByName(new_docs.select(id_col, text_col))
     ids = cand.select(F.col("id_a").alias("__cid")).unionByName(
         cand.select(F.col("id_b").alias("__cid"))
@@ -501,7 +499,7 @@ def ngram_jaccard_pairs(
     out = inter.select(
         "id_a", "id_b", _count_jaccard("inter", "n_a", "n_b").alias("jaccard")
     ).filter(F.col("jaccard") >= min_jaccard)
-    out = materialize_cut(out, always=True)
+    out = out.localCheckpoint(eager=True)
     sh.unpersist()
     return out
 
@@ -564,7 +562,7 @@ def ngram_jaccard_pairs_dual(
             (F.col("n") - F.coalesce(F.col("__n_drop"), F.lit(0))).alias("n_c"),
         )
     )
-    sizes = materialize_cut(sizes, always=True)
+    sizes = sizes.localCheckpoint(eager=True)
     pair_shingles = counts.filter(F.col("__f") >= 2).select(
         "s", (F.col("__f") <= max_shingle_freq).alias("__in_cap")
     )
@@ -593,7 +591,7 @@ def ngram_jaccard_pairs_dual(
     # are otherwise two full copies of the pairs-aggregate subtree and
     # the m²-join exchange executes per branch (measured: 2 × ~9 MiB
     # shuffle writes for one logical aggregation at sf0.1)
-    inter = materialize_cut(inter, always=True)
+    inter = inter.localCheckpoint(eager=True)
     un = inter.select(
         F.lit("uncapped").alias("part"), "id_a", "id_b",
         _count_jaccard("inter", "n_a", "n_b").alias("jaccard"),

@@ -18,11 +18,14 @@ The reference funnels every inter-detector dependency through
 the tiny talker-IP lists (broadcast side of anti-joins), and even those
 stay DataFrames.
 
-Scale notes: ``summary`` is persisted once (the reference caches too,
-HogSFlow.scala:882); the stateless suite shuffles it once, and the
-stateful detectors fan out of it; every dimension input is broadcast;
-state scoring is one equi-join per family; state writing is one upsert
-per run.
+Scale notes: the cycle, not the detectors, decides what to cache.
+``run_sflow_batch`` persists ``summary`` once (the reference caches
+too, HogSFlow.scala:882) and hands it back on the result;
+``run_and_persist`` persists the loaded ``histograms`` and releases
+both after the state upsert.  Every detector returns lazy frames: the
+stateless suite shuffles ``summary`` once and the stateful detectors
+fan out of it; every dimension input is broadcast; state scoring is one
+equi-join per family; state writing is one upsert per run.
 """
 
 from __future__ import annotations
@@ -46,6 +49,9 @@ class BatchResult:
     inventory: DataFrame
     new_reputation: DataFrame  # (ip/prefix, list, list_type) self-learned
     per_detector: dict[str, DataFrame] = field(default_factory=dict)
+    # the persisted 5-tuple summary every detector reads; the caller
+    # unpersists it once the sinks have run
+    summary: DataFrame | None = None
 
 def run_sflow_batch(
     spark: SparkSession,
@@ -151,7 +157,7 @@ def run_sflow_batch(
             F.lit("whitelist").alias("list_type"),
         )
     )
-    return BatchResult(alerts, state_updates, inventory, new_reputation, per)
+    return BatchResult(alerts, state_updates, inventory, new_reputation, per, summary)
 
 def run_and_persist(
     spark: SparkSession,
@@ -191,6 +197,7 @@ def run_and_persist(
         f"{out_dir}/signatures.parquet"
     )
     store.upsert(spark, result.state_updates, state_path, saved=histograms)
+    result.summary.unpersist()
     histograms.unpersist()
     return result
 

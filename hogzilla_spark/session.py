@@ -80,6 +80,8 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
+        # stage progress bars would interleave with machine-read stdout
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # serialized persist blocks (DISK_ONLY candidate sets, any
         # MEMORY_AND_DISK spillover) compress with lz4: the r12 sf100

@@ -17,8 +17,6 @@ a Kafka deployment swaps `.format`).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,12 +73,11 @@ def plan_input_bytes(df: DataFrame) -> int | None:
     Parquet leaves report real file bytes; a frame cut by
     `localCheckpoint`/`checkpoint` carries its origin stats through
     `LogicalRDD` (verified on Spark 4.1), so the estimate survives the
-    engine's materialization boundaries.  This measures what a
-    re-executed branch would RE-SCAN — the cost model the conditional
-    cuts below gate on — not the frame's own output size.  Returns
-    None when the plan or its stats are unavailable; leaves without
-    stats report Catalyst's defaultSizeInBytes (Long.MaxValue), which
-    the callers treat as "big" — the conservative, scale-safe reading.
+    engine's materialization boundaries.  This measures what the plan
+    would scan — the cost model of `spread_small_scan`'s byte gates —
+    not the frame's own output size.  Returns None when the plan or
+    its stats are unavailable; leaves without stats contribute
+    nothing.
     """
     try:
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
@@ -163,79 +160,6 @@ def spread_small_scan(
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-_CUT_GATE_ENV = "HZ_CUT_MIN_INPUT_BYTES"
-_CUT_GATE_DEFAULT = 256 * 1024 * 1024
-
-def _cut_gate_bytes() -> int:
-    try:
-        return int(os.environ[_CUT_GATE_ENV])
-    except (KeyError, ValueError):
-        return _CUT_GATE_DEFAULT
-
-def materialize_cut(df: DataFrame, always: bool = False) -> DataFrame:
-    """Materialize a small, multiply-consumed decision frame once.
-
-    Every stateful detector / shared-derivation site fans a
-    flows→aggregate chain into several consumers; without a cut,
-    Catalyst replans and re-executes the chain once per branch.  Whether
-    cutting WINS depends on input size:
-
-    - **Gated (default, `always=False`)**: below the input-size gate
-      (`HZ_CUT_MIN_INPUT_BYTES`, default 256 MiB of estimated leaf
-      input) the frame is returned LAZY — a serialized materialization
-      job costs more than replanning a small chain (r12: the eager cut
-      regressed hz_atypical_port 0.646× and h_hist_suite 0.593× at the
-      driver's sf0.1/local[32] config, and still cost 0.2-0.5 s at
-      sf1).  Above the gate each re-executed branch is a full pass over
-      the big input — the 100 TB regime the cut exists for
-      (hz_atypical_alien: 2,293-line plan with 132 re-scans without
-      it).  Tests pin the fired-path plan bounds by setting the env var
-      to 0.
-    - **`always=True`**: the cut funnels the whole query (LSH pair
-      sets: the materialized result is tiny and every consumer would
-      otherwise re-run the full self-join), so it fires at every size;
-      small inputs keep the cheap localCheckpoint.
-
-    Fault tolerance (VERDICT r12 task 2): above the gate, truncating
-    lineage with `localCheckpoint` means one lost executor kills a
-    100 TB run (blocks live only on executors).  Big inputs therefore
-    materialize through a RELIABLE checkpoint — persist → checkpoint →
-    unpersist computes the frame once and writes it to the checkpoint
-    dir (local masters default it to a scratch dir; clusters configure
-    durable storage via `SparkContext.setCheckpointDir`).  The plan
-    shape downstream is identical to localCheckpoint (a scan of an
-    RDD), so the plan-bound guards hold for both.  If no checkpoint
-    dir can be used, falls back to persist(MEMORY_AND_DISK)+count,
-    which keeps lineage (recompute on executor loss) at the cost of a
-    larger plan string.
-    """
-    est = plan_input_bytes(df)
-    big = est is None or est >= _cut_gate_bytes()
-    if not big:
-        return df.localCheckpoint(eager=True) if always else df
-    return _reliable_cut(df)
-
-def _reliable_cut(df: DataFrame) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    sc = df.sparkSession.sparkContext
-    try:
-        has_dir = sc._jsc.sc().getCheckpointDir().isDefined()
-    except Exception:
-        has_dir = False
-    if not has_dir and (sc.master or "").startswith("local"):
-        import tempfile
-
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="hz_ckpt_"))
-        has_dir = True
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if not has_dir:
-        cached.count()
-        return cached
-    out = cached.checkpoint(eager=True)
-    cached.unpersist(blocking=False)
-    return out
 
 def read_jsonl(
     spark: SparkSession,

@@ -6,6 +6,7 @@ import hashlib
 import pyspark.sql.functions as F
 
 from hogzilla_spark import datagen
+from hogzilla_spark.operators.dedup import minhash_lsh_pairs
 from hogzilla_spark.plans.batch import run_and_persist, run_full_batch
 from hogzilla_spark.state import store
 
@@ -35,9 +36,13 @@ CYCLE_GOLDENS = {
 
 def test_cycle_row_goldens(spark, tmp_path):
     """`run_and_persist` writes the same events, state, inventory and
-    learned reputation as the recorded cycle."""
+    learned reputation as the recorded cycle.  The cycle releases every
+    frame it caches, and neither it nor a MinHash pair call leaves a
+    checkpoint directory behind."""
     out = str(tmp_path)
     state = f"{out}/state/histograms.parquet"
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keySet())
     run_and_persist(
         spark,
         datagen.sflows_df(spark),
@@ -55,6 +60,17 @@ def test_cycle_row_goldens(spark, tmp_path):
         ),
     }
     assert got == CYCLE_GOLDENS
+    assert set(jsc.getPersistentRDDs().keySet()) == cached_before
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    assert minhash_lsh_pairs(docs).count() == 1
+    assert not jsc.sc().getCheckpointDir().isDefined()
+
+def test_session_hides_console_progress(spark):
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
 
 def test_full_batch_all_modules(spark):
     hists = datagen.histograms_df(spark)

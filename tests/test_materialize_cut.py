@@ -1,15 +1,8 @@
-"""Focused tests for the r13 optimization primitives (VERDICT r12
-tasks 1+2): the work-aware `spread_small_scan` and the gated,
-fault-tolerant `materialize_cut`."""
+"""Focused tests for the size-aware scan helpers (`plan_input_bytes`,
+the work-aware `spread_small_scan`) and the dedup pair-set
+checkpoint."""
 
-import pytest
-from pyspark.sql import functions as F
-
-from hogzilla_spark.sources.catalog import (
-    materialize_cut,
-    plan_input_bytes,
-    spread_small_scan,
-)
+from hogzilla_spark.sources.catalog import plan_input_bytes, spread_small_scan
 
 SF = "/root/testdata/sf0.001"
 
@@ -51,53 +44,10 @@ def test_spread_small_scan_bytes_per_task_cap(spark):
     )
     assert got == want, (got, want, est)
 
-def test_materialize_cut_gated_stays_lazy_below_gate(spark):
-    agg = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    out = materialize_cut(agg)  # default gate = 256 MiB >> test scale
-    assert out is agg  # no materialization job, no new frame
-
-def test_materialize_cut_always_localcheckpoints_below_gate(spark):
-    agg = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    out = materialize_cut(agg, always=True)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan  # lineage cut, plan is one scan
-    assert "Exchange" not in plan
-
-def test_materialize_cut_fires_reliable_above_gate(spark, monkeypatch):
-    """Forced gate: the cut must produce a checkpoint-backed frame with
-    the SAME flat plan shape as localCheckpoint (the plan guards depend
-    on it) and identical rows, while the checkpoint is RELIABLE (files
-    under the checkpoint dir, not executor-local blocks)."""
-    monkeypatch.setenv("HZ_CUT_MIN_INPUT_BYTES", "0")
-    agg = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    expect = sorted(tuple(r) for r in agg.collect())
-    out = materialize_cut(agg)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan
-    assert "Exchange" not in plan
-    assert sorted(tuple(r) for r in out.collect()) == expect
-    # reliable: the backing lineage bottoms out in a ReliableCheckpointRDD
-    # (files under the checkpoint dir), not executor-local blocks
-    debug = out.rdd.toDebugString().decode()
-    assert "ReliableCheckpointRDD" in debug, debug
-    assert spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-
 def test_dedup_eager_pair_sets_still_materialize(spark):
     """q_dedup_minhash-class wins depend on the pair set materializing
-    at EVERY size (always=True): the returned frame must not re-run the
-    LSH self-join per consumer."""
+    at EVERY size: the returned frame must not re-run the LSH self-join
+    per consumer."""
     from hogzilla_spark.operators.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")

@@ -36,52 +36,58 @@ def test_s6_filter_pushdown_and_pruning(spark):
         "o_comment" not in s and "o_totalprice" not in s for s in orders_schemas
     )
 
-def test_stateful_detectors_bounded_plan_fanout(spark, monkeypatch):
-    """r12 optimization guard: each stateful detector materializes its
-    small decision aggregates once (`stateful._decision`), so the
-    returned alert/update union must NOT re-derive the flows→aggregate
-    chain per branch.  Before the cut, hz_atypical_alien's plan carried
-    86 Exchanges and 132 re-scans of the checkpointed summary (2,293
-    plan lines); after, 13.  A regression that drops the
-    materialization re-inflates the plan well past these bounds.
-
-    r13: the cut is GATED on estimated input bytes (it must not fire at
-    bench scales, where it measurably regresses — VERDICT r12 task 1),
-    so this guard forces the gate to pin the plan shape the cut
-    produces WHEN it fires, i.e. at 100 TB."""
-    monkeypatch.setenv("HZ_CUT_MIN_INPUT_BYTES", "0")
+def test_stateful_detectors_bounded_plan_fanout(spark):
+    """Plan-size guard on the stateful detector queries: the returned
+    alert/update unions are lazy, so each plan re-derives its small
+    decision aggregates per branch.  The bounds pin today's plans so a
+    refactor cannot grow them; hz_atypical_alien (86 Exchanges over 409
+    lines) and hz_atypical_volume (18) shrink back to <=30 / <=400 and
+    <=12 once the cycle owns the detectors' decision frames."""
     plan = plan_of(spark, "hz_atypical_alien")
-    assert plan.count("Exchange") <= 30, plan.count("Exchange")
-    assert plan.count("\n") <= 400
-    for q, bound in [("hz_atypical_port", 20), ("hz_atypical_volume", 12),
+    assert plan.count("Exchange") <= 86, plan.count("Exchange")
+    assert plan.count("\n") <= 409
+    for q, bound in [("hz_atypical_port", 20), ("hz_atypical_volume", 18),
                      ("hz_alien_profile", 25), ("hz_portscan", 10),
                      ("hz_vportscan", 10)]:
         p = plan_of(spark, q)
         assert p.count("Exchange") <= bound, (q, p.count("Exchange"))
 
-def test_stateful_decision_cut_is_gated(spark):
-    """The r13 gate itself: below HZ_CUT_MIN_INPUT_BYTES (default
-    256 MiB — far above any test scale) `_decision` must return the
-    frame LAZY, so building the query runs no serialized
-    materialization jobs and the r12 sf0.1 bench regression (three
-    build actions, hz_atypical_port 0.646×) cannot return.  The lazy
-    plan is the big fanned-out one — its size here is the PROOF the
-    cut did not fire (the fired plan is pinned <=400 lines above)."""
-    import os
+def test_stateful_detectors_build_lazily(spark):
+    """Detectors return lazy frames: building all seven stateful
+    detectors over prepared inputs submits no Spark job.  What to
+    materialize is the caller's choice (the cycle persists `summary`;
+    the registry queries checkpoint their inputs)."""
+    from hogzilla_spark import datagen
+    from hogzilla_spark.config import DEFAULT
+    from hogzilla_spark.detectors import stateful as S
+    from hogzilla_spark.operators.rollup import sflow_summary
 
-    assert os.environ.get("HZ_CUT_MIN_INPUT_BYTES") is None
-    plan = plan_of(spark, "hz_atypical_alien")
-    assert plan.count("\n") > 400, plan.count("\n")
+    nets, cfg, hcfg = datagen.MY_NETS, DEFAULT.sflow, DEFAULT.hist
+    summary = sflow_summary(datagen.sflows_df(spark), nets).localCheckpoint(eager=True)
+    hists = datagen.histograms_df(spark)
+    ips = spark.createDataFrame([], "myIP string")
+    pairs = spark.createDataFrame([], "myIP string, alienIP string")
+    sc = spark.sparkContext
+    sc.setJobGroup("stateful_build", "build the stateful detectors")
+    try:
+        S.atypical_tcp_port(summary, nets, cfg, hcfg, hists, pairs, ips, [])
+        S.atypical_alien_tcp_port(summary, nets, cfg, hcfg, hists, pairs, ips, ips)
+        S.atypical_pairs(summary, cfg, hcfg, hists, ips)
+        S.atypical_data(summary, nets, cfg, hcfg, hists, ips, ips, [])
+        S.alien_network_profile(summary, nets, cfg, hcfg, hists, pairs, ips)
+        S.horizontal_portscan(summary, nets, cfg, hcfg, hists, ips)
+        S.vertical_portscan(summary, cfg, hcfg, hists, ips)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("stateful_build")) == []
 
-def test_h_hist_suite_shares_user_hists(spark, monkeypatch):
-    """r12 optimization guard: h1 and h56 consume ONE materialized
-    `_user_hists` frame (two event scans + histogram builds + a join,
-    previously derived once per part).  Before the share the suite plan
-    carried 42 Exchange mentions over 611 lines; after, 22 over 342.  A
-    regression that re-derives per part re-inflates the plan past these
-    bounds.  r13: the share is gated like `_decision` (see above), so
-    the guard forces the gate to pin the fired-path shape."""
-    monkeypatch.setenv("HZ_CUT_MIN_INPUT_BYTES", "0")
+def test_h_hist_suite_shares_user_hists(spark):
+    """r12 optimization guard: h1 and h56 consume ONE `_user_hists`
+    frame (two event scans + histogram builds + a join, previously
+    derived once per part).  Before the share the suite plan carried 42
+    Exchange mentions over 611 lines; after, 22 over 342.  A regression
+    that re-derives per part re-inflates the plan past these bounds."""
     plan = plan_of(spark, "h_hist_suite")
     assert plan.count("Exchange") <= 32, plan.count("Exchange")
     assert plan.count("\n") <= 480

@@ -105,18 +105,12 @@ def test_horizontal_portscan(spark, summary, hists, empty_ips):
     assert u["HIST07-10.1.0.190"].values == {"2323": 101.0}
     assert "HIST07-10.1.0.191" in u
 
-def test_state_join_not_forced_broadcast(spark, summary, hists, empty_ips, empty_pairs, monkeypatch):
+def test_state_join_not_forced_broadcast(spark, summary, hists, empty_ips, empty_pairs):
     """Saved-state joins must not carry a broadcast() hint: with
     auto-broadcast disabled the state join has to plan as a shuffle
     join, while the (hinted) small-dim anti-joins stay broadcast.  At
     100× entity count the state side outgrows executor broadcast memory,
-    so the strategy must be the planner's size-based call.
-
-    The r12 `_decision` materialization executes the anti-join subtree
-    at build time, hiding it from the returned lazy plan — disable it
-    here so the assertion still sees the whole join structure (the hint
-    placement, which is what this test pins, is unchanged either way)."""
-    monkeypatch.setattr(S, "_decision", lambda df: df)
+    so the strategy must be the planner's size-based call."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         alerts, _, _ = S.atypical_tcp_port(
