@@ -48,10 +48,10 @@ class BatchResult:
     state_updates: DataFrame
     inventory: DataFrame
     new_reputation: DataFrame  # (ip/prefix, list, list_type) self-learned
-    per_detector: dict[str, DataFrame] = field(default_factory=dict)
     # the persisted 5-tuple summary every detector reads; the caller
     # unpersists it once the sinks have run
-    summary: DataFrame | None = None
+    summary: DataFrame
+    per_detector: dict[str, DataFrame] = field(default_factory=dict)
 
 def run_sflow_batch(
     spark: SparkSession,
@@ -157,7 +157,7 @@ def run_sflow_batch(
             F.lit("whitelist").alias("list_type"),
         )
     )
-    return BatchResult(alerts, state_updates, inventory, new_reputation, per, summary)
+    return BatchResult(alerts, state_updates, inventory, new_reputation, summary, per)
 
 def run_and_persist(
     spark: SparkSession,
