@@ -60,7 +60,8 @@ def test_cycle_row_goldens(spark, tmp_path):
         ),
     }
     assert got == CYCLE_GOLDENS
-    assert set(jsc.getPersistentRDDs().keySet()) == cached_before
+    # earlier frames may be cleaned up meanwhile; the cycle adds none
+    assert not set(jsc.getPersistentRDDs().keySet()) - cached_before
     docs = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
          (2, "the quick brown fox jumps over the lazy dog")],
