@@ -1,6 +1,9 @@
 """Stateful detector tests: learn-gate, scoring, and state-merge
 semantics against the pre-seeded histograms fixture."""
 
+import hashlib
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -193,3 +196,87 @@ def test_state_store_roundtrip(spark, tmp_path, hists, summary, empty_ips):
     store.save(merged, path)
     again = store.load(spark, path)
     assert again.count() == merged.count()
+
+def _canon(v):
+    """Order-free value: maps become sorted (key, value) items."""
+    if isinstance(v, dict):
+        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
+    if isinstance(v, (tuple, list)):
+        return tuple(_canon(x) for x in v)
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v).hex()
+    return v
+
+def _digest(rows) -> tuple[int, str]:
+    """(rows, sha256 prefix of the sorted canonical row reprs)."""
+    lines = sorted(repr(_canon(r)) for r in rows)
+    return len(lines), hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+
+# One sFlow pass over the datagen fixtures against the pre-seeded
+# histograms (batch_time=21600): each stateful detector's alerts, the
+# state updates per histogram family, and the self-learned reputation.
+STATEFUL_GOLDENS = {
+    "atypical_tcp_port": (1, "1960b07c72271f00"),
+    "atypical_alien_tcp_port": (1, "dc0d227f3fdf214d"),
+    "atypical_pairs": (1, "2a3c463884e354f3"),
+    "atypical_data": (1, "1147abeae808817e"),
+    "horizontal_portscan": (1, "d47195135a9071f1"),
+    "vertical_portscan": (1, "df826ea51cc3aa53"),
+    "HIST01": (4, "b9eb85f75a124579"),
+    "HIST02": (2, "321a1bb4c5142894"),
+    "HIST02.1": (2, "0a82985e1a47a1e3"),
+    "HIST03": (2, "490e1ae4c465b174"),
+    "HIST04": (2, "9e23bd2ac5502147"),
+    "HIST05": (2, "10b387fe52766b7c"),
+    "HIST06": (2, "478d3ee5483a1d2f"),
+    "HIST07": (2, "1ea0ad5867704434"),
+    "HIST08": (2, "bb05e863057ceb45"),
+    "new_reputation": (1, "1878455519330231"),
+}
+
+# The six stateful registry queries on the sf0.01 testdata.
+STATEFUL_REGISTRY_GOLDENS = {
+    "hz_atypical_port": (30, "ce800bcf1c6a0805"),
+    "hz_atypical_alien": (1768, "b8449e9bb13473b0"),
+    "hz_atypical_volume": (316, "c16cb2f25ca845bf"),
+    "hz_alien_profile": (109, "ac2646e746d634e8"),
+    "hz_portscan": (67, "d673be0b8c985ba1"),
+    "hz_vportscan": (361, "f18a8cf18f4bd85b"),
+}
+
+def test_stateful_row_goldens(spark, hists):
+    """The stateful detectors of one sFlow pass write the recorded
+    alerts, state updates and learned reputation."""
+    from hogzilla_spark.detectors.base import SIGNATURES
+    from hogzilla_spark.plans.batch import run_sflow_batch
+
+    result = run_sflow_batch(
+        spark,
+        datagen.sflows_df(spark),
+        datagen.mynets_df(spark),
+        datagen.reputation_df(spark),
+        hists,
+        batch_time=21600,
+    )
+    try:
+        names = {SIGNATURES[k].sig_id: k for k in STATEFUL_GOLDENS if k in SIGNATURES}
+        parts = {}
+        stateful = result.alerts.filter(F.col("signature_id").isin(list(names)))
+        for r in stateful.collect():
+            parts.setdefault(names[r.signature_id], []).append(r)
+        for r in result.state_updates.collect():
+            parts.setdefault(r.hist_name.split("-", 1)[0], []).append(r)
+        parts["new_reputation"] = result.new_reputation.collect()
+    finally:
+        result.summary.unpersist()
+    assert {k: _digest(v) for k, v in parts.items()} == STATEFUL_GOLDENS
+
+def test_stateful_registry_row_goldens(spark):
+    import __spark_entry__ as E
+
+    sf = os.path.join(os.path.dirname(E.SF_DEFAULT), "sf0.01")
+    got = {
+        q: _digest(E.queries()[q](spark, sf).collect())
+        for q in STATEFUL_REGISTRY_GOLDENS
+    }
+    assert got == STATEFUL_REGISTRY_GOLDENS
