@@ -2112,7 +2112,7 @@ def q_hz_atypical_port(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty_pairs = spark.createDataFrame([], "myIP string, alienIP string")
     empty_ips = spark.createDataFrame([], "myIP string")
     alerts, _updates, new_proxies = atypical_tcp_port(
-        summary2, ["10.1."], cfg, hcfg, hists, empty_pairs, empty_ips, []
+        summary2, cfg, hcfg, hists, empty_pairs, empty_ips, []
     )
     a = alerts.select(
         F.lit("alert").alias("part"),
@@ -2247,13 +2247,11 @@ def q_hz_atypical_alien(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hist_name string, size long, values map<string,double>",
     )
     # materialize the seeded state once, as production does (the batch
-    # plan hands detectors a loaded store table, store.load): the
-    # detector references saved02/saved021/histograms SIX times across
-    # the score + J8 + state-transition branches, and re-deriving the
-    # distinct-hosts + map-build lineage per reference costs real time
-    # (warm-run A/B at sf0.1: 6.3 s without the checkpoint, 4.1 s with;
-    # the in-suite number additionally carries first-registry-slot
-    # session warmup)
+    # plan hands detectors a loaded store table, store.load): the alerts
+    # read HIST02, HIST02.1 and HIST05 and the updates HIST02 and
+    # HIST02.1, and re-deriving the distinct-hosts + map-build lineage
+    # per read costs real time (warm-run A/B at sf0.1, when the detector
+    # read the state six times: 6.3 s without the checkpoint, 4.1 s with)
     hists = h02.unionByName(h021).unionByName(h05).localCheckpoint(eager=True)
     empty_pairs = spark.createDataFrame([], "myIP string, alienIP string")
     empty_ips = spark.createDataFrame([], "myIP string")
@@ -2504,22 +2502,18 @@ def q_hz_alien_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output parts: 'h05' (net, port, share, size), 'h06' (net,
     log-bytes bucket, 1.0, size), 'bigp' (the learned prefixes)."""
-    from hogzilla_spark.config import HistogramConfig, SFlowConfig
+    from hogzilla_spark.config import SFlowConfig
     from hogzilla_spark.detectors.stateful import alien_network_profile
     from hogzilla_spark.operators.rollup import sflow_summary
 
     cfg = SFlowConfig(big_provider_min_bytes=33_000_000)
-    hcfg = HistogramConfig()
     summary = sflow_summary(
         _synth_sflows(spark, sf_dir), ["10.1."]
     ).localCheckpoint(eager=True)
-    empty_hists = spark.createDataFrame(
-        [], "hist_name string, size long, values map<string,double>"
-    )
     empty_pairs = spark.createDataFrame([], "myIP string, alienIP string")
     empty_ips = spark.createDataFrame([], "myIP string")
     updates, bigp = alien_network_profile(
-        summary, ["10.1."], cfg, hcfg, empty_hists, empty_pairs, empty_ips
+        summary, ["10.1."], cfg, empty_pairs, empty_ips
     )
     fam = F.when(F.col("hist_name").startswith("HIST05-"), "h05").otherwise("h06")
     u = updates.select(

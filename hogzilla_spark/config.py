@@ -98,11 +98,10 @@ class AuthConfig:
 
 @dataclass(frozen=True)
 class HistogramConfig:
-    """State-layer constants (Histograms.scala:16,108-110; HogSFlow learn gates)."""
+    """Histogram learn gates (HogSFlow): below these saved sizes a
+    histogram only learns, never scores.  ε and the merge decay are
+    fixed in operators/histogram (Histograms.scala:16,108-110)."""
 
-    epsilon: float = 1e-7
-    decay_after: int = 1000  # halve old weight once size exceeds this
-    # learn gates: below these sizes a histogram only learns, never scores
     gate_hist01: int = 100
     gate_hist02: int = 1000
     gate_hist03: int = 10

@@ -29,15 +29,7 @@ from hogzilla_spark.functions.scalar import (
     ua_family_sql,
 )
 from hogzilla_spark.operators.histogram import EPSILON
-from hogzilla_spark.state.store import EMPTY_MAP_D, mk_update
-
-def _saved(histograms: DataFrame, family: str, prefix_len: int) -> DataFrame:
-    return histograms.filter(F.col("hist_name").startswith(family + "-")).select(
-        F.expr(f"substring(hist_name, {prefix_len})").alias("userName"),
-        F.col("size").alias(f"{family}_size"),
-        F.col("values").alias(f"{family}_values"),
-        F.col("labels").alias(f"{family}_labels"),
-    )
+from hogzilla_spark.state.store import mk_update, saved_family
 
 def prepare_auth(auth: DataFrame, ua_count_hint: int | None = None) -> DataFrame:
     """Projection + validity filter (HogAuth.scala:272-316): accents
@@ -158,12 +150,12 @@ def score_auth(
     )
     rec = rec.withColumn("loc_label", loc_label).withColumn("service_label", service_label)
 
-    s20 = _saved(histograms, "HIST20", 8)
-    s21 = _saved(histograms, "HIST21", 8)
-    s22 = _saved(histograms, "HIST22", 8)
+    s20 = saved_family(histograms, "HIST20", "userName", "HIST20_")
+    s21 = saved_family(histograms, "HIST21", "userName", "HIST21_")
+    s22 = saved_family(histograms, "HIST22", "userName", "HIST22_")
     # no broadcast hint on saved state: per-user histograms grow with the
     # user population — let the planner/AQE pick the strategy by size
-    # (see stateful._family)
+    # (see store.saved_family)
     joined = (
         rec.join(s20, "userName", "left")
         .join(s21, "userName", "left")

@@ -40,9 +40,9 @@ from pyspark.sql.functions import broadcast
 
 from hogzilla_spark.config import SFlowConfig
 from hogzilla_spark.detectors.base import SIGNATURES, mk_alert
-from hogzilla_spark.detectors.stateful import _family, _saved_get
 from hogzilla_spark.functions.scalar import human_bytes_sql, is_my_ip_sql, sql_quote
-from hogzilla_spark.operators.histogram import EPSILON
+from hogzilla_spark.operators.histogram import is_typical
+from hogzilla_spark.state.store import saved_family
 
 # every rule's `disabled` name (SFlowConfig.disabled, HogSFlow.scala:155-172)
 NAMES = (
@@ -394,9 +394,9 @@ def ftp_talkers(summary: DataFrame) -> DataFrame:
 def _typical_port(histograms: DataFrame, family: str, port: str) -> DataFrame:
     """IPs whose learned `family` histogram has weight > ε on `port`
     (HogHBaseHistogram.getIPListHIST01, :140-168; isTypicalEvent)."""
-    return _family(histograms, family).filter(
-        _saved_get(F.col("s_values"), F.lit(port)) > EPSILON
-    ).select(F.col("entity").alias("myIP"))
+    return saved_family(histograms, family, "myIP", "s_").filter(
+        is_typical("s_values", port)
+    ).select("myIP")
 
 def ftp_servers(histograms: DataFrame) -> DataFrame:
     """S8: IPs whose learned HIST01 has weight on port 21."""

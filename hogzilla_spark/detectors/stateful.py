@@ -3,9 +3,14 @@ histogram-state analytics.
 
 Contract per detector: ``fn(...) -> (alerts_df, state_updates_df[, extra])``
 where state updates follow state.store (hist_name, size, values, labels,
-mode).  Scoring always reads the SAVED state (pre-merge), exactly like
+mode).  Each detector builds ONE scored frame: its traffic rollup
+(:func:`_rollup`) at entity grain, left-joined once to each saved family
+it reads (:func:`_scored`, over ``store.saved_family``).  Its alerts
+(:func:`_alert`) and its state updates are both projections of that
+frame, so scoring always reads the SAVED (pre-merge) state, exactly like
 the reference's get-score-merge sequence; the merge itself happens once,
-batched, in state.store.apply_updates.
+batched, in state.store.apply_updates.  Every frame is lazy: the caller
+decides what to materialize.
 
 Deterministic divergence (documented, SURVEY.md §4 item 4): when one
 entity gets several within-batch observations (vPortScan pairs), the
@@ -22,34 +27,60 @@ from pyspark.sql.functions import broadcast
 from hogzilla_spark.config import HistogramConfig, SFlowConfig
 from hogzilla_spark.detectors.base import SIGNATURES, mk_alert
 from hogzilla_spark.functions.scalar import ip_significant_network, is_my_ip, log_bin
-from hogzilla_spark.operators.histogram import EPSILON
-from hogzilla_spark.state.store import EMPTY_MAP_D, mk_update
+from hogzilla_spark.operators.histogram import EPSILON, is_atypical, is_typical
+from hogzilla_spark.state.store import EMPTY_MAP_D, mk_update, saved_family
 
-def _family(histograms: DataFrame, family: str) -> DataFrame:
-    """Saved state of one histogram family keyed by entity.
-
-    Joins against this side carry NO broadcast() hint on purpose: state
-    grows with entity count (per-IP maps), so at 100× scale a forced
-    broadcast of a HIST family can exceed executor broadcast memory.
-    The state side comes off parquet with size stats, so the planner
-    (and AQE at runtime) picks broadcast only while it actually fits
-    `autoBroadcastJoinThreshold`; beyond that the equi-join shuffles on
-    the entity key, which is the shape we want."""
-    return histograms.filter(
-        F.col("hist_name").startswith(family + "-")
-        # "HIST02-" must not match "HIST02.1-..." names
-    ).select(
-        F.expr(f"substring(hist_name, {len(family) + 2})").alias("entity"),
-        F.col("size").alias("s_size"),
-        F.col("values").alias("s_values"),
+def _rollup(df: DataFrame, keys: list[str], *extra: Column) -> DataFrame:
+    """Traffic per `keys`: summed bytes and packets, mean sampleRate,
+    plus the `extra` aggregates."""
+    return df.groupBy(*keys).agg(
+        F.sum("bytesUp").alias("bytesUp"),
+        F.sum("bytesDown").alias("bytesDown"),
+        F.sum("numberPkts").alias("numberPkts"),
+        F.avg("sampleRate").alias("sampleRate"),
+        *extra,
     )
 
-def _saved_get(values: Column, key: Column) -> Column:
-    return F.coalesce(F.element_at(values, key), F.lit(0.0))
+def _scored(
+    df: DataFrame, histograms: DataFrame, family: str, gate: int, prefix: str = "s_"
+) -> DataFrame:
+    """`df` left-joined on myIP to the saved `family` state
+    (``<prefix>size``, ``<prefix>values``), plus ``<prefix>mature``: the
+    saved size reaches `gate` (an unsaved entity only learns)."""
+    return df.join(saved_family(histograms, family, "myIP", prefix), "myIP", "left").withColumn(
+        prefix + "mature", F.coalesce(F.col(prefix + "size"), F.lit(0)) >= gate
+    )
 
-def _scalar(df: DataFrame, expr_map: dict[str, Column]) -> DataFrame:
-    """1-row aggregate for the reference's driver-side .stats() values."""
-    return df.agg(*[v.alias(k) for k, v in expr_map.items()])
+def _alert(
+    df: DataFrame,
+    sig_key: str,
+    title: Column,
+    keys: dict[str, Column],
+    batch_time: int,
+    peer: Column | None = None,
+) -> DataFrame:
+    """One alert per row on myIP (and `peer`, else the broadcast
+    address): the detector's data `keys`, then the sampleRate-scaled
+    traffic keys."""
+    rate = F.col("sampleRate")
+    data = {
+        **keys,
+        "bytesUp": (F.col("bytesUp") * rate).cast("long"),
+        "bytesDown": (F.col("bytesDown") * rate).cast("long"),
+        "numberPkts": F.col("numberPkts"),
+    }
+    upper = F.lit("255.255.255.255") if peer is None else peer
+    return mk_alert(df, SIGNATURES[sig_key], F.col("myIP"), upper, title, data, batch_time)
+
+def _shares() -> Column:
+    """The batch share histogram: per-key ``counts`` over ``n_flows``
+    (empty for a host with no counted key)."""
+    return F.coalesce(
+        F.transform_values("counts", lambda _, n: n / F.col("n_flows")), EMPTY_MAP_D()
+    )
+
+def _ports_title(text: str) -> Column:
+    return F.concat(F.lit(text + " ("), F.concat_ws(",", "ports"), F.lit(")"))
 
 # ---------------------------------------------------------------------------
 # 826001003 — Atypical TCP port used (HIST01, gate 100)
@@ -57,7 +88,6 @@ def _scalar(df: DataFrame, expr_map: dict[str, Column]) -> DataFrame:
 
 def atypical_tcp_port(
     summary: DataFrame,
-    my_nets: list[str],
     cfg: SFlowConfig,
     hcfg: HistogramConfig,
     histograms: DataFrame,
@@ -85,89 +115,45 @@ def atypical_tcp_port(
         ).alias("l_p"),
         F.max(F.when(F.col("direction") < 0, 1).otherwise(0)).alias("inbound"),
     )
-    totals = flows.groupBy("myIP").agg(
-        F.count(F.lit(1)).alias("n_flows"),
-        F.sum("bytesUp").alias("bytesUp"),
-        F.sum("bytesDown").alias("bytesDown"),
-        F.sum("numberPkts").alias("numberPkts"),
-        F.avg("sampleRate").alias("sampleRate"),
-    )
     is_proxy_ip = F.col("myIP").isin(list(proxy_servers)) if proxy_servers else F.lit(False)
     serves = (F.col("a_p") > 3) & (F.col("a_p") / F.col("f_p") > 0.2)
     proxy_detected = serves & (F.col("l_p") > 2) & (F.col("a_p") / F.col("l_p") > 0.5)
     keep = F.when(is_proxy_ip, F.col("inbound") == 1).otherwise(
         serves & ~proxy_detected
     )
-    kept = port_stats.filter(keep)
     new_proxies = port_stats.filter(~is_proxy_ip & proxy_detected).select("myIP").distinct()
-
-    saved = _family(histograms, "HIST01")
-    port_rows = (
-        kept.join(totals, "myIP")
-        .select(
-            "myIP",
-            F.col("myPort").alias("port"),
-            (F.col("f_p") / F.col("n_flows")).alias("weight"),
-        )
-        .join(saved.withColumnRenamed("entity", "myIP"), "myIP", "left")
+    kept = (
+        port_stats.filter(keep)
+        .groupBy("myIP")
+        .agg(F.map_from_entries(F.collect_list(F.struct("myPort", "f_p"))).alias("counts"))
     )
-    mature = F.coalesce(F.col("s_size"), F.lit(0)) >= hcfg.gate_hist01
-    atypical_rows = port_rows.filter(
-        mature
-        & (F.col("weight") > EPSILON)
-        & (_saved_get(F.col("s_values"), F.col("port")) <= EPSILON)
-        & ~F.col("port").isin(sorted(cfg.atypical_ports_exclude))
-        & (
-            (_saved_get(F.col("s_values"), F.lit("21")) <= EPSILON)
-            | (F.col("port").try_cast("long") < 1024)
-        )
+    hosts = _scored(
+        _rollup(flows, ["myIP"], F.count(F.lit(1)).alias("n_flows")).join(kept, "myIP", "left"),
+        histograms,
+        "HIST01",
+        hcfg.gate_hist01,
+    ).withColumn("values", _shares())
+    excluded = sorted(cfg.atypical_ports_exclude)
+    ports = F.map_filter(
+        "values",
+        lambda port, w: (w > EPSILON)
+        & is_atypical("s_values", port)
+        & ~port.isin(excluded)
+        & (is_atypical("s_values", "21") | (port.try_cast("long") < 1024)),
     )
-    alert_base = (
-        atypical_rows.groupBy("myIP")
-        .agg(F.array_sort(F.collect_list("port")).alias("ports"))
-        .join(totals, "myIP")
-    )
-    alerts = mk_alert(
-        alert_base,
-        SIGNATURES["atypical_tcp_port"],
-        F.col("myIP"),
-        F.lit("255.255.255.255"),
-        F.concat(
-            F.lit("HZ: Atypical TCP port used ("),
-            F.concat_ws(",", "ports"),
-            F.lit(")"),
+    alerts = _alert(
+        hosts.withColumn("ports", F.array_sort(F.map_keys(ports))).filter(
+            F.col("s_mature") & (F.size("ports") > 0)
         ),
-        {
-            "myIP": F.col("myIP"),
-            "tcpport": F.concat_ws(",", "ports"),
-            "bytesUp": (F.col("bytesUp") * F.col("sampleRate")).cast("long"),
-            "bytesDown": (F.col("bytesDown") * F.col("sampleRate")).cast("long"),
-            "numberPkts": F.col("numberPkts"),
-        },
+        "atypical_tcp_port",
+        _ports_title("HZ: Atypical TCP port used"),
+        {"myIP": F.col("myIP"), "tcpport": F.concat_ws(",", "ports")},
         batch_time,
     )
-    new_hists = (
-        kept.groupBy("myIP")
-        .agg(F.collect_list(F.struct(F.col("myPort"), F.col("f_p"))).alias("entries"))
-        .join(totals, "myIP", "right")
-        .select(
-            "myIP",
-            F.col("n_flows").alias("size"),
-            F.coalesce(
-                F.map_from_entries(
-                    F.transform(
-                        "entries",
-                        lambda e: F.struct(
-                            e["myPort"].alias("key"),
-                            (e["f_p"] / F.col("n_flows")).alias("value"),
-                        ),
-                    )
-                ),
-                EMPTY_MAP_D(),
-            ).alias("values"),
-        )
+    updates = mk_update(
+        hosts.select("myIP", F.col("n_flows").alias("size"), "values"), "HIST01", "myIP"
     )
-    return alerts, mk_update(new_hists, "HIST01", "myIP"), new_proxies
+    return alerts, updates, new_proxies
 
 # ---------------------------------------------------------------------------
 # 826001004 — Atypical alien TCP port (HIST02 + HIST02.1, gate 1000)
@@ -186,7 +172,8 @@ def atypical_alien_tcp_port(
 ) -> tuple[DataFrame, DataFrame]:
     """HogSFlow.scala:1545-1727.  Alien-port share histogram per myIP
     cross-checked three ways: saved HIST02 (atypical), previous snapshot
-    HIST02.1 (typical), and the per-alien histogram HIST01/HIST05 (J8)."""
+    HIST02.1 (typical), and the alien network's HIST05 (J8: some alien
+    using the port must find it atypical too)."""
     flows = (
         summary.filter(
             (F.col("numberPkts") >= cfg.atypical_alien_tcp_min_pkts)
@@ -202,13 +189,6 @@ def atypical_alien_tcp_port(
         .join(broadcast(p2p_talker_ips), "myIP", "left_anti")
         .join(broadcast(media_client_ips), "myIP", "left_anti")
     )
-    totals = flows.groupBy("myIP").agg(
-        F.count(F.lit(1)).alias("n_flows"),
-        F.sum("bytesUp").alias("bytesUp"),
-        F.sum("bytesDown").alias("bytesDown"),
-        F.sum("numberPkts").alias("numberPkts"),
-        F.avg("sampleRate").alias("sampleRate"),
-    )
     # ports aliens use as CLIENT ports: (myIP,myPort) groups with >1 flow
     client_ports = (
         flows.groupBy("myIP", "myPort")
@@ -217,110 +197,89 @@ def atypical_alien_tcp_port(
         .select("myIP", F.explode("aps").alias("port"))
         .distinct()
     )
-    port_rows = (
+    counts = (
         flows.groupBy("myIP", F.col("alienPort").alias("port"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .join(client_ports, ["myIP", "port"], "left_anti")
-        .join(totals.select("myIP", "n_flows"), "myIP")
-        .select("myIP", "port", (F.col("cnt") / F.col("n_flows")).alias("weight"))
+        .groupBy("myIP")
+        .agg(F.map_from_entries(F.collect_list(F.struct("port", "cnt"))).alias("counts"))
     )
-    saved02 = _family(histograms, "HIST02").withColumnRenamed("entity", "myIP")
-    saved021 = (
-        _family(histograms, "HIST02.1")
-        .withColumnRenamed("entity", "myIP")
-        .withColumnsRenamed({"s_size": "p_size", "s_values": "p_values"})
-    )
-    scored = (
-        port_rows.join(saved02, "myIP", "left")
-        .join(saved021, "myIP", "left")
-        .filter(
-            (F.coalesce(F.col("s_size"), F.lit(0)) >= hcfg.gate_hist02)
-            & (F.coalesce(F.col("p_size"), F.lit(0)) > 0)
-            & (F.col("weight") > EPSILON)
-            & (_saved_get(F.col("s_values"), F.col("port")) <= EPSILON)  # atypical
-            & (_saved_get(F.col("p_values"), F.col("port")) > EPSILON)  # typical in prev
-        )
-    )
-    # J8 cross-check: is the port atypical for the alien side too?
-    flow_aliens = flows.select("myIP", F.col("alienPort").alias("port"), "alienIP")
-    alien_key = F.when(
-        is_my_ip("alienIP", my_nets), F.concat(F.lit("HIST01-"), F.col("alienIP"))
-    ).otherwise(F.concat(F.lit("HIST05-"), ip_significant_network("alienIP")))
-    checked = (
-        scored.select("myIP", "port")
-        .join(flow_aliens, ["myIP", "port"])
-        .withColumn("a_key", alien_key)
-        .join(
-            histograms.select(
-                F.col("hist_name").alias("a_key"), F.col("values").alias("a_values")
+    hosts = _scored(
+        _scored(
+            _rollup(flows, ["myIP"], F.count(F.lit(1)).alias("n_flows")).join(
+                counts, "myIP", "left"
             ),
-            "a_key",
-            "left",
-        )
-        .withColumn(
-            "alien_atypical",
-            _saved_get(F.coalesce(F.col("a_values"), EMPTY_MAP_D()), F.col("port")) <= EPSILON,
-        )
-        .groupBy("myIP", "port")
-        .agg(F.max(F.col("alien_atypical").cast("int")).alias("any_atypical"))
-        .filter(F.col("any_atypical") == 1)
-    )
-    alert_base = (
-        checked.groupBy("myIP")
-        .agg(F.array_sort(F.collect_list("port")).alias("ports"))
-        .join(totals, "myIP")
-    )
-    alerts = mk_alert(
-        alert_base,
-        SIGNATURES["atypical_alien_tcp_port"],
-        F.col("myIP"),
-        F.lit("255.255.255.255"),
-        F.concat(
-            F.lit("HZ: Atypical Alien TCP port used ("),
-            F.concat_ws(",", "ports"),
-            F.lit(")"),
+            histograms,
+            "HIST02",
+            hcfg.gate_hist02,
         ),
-        {
-            "myIP": F.col("myIP"),
-            "tcpport": F.concat_ws(",", "ports"),
-            "bytesUp": (F.col("bytesUp") * F.col("sampleRate")).cast("long"),
-            "bytesDown": (F.col("bytesDown") * F.col("sampleRate")).cast("long"),
-            "numberPkts": F.col("numberPkts"),
-        },
+        histograms,
+        "HIST02.1",
+        1,
+        "p_",
+    ).withColumn("values", _shares())
+    ports = F.map_filter(
+        "values",
+        lambda port, w: (w > EPSILON)
+        & is_atypical("s_values", port)
+        & is_typical("p_values", port),
+    )
+    # J8: keep a port only if it is atypical for the HIST05 of some alien
+    # network using it (the flow filter keeps only aliens outside
+    # my_nets, so the reference's HIST01 arm cannot fire)
+    traffic = ["myIP", "bytesUp", "bytesDown", "numberPkts", "sampleRate"]
+    checked = (
+        hosts.filter(F.col("s_mature") & F.col("p_mature"))
+        .select(*traffic, F.explode(F.map_keys(ports)).alias("port"))
+        .join(flows.select("myIP", F.col("alienPort").alias("port"), "alienIP"), ["myIP", "port"])
+        .withColumn("alienNet", ip_significant_network("alienIP"))
+        .join(saved_family(histograms, "HIST05", "alienNet", "a_"), "alienNet", "left")
+        .filter(is_atypical("a_values", F.col("port")))
+        .groupBy(*traffic)
+        .agg(F.array_sort(F.collect_set("port")).alias("ports"))
+    )
+    alerts = _alert(
+        checked,
+        "atypical_alien_tcp_port",
+        _ports_title("HZ: Atypical Alien TCP port used"),
+        {"myIP": F.col("myIP"), "tcpport": F.concat_ws(",", "ports")},
         batch_time,
     )
-    # state transitions (reference :1638-1723):
-    #   immature → HIST02 merge (batch);  mature → HIST02 merge (prev
-    #   snapshot) + HIST02.1 replace (batch)
-    new_hists = (
-        port_rows.groupBy("myIP")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("port"), F.col("weight")))
-            ).alias("values")
-        )
-        .join(totals.select("myIP", F.col("n_flows").alias("size")), "myIP", "right")
-        .select("myIP", "size", F.coalesce("values", EMPTY_MAP_D()).alias("values"))
-    )
-    with_gate = new_hists.join(saved02, "myIP", "left").join(saved021, "myIP", "left")
-    immature = with_gate.filter(F.coalesce(F.col("s_size"), F.lit(0)) < hcfg.gate_hist02)
-    mature = with_gate.filter(F.coalesce(F.col("s_size"), F.lit(0)) >= hcfg.gate_hist02)
-    upd_imm = mk_update(immature.select("myIP", "size", "values"), "HIST02", "myIP")
-    upd_mature_02 = mk_update(
-        mature.filter(F.coalesce(F.col("p_size"), F.lit(0)) > 0).select(
-            "myIP", F.col("p_size").alias("size"), F.col("p_values").alias("values")
+    # state transitions (reference :1638-1723): an immature host merges
+    # the batch into HIST02; a mature one merges the previous snapshot
+    # (if any) into HIST02 and replaces HIST02.1 with the batch
+    imm, prev = ~F.col("s_mature"), F.col("p_mature")
+    rows = F.array(
+        F.struct(
+            F.lit("HIST02").alias("family"),
+            F.lit("merge").alias("mode"),
+            F.when(imm, F.col("n_flows")).when(prev, F.col("p_size")).alias("size"),
+            F.when(imm, F.col("values")).when(prev, F.col("p_values")).alias("values"),
         ),
-        "HIST02",
+        F.struct(
+            F.lit("HIST02.1").alias("family"),
+            F.lit("replace").alias("mode"),
+            F.when(~imm, F.col("n_flows")).alias("size"),
+            F.when(~imm, F.col("values")).alias("values"),
+        ),
+    )
+    updates = mk_update(
+        hosts.select("myIP", F.inline(rows)).filter(F.col("size").isNotNull()),
+        F.col("family"),
         "myIP",
+        F.col("mode"),
     )
-    upd_snapshot = mk_update(
-        mature.select("myIP", "size", "values"), "HIST02.1", "myIP", mode="replace"
-    )
-    return alerts, upd_imm.unionByName(upd_mature_02).unionByName(upd_snapshot)
+    return alerts, updates
 
 # ---------------------------------------------------------------------------
 # 826001005 / 826001006 — Atypical pairs / amount of data (HIST03/HIST04)
 # ---------------------------------------------------------------------------
+
+def _host_pairs(flows: DataFrame) -> DataFrame:
+    """(myIP, alienIP) pairs rolled up to myIP, with the pair count."""
+    return _rollup(
+        _rollup(flows, ["myIP", "alienIP"]), ["myIP"], F.count(F.lit(1)).alias("pairs")
+    )
 
 def _single_bucket_detector(
     rolled: DataFrame,
@@ -329,30 +288,26 @@ def _single_bucket_detector(
     bucket: Column,
     sig_key: str,
     title: Column,
-    data: dict[str, Column],
     histograms: DataFrame,
     batch_time: int,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared HIST03/HIST04 shape (HogSFlow.scala:1737-1936): one
     log-binned observation per entity per batch; alert when the bucket is
     new AND the saved histogram is concentrated (<5 buckets > 0.001)."""
-    saved = _family(histograms, family).withColumnRenamed("entity", "myIP")
-    rows = rolled.withColumn("bucket", bucket.cast("long").cast("string")).join(
-        saved, "myIP", "left"
+    rows = _scored(
+        rolled.withColumn("bucket", bucket.cast("long").cast("string")),
+        histograms,
+        family,
+        gate,
     )
-    mature = F.coalesce(F.col("s_size"), F.lit(0)) >= gate
-    concentrated = (
-        F.size(F.map_filter(F.coalesce(F.col("s_values"), EMPTY_MAP_D()), lambda k, v: v > 0.001))
-        < 5
-    )
-    is_atypical = _saved_get(F.coalesce(F.col("s_values"), EMPTY_MAP_D()), F.col("bucket")) <= EPSILON
-    alerts = mk_alert(
-        rows.filter(mature & is_atypical & concentrated),
-        SIGNATURES[sig_key],
-        F.col("myIP"),
-        F.lit("255.255.255.255"),
+    concentrated = F.size(F.map_filter("s_values", lambda k, v: v > 0.001)) < 5
+    alerts = _alert(
+        rows.filter(
+            F.col("s_mature") & is_atypical("s_values", F.col("bucket")) & concentrated
+        ),
+        sig_key,
         title,
-        data,
+        {"numberOfPairs": F.col("pairs"), "myIP": F.col("myIP")},
         batch_time,
     )
     updates = mk_update(
@@ -377,22 +332,7 @@ def atypical_pairs(
     """826001005 (HogSFlow.scala:1737-1828): log-binned #distinct-pairs
     per myIP vs HIST03."""
     rolled = (
-        summary.filter(F.col("numberPkts") > 1)
-        .groupBy("myIP", "alienIP")
-        .agg(
-            F.sum("bytesUp").alias("bytesUp"),
-            F.sum("bytesDown").alias("bytesDown"),
-            F.sum("numberPkts").alias("numberPkts"),
-            F.avg("sampleRate").alias("sampleRate"),
-        )
-        .groupBy("myIP")
-        .agg(
-            F.sum("bytesUp").alias("bytesUp"),
-            F.sum("bytesDown").alias("bytesDown"),
-            F.sum("numberPkts").alias("numberPkts"),
-            F.count(F.lit(1)).alias("pairs"),
-            F.avg("sampleRate").alias("sampleRate"),
-        )
+        _host_pairs(summary.filter(F.col("numberPkts") > 1))
         .join(broadcast(p2p_talker_ips), "myIP", "left_anti")
         .filter(F.col("pairs") > cfg.atypical_pairs_min)
     )
@@ -407,13 +347,6 @@ def atypical_pairs(
             F.col("pairs"),
             F.lit(")"),
         ),
-        {
-            "numberOfPairs": F.col("pairs"),
-            "myIP": F.col("myIP"),
-            "bytesUp": (F.col("bytesUp") * F.col("sampleRate")).cast("long"),
-            "bytesDown": (F.col("bytesDown") * F.col("sampleRate")).cast("long"),
-            "numberPkts": F.col("numberPkts"),
-        },
         histograms,
         batch_time,
     )
@@ -432,27 +365,14 @@ def atypical_data(
     """826001006 (HogSFlow.scala:1836-1936): log-binned bytesUp per myIP
     vs HIST04; big-provider destinations excluded by prefix."""
     rolled = (
-        summary.filter(
-            (F.col("direction") > -1)
-            & (F.col("myPort").try_cast("long") > 1024)
-            & (F.col("myPort") != "8080")
-            & ~is_my_ip("alienIP", my_nets)
-            & ~is_my_ip("alienIP", big_provider_nets)
-        )
-        .groupBy("myIP", "alienIP")
-        .agg(
-            F.sum("bytesUp").alias("bytesUp"),
-            F.sum("bytesDown").alias("bytesDown"),
-            F.sum("numberPkts").alias("numberPkts"),
-            F.avg("sampleRate").alias("sampleRate"),
-        )
-        .groupBy("myIP")
-        .agg(
-            F.sum("bytesUp").alias("bytesUp"),
-            F.sum("bytesDown").alias("bytesDown"),
-            F.sum("numberPkts").alias("numberPkts"),
-            F.count(F.lit(1)).alias("pairs"),
-            F.avg("sampleRate").alias("sampleRate"),
+        _host_pairs(
+            summary.filter(
+                (F.col("direction") > -1)
+                & (F.col("myPort").try_cast("long") > 1024)
+                & (F.col("myPort") != "8080")
+                & ~is_my_ip("alienIP", my_nets)
+                & ~is_my_ip("alienIP", big_provider_nets)
+            )
         )
         .join(broadcast(p2p_talker_ips), "myIP", "left_anti")
         .join(broadcast(media_client_ips), "myIP", "left_anti")
@@ -465,13 +385,6 @@ def atypical_data(
         log_bin(F.col("bytesUp"), 0.0001),
         "atypical_data",
         F.lit("HZ: Atypical amount of data transferred"),
-        {
-            "numberOfPairs": F.col("pairs"),
-            "myIP": F.col("myIP"),
-            "bytesUp": (F.col("bytesUp") * F.col("sampleRate")).cast("long"),
-            "bytesDown": (F.col("bytesDown") * F.col("sampleRate")).cast("long"),
-            "numberPkts": F.col("numberPkts"),
-        },
         histograms,
         batch_time,
     )
@@ -484,15 +397,13 @@ def alien_network_profile(
     summary: DataFrame,
     my_nets: list[str],
     cfg: SFlowConfig,
-    hcfg: HistogramConfig,
-    histograms: DataFrame,
     ftp_talker_pairs: DataFrame,
     p2p_talker_ips: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
     """HogSFlow.scala:1947-2069: per-alien-/24 port (HIST05) and
     log-bytes (HIST06) histograms, gated on >4 distinct internal pairs;
-    auto-whitelists networks serving >1 GB flows.  Returns
-    (state_updates, new_big_provider_nets)."""
+    auto-whitelists networks serving >1 GB flows.  Reads no saved state.
+    Returns (state_updates, new_big_provider_nets)."""
     flows = (
         summary.filter(
             (F.col("myPort").try_cast("long") > 1024)
@@ -513,10 +424,9 @@ def alien_network_profile(
         )
         .filter(F.col("n_my") > 4)
     )
-
+    profiled = flows.join(nets.select("alienNet", "n_flows"), "alienNet")
     port_hist = (
-        flows.join(nets.select("alienNet", "n_flows"), "alienNet")
-        .groupBy("alienNet", "alienPort")
+        profiled.groupBy("alienNet", "alienPort")
         .agg(F.count(F.lit(1)).alias("cnt"), F.max("n_flows").alias("n_flows"))
         .groupBy("alienNet")
         .agg(
@@ -531,8 +441,7 @@ def alien_network_profile(
     # HIST06: presence-marked log-bytes buckets (the reference's
     # set-collapse makes every observed bucket weight exactly 1.0)
     bytes_hist = (
-        flows.filter(F.col("myPort").try_cast("long") > 1023)
-        .join(nets.select("alienNet", "n_flows"), "alienNet")
+        profiled.filter(F.col("myPort").try_cast("long") > 1023)
         .select(
             "alienNet",
             "n_flows",
@@ -586,39 +495,25 @@ def horizontal_portscan(
         )
         & (F.col("numberPkts") < 5)
     )
-    per_pair_port = flows.groupBy("myIP", "alienIP", "alienPort").agg(
-        F.sum("bytesUp").alias("bytesUp"),
-        F.sum("bytesDown").alias("bytesDown"),
-        F.sum("numberPkts").alias("numberPkts"),
-        F.count(F.lit(1)).alias("n_flows"),
-        F.avg("sampleRate").alias("sampleRate"),
-    )
-    per_port = per_pair_port.groupBy("myIP", "alienPort").agg(
-        F.sum("bytesUp").alias("bytesUp"),
-        F.sum("bytesDown").alias("bytesDown"),
-        F.sum("numberPkts").alias("numberPkts"),
+    per_port = _rollup(
+        _rollup(flows, ["myIP", "alienIP", "alienPort"], F.count(F.lit(1)).alias("n_flows")),
+        ["myIP", "alienPort"],
         F.sum("n_flows").alias("n_flows"),
         F.count(F.lit(1)).alias("n_pairs"),
-        F.avg("sampleRate").alias("sampleRate"),
     )
-    hot = per_port.filter(F.col("n_pairs") > cfg.hps_min_flows).join(
-        broadcast(p2p_talker_ips), "myIP", "left_anti"
+    rows = _scored(
+        per_port.filter(F.col("n_pairs") > cfg.hps_min_flows).join(
+            broadcast(p2p_talker_ips), "myIP", "left_anti"
+        ),
+        histograms,
+        "HIST07",
+        hcfg.gate_hist07,
     )
-    saved = _family(histograms, "HIST07").withColumnRenamed("entity", "myIP")
-    rows = hot.join(saved, "myIP", "left")
-    mature = F.coalesce(F.col("s_size"), F.lit(0)) >= hcfg.gate_hist07
-    port_atypical = (
-        _saved_get(F.coalesce(F.col("s_values"), EMPTY_MAP_D()), F.col("alienPort")).cast("long")
-        < F.col("n_pairs")
-    )
-    scored = rows.filter(mature & port_atypical)
-    alert_base = scored.groupBy("myIP").agg(
-        F.sum("bytesUp").alias("bytesUp"),
-        F.sum("bytesDown").alias("bytesDown"),
-        F.sum("numberPkts").alias("numberPkts"),
+    saved_pairs = F.coalesce(F.element_at("s_values", F.col("alienPort")), F.lit(0.0))
+    alert_base = _rollup(
+        rows.filter(F.col("s_mature") & (saved_pairs.cast("long") < F.col("n_pairs"))),
+        ["myIP"],
         F.sum("n_flows").alias("n_flows"),
-        F.sum("n_pairs").alias("n_pairs"),
-        F.avg("sampleRate").alias("sampleRate"),
         F.concat_ws(
             ", ",
             F.array_sort(
@@ -627,11 +522,9 @@ def horizontal_portscan(
         ).alias("perPort"),
         F.array_sort(F.collect_list("alienPort")).alias("ports"),
     )
-    alerts = mk_alert(
+    alerts = _alert(
         alert_base,
-        SIGNATURES["horizontal_portscan"],
-        F.col("myIP"),
-        F.lit("255.255.255.255"),
+        "horizontal_portscan",
         F.concat(
             F.lit("HZ: Horizontal scan on ports "), F.concat_ws(", ", "ports")
         ),
@@ -639,9 +532,6 @@ def horizontal_portscan(
             "numberOfFlows": F.col("n_flows"),
             "numberOfFlowsPerPort": F.col("perPort"),
             "myIP": F.col("myIP"),
-            "bytesUp": (F.col("bytesUp") * F.col("sampleRate")).cast("long"),
-            "bytesDown": (F.col("bytesDown") * F.col("sampleRate")).cast("long"),
-            "numberPkts": F.col("numberPkts"),
         },
         batch_time,
     )
@@ -656,11 +546,8 @@ def horizontal_portscan(
                     F.struct(F.col("alienPort"), F.col("n_pairs").cast("double"))
                 )
             ).alias("values"),
-            F.when(
-                F.max(F.coalesce(F.col("s_size"), F.lit(0))) < hcfg.gate_hist07,
-                F.sum("n_pairs"),
-            )
-            .otherwise(F.sum("n_flows"))
+            F.when(F.max("s_mature"), F.sum("n_flows"))
+            .otherwise(F.sum("n_pairs"))
             .alias("size"),
         ),
         "HIST07",
@@ -685,52 +572,42 @@ def vertical_portscan(
     alienIP) on tiny flows; novel when no saved HIST08 bucket ≥ numPorts
     has weight > ε."""
     pairs = (
-        summary.filter(
-            (F.col("alienPort").try_cast("long") < cfg.vps_max_port)
-            & (F.col("myPort").try_cast("long") > 1023)
-            & (F.col("numberPkts") < 5)
-        )
-        .groupBy("myIP", "alienIP")
-        .agg(
-            F.sum("bytesUp").alias("bytesUp"),
-            F.sum("bytesDown").alias("bytesDown"),
-            F.sum("numberPkts").alias("numberPkts"),
+        _rollup(
+            summary.filter(
+                (F.col("alienPort").try_cast("long") < cfg.vps_max_port)
+                & (F.col("myPort").try_cast("long") > 1023)
+                & (F.col("numberPkts") < 5)
+            ),
+            ["myIP", "alienIP"],
             F.count(F.lit(1)).alias("n_flows"),
             F.countDistinct("alienPort").alias("numPorts"),
-            F.avg("sampleRate").alias("sampleRate"),
         )
         .filter(F.col("numPorts") > cfg.vps_min_ports)
         .join(broadcast(p2p_talker_ips), "myIP", "left_anti")
     )
-    saved = _family(histograms, "HIST08").withColumnRenamed("entity", "myIP")
-    rows = pairs.join(saved, "myIP", "left")
-    mature = F.coalesce(F.col("s_size"), F.lit(0)) >= hcfg.gate_hist08
+    rows = _scored(pairs, histograms, "HIST08", hcfg.gate_hist08)
     # no saved bucket with numeric key >= numPorts and weight > ε
     novel = (
         F.size(
             F.map_filter(
-                F.coalesce(F.col("s_values"), EMPTY_MAP_D()),
+                "s_values",
                 lambda k, v: (k.try_cast("long") >= F.col("numPorts")) & (v > EPSILON),
             )
         )
         == 0
     )
-    alerts = mk_alert(
-        rows.filter(mature & novel),
-        SIGNATURES["vertical_portscan"],
-        F.col("myIP"),
-        F.col("alienIP"),
+    alerts = _alert(
+        rows.filter(F.col("s_mature") & novel),
+        "vertical_portscan",
         F.concat(F.lit("HZ: Vertical portscan ("), F.col("numPorts"), F.lit(" ports)")),
         {
             "numberOfFlows": F.col("n_flows"),
             "numberOfPorts": F.col("numPorts"),
             "myIP": F.col("myIP"),
             "alienIP": F.col("alienIP"),
-            "bytesUp": (F.col("bytesUp") * F.col("sampleRate")).cast("long"),
-            "bytesDown": (F.col("bytesDown") * F.col("sampleRate")).cast("long"),
-            "numberPkts": F.col("numberPkts"),
         },
         batch_time,
+        peer=F.col("alienIP"),
     )
     # several pairs can observe the same myIP in one batch: pre-combine
     # into one share histogram (deterministic batch-merge divergence)

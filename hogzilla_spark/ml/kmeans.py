@@ -174,15 +174,10 @@ def histogram_clustering(
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
     from hogzilla_spark.functions.scalar import is_my_ip
-    from hogzilla_spark.operators.histogram import entity_from_hist_name
+    from hogzilla_spark.state.store import saved_family
 
     base = (
-        histograms.filter(F.col("hist_name").startswith("HIST01-"))
-        .select(
-            entity_from_hist_name("hist_name").alias("ip"),
-            "size",
-            "values",
-        )
+        saved_family(histograms, "HIST01", "ip", "")
         .filter(F.col("size") > min_size)
         .filter(is_my_ip("ip", my_nets))
     )

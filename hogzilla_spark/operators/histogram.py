@@ -157,18 +157,6 @@ def difference(
     # h1 ∪ updated, updated wins on collisions (the reference's map.put)
     return F.map_zip_with(h1, updated, lambda k, v1, v2: F.coalesce(v2, v1))
 
-# --- H8: histogram-name helpers (Histograms.scala:200-203) ------------------
-
-def hist_name(family: str, entity: Column | str) -> Column:
-    entity = F.col(entity) if isinstance(entity, str) else entity
-    return F.concat(F.lit(family + "-"), entity)
-
-def entity_from_hist_name(name: Column | str) -> Column:
-    """Strip the "HISTxx-" prefix → entity id (everything after the first
-    '-', so entities containing '-' survive)."""
-    c = F.col(name) if isinstance(name, str) else name
-    return F.regexp_replace(c, "^[^-]*-", "")
-
 # --- builders: group → share-normalized histogram (A6/W1) -------------------
 
 def build_histogram(df, entity_col: str, bucket_col: str, weight_col: str | None = None):

@@ -8,10 +8,14 @@ from the reference):
                     │  (myIP, alienIP) aggregate → host rows → ftp
                     │  servers → p2p → media / DDoS; smtp state guard;
                     │  C&C prefix join; dns/icmp/udp/abused/alien/top
-                    │     ├─ p2p talker IPs ───┬─ atypical_* / alien profile
-                    │     └─ media client IPs ─┘  / portscans (state)
-                    ├─ ftp_talkers ─────────── atypical_* / alien profile
+                    │     ├─ p2p talker IPs ───┬─ stateful detectors
+                    │     └─ media client IPs ─┘  (detectors/stateful.py)
+                    ├─ ftp_talkers ─────────── atypical ports / alien profile
                     └─ os inventory
+
+    each stateful detector: rollup at entity grain ─ left join once per
+    saved family it reads (store.saved_family) ─┬─ alerts
+                                         └─ HIST01-08 updates
 
 The reference funnels every inter-detector dependency through
 ``collect()`` on the driver; here the only driver materialization is
@@ -24,8 +28,10 @@ too, HogSFlow.scala:882) and hands it back on the result;
 ``run_and_persist`` persists the loaded ``histograms`` and releases
 both after the state upsert.  Every detector returns lazy frames: the
 stateless suite shuffles ``summary`` once and the stateful detectors
-fan out of it; every dimension input is broadcast; state scoring is one
-equi-join per family; state writing is one upsert per run.
+fan out of it; every dimension input is broadcast; each stateful
+detector scores one frame, joined once to each saved family it reads,
+and projects both its alerts and its state updates from that frame;
+state writing is one upsert per run.
 """
 
 from __future__ import annotations
@@ -38,7 +44,7 @@ from pyspark.sql import functions as F
 from hogzilla_spark.config import DEFAULT, EngineConfig
 from hogzilla_spark.detectors import sflow as D
 from hogzilla_spark.detectors import stateful as S
-from hogzilla_spark.detectors.base import signatures_df
+from hogzilla_spark.detectors.base import SIGNATURES, mk_alert, signatures_df
 from hogzilla_spark.operators.rollup import icmp_summary, sflow_summary
 from hogzilla_spark.state import store
 
@@ -92,8 +98,8 @@ def run_sflow_batch(
 
     # stateful suite
     at_alerts, at_updates, new_proxies = S.atypical_tcp_port(
-        summary, my_nets, scfg, hcfg, histograms, ftp_pairs, p2p_ips,
-        proxy_servers, batch_time,
+        summary, scfg, hcfg, histograms, ftp_pairs, p2p_ips, proxy_servers,
+        batch_time,
     )
     per["atypical_tcp_port"] = at_alerts
     aa_alerts, aa_updates = S.atypical_alien_tcp_port(
@@ -111,7 +117,7 @@ def run_sflow_batch(
     )
     per["atypical_data"] = ad_alerts
     profile_updates, new_big_providers = S.alien_network_profile(
-        summary, my_nets, scfg, hcfg, histograms, ftp_pairs, p2p_ips
+        summary, my_nets, scfg, ftp_pairs, p2p_ips
     )
     hp_alerts, hp_updates = S.horizontal_portscan(
         summary, my_nets, scfg, hcfg, histograms, p2p_ips, batch_time
@@ -219,7 +225,6 @@ def run_full_batch(
 
     `flows` is the nDPI-enriched table (None skips the ML modules, e.g.
     sFlow-only deployments)."""
-    from hogzilla_spark.detectors.base import SIGNATURES, mk_alert
     from hogzilla_spark.ml.kmeans import dns_kmeans, http_kmeans, histogram_clustering
     from hogzilla_spark.ml.rf import rf_train_score
 
@@ -277,9 +282,14 @@ def run_full_batch(
 
 def main() -> None:
     """CLI: run one full batch over the built-in fixtures (or a parquet
-    dir via --sflows) and print per-detector alert counts.
+    dir via --sflows) and print per-signature alert counts.
 
     python -m hogzilla_spark.plans.batch [--out DIR] [--sflows PARQUET]
+
+    Every count reads what the run wrote, not the result frames: those
+    are lazy and the cycle has released ``summary``, so counting them
+    would re-run each detector from the raw sFlow input.  Alert counts
+    are one aggregate over the events with this run's --batch-time.
     """
     import argparse
 
@@ -308,26 +318,39 @@ def main() -> None:
         flows = datagen.flows_df(spark)
     elif args.flows:
         flows = spark.read.parquet(args.flows)
-    result = run_and_persist(
+    out = args.out
+    run_and_persist(
         spark,
         sflows,
         datagen.mynets_df(spark),
         datagen.reputation_df(spark),
-        state_path=f"{args.out}/state/histograms.parquet",
-        out_dir=args.out,
+        state_path=f"{out}/state/histograms.parquet",
+        out_dir=out,
         batch_time=args.batch_time,
         flows=flows,
     )
-    for name, df in sorted(result.per_detector.items()):
-        n = df.count()
-        print(f"{name:28s} {n} alerts")
-    print(f"state entries: {store.load(spark, f'{args.out}/state/histograms.parquet').count()}")
+    counts = dict(
+        spark.read.parquet(f"{out}/events.parquet")
+        .filter(F.col("time") == args.batch_time)
+        .groupBy("signature_id")
+        .count()
+        .collect()
+    )
+    for name, sig in sorted(SIGNATURES.items()):
+        print(f"{name:28s} {counts.get(sig.sig_id, 0)} alerts")
+    if flows is not None:
+        for sink in ("clusters", "cluster_members"):
+            n = spark.read.parquet(f"{out}/{sink}.parquet").count()
+            print(f"hist_{sink:23s} {n} rows")
+    print(f"state entries: {store.load(spark, f'{out}/state/histograms.parquet').count()}")
+    inventory = spark.read.parquet(f"{out}/inventory.parquet")
+    learned = spark.read.parquet(f"{out}/reputation_learned.parquet")
     if args.show_frames:
-        print(f"inventory: {[tuple(r) for r in result.inventory.collect()]}")
-        print(f"learned reputation: {[tuple(r) for r in result.new_reputation.collect()]}")
+        print(f"inventory: {[tuple(r) for r in inventory.collect()]}")
+        print(f"learned reputation (all runs): {[tuple(r) for r in learned.collect()]}")
     else:
-        print(f"inventory rows: {result.inventory.count()}")
-        print(f"learned reputation rows: {result.new_reputation.count()}")
+        print(f"inventory rows: {inventory.count()}")
+        print(f"learned reputation rows (all runs): {learned.count()}")
     spark.stop()
 
 if __name__ == "__main__":

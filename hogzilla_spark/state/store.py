@@ -21,7 +21,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hogzilla_spark.operators.histogram import (
@@ -193,15 +193,46 @@ def upsert(
     save(apply_updates(saved, updates), path, batch_id=batch_id)
 
 def mk_update(
-    df: DataFrame, family: str, entity_col: str, mode: str = "merge"
+    df: DataFrame,
+    family: str | Column,
+    entity_col: str,
+    mode: str | Column = "merge",
 ) -> DataFrame:
     """Shape a per-entity batch histogram (entity, size, values[, labels])
-    into store update rows for one family."""
+    into store update rows.  ``family`` and ``mode`` are one value for
+    every row, or a Column when one frame updates several families."""
     labels = F.col("labels") if "labels" in df.columns else EMPTY_MAP_S()
+    name = (
+        F.concat(F.lit(family + "-"), F.col(entity_col))
+        if isinstance(family, str)
+        else F.concat(family, F.lit("-"), F.col(entity_col))
+    )
     return df.select(
-        F.concat(F.lit(family + "-"), F.col(entity_col)).alias("hist_name"),
+        name.alias("hist_name"),
         F.col("size").cast("long").alias("size"),
         F.col("values"),
         labels.alias("labels"),
-        F.lit(mode).alias("mode"),
+        (F.lit(mode) if isinstance(mode, str) else mode).alias("mode"),
+    )
+
+def saved_family(histograms: DataFrame, family: str, entity: str, prefix: str) -> DataFrame:
+    """Saved state of one family keyed by entity: ``entity``,
+    ``<prefix>size``, ``<prefix>values`` and, when the state carries
+    them, ``<prefix>labels``.  The one reader of the ``FAMILY-entity``
+    hist_name that :func:`mk_update` writes.
+
+    Joins against this side carry NO broadcast() hint on purpose: state
+    grows with entity count (per-IP and per-user maps), so at 100× scale
+    a forced broadcast of a family can exceed executor broadcast memory.
+    The state side comes off parquet with size stats, so the planner
+    (and AQE at runtime) picks broadcast only while it actually fits
+    `autoBroadcastJoinThreshold`; beyond that the equi-join shuffles on
+    the entity key, which is the shape we want."""
+    cols = ["size", "values"] + (["labels"] if "labels" in histograms.columns else [])
+    return histograms.filter(
+        # "HIST02-" must not match "HIST02.1-..." names
+        F.col("hist_name").startswith(family + "-")
+    ).select(
+        F.expr(f"substring(hist_name, {len(family) + 2})").alias(entity),
+        *[F.col(c).alias(prefix + c) for c in cols],
     )

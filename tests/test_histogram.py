@@ -71,11 +71,6 @@ def test_point_typicality(spark, hdf):
     ).collect()[0]
     assert r.ta and r.ac
 
-def test_entity_from_hist_name(spark):
-    df = spark.createDataFrame([("HIST01-10.1.2.3",), ("HIST20-ali-ce",)], "n string")
-    got = [r.e for r in df.select(H.entity_from_hist_name("n").alias("e")).collect()]
-    assert got == ["10.1.2.3", "ali-ce"]
-
 def test_build_histogram_shares(spark):
     df = spark.createDataFrame(
         [("h1", "80"), ("h1", "80"), ("h1", "443"), ("h2", "22")],

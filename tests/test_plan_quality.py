@@ -37,20 +37,42 @@ def test_s6_filter_pushdown_and_pruning(spark):
     )
 
 def test_stateful_detectors_bounded_plan_fanout(spark):
-    """Plan-size guard on the stateful detector queries: the returned
-    alert/update unions are lazy, so each plan re-derives its small
-    decision aggregates per branch.  The bounds pin today's plans so a
-    refactor cannot grow them; hz_atypical_alien (86 Exchanges over 409
-    lines) and hz_atypical_volume (18) shrink back to <=30 / <=400 and
-    <=12 once the cycle owns the detectors' decision frames."""
+    """Plan-size guard on the stateful detector queries.  Each detector
+    scores one frame (its rollup joined once per saved family) and
+    projects alerts and updates from it; the bounds are the plans of
+    that shape at sf0.001, so a refactor that re-derives a rollup or
+    re-joins state per output fails here.  The registry queries call
+    the detectors directly, not through the cycle, so these are the
+    lazy plans themselves."""
     plan = plan_of(spark, "hz_atypical_alien")
-    assert plan.count("Exchange") <= 86, plan.count("Exchange")
-    assert plan.count("\n") <= 409
-    for q, bound in [("hz_atypical_port", 20), ("hz_atypical_volume", 18),
-                     ("hz_alien_profile", 25), ("hz_portscan", 10),
+    assert plan.count("Exchange") <= 45, plan.count("Exchange")
+    assert plan.count("\n") <= 223
+    for q, bound in [("hz_atypical_port", 16), ("hz_atypical_volume", 18),
+                     ("hz_alien_profile", 22), ("hz_portscan", 6),
                      ("hz_vportscan", 10)]:
         p = plan_of(spark, q)
         assert p.count("Exchange") <= bound, (q, p.count("Exchange"))
+
+def test_atypical_alien_reads_saved_state_once(spark):
+    """atypical_alien_tcp_port's alerts and state updates are both
+    projections of one scored frame: each optimized plan reads HIST02
+    and HIST02.1 once."""
+    from hogzilla_spark import datagen
+    from hogzilla_spark.config import DEFAULT
+    from hogzilla_spark.detectors import stateful as S
+    from hogzilla_spark.operators.rollup import sflow_summary
+
+    nets = datagen.MY_NETS
+    summary = sflow_summary(datagen.sflows_df(spark), nets)
+    hists = datagen.histograms_df(spark).localCheckpoint(eager=True)
+    ips = spark.createDataFrame([], "myIP string")
+    pairs = spark.createDataFrame([], "myIP string, alienIP string")
+    outputs = S.atypical_alien_tcp_port(
+        summary, nets, DEFAULT.sflow, DEFAULT.hist, hists, pairs, ips, ips
+    )
+    for df in outputs:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert (plan.count("HIST02-"), plan.count("HIST02.1-")) == (1, 1), plan
 
 def test_stateful_detectors_build_lazily(spark):
     """Detectors return lazy frames: building all seven stateful
@@ -70,11 +92,11 @@ def test_stateful_detectors_build_lazily(spark):
     sc = spark.sparkContext
     sc.setJobGroup("stateful_build", "build the stateful detectors")
     try:
-        S.atypical_tcp_port(summary, nets, cfg, hcfg, hists, pairs, ips, [])
+        S.atypical_tcp_port(summary, cfg, hcfg, hists, pairs, ips, [])
         S.atypical_alien_tcp_port(summary, nets, cfg, hcfg, hists, pairs, ips, ips)
         S.atypical_pairs(summary, cfg, hcfg, hists, ips)
         S.atypical_data(summary, nets, cfg, hcfg, hists, ips, ips, [])
-        S.alien_network_profile(summary, nets, cfg, hcfg, hists, pairs, ips)
+        S.alien_network_profile(summary, nets, cfg, pairs, ips)
         S.horizontal_portscan(summary, nets, cfg, hcfg, hists, ips)
         S.vertical_portscan(summary, cfg, hcfg, hists, ips)
     finally:

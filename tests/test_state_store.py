@@ -45,6 +45,16 @@ def test_load_missing_is_empty(spark, tmp_path):
     assert store.load(spark, str(tmp_path / "nope")).count() == 0
 
 
+def test_saved_reads_one_family(spark):
+    """The entity is everything after "FAMILY-" (so '-' inside it
+    survives), and "HIST02" does not match "HIST02.1-" names."""
+    state = _mk_state(spark, ["HIST02-10.1.2.3", "HIST02-ali-ce", "HIST02.1-10.1.2.3"])
+    got = store.saved_family(state, "HIST02", "e", "s_")
+    assert got.columns == ["e", "s_size", "s_values", "s_labels"]
+    assert sorted(r.e for r in got.collect()) == ["10.1.2.3", "ali-ce"]
+    assert [r.e for r in store.saved_family(state, "HIST02.1", "e", "p_").collect()] == ["10.1.2.3"]
+
+
 def test_lazy_reader_survives_swap(spark, tmp_path):
     """The round-1 bug: plans built against the old files must still
     resolve after save() commits a new generation."""

@@ -44,7 +44,7 @@ def upd_map(updates):
 
 def test_atypical_tcp_port(spark, summary, hists, empty_ips, empty_pairs):
     alerts, updates, proxies = S.atypical_tcp_port(
-        summary, datagen.MY_NETS, CFG, HCFG, hists, empty_pairs, empty_ips, []
+        summary, CFG, HCFG, hists, empty_pairs, empty_ips, []
     )
     rows = alerts.collect()
     assert [r.lower_ip_str for r in rows] == ["10.1.0.150"]
@@ -117,7 +117,7 @@ def test_state_join_not_forced_broadcast(spark, summary, hists, empty_ips, empty
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         alerts, _, _ = S.atypical_tcp_port(
-            summary, datagen.MY_NETS, CFG, HCFG, hists, empty_pairs, empty_ips, []
+            summary, CFG, HCFG, hists, empty_pairs, empty_ips, []
         )
         plan = alerts._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
@@ -169,7 +169,7 @@ def test_vertical_portscan(spark, summary, hists, empty_ips):
 
 def test_alien_network_profile(spark, summary, hists, empty_ips, empty_pairs):
     updates, big = S.alien_network_profile(
-        summary, datagen.MY_NETS, CFG, HCFG, hists, empty_pairs, empty_ips
+        summary, datagen.MY_NETS, CFG, empty_pairs, empty_ips
     )
     u = upd_map(updates)
     assert u["HIST05-123.123.123."].values == {"8443": 1.0}

@@ -28,11 +28,17 @@ def test_auth_stream_available_now(spark, tmp_path):
     store.save(datagen.auth_histograms_df(spark), state_path)
     datagen.auth_df(spark).write.mode("append").parquet(input_dir)
 
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keySet())
     q = start_auth_stream(
         spark, input_dir, state_path, alerts_dir, ckpt,
         trigger={"availableNow": True},
     )
     q.awaitTermination(120)
+    # the micro-batch releases every frame it cached and sets no
+    # checkpoint dir (earlier frames may be cleaned up meanwhile)
+    assert not set(jsc.getPersistentRDDs().keySet()) - cached_before
+    assert not jsc.sc().getCheckpointDir().isDefined()
 
     alerts = spark.read.parquet(alerts_dir)
     vars_seen = sorted(r["data"]["atypicalVars"] for r in alerts.collect())
