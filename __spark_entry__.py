@@ -136,18 +136,14 @@ def q_a3_two_level_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, HogSFlow.scala:1162-1187): orders→per-customer→per-nation."""
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
-    lvl1 = (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("c_nationkey", "o_custkey")
-        .agg(
-            F.sum(_cents(F.col("o_totalprice"))).alias("cust_total_c"),
-            F.count(F.lit(1)).alias("cust_orders"),
-        )
-    )
-    return lvl1.groupBy("c_nationkey").agg(
-        F.sum("cust_total_c").alias("nation_total_c"),
-        F.sum("cust_orders").alias("nation_orders"),
-        F.count(F.lit(1)).alias("pairs"),
+    return AGG.two_level_rollup(
+        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey),
+        ["c_nationkey", "o_custkey"],
+        ["c_nationkey"],
+        {
+            "nation_total_c": F.sum(_cents(F.col("o_totalprice"))),
+            "nation_orders": F.count(F.lit(1)),
+        },
     )
 
 def q_a2_a3_rollups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -918,15 +914,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Since r12 the two parts are computed by ONE fused pass
     (operators/dedup.ngram_jaccard_pairs_dual: one shingle scan, one
-    self-join counting both intersections), row-identical to two
-    separate `ngram_jaccard_pairs` runs — the single-variant operator
-    (with its production m² guard) remains the unit-tested scale path.
+    self-join counting both intersections).
     """
     docs = _t(spark, sf_dir, "documents")
-    # r12: both variants from ONE shingle scan + ONE self-join — the
-    # fused form is row-identical to two separate operator runs (pinned
-    # by test_ngram_jaccard_dual_matches_two_runs); valid here because
-    # this declared-quadratic member pays the uncapped join anyway.
     return DD.ngram_jaccard_pairs_dual(docs, min_jaccard=0.3, max_shingle_freq=5)
 
 def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2001,6 +1991,7 @@ def q_hz_portscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hogzilla_spark.config import HistogramConfig, SFlowConfig
     from hogzilla_spark.detectors.stateful import horizontal_portscan
     from hogzilla_spark.operators.rollup import sflow_summary
+    from hogzilla_spark.state.store import mk_update
 
     cfg = SFlowConfig(hps_min_flows=5)
     hcfg = HistogramConfig()
@@ -2012,20 +2003,15 @@ def q_hz_portscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "numberPkts", F.lit(1) + F.col("numberPkts") % 7
     )
     octet = F.element_at(F.split(F.col("myIP"), r"\."), 4).try_cast("int")
-    hists = (
-        summary.select("myIP")
-        .distinct()
-        .select(
-            F.concat(F.lit("HIST07-"), F.col("myIP")).alias("hist_name"),
-            F.lit(150).cast("long").alias("size"),
-            F.map_from_arrays(
-                F.array(F.lit("19999")),
-                F.array(
-                    F.when(octet % 2 == 0, F.lit(5.0)).otherwise(F.lit(1000.0))
-                ),
-            ).alias("values"),
-        )
+    seed = summary.select("myIP").distinct().select(
+        "myIP",
+        F.lit(150).alias("size"),
+        F.map_from_arrays(
+            F.array(F.lit("19999")),
+            F.array(F.when(octet % 2 == 0, F.lit(5.0)).otherwise(F.lit(1000.0))),
+        ).alias("values"),
     )
+    hists = mk_update(seed, "HIST07", "myIP")
     p2p_ips = spark.createDataFrame([], "myIP string")
     alerts, _updates = horizontal_portscan(
         summary, ["10.1."], cfg, hcfg, hists, p2p_ips
@@ -2063,6 +2049,7 @@ def q_hz_atypical_port(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hogzilla_spark.config import HistogramConfig, SFlowConfig
     from hogzilla_spark.detectors.stateful import atypical_tcp_port
     from hogzilla_spark.operators.rollup import sflow_summary
+    from hogzilla_spark.state.store import mk_update
 
     cfg = SFlowConfig()
     hcfg = HistogramConfig()
@@ -2083,32 +2070,26 @@ def q_hz_atypical_port(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("numberPkts"),
         ).otherwise(F.col("status")),
     )
-    hists = (
-        summary.select("myIP")
-        .distinct()
-        .select(
-            F.concat(F.lit("HIST01-"), F.col("myIP")).alias("hist_name"),
-            F.when(octet % 7 == 0, F.lit(50))
-            .otherwise(F.lit(150))
-            .cast("long")
-            .alias("size"),
-            F.map_from_entries(
-                F.filter(
-                    F.array(
-                        F.struct(
-                            F.lit("4000").alias("key"),
-                            F.when(octet % 2 == 1, F.lit(1000.0)).alias("value"),
-                        ),
-                        F.struct(
-                            F.lit("21").alias("key"),
-                            F.when(octet % 3 == 0, F.lit(1000.0)).alias("value"),
-                        ),
+    seed = summary.select("myIP").distinct().select(
+        "myIP",
+        F.when(octet % 7 == 0, F.lit(50)).otherwise(F.lit(150)).alias("size"),
+        F.map_from_entries(
+            F.filter(
+                F.array(
+                    F.struct(
+                        F.lit("4000").alias("key"),
+                        F.when(octet % 2 == 1, F.lit(1000.0)).alias("value"),
                     ),
-                    lambda e: e["value"].isNotNull(),
-                )
-            ).alias("values"),
-        )
+                    F.struct(
+                        F.lit("21").alias("key"),
+                        F.when(octet % 3 == 0, F.lit(1000.0)).alias("value"),
+                    ),
+                ),
+                lambda e: e["value"].isNotNull(),
+            )
+        ).alias("values"),
     )
+    hists = mk_update(seed, "HIST01", "myIP")
     empty_pairs = spark.createDataFrame([], "myIP string, alienIP string")
     empty_ips = spark.createDataFrame([], "myIP string")
     alerts, _updates, new_proxies = atypical_tcp_port(
@@ -2174,7 +2155,7 @@ def q_hz_atypical_alien(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hogzilla_spark.config import HistogramConfig, SFlowConfig
     from hogzilla_spark.detectors.stateful import atypical_alien_tcp_port
     from hogzilla_spark.operators.rollup import sflow_summary
-    from hogzilla_spark.state.store import EMPTY_MAP_D
+    from hogzilla_spark.state.store import EMPTY_MAP_D, mk_update, name_parts
 
     cfg = SFlowConfig()
     hcfg = HistogramConfig()
@@ -2216,11 +2197,8 @@ def q_hz_atypical_alien(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hosts = summary.select("myIP").distinct().select("myIP", octet.alias("octet"))
     h02 = hosts.select(
-        F.concat(F.lit("HIST02-"), F.col("myIP")).alias("hist_name"),
-        F.when(F.col("octet") % 7 == 0, F.lit(50))
-        .otherwise(F.lit(2000))
-        .cast("long")
-        .alias("size"),
+        "myIP",
+        F.when(F.col("octet") % 7 == 0, F.lit(50)).otherwise(F.lit(2000)).alias("size"),
         F.when(
             F.col("octet") % 2 == 1,
             F.create_map(F.lit("1110"), F.lit(0.5)),
@@ -2229,8 +2207,8 @@ def q_hz_atypical_alien(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("values"),
     )
     h021 = hosts.filter(F.col("octet") % 5 != 0).select(
-        F.concat(F.lit("HIST02.1-"), F.col("myIP")).alias("hist_name"),
-        F.lit(10).cast("long").alias("size"),
+        "myIP",
+        F.lit(10).alias("size"),
         F.create_map(
             *[x for p in _ALIEN_PREV_PORTS for x in (F.lit(p), F.lit(0.1))]
         ).alias("values"),
@@ -2238,13 +2216,13 @@ def q_hz_atypical_alien(spark: SparkSession, sf_dir: str) -> DataFrame:
     h05 = spark.createDataFrame(
         [
             (
-                f"HIST05-8.8.{s}.",
+                f"8.8.{s}.",
                 100,
                 {str(1000 + s * 100 + 10): 0.5, str(1000 + s * 100 + 20): 0.5},
             )
             for s in (0, 2, 4)
         ],
-        "hist_name string, size long, values map<string,double>",
+        "net string, size long, values map<string,double>",
     )
     # materialize the seeded state once, as production does (the batch
     # plan hands detectors a loaded store table, store.load): the alerts
@@ -2252,7 +2230,12 @@ def q_hz_atypical_alien(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HIST02.1, and re-deriving the distinct-hosts + map-build lineage
     # per read costs real time (warm-run A/B at sf0.1, when the detector
     # read the state six times: 6.3 s without the checkpoint, 4.1 s with)
-    hists = h02.unionByName(h021).unionByName(h05).localCheckpoint(eager=True)
+    hists = (
+        mk_update(h02, "HIST02", "myIP")
+        .unionByName(mk_update(h021, "HIST02.1", "myIP"))
+        .unionByName(mk_update(h05, "HIST05", "net"))
+        .localCheckpoint(eager=True)
+    )
     empty_pairs = spark.createDataFrame([], "myIP string, alienIP string")
     empty_ips = spark.createDataFrame([], "myIP string")
     alerts, updates = atypical_alien_tcp_port(
@@ -2275,10 +2258,10 @@ def q_hz_atypical_alien(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("data", "bytesDown").try_cast("long").alias("bytes_down"),
         F.element_at("data", "numberPkts").try_cast("long").alias("number_pkts"),
     )
-    host_u = F.regexp_replace("hist_name", r"^HIST02(\.1)?-", "")
+    family, host_u = name_parts()
     octet_u = F.element_at(F.split(host_u, r"\."), 4).try_cast("int")
     u = updates.select(
-        F.when(F.col("hist_name").startswith("HIST02.1-"), F.lit("u021s"))
+        F.when(family == "HIST02.1", F.lit("u021s"))
         .when(octet_u % 7 == 0, F.lit("u02i"))
         .otherwise(F.lit("u02r"))
         .alias("part"),
@@ -2322,7 +2305,7 @@ def q_hz_vportscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hogzilla_spark.config import HistogramConfig, SFlowConfig
     from hogzilla_spark.detectors.stateful import vertical_portscan
     from hogzilla_spark.operators.rollup import sflow_summary
-    from hogzilla_spark.state.store import EMPTY_MAP_D
+    from hogzilla_spark.state.store import mk_update, saved_family
 
     cfg = SFlowConfig(vps_min_ports=1)
     hcfg = HistogramConfig()
@@ -2341,25 +2324,18 @@ def q_hz_vportscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
     octet = F.element_at(F.split(F.col("myIP"), r"\."), 4).try_cast("int")
-    hists = (
-        summary.select("myIP")
-        .distinct()
-        .select(
-            F.concat(F.lit("HIST08-"), F.col("myIP")).alias("hist_name"),
-            F.when(octet % 7 == 0, F.lit(5))
-            .otherwise(F.lit(20))
-            .cast("long")
-            .alias("size"),
-            F.when(octet % 2 == 1, F.create_map(F.lit("3"), F.lit(0.5)))
-            .when(
-                octet % 3 == 0,
-                F.create_map(F.lit("2"), F.lit(0.5), F.lit("9"), F.lit(0.0)),
-            )
-            .otherwise(F.create_map(F.lit("2"), F.lit(0.25)))
-            .alias("values"),
+    seed = summary.select("myIP").distinct().select(
+        "myIP",
+        F.when(octet % 7 == 0, F.lit(5)).otherwise(F.lit(20)).alias("size"),
+        F.when(octet % 2 == 1, F.create_map(F.lit("3"), F.lit(0.5)))
+        .when(
+            octet % 3 == 0,
+            F.create_map(F.lit("2"), F.lit(0.5), F.lit("9"), F.lit(0.0)),
         )
-        .localCheckpoint(eager=True)
+        .otherwise(F.create_map(F.lit("2"), F.lit(0.25)))
+        .alias("values"),
     )
+    hists = mk_update(seed, "HIST08", "myIP").localCheckpoint(eager=True)
     empty_ips = spark.createDataFrame([], "myIP string")
     alerts, updates = vertical_portscan(summary2, cfg, hcfg, hists, empty_ips)
     a = alerts.select(
@@ -2375,9 +2351,9 @@ def q_hz_vportscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("data", "bytesDown").try_cast("long").alias("bytes_down"),
         F.element_at("data", "numberPkts").try_cast("long").alias("number_pkts"),
     )
-    u = updates.select(
+    u = saved_family(updates, "HIST08", "hostname", "").select(
         F.lit("upd").alias("part"),
-        F.expr("substring(hist_name, 8)").alias("hostname"),
+        "hostname",
         F.lit(None).cast("string").alias("alien"),
         F.lit(None).cast("long").alias("num_ports"),
         F.lit(None).cast("long").alias("n_flows"),
@@ -2419,6 +2395,7 @@ def q_hz_atypical_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hogzilla_spark.config import HistogramConfig, SFlowConfig
     from hogzilla_spark.detectors.stateful import atypical_data, atypical_pairs
     from hogzilla_spark.operators.rollup import sflow_summary
+    from hogzilla_spark.state.store import mk_update, saved_family
 
     cfg = SFlowConfig(atypical_pairs_min=5, atypical_data_min_bytes=120_000_000)
     hcfg = HistogramConfig()
@@ -2431,16 +2408,16 @@ def q_hz_atypical_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hosts = summary.select("myIP").distinct()
     h03 = hosts.select(
-        F.concat(F.lit("HIST03-"), F.col("myIP")).alias("hist_name"),
-        F.when(octet % 7 == 0, F.lit(5)).otherwise(F.lit(50)).cast("long").alias("size"),
+        "myIP",
+        F.when(octet % 7 == 0, F.lit(5)).otherwise(F.lit(50)).alias("size"),
         F.when(octet % 2 == 1, F.create_map(F.lit("9"), F.lit(0.5)))
         .when(octet % 3 == 0, spread)
         .otherwise(F.create_map(F.lit("1"), F.lit(0.5), F.lit("2"), F.lit(0.4)))
         .alias("values"),
     )
     h04 = hosts.select(
-        F.concat(F.lit("HIST04-"), F.col("myIP")).alias("hist_name"),
-        F.when(octet % 7 == 0, F.lit(10)).otherwise(F.lit(100)).cast("long").alias("size"),
+        "myIP",
+        F.when(octet % 7 == 0, F.lit(10)).otherwise(F.lit(100)).alias("size"),
         F.when(
             octet % 2 == 1,
             F.create_map(F.lit("2"), F.lit(0.5), F.lit("3"), F.lit(0.5)),
@@ -2449,7 +2426,11 @@ def q_hz_atypical_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.create_map(F.lit("1"), F.lit(0.9)))
         .alias("values"),
     )
-    hists = h03.unionByName(h04).localCheckpoint(eager=True)
+    hists = (
+        mk_update(h03, "HIST03", "myIP")
+        .unionByName(mk_update(h04, "HIST04", "myIP"))
+        .localCheckpoint(eager=True)
+    )
     empty_ips = spark.createDataFrame([], "myIP string")
     alerts_p, upd_p = atypical_pairs(summary, cfg, hcfg, hists, empty_ips)
     alerts_d, upd_d = atypical_data(
@@ -2468,9 +2449,9 @@ def q_hz_atypical_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _u(upd: DataFrame, part: str, fam: str) -> DataFrame:
-        return upd.select(
+        return saved_family(upd, fam, "hostname", "").select(
             F.lit(part).alias("part"),
-            F.expr(f"substring(hist_name, {len(fam) + 2})").alias("hostname"),
+            "hostname",
             F.get(F.map_keys("values"), 0).alias("bucket"),
             F.lit(None).cast("long").alias("n_pairs"),
             F.lit(None).cast("long").alias("bytes_up"),
@@ -2505,6 +2486,7 @@ def q_hz_alien_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hogzilla_spark.config import SFlowConfig
     from hogzilla_spark.detectors.stateful import alien_network_profile
     from hogzilla_spark.operators.rollup import sflow_summary
+    from hogzilla_spark.state.store import name_parts
 
     cfg = SFlowConfig(big_provider_min_bytes=33_000_000)
     summary = sflow_summary(
@@ -2515,13 +2497,13 @@ def q_hz_alien_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates, bigp = alien_network_profile(
         summary, ["10.1."], cfg, empty_pairs, empty_ips
     )
-    fam = F.when(F.col("hist_name").startswith("HIST05-"), "h05").otherwise("h06")
+    family, net = name_parts()
     u = updates.select(
-        fam.alias("part"),
-        F.expr("substring(hist_name, 8)").alias("net"),
+        F.when(family == "HIST05", "h05").otherwise("h06").alias("part"),
+        net.alias("net"),
         F.explode("values").alias("key", "weight"),
         F.col("size"),
-    ).select("part", "net", "key", "weight", "size")
+    )
     b = bigp.select(
         F.lit("bigp").alias("part"),
         F.col("prefix").alias("net"),
@@ -2618,6 +2600,7 @@ def q_hz_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
     'Windows/Chrome', 'vpn1/ssh'."""
     from hogzilla_spark.config import AuthConfig, HistogramConfig
     from hogzilla_spark.detectors.auth import auth_profile
+    from hogzilla_spark.state.store import mk_update
 
     # r12: the synth auth frame feeds ~6 consumers (the UA-cardinality
     # probe, the UA dictionary distinct, the fact join, and the three
@@ -2632,27 +2615,23 @@ def q_hz_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("uid") < 45)
         .localCheckpoint(eager=True)
     )
-    user = F.concat(F.lit("u"), F.col("uid").cast("string"))
-    empty_labels = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<string>")
-    )
+    user = F.concat(F.lit("u"), F.col("uid").cast("string")).alias("user")
     h20 = uids.select(
-        F.concat(F.lit("HIST20-"), user).alias("hist_name"),
-        F.when(F.col("uid") % 7 == 0, 5).otherwise(50).cast("long").alias("size"),
+        user,
+        F.when(F.col("uid") % 7 == 0, 5).otherwise(50).alias("size"),
         F.create_map(F.lit(_AUTH_SAVED_COORDS), F.lit(1.0)).alias("values"),
         F.create_map(
             F.lit(_AUTH_SAVED_COORDS), F.lit("Sao_Paulo/Brazil")
         ).alias("labels"),
     )
     h21 = uids.select(
-        F.concat(F.lit("HIST21-"), user).alias("hist_name"),
-        F.when(F.col("uid") % 11 == 0, 5).otherwise(40).cast("long").alias("size"),
+        user,
+        F.when(F.col("uid") % 11 == 0, 5).otherwise(40).alias("size"),
         F.create_map(F.lit("Windows/Chrome"), F.lit(1.0)).alias("values"),
-        empty_labels.alias("labels"),
     )
     h22 = uids.select(
-        F.concat(F.lit("HIST22-"), user).alias("hist_name"),
-        F.lit(30).cast("long").alias("size"),
+        user,
+        F.lit(30).alias("size"),
         F.map_from_entries(
             F.filter(
                 F.array(
@@ -2665,9 +2644,12 @@ def q_hz_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda e: e["value"].isNotNull(),
             )
         ).alias("values"),
-        empty_labels.alias("labels"),
     )
-    hists = h20.unionByName(h21).unionByName(h22)
+    hists = (
+        mk_update(h20, "HIST20", "user")
+        .unionByName(mk_update(h21, "HIST21", "user"))
+        .unionByName(mk_update(h22, "HIST22", "user"))
+    )
     # ua_count_hint=3: the synth mapping emits exactly 3 distinct UA
     # strings by construction (uaslot = event_id%4 → browser/curl/""),
     # scale-independent — the documented carried-hint path, skipping

@@ -1,13 +1,9 @@
 from hogzilla_spark.functions.scalar import (  # noqa: F401
     haversine_km,
     haversine_from_coords,
-    human_bytes,
     ip_significant_network,
     ip_to_bytes,
     is_my_ip,
     log_bin,
-    md5_hex,
-    parse_long,
     strip_accents,
-    tcp_flag_is,
 )

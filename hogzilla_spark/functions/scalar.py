@@ -4,13 +4,13 @@ All implemented as native expressions (JVM-side, codegen-able) — no
 Python UDFs in the hot path.  Semantics match the reference where it
 matters (sentinels, error defaults), with citations.
 
-The larger functions (`human_bytes`, `ip_to_bytes`, `is_my_ip`,
-`ua_family`) have ONE implementation each: a `*_sql` builder that
+The larger functions (humanBytes, `ip_to_bytes`, `is_my_ip`, the
+user-agent family) have ONE implementation each: a `*_sql` builder that
 returns Spark SQL text over an expression text `x`.  Hot paths splice
 that text into one parsed selectExpr (a Column-API chain costs one py4j
 round trip per node — ~0.1 s per humanBytes call site and ~1.1 s per
-ua_family compile, r12 profile); the Column names are one-line
-`F.expr(...)` wrappers over the same builder.
+ua_family compile, r12 profile); `ip_to_bytes` and `is_my_ip` are
+one-line `F.expr(...)` wrappers over the same builder.
 """
 
 from __future__ import annotations
@@ -73,9 +73,6 @@ def human_bytes_sql(x: str) -> str:
         f"concat(format_number({scaled}, 1), element_at({units}, {exp} + 1))"
     )
 
-def human_bytes(x: str) -> Column:
-    return F.expr(human_bytes_sql(x))
-
 # --- F2: formatIPtoBytes (HogSFlow.scala:715-722, HogEvent.scala:44-58) -----
 
 def ip_to_bytes_sql(x: str) -> str:
@@ -120,7 +117,7 @@ def is_my_ip_sql(x: str, my_nets: list[str]) -> str:
     """ip startsWith any(myNets), as parenthesized SQL text over the
     expression text `x`.  For small operator-managed prefix lists this
     is an OR chain of startswith — Catalyst keeps it codegen'd.  For
-    large lists use operators.joins.prefix_match_join instead.
+    large lists use operators.joins.prefix_match_col instead.
     """
     if not my_nets:
         return "(false)"
@@ -167,11 +164,6 @@ def haversine_from_coords(c1: Column | str, c2: Column | str) -> Column:
     lat2, lon2 = latlon(c2)
     d = haversine_km(lat1, lon1, lat2, lon2)
     return F.coalesce(d, F.lit(HAVERSINE_ERROR_SENTINEL))
-
-# --- F7: MD5 hex (HogStringUtils.scala:32-35) -------------------------------
-
-def md5_hex(c: Column | str) -> Column:
-    return F.md5(_col(c).cast("string"))
 
 # --- F8: accent stripping (HogAuth.scala:299-303) ---------------------------
 
@@ -236,88 +228,10 @@ def ua_family_sql(x: str) -> str:
         f"ELSE concat({os_side}, '/', {ua_side}) END"
     )
 
-def ua_family(x: str) -> Column:
-    return F.expr(ua_family_sql(x))
-
-def _compile_device(
-    c: Column, parsers: list[dict[str, str]], key: str, unmatched: str
-) -> Column:
-    """Device-table compiler: like _compile_parsers_sql but with uap-core's
-    device defaults (device/model fall back to capture group 1, brand
-    to empty when the replacement key is absent)."""
-    out = F.lit(unmatched)
-    for p in reversed(parsers):
-        rx = p["regex"]
-        repl = p.get(key)
-        if repl is None:
-            fam: Column = (
-                F.regexp_extract(c, rx, 1) if "(" in rx else F.lit("")
-            ) if key != "brand_replacement" else F.lit("")
-        elif "$1" in repl:
-            pre, post = repl.split("$1", 1)
-            fam = F.concat(F.lit(pre), F.regexp_extract(c, rx, 1), F.lit(post))
-        else:
-            fam = F.lit(repl)
-        out = F.when(c.rlike(rx), fam).otherwise(out)
-    return out
-
-def ua_device(c: Column | str) -> Column:
-    """Raw user-agent → struct(family, brand, model) per uap-core's
-    ``device_parsers`` semantics (ordered first-match-wins; Spider rule
-    first; device/model default to capture group 1, brand to empty;
-    unmatched → family 'Other').  The reference keys alerts only on
-    "os/browser" families (HogAuth.scala:293-298) — this closes the
-    remaining uap-core surface for pipelines that segment by handset."""
-    from hogzilla_spark.functions.ua_data import DEVICE_PARSERS
-
-    c = _col(c)
-    empty = c.isNull() | (c == "")
-    return F.struct(
-        F.when(empty, F.lit("")).otherwise(
-            _compile_device(c, DEVICE_PARSERS, "device_replacement", "Other")
-        ).alias("family"),
-        F.when(empty, F.lit("")).otherwise(
-            _compile_device(c, DEVICE_PARSERS, "brand_replacement", "")
-        ).alias("brand"),
-        F.when(empty, F.lit("")).otherwise(
-            _compile_device(c, DEVICE_PARSERS, "model_replacement", "")
-        ).alias("model"),
-    )
-
-# --- F10: date formatting (HogAuth.scala:236-237) ---------------------------
-
-def format_event_time(epoch_s: Column | str) -> Column:
-    """epoch seconds → "dd/MM/yyyy, HH'h'mm'm'" display format."""
-    t = F.from_unixtime(_col(epoch_s).try_cast("long"))
-    return F.date_format(t, "dd/MM/yyyy, HH'h'mm'm'")
-
-# --- F12: location label (HogAuth.scala:217-226) ----------------------------
-
-def location_label(city: Column | str, region: Column | str, country: Column | str) -> Column:
-    """"city/region/country" with N/A fallbacks for blank components."""
-    def or_na(c):
-        c = _col(c)
-        return F.when(F.trim(c) == "", F.lit("N/A")).otherwise(F.coalesce(c, F.lit("N/A")))
-    return F.concat_ws("/", or_na(city), or_na(region), or_na(country))
-
-# --- F13: numeric parsing with error default (HogSnort.scala:51-74) ---------
-
-def parse_long(c: Column | str, default: int = 0) -> Column:
-    """string → long; unparsable/missing → default (cast yields null →
-    coalesce), matching the reference's try/catch-default converters."""
-    return F.coalesce(_col(c).try_cast("long"), F.lit(default))
-
-def parse_double(c: Column | str, default: float = 0.0) -> Column:
-    return F.coalesce(_col(c).try_cast("double"), F.lit(default))
-
-# --- F14: hex tcpFlags equality (HogSFlow.scala:818-831) --------------------
+# --- F14: tcpFlags hex literals (HogSFlow.scala:818-831) --------------------
+# the reference compares the raw string, not a bitmask, so do the rollups
 
 TCP_SYN = "0x02"
 TCP_SYNACK = "0x12"
 TCP_PSHACK = "0x18"
 TCP_ACK = "0x10"
-
-def tcp_flag_is(c: Column | str, flag: str) -> Column:
-    """Exact string match on the hex literal — the reference compares the
-    raw string, not a bitmask, so so do we."""
-    return _col(c) == F.lit(flag)

@@ -25,27 +25,15 @@ whose UAs embed mainstream tokens come first (Edge before Chrome,
 Chrome before Safari, Android before Linux, HarmonyOS before Android,
 distros before the Linux catch-all).
 
-``DEVICE_PARSERS`` covers uap-core's ``device_parsers`` section in the
-same shape (regex + optional device/brand/model replacements,
-first-match-wins; uap-core defaults: device and model fall back to
-capture group 1, brand to empty): the Spider rule, the major handset
-brands (Apple, Samsung, Huawei, Xiaomi, Google, Motorola, OnePlus,
-Oppo/Vivo, Sony, LG, Nokia, Amazon), consoles/TVs, and uap-core's
-generic ``... Build/`` Android catch-all.
-
 Round 7 added the extinct long tail (gecko forks Flock/Netscape/
 Camino/Galeon/K-Meleon/Iceape/Fennec/Phoenix/Firebird, webkit shells
 OmniWeb/iCab/Shiira/Lunascape/Avant, feature-phone engines NetFront/
 Obigo/Polaris/Blazer, text browsers ELinks/Links/w3m/Dillo/Amaya/
 NetSurf/Mosaic), so every family CLASS in the public dataset now has
 coverage.  Round 11 vendored regexes.yaml's declared residue: the
-regional carrier builds (DoCoMo/KDDI/SoftBank/Vodafone prefix rows,
-model = first token after the carrier), the remaining regional
-handset makers (Transsion's Tecno/Infinix/itel, Realme RMX codes,
-ZTE/Blade, Asus, HTC, Alcatel, Lenovo, Meizu, Wiko, BLU, Micromax,
-Sharp), the Chinese browser long tail (Sogou, Baidu App/Browser,
-360, 2345, Quark, HeyTap/Oppo/Vivo browsers, LieBao, Mint) and the
-extinct-mobile OSes (Bada, MeeGo, Maemo, Sailfish, Brew).  Anything
+Chinese browser long tail (Sogou, Baidu App/Browser, 360, 2345, Quark,
+HeyTap/Oppo/Vivo browsers, LieBao, Mint) and the extinct-mobile OSes
+(Bada, MeeGo, Maemo, Sailfish, Brew).  Anything
 still missing is a one-off UA string, and adding it is one dict in
 the right layer (the compiler in functions/scalar.py consumes them
 unchanged; regexes must stay in the Java∩RE2-safe subset — no
@@ -272,311 +260,4 @@ OS_PARSERS: list[dict[str, str]] = [
     {"regex": r"(OpenBSD)"},
     {"regex": r"(NetBSD)"},
     {"regex": r"SunOS", "os_replacement": "Solaris"},
-]
-
-#: uap-core ``device_parsers`` shape: regex + optional
-#: device_replacement / brand_replacement / model_replacement ("$1"
-#: substitutes capture group 1; device & model default to group 1,
-#: brand to empty).  Ordered: the Spider rule first (uap-core's
-#: convention — crawlers spoof handset tokens), then brand-token
-#: rules, then the generic "Build/" Android catch-all, then the
-#: desktop platforms.
-DEVICE_PARSERS: list[dict[str, str]] = [
-    # uap-core matches [Bb]ot (never BOT) precisely so handset names
-    # like CUBOT / HOMTOM HT: the all-caps model tokens stay devices;
-    # same care for the other crawler tokens (no bare case-insensitive
-    # substrings — 'Fetcher'/'scanner' app tokens are not crawlers)
-    {
-        "regex": r"[Bb]ot\b|[Cc]rawl|[Ss]pider|[Ss]lurp|[Aa]rchiver|"
-        r"facebookexternalhit|HeadlessChrome",
-        "device_replacement": "Spider",
-        "brand_replacement": "Spider",
-        "model_replacement": "Desktop",
-    },
-    # --- Apple handhelds / TV (before Mac: they carry "like Mac OS X")
-    {
-        "regex": r"(iPhone|iPad|iPod)",
-        "device_replacement": "$1",
-        "brand_replacement": "Apple",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"Apple TV",
-        "device_replacement": "AppleTV",
-        "brand_replacement": "Apple",
-        "model_replacement": "AppleTV",
-    },
-    # --- consoles / TVs (tokens never collide with handsets) ----------
-    {
-        "regex": r"PlayStation (\d+)",
-        "device_replacement": "PlayStation $1",
-        "brand_replacement": "Sony",
-        "model_replacement": "PlayStation $1",
-    },
-    {
-        "regex": r"Nintendo (WiiU|Wii|Switch|3DS)",
-        "device_replacement": "Nintendo $1",
-        "brand_replacement": "Nintendo",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"Xbox (One|Series X|Series S)",
-        "device_replacement": "Xbox $1",
-        "brand_replacement": "Microsoft",
-        "model_replacement": "Xbox $1",
-    },
-    {
-        "regex": r"(Roku)[ /]",
-        "device_replacement": "Roku",
-        "brand_replacement": "Roku",
-        "model_replacement": "Roku",
-    },
-    # --- Android brands by model token (before the Build/ catch-all) --
-    # Samsung ships SM-/GT-/SGH-/SCH- prefixes
-    {
-        "regex": r"\b((?:SM|GT|SGH|SCH|SPH)-[A-Za-z0-9]+)",
-        "device_replacement": "Samsung $1",
-        "brand_replacement": "Samsung",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"(?:HUAWEI|Huawei)[ _-]([A-Za-z0-9][A-Za-z0-9._-]*)",
-        "device_replacement": "Huawei $1",
-        "brand_replacement": "Huawei",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"; (HONOR [A-Za-z0-9 ]+?)(?: Build|\))",
-        "device_replacement": "Huawei $1",
-        "brand_replacement": "Huawei",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(Redmi[ _][A-Za-z0-9 ]+?|Mi[ _][A-Za-z0-9 ]+?|POCO[ _][A-Za-z0-9 ]+?) Build",
-        "device_replacement": "XiaoMi $1",
-        "brand_replacement": "XiaoMi",
-        "model_replacement": "$1",
-    },
-    # newer Chrome UAs drop the "Build/" token, so Pixel/Nexus accept a
-    # closing paren too
-    {
-        "regex": r"(Pixel(?: \w+)*)(?: Build|\))",
-        "device_replacement": "$1",
-        "brand_replacement": "Google",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"(Nexus \w+)(?: Build|\))",
-        "device_replacement": "$1",
-        "brand_replacement": "Google",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(moto [a-z0-9()+ ]+?|Moto[A-Z0-9 ]+?|XT\d{3,4}) Build",
-        "device_replacement": "Motorola $1",
-        "brand_replacement": "Motorola",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"(?:ONEPLUS|OnePlus)[ _]?([A-Za-z0-9 ]+?) Build",
-        "device_replacement": "OnePlus $1",
-        "brand_replacement": "OnePlus",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(CPH\d{4}) Build",
-        "device_replacement": "Oppo $1",
-        "brand_replacement": "Oppo",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(vivo [A-Za-z0-9 ]+?|V\d{4}[A-Z]*) Build",
-        "device_replacement": "Vivo $1",
-        "brand_replacement": "Vivo",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"Sony ?(Xperia[ A-Za-z0-9]*?) Build",
-        "device_replacement": "Sony $1",
-        "brand_replacement": "Sony",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(LM-[A-Z0-9]+|LG-[A-Z0-9]+)",
-        "device_replacement": "LG $1",
-        "brand_replacement": "LG",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(Nokia[ _-]?[A-Za-z0-9.]*?) Build",
-        "device_replacement": "$1",
-        "brand_replacement": "Nokia",
-        "model_replacement": "$1",
-    },
-    # Amazon Kindle Fire tablets identify as KF** model codes
-    {
-        "regex": r"\b(KF[A-Z]{2,8}) Build",
-        "device_replacement": "Kindle Fire",
-        "brand_replacement": "Amazon",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"(Kindle)",
-        "device_replacement": "Kindle",
-        "brand_replacement": "Amazon",
-        "model_replacement": "Kindle",
-    },
-    # --- regexes.yaml residue (r11): regional carrier builds ----------
-    # Japanese feature phones START with the carrier token; the model is
-    # the first token after it (uap-core's docomo/kddi/softbank rows)
-    {
-        "regex": r"^DoCoMo/[0-9.]+[ /]([A-Za-z0-9]+)",
-        "device_replacement": "DoCoMo $1",
-        "brand_replacement": "DoCoMo",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"^KDDI-([A-Z0-9]+)",
-        "device_replacement": "KDDI $1",
-        "brand_replacement": "KDDI",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"^SoftBank/[0-9.]+/([A-Za-z0-9]+)",
-        "device_replacement": "SoftBank $1",
-        "brand_replacement": "SoftBank",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"^Vodafone/[0-9.]+/([A-Za-z0-9]+)",
-        "device_replacement": "Vodafone $1",
-        "brand_replacement": "Vodafone",
-        "model_replacement": "$1",
-    },
-    # --- one-off handset brands (r11): Transsion trio, BBK's Realme,
-    # and the remaining regional Android makers — all before the
-    # generic Build/ catch-all, which would otherwise swallow them as
-    # Generic_Android
-    {
-        "regex": r"TECNO[ _-]([A-Za-z0-9]+)",
-        "device_replacement": "Tecno $1",
-        "brand_replacement": "Tecno",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"Infinix[ _-]([A-Za-z0-9]+)",
-        "device_replacement": "Infinix $1",
-        "brand_replacement": "Infinix",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\bitel[ _-]([A-Za-z0-9]+)",
-        "device_replacement": "itel $1",
-        "brand_replacement": "itel",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(RMX\d{4})",
-        "device_replacement": "Realme $1",
-        "brand_replacement": "Realme",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"ZTE[ _-]([A-Za-z0-9._ ]+?)(?: Build|\))",
-        "device_replacement": "ZTE $1",
-        "brand_replacement": "ZTE",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(Blade[ _][A-Za-z0-9 ]+?)(?: Build|\))",
-        "device_replacement": "ZTE $1",
-        "brand_replacement": "ZTE",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(ASUS_[A-Za-z0-9]+)",
-        "brand_replacement": "Asus",
-    },
-    {
-        "regex": r"(ZenFone[ A-Za-z0-9]*?) Build",
-        "device_replacement": "Asus $1",
-        "brand_replacement": "Asus",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"HTC[ _-]([A-Za-z0-9+ _]+?)(?: Build|\))",
-        "device_replacement": "HTC $1",
-        "brand_replacement": "HTC",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"(?:ALCATEL|Alcatel)[ _-]?(?:ONE[ _-]?TOUCH)?[ _-]([A-Za-z0-9]+)",
-        "device_replacement": "Alcatel $1",
-        "brand_replacement": "Alcatel",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"Lenovo[ _-]([A-Za-z0-9._-]+?)(?: Build|\))",
-        "device_replacement": "Lenovo $1",
-        "brand_replacement": "Lenovo",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"(?:MEIZU|Meizu)[ _-]([A-Za-z0-9 ]+?) Build",
-        "device_replacement": "Meizu $1",
-        "brand_replacement": "Meizu",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(MX\d+(?: Pro)?) Build",
-        "device_replacement": "Meizu $1",
-        "brand_replacement": "Meizu",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"(?:WIKO|Wiko)[ _-]([A-Za-z0-9 ]+?) Build",
-        "device_replacement": "Wiko $1",
-        "brand_replacement": "Wiko",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\bBLU ([A-Za-z0-9 ]+?) Build",
-        "device_replacement": "BLU $1",
-        "brand_replacement": "BLU",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"Micromax[ _-]([A-Za-z0-9 ]+?) Build",
-        "device_replacement": "Micromax $1",
-        "brand_replacement": "Micromax",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"\b(SH-\d+[A-Z]?) Build",
-        "device_replacement": "Sharp $1",
-        "brand_replacement": "Sharp",
-        "model_replacement": "$1",
-    },
-    # --- uap-core's generic Android "... Build/" catch-all, plus the
-    # modern no-Build form (Android token required so desktop "(X11;
-    # Linux x86_64) AppleWebKit" never reads as a handset) -------------
-    {
-        "regex": r"; *([^;/]+) Build[/ ]",
-        "device_replacement": "$1",
-        "brand_replacement": "Generic_Android",
-        "model_replacement": "$1",
-    },
-    {
-        "regex": r"Android [^;)]+; *([^;/)]+?)\) AppleWebKit",
-        "device_replacement": "$1",
-        "brand_replacement": "Generic_Android",
-        "model_replacement": "$1",
-    },
-    # --- desktop platforms (uap-core tags Macs; Windows/X11 → Other) --
-    {
-        "regex": r"(Macintosh)",
-        "device_replacement": "Mac",
-        "brand_replacement": "Apple",
-        "model_replacement": "Mac",
-    },
 ]

@@ -38,18 +38,6 @@ def label_flows(
         F.when(has_snort, F.lit(1)).when(is_clean, F.lit(0)).otherwise(F.lit(-1)),
     )
 
-def signature_frequencies(flows: DataFrame) -> DataFrame:
-    """A9 (HogSnort.scala:113-122): (generator, signature) → count, for
-    FP review."""
-    return (
-        flows.filter(
-            F.col("event_signature_id").isNotNull() & (F.col("event_signature_id") != "")
-        )
-        .groupBy("event_generator_id", "event_signature_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), "event_generator_id", "event_signature_id")
-    )
-
 def rf_train_score(
     flows: DataFrame,
     numeric_cols: list[str],

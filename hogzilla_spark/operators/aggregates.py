@@ -36,34 +36,3 @@ def distinct_count_per_group(
 ) -> DataFrame:
     """A5: countDistinct per group (distinct ports per host etc.)."""
     return df.groupBy(*keys).agg(F.countDistinct(value_col).alias(out_col))
-
-def global_stats(df: DataFrame, value_col: str) -> DataFrame:
-    """A7: StatCounter equivalent — count/mean/population-stdev/max/min.
-    (RDD.stats() stdev is population stdev; we keep that.)"""
-    return df.agg(
-        F.count(value_col).alias("n"),
-        F.avg(value_col).alias("mean"),
-        F.stddev_pop(value_col).alias("stdev"),
-        F.min(value_col).alias("min"),
-        F.max(value_col).alias("max"),
-    )
-
-def sum_and_sumsq(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A8: column-wise Σx and Σx² in one pass (z-score prep,
-    HogDNS.scala:169-183)."""
-    exprs = []
-    for c in cols:
-        exprs.append(F.sum(F.col(c)).alias(f"sum_{c}"))
-        exprs.append(F.sum(F.col(c) * F.col(c)).alias(f"sumsq_{c}"))
-    return df.agg(*exprs)
-
-def flow_set(
-    df: DataFrame, keys: list[str], fields: list[str], order_field: str, limit: int
-) -> DataFrame:
-    """A4 + O3: per-group bounded flow-set for alert rendering.  The
-    struct puts the ordering field first so array_sort gives the
-    deterministic total order SURVEY §4 item 5 requires."""
-    struct = F.struct(F.col(order_field), *[F.col(f) for f in fields if f != order_field])
-    return df.groupBy(*keys).agg(
-        F.slice(F.reverse(F.array_sort(F.collect_list(struct))), 1, limit).alias("flows")
-    )

@@ -14,7 +14,7 @@ bucket, never the O(n²) pair space.
     `decontaminate`): buckets are (band, md5 of the band's minhashes);
     candidates are verified by exact shingle-set Jaccard
     (`_jaccard_verify`).
-  - exact n-gram Jaccard (`ngram_jaccard_pairs`, `ngram_jaccard_pairs_dual`):
+  - exact n-gram Jaccard (`ngram_jaccard_pairs_dual`):
     buckets are the shingles themselves, so the shared-bucket count IS
     |A∩B| and there is nothing to verify.
   - SimHash (`simhash_pairs`, `simhash128_pairs`): buckets are the
@@ -446,63 +446,6 @@ def _count_jaccard(inter: str, n_a: str, n_b: str) -> Column:
         / (F.col(n_a) + F.col(n_b) - F.col(inter)).cast("double")
     )
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    min_jaccard: float = 0.5,
-    max_shingle_freq: int | None = 10_000,
-) -> DataFrame:
-    """EXACT n-gram-Jaccard near-dup pairs, fully relational.
-
-    Each shingle is a bucket: the per-pair shared-bucket count IS |A∩B|,
-    and |A∪B| = |A|+|B|−|A∩B| — no candidate generation, no
-    approximation, recall 1 by construction.  The self-join input drops
-    singleton shingles (they never match; bit-identical results).
-
-    Scale guard: a shingle shared by m documents emits m² join rows
-    (quadratic on hot shingles, e.g. boilerplate headers), so shingles
-    more frequent than `max_shingle_freq` are DROPPED by default (10k —
-    a 10k-doc shingle alone would emit 1e8 join rows).  Jaccard is then
-    EXACT over the filtered shingle universe: per-doc sizes are
-    corrected by each doc's hot-shingle count, so a capped run equals an
-    uncapped run for every pair whose shingles all survive the cap, and
-    boilerplate shared by >cap docs simply doesn't count toward
-    similarity (the standard near-dup trade).  Docs whose every shingle
-    is dropped can't pair.  Pass None for exact results on bounded
-    corpora.
-
-    The call RUNS the query, checkpoints the (small) pair set and
-    releases the shingle cache, like `minhash_lsh_pairs`.
-
-    Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= min_jaccard.
-    """
-    sh = _ngram_rows(df, id_col, text_col, shingle_k)
-    counts = sh.groupBy("s").agg(F.count(F.lit(1)).alias("__f"))
-    cond = F.col("__f") >= 2
-    if max_shingle_freq is not None:
-        cond = cond & (F.col("__f") <= max_shingle_freq)
-    joinable = sh.join(counts.filter(cond).select("s"), "s", "left_semi")
-    if max_shingle_freq is not None:
-        # n counted pre-cap would deflate jaccard for partially-
-        # boilerplate overlaps; singletons need no correction (they
-        # still count toward the union)
-        joinable = (
-            joinable.join(_hot_drops(sh, counts, max_shingle_freq), "id", "left")
-            .withColumn("n", F.col("n") - F.coalesce(F.col("__n_drop"), F.lit(0)))
-            .drop("__n_drop")
-        )
-    inter = _bucket_pairs(
-        joinable, ["s"], carry=("n",), agg=[F.count(F.lit(1)).alias("inter")]
-    )
-    out = inter.select(
-        "id_a", "id_b", _count_jaccard("inter", "n_a", "n_b").alias("jaccard")
-    ).filter(F.col("jaccard") >= min_jaccard)
-    out = out.localCheckpoint(eager=True)
-    sh.unpersist()
-    return out
-
 def ngram_jaccard_pairs_dual(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -511,25 +454,29 @@ def ngram_jaccard_pairs_dual(
     min_jaccard: float = 0.5,
     max_shingle_freq: int = 10_000,
 ) -> DataFrame:
-    """Both `ngram_jaccard_pairs` variants — uncapped AND
-    freq-capped — from ONE shingle scan and ONE self-join (r12
-    optimization; guide §2.3 "don't compute things twice").
+    """EXACT n-gram-Jaccard near-dup pairs, fully relational, in two
+    variants — uncapped AND freq-capped — from ONE shingle scan and ONE
+    self-join (r12 optimization; guide §2.3 "don't compute things twice").
 
-    The capped variant's join universe (2 <= f <= cap) is a subset of
-    the uncapped one's (f >= 2), so a single self-join on the uncapped
-    universe can count both intersections per pair: `inter` over all
-    matched shingles and `inter_c` over only the <= cap ones, with the
-    capped per-doc size correction (n − hot occurrences) carried
-    alongside.  Row-identical to two separate calls, pinned by
-    tests/test_pipeline_ops.py::test_ngram_jaccard_dual_matches_two_runs:
-    pairs whose capped intersection is empty produce jaccard 0 (or
-    null when a doc's whole shingle set is hot) and fall to the same
-    >= min_jaccard filter that excludes them from the capped run.
+    Each shingle is a bucket: the per-pair shared-bucket count IS |A∩B|,
+    and |A∪B| = |A|+|B|−|A∩B| — no candidate generation, no
+    approximation, recall 1 by construction.  Singleton shingles never
+    match, so the self-join input drops them.
 
-    Only valid when the caller ALREADY pays the uncapped join (the
-    declared-quadratic bench member): the m² hot-shingle guard that
-    motivates the capped variant in production is the single-variant
-    `ngram_jaccard_pairs(max_shingle_freq=...)`, not this fusion.
+    The capped variant ignores shingles shared by more than
+    `max_shingle_freq` documents (boilerplate) and is EXACT over that
+    filtered universe: per-doc sizes are corrected by each doc's
+    hot-shingle count, so it equals the uncapped value for every pair
+    whose shingles all survive the cap.  Its join universe
+    (2 <= f <= cap) is a subset of the uncapped one's (f >= 2), so the
+    one self-join counts `inter` over all matched shingles and `inter_c`
+    over only the <= cap ones.  Pairs whose capped intersection is
+    empty produce jaccard 0 (or null when a doc's whole shingle set is
+    hot) and fall to the >= min_jaccard filter.
+
+    The self-join runs on the uncapped universe, so a shingle shared by
+    m documents still emits m² join rows: the cap changes the capped
+    jaccard, not the cost.
 
     Shuffle discipline (guide §2.2, r12): the m²-row self-join carries
     ONLY (id, s) plus a 1-bit in-cap flag — the per-doc sizes n / n_c

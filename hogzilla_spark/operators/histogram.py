@@ -45,7 +45,7 @@ def kl_divergence(h1: Column | str, h2: Column | str) -> Column:
         union_keys, F.lit(0.0), lambda acc, k: acc + term(k)
     )
 
-# --- H2/H3: atypical / typical key sets (Histograms.scala:39-82) ------------
+# --- H2: atypical key set (Histograms.scala:39-82) -------------------------
 
 def atypical_keys(old: Column | str, new: Column | str, eps: float = EPSILON) -> Column:
     """Keys of `new` with weight > ε whose weight in `old` ≤ ε → array<string>.
@@ -53,13 +53,6 @@ def atypical_keys(old: Column | str, new: Column | str, eps: float = EPSILON) ->
     old, new = _m(old), _m(new)
     return F.map_keys(
         F.map_filter(new, lambda k, v: (v > F.lit(eps)) & (_get(old, k) <= F.lit(eps)))
-    )
-
-def typical_keys(old: Column | str, new: Column | str, eps: float = EPSILON) -> Column:
-    """Keys with weight > ε in both histograms → array<string>."""
-    old, new = _m(old), _m(new)
-    return F.map_keys(
-        F.map_filter(new, lambda k, v: (v > F.lit(eps)) & (_get(old, k) > F.lit(eps)))
     )
 
 # --- H4: point typicality tests (Histograms.scala:84-100) -------------------
@@ -129,33 +122,6 @@ def merge_max(h1: Column | str, h2: Column | str) -> Column:
     return F.map_zip_with(
         h1, h2, lambda k, v1, v2: F.greatest(F.coalesce(v1, F.lit(0.0)), F.coalesce(v2, F.lit(0.0)))
     )
-
-# --- H7: weighted difference (Histograms.scala:172-197) ---------------------
-
-def difference(
-    h1: Column | str, n1: Column | str, h2: Column | str, n2: Column | str
-) -> Column:
-    """Weighted subtraction, exactly the reference's shape
-    (Histograms.scala:172-197): iterate ONLY h2's keys; where p>0 or q>0
-    overwrite with (p·n1 − q·n2)/(n1−n2) — no floor, negatives kept;
-    h1-only keys pass through with their original weight."""
-    h1, h2 = _m(h1), _m(h2)
-    n1 = (F.col(n1) if isinstance(n1, str) else n1).cast("double")
-    n2 = (F.col(n2) if isinstance(n2, str) else n2).cast("double")
-    updated = F.map_from_entries(
-        F.transform(
-            F.filter(
-                F.map_keys(h2),
-                lambda k: (_get(h1, k) > 0) | (_get(h2, k) > 0),
-            ),
-            lambda k: F.struct(
-                k.alias("key"),
-                ((_get(h1, k) * n1 - _get(h2, k) * n2) / (n1 - n2)).alias("value"),
-            ),
-        )
-    )
-    # h1 ∪ updated, updated wins on collisions (the reference's map.put)
-    return F.map_zip_with(h1, updated, lambda k, v1, v2: F.coalesce(v2, v1))
 
 # --- builders: group → share-normalized histogram (A6/W1) -------------------
 

@@ -60,16 +60,3 @@ def prefix_match_col(ip: Column | str, prefixes: list[str]) -> Column:
         return s.map(hit)
 
     return _match(ip)
-
-def prefix_match_join(
-    left: DataFrame, ip_col: str, prefix_df: DataFrame, prefix_col: str = "prefix"
-) -> DataFrame:
-    """J3 as a join: keep left rows whose ip starts with any dim prefix,
-    attaching the matched prefix.  Catalyst plans a BroadcastNestedLoopJoin;
-    use :func:`prefix_match_col` when only membership (not the match) is
-    needed."""
-    return left.join(
-        broadcast(prefix_df),
-        on=F.col(ip_col).startswith(F.col(prefix_col)),
-        how="inner",
-    )

@@ -83,13 +83,6 @@ QT_CHROMA = np.array(
     dtype=np.float64,
 )
 
-# Standard-shape Huffman specs (BITS counts + values).  Only the
-# ENCODER uses these; the decoder always reads tables from DHT.
-DC_LUMA_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-DC_LUMA_VALS = list(range(12))
-DC_CHROMA_BITS = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
-DC_CHROMA_VALS = list(range(12))
-
 # Encoder AC tables: canonical Annex-K ordering matters only for coding
 # efficiency, not correctness, so build a VALID table with the standard
 # code-length histogram shape replaced by a flat assignment: every

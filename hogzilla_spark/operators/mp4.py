@@ -33,10 +33,6 @@ from dataclasses import dataclass, field
 
 MJPEG_FOURCCS = {"jpeg", "mjpa", "mjpb"}
 
-_CONTAINERS = {
-    b"moov", b"trak", b"mdia", b"minf", b"stbl", b"dinf", b"edts", b"udta",
-}
-
 
 def _iter_boxes(buf: bytes, start: int, end: int):
     """Yield (fourcc, body_start, body_end) for sibling boxes."""

@@ -12,7 +12,6 @@ tested.  Codecs that need only the stdlib + numpy are REAL:
     (LZW, animation, transparency, disposal), PPM (P6), uncompressed
     24-bit BMP → HxWx3 uint8
   - video demux: animated GIF → timestamped composited frames
-  - image resize: bilinear, pure numpy, re-encoded as PPM
   - audio decode: PCM WAV (8/16-bit) via the stdlib ``wave`` module
   - features: image grayscale stats + histogram; audio RMS / zero
     crossings / band energies
@@ -67,24 +66,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("sha256", T.StringType()),
         T.StructField("n_bytes", T.LongType()),
         T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_ms", T.LongType()),
-        T.StructField("frame", T.BinaryType()),
     ]
 )
 
@@ -558,23 +539,6 @@ def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
         )
     return buf.getvalue()
 
-def resize_bilinear(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Pure-numpy bilinear resample (align_corners=False convention)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) + 0.5) * h / out_h - 0.5
-    xs = (np.arange(out_w) + 0.5) * w / out_w - 0.5
-    y0 = np.clip(np.floor(ys).astype(int), 0, h - 1)
-    x0 = np.clip(np.floor(xs).astype(int), 0, w - 1)
-    y1 = np.minimum(y0 + 1, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    wy = np.clip(ys - y0, 0.0, 1.0)[:, None, None]
-    wx = np.clip(xs - x0, 0.0, 1.0)[None, :, None]
-    p = img.astype(np.float64)
-    top = p[y0][:, x0] * (1 - wx) + p[y0][:, x1] * wx
-    bot = p[y1][:, x0] * (1 - wx) + p[y1][:, x1] * wx
-    out = top * (1 - wy) + bot * wy
-    return np.clip(np.floor(out + 0.5), 0, 255).astype(np.uint8)
-
 def image_features(img: np.ndarray, dim: int = 8) -> list[float]:
     """[gray mean/255, gray std/255, 6-bin normalized gray histogram]."""
     gray = (
@@ -602,7 +566,6 @@ def _fake_embedding(payload: bytes, dim: int = 8) -> list[float]:
     h = hashlib.sha256(payload or b"").digest()
     return [h[i] / 255.0 for i in range(dim)]
 
-_REAL_CODECS = {"ppm", "bmp", "png", "gif", "jpeg", "wav"}
 _REAL_IMAGE_CODECS = ("ppm", "bmp", "png", "gif", "jpeg")
 
 def decode_and_featurize(
@@ -672,101 +635,17 @@ def decode_and_featurize(
         run, IMAGE_FEATURES_SCHEMA
     )
 
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Real bilinear resize for decodable images (PNG/PPM/BMP),
-    re-encoded as PPM.  Narrow transform — no shuffle; undecodable
-    codecs are dropped (a production pipeline routes them to a
-    PIL/ffmpeg stage)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "width": [], "height": [], "payload": []}
-            for mid, codec, payload in zip(
-                pdf["media_id"], pdf["codec"], pdf["payload"]
-            ):
-                if codec not in _REAL_IMAGE_CODECS:
-                    continue
-                img = resize_bilinear(decode_image(payload), out_w, out_h)
-                rows["media_id"].append(mid)
-                rows["width"].append(out_w)
-                rows["height"].append(out_h)
-                rows["payload"].append(encode_ppm(img))
-            yield pd.DataFrame(rows)
-
-    return (
-        media.filter(F.col("modality") == "image")
-        .select("media_id", "codec", "payload")
-        .mapInPandas(run, RESIZED_SCHEMA)
-    )
-
-def sample_frames(
-    media: DataFrame, every_ms: int = 1000, max_frames: int = 8
-) -> DataFrame:
-    """Video → frame rows (one row per sampled frame).
-
-    GIF videos are REALLY demuxed (LZW decode, composited canvas,
-    graphic-control timestamps), and so are MJPEG MP4s (ISO BMFF
-    sample tables + the in-repo JPEG decoder): each sample instant
-    emits the frame active at that time, re-encoded as PPM.
-    Compressed MP4 codecs (avc1/...) stay a stub slice (decode needs
-    ffmpeg); the exploding row-shape and timestamps are real for
-    all."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_ms": [], "frame": []}
-            for _, r in pdf.iterrows():
-                if r["modality"] != "video":
-                    continue
-                n = min(max_frames, max(1, int((r["duration_ms"] or 0) // every_ms)))
-                payload = r["payload"] or b""
-                real_frames = (
-                    decode_gif(payload)
-                    if payload[:6] in (b"GIF87a", b"GIF89a")
-                    else None
-                )
-                if real_frames is None and payload[4:8] == b"ftyp":
-                    from hogzilla_spark.operators.mp4 import decode_mp4_frames
-
-                    try:
-                        real_frames = decode_mp4_frames(payload)
-                    except (NotImplementedError, ValueError):
-                        real_frames = None
-                for i in range(n):
-                    t = i * every_ms
-                    rows["media_id"].append(r["media_id"])
-                    rows["frame_idx"].append(i)
-                    rows["frame_ms"].append(t)
-                    if real_frames:
-                        active = real_frames[0][1]
-                        for start, img in real_frames:
-                            if start <= t:
-                                active = img
-                        rows["frame"].append(encode_ppm(active))
-                    else:
-                        # REAL DEPLOYMENT: ffmpeg seek+decode; stub slices bytes
-                        rows["frame"].append(payload[i::n][:256])
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "modality", "duration_ms", "payload").mapInPandas(
-        run, FRAME_SAMPLE_SCHEMA
-    )
-
-def media_summary(media: DataFrame) -> DataFrame:
-    """Pure-SQL metadata rollup (no Python): per modality/codec counts,
-    size stats — the catalog query a 100 TB media lake answers before
-    any decode."""
-    return media.groupBy("modality", "codec").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum(F.length("payload")).alias("total_bytes"),
-        F.avg(F.length("payload")).alias("avg_bytes"),
-        F.avg("duration_ms").alias("avg_duration_ms"),
-    )
-
 def synthetic_media_rows(n: int = 32) -> list[tuple]:
-    """Rows of the deterministic media table (see synthetic_media) as
-    plain tuples — usable without a SparkSession (parquet fixtures,
-    DuckDB oracles)."""
+    """Rows (MEDIA_SCHEMA order) of a deterministic media table with
+    REAL payloads where the codec is real: images cycle P6 PPM → PNG
+    (all five scanline filters) → baseline JPEG → progressive (SOF2)
+    JPEG, audio is valid 16-bit PCM WAV; videos cycle MJPEG MP4
+    (decodes end-to-end in-repo) → animated GIF (LZW, one frame per
+    second of duration) → an MP4 whose sample entry is patched to avc1
+    — structurally valid, demuxes but cannot decode, keeping the
+    compressed-codec (ffmpeg swap point) fallback exercised.  Plain
+    tuples, usable without a SparkSession (parquet fixtures, DuckDB
+    oracles)."""
     rows = []
     for i in range(n):
         modality = ["image", "audio", "video"][i % 3]
@@ -846,17 +725,6 @@ def synthetic_media_rows(n: int = 32) -> list[tuple]:
         rows.append((i, modality, codec, w, h, dur, payload))
     return rows
 
-def synthetic_media(spark, n: int = 32) -> DataFrame:
-    """Deterministic media table with REAL payloads where the codec is
-    real: images cycle P6 PPM → PNG (all five scanline filters) →
-    baseline JPEG → progressive (SOF2) JPEG, audio is valid 16-bit PCM
-    WAV; videos cycle MJPEG MP4 (decodes end-to-end in-repo) →
-    animated GIF (LZW, one frame per second of duration) → an MP4
-    whose sample entry is patched to avc1 — structurally valid, demuxes
-    but cannot decode, keeping the compressed-codec (ffmpeg swap
-    point) fallback exercised."""
-    return spark.createDataFrame(synthetic_media_rows(n), MEDIA_SCHEMA)
-
 def write_media_parquet(path: str, n: int = 32) -> str:
     """Materialize the synthetic media table as ONE parquet file so a
     Spark query and a DuckDB oracle read byte-identical payloads.
@@ -866,20 +734,13 @@ def write_media_parquet(path: str, n: int = 32) -> str:
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if os.path.exists(path):
         return path
-    rows = synthetic_media_rows(n)
-    table = pa.table(
-        {
-            "media_id": pa.array([r[0] for r in rows], pa.int64()),
-            "modality": pa.array([r[1] for r in rows], pa.string()),
-            "codec": pa.array([r[2] for r in rows], pa.string()),
-            "width": pa.array([r[3] for r in rows], pa.int32()),
-            "height": pa.array([r[4] for r in rows], pa.int32()),
-            "duration_ms": pa.array([r[5] for r in rows], pa.int64()),
-            "payload": pa.array([r[6] for r in rows], pa.binary()),
-        }
+    table = pa.Table.from_pylist(
+        [dict(zip(MEDIA_SCHEMA.names, r)) for r in synthetic_media_rows(n)],
+        schema=to_arrow_schema(MEDIA_SCHEMA),
     )
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = f"{path}.tmp.{os.getpid()}"

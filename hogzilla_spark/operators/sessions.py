@@ -1,10 +1,8 @@
 """Sessionization: gap-based session windows over event streams.
 
-Spark-first: the batch path is the native ``F.session_window`` (Catalyst
-plans it as a single shuffle on the session keys + a sort-merge session
-assembly — no Python in the loop), and the streaming path is the same
-expression over ``readStream`` with a watermark, which Structured
-Streaming runs with its built-in session-window state store.
+Spark-first: the native ``F.session_window`` (Catalyst plans it as a
+single shuffle on the session keys + a sort-merge session assembly — no
+Python in the loop).
 
 Reference scope: the reference engine's per-entity time-bucketed
 correlation (e.g. HogSFlow's per-host window accumulation,
@@ -51,29 +49,5 @@ def sessionize(
         df.withColumn("__tts", tts)
         .groupBy(*keys, F.session_window("__tts", f"{gap_ms} milliseconds"))
         .agg(*[expr.alias(name) for name, expr in aggs.items()])
-        .drop("session_window")
-    )
-
-def sessionize_stream(
-    stream_df: DataFrame,
-    time_ms_col: str,
-    keys: list[str],
-    gap_ms: int = 1_800_000,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming sessionization: same session_window expression, plus a
-    watermark so state for closed sessions is dropped.  Append-mode
-    emission: a session row is output once the watermark passes its
-    close (the standard completeness/latency trade)."""
-    tts = F.timestamp_micros((F.col(time_ms_col) * 1000).cast("long"))
-    return (
-        stream_df.withColumn("__tts", tts)
-        .withWatermark("__tts", watermark_delay)
-        .groupBy(*keys, F.session_window("__tts", f"{gap_ms} milliseconds"))
-        .agg(
-            F.min(time_ms_col).alias("session_start_ms"),
-            F.max(time_ms_col).alias("session_end_ms"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
         .drop("session_window")
     )

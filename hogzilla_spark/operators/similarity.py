@@ -42,9 +42,6 @@ def dot_expr(a: Column, b: Column) -> Column:
 def norm_expr(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
 def _as_double(vec_col: Column | str) -> Column:
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     return F.transform(c, lambda x: x.cast("double"))
@@ -70,7 +67,7 @@ def knn_brute_force(
     # query row below the join instead of re-folding both 64-dim arrays
     # inside every pair's cosine (the per-pair interpreted work drops
     # ~3×; dot/(qn·cn) is the same op order on the same doubles, so the
-    # round-6 value is bit-identical to the inline cosine_expr form)
+    # round-6 value is bit-identical to folding both norms per pair)
     q = queries.select(
         F.col(id_col).alias(query_id_col), _as_double(vec_col).alias("qv")
     ).withColumn("qn", norm_expr(F.col("qv")))
@@ -169,7 +166,7 @@ def ann_lsh_topk(
             query_id_col,
             "neighbor_id",
             # per-row norms hoisted below the join — same op order as
-            # cosine_expr (dot/(qn·cn)), bit-identical round-6 values
+            # the per-pair dot/(qn·cn), bit-identical round-6 values
             F.round(
                 dot_expr(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
             ).alias("cosine"),
@@ -249,7 +246,7 @@ def ann_ivf_topk(
             query_id_col,
             "neighbor_id",
             # per-row norms hoisted below the join — same op order as
-            # cosine_expr (dot/(qn·cn)), bit-identical round-6 values
+            # the per-pair dot/(qn·cn), bit-identical round-6 values
             F.round(
                 dot_expr(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
             ).alias("cosine"),

@@ -24,50 +24,6 @@ def tokens(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 
-def token_count(text: Column | str) -> Column:
-    return F.size(tokens(text))
-
-def char_count(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(c)
-
-def punct_ratio(text: Column | str) -> Column:
-    """Punctuation chars / total chars (0 for empty)."""
-    c = F.col(text) if isinstance(text, str) else text
-    punct = F.length(c) - F.length(F.regexp_replace(c, r"[!-/:-@\[-`{-~]", ""))
-    return F.when(F.length(c) > 0, punct.cast("double") / F.length(c)).otherwise(
-        F.lit(0.0)
-    )
-
-def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Fraction of tokens that are stopwords."""
-    sw = F.array(*[F.lit(s) for s in (stopwords or STOPWORDS_EN)])
-    tok = tokens(text)
-    hits = F.size(F.filter(tok, lambda t: F.array_contains(sw, F.lower(t))))
-    return F.when(F.size(tok) > 0, hits.cast("double") / F.size(tok)).otherwise(
-        F.lit(0.0)
-    )
-
-def avg_token_len(text: Column | str) -> Column:
-    tok = tokens(text)
-    total = F.aggregate(tok, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(tok) > 0, total.cast("double") / F.size(tok)).otherwise(
-        F.lit(0.0)
-    )
-
-def quality_score(text: Column | str) -> Column:
-    """Composite document-quality heuristic in [0,1]:
-    rewards mid-length docs and normal word lengths, penalizes
-    punctuation soup.  Deterministic, oracle-expressible."""
-    n_tok = token_count(text).cast("double")
-    length_score = F.least(n_tok / F.lit(50.0), F.lit(1.0))
-    wl = avg_token_len(text)
-    wordlen_score = F.when((wl >= 3.0) & (wl <= 10.0), F.lit(1.0)).otherwise(F.lit(0.5))
-    punct_score = F.lit(1.0) - F.least(punct_ratio(text) * 5.0, F.lit(1.0))
-    # round6u: engine-portable at exact decimal halves (ratio-of-ints
-    # inputs; see functions/scalar.round6u)
-    return round6u((length_score + wordlen_score + punct_score) / 3.0)
-
 def fingerprint(text: Column | str) -> Column:
     """Document fingerprint: md5 of the whitespace-normalized, lowercased
     text — the exact-dedup key."""
@@ -83,65 +39,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "es": ["el", "los", "las", "es", "una", "para", "que", "por", "con", "del"],
     "pt": ["o", "os", "as", "e", "um", "uma", "para", "que", "com", "nao"],
 }
-
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Per-language marker-hit counts (the scoring half of language ID)."""
-    tok = F.transform(tokens(text), lambda t: F.lower(t))
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        arr = F.array(*[F.lit(m) for m in markers])
-        out[lang] = F.size(F.filter(tok, lambda t: F.array_contains(arr, t)))
-    return out
-
-def lang_id(text: Column | str) -> Column:
-    """argmax over lang_scores with deterministic alphabetical tiebreak;
-    'und' (undetermined) when no marker hits at all."""
-    scores = lang_scores(text)
-    # build struct array (score, lang) and take max — tiebreak: when equal
-    # scores, the lexicographically LAST lang wins under struct max, so
-    # negate by comparing (score, reversed-rank) instead: use explicit fold.
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    for lang in sorted(scores):  # alphabetical; strict > keeps first maximal
-        s = scores[lang]
-        improved = s > best_score
-        best_lang = F.when(improved, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(improved, s).otherwise(best_score)
-    return best_lang
-
-def _profile_from_tokens(tok: Column, text: Column) -> list[Column]:
-    """Feature expressions over a PRE-MATERIALIZED token array — the
-    regex tokenization runs once per row instead of once per feature."""
-    n = F.size(tok)
-    nz = n > 0
-    total_len = F.aggregate(tok, F.lit(0), lambda acc, t: acc + F.length(t))
-    atl = F.when(nz, total_len.cast("double") / n).otherwise(F.lit(0.0))
-    punct = F.length(text) - F.length(F.regexp_replace(text, r"[!-/:-@\[-`{-~]", ""))
-    pr = F.when(F.length(text) > 0, punct.cast("double") / F.length(text)).otherwise(F.lit(0.0))
-    sw = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    hits = F.size(F.filter(tok, lambda t: F.array_contains(sw, F.lower(t))))
-    sr = F.when(nz, hits.cast("double") / n).otherwise(F.lit(0.0))
-    length_score = F.least(n.cast("double") / F.lit(50.0), F.lit(1.0))
-    wordlen_score = F.when((atl >= 3.0) & (atl <= 10.0), F.lit(1.0)).otherwise(F.lit(0.5))
-    punct_score = F.lit(1.0) - F.least(pr * 5.0, F.lit(1.0))
-    lower_tok = F.transform(tok, lambda t: F.lower(t))
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    for lang in sorted(LANG_MARKERS):
-        arr = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-        s = F.size(F.filter(lower_tok, lambda t: F.array_contains(arr, t)))
-        improved = s > best_score
-        best_lang = F.when(improved, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(improved, s).otherwise(best_score)
-    return [
-        n.alias("n_tokens"),
-        round6u(atl).alias("avg_token_len"),
-        round6u(pr).alias("punct_ratio"),
-        round6u(sr).alias("stopword_ratio"),
-        round6u((length_score + wordlen_score + punct_score) / 3.0).alias("quality"),
-        F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")).alias("fp"),
-        best_lang.alias("lang_pred"),
-    ]
 
 # A BPE-ish pre-tokenization regex (GPT-2 style simplification): words,
 # numbers, punctuation runs, each with optional leading space.  Both the
@@ -174,50 +71,17 @@ def scrub_pii(text: Column | str) -> Column:
         c = F.regexp_replace(c, pat, repl)
     return c
 
-# Character-trigram profiles per language (top trigrams of each
-# language's usual text, space-padded) — the classic n-gram language-ID
-# signal, usable when marker WORDS are absent (code, short strings).
-LANG_TRIGRAM_PROFILES: dict[str, list[str]] = {
-    "en": [" th", "the", "he ", " an", "and", "nd ", "ing", "ng ", " of", "of "],
-    "de": ["er ", " de", "der", "ie ", "ch ", "ein", "sch", " di", "die", "en "],
-    "fr": [" de", "de ", " le", "le ", "es ", "ent", " la", "la ", "ion", "que"],
-    "es": [" de", "de ", " la", "la ", "os ", " el", "el ", "ión", "ent", "que"],
-    "pt": [" de", "de ", " qu", "que", " co", "ão ", "os ", "ar ", "ent", " pa"],
-}
-
-def lang_id_ngram(text: Column | str) -> Column:
-    """Language ID by character-trigram profile hits (argmax, alphabetical
-    first-wins tiebreak, 'und' when nothing matches) — the n-gram
-    companion to the stopword-marker lang_id."""
-    c = F.col(text) if isinstance(text, str) else text
-    padded = F.concat(F.lit(" "), F.lower(c), F.lit(" "))
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    for lang in sorted(LANG_TRIGRAM_PROFILES):
-        score = F.lit(0)
-        for tri in LANG_TRIGRAM_PROFILES[lang]:
-            # count occurrences of the trigram: (len - len(removed)) / 3
-            score = score + (
-                (F.length(padded) - F.length(F.replace(padded, F.lit(tri), F.lit(""))))
-                / 3
-            ).cast("int")
-        improved = score > best_score
-        best_lang = F.when(improved, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(improved, score).otherwise(best_score)
-    return best_lang
-
 def text_profile(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Per-document text profile.
 
-    When `id_col` exists (the normal 100 TB shape: every document has a
-    key), token statistics run as explode → native `isin` aggregates:
+    `df` must carry `id_col` (the normal 100 TB shape: every document
+    has a key).  Token statistics run as explode → native `isin` aggregates:
     literal-list membership compiles to an InSet hash probe inside
     whole-stage codegen, ~10× the throughput of interpreted per-token
     higher-order lambdas, and the groupBy's map-side partial combine
-    means the shuffle carries one small stats row per document.  Keyless
-    frames fall back to the pure-expression form (identical values).
+    means the shuffle carries one small stats row per document.
 
     Stats are keyed by a hash of the TEXT, not by `id_col`, so duplicate
     ids (or duplicate rows) still get correct per-row profiles, and
@@ -225,7 +89,7 @@ def text_profile(
     rather than once per row.
     """
     if id_col not in df.columns:
-        return _text_profile_expr(df, text_col)
+        raise ValueError(f"text_profile needs a key column {id_col!r}")
     text = F.col(text_col)
     base = df.withColumn("__key", F.md5(text))
     lt = F.lower(F.col("__t"))
@@ -277,30 +141,6 @@ def text_profile(
         F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")).alias("fp"),
         best_lang.alias("lang_pred"),
     ).drop(*internal)
-
-def _text_profile_expr(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Expression-only profile (no key needed): all features inside ONE
-    bound-lambda struct so tokenization runs once per row — higher-order
-    functions are interpreted, and a plain projection would re-run the
-    regex split per feature (see word_shingles for the same pattern)."""
-    text = F.col(text_col)
-    prof = F.get(
-        F.transform(
-            F.array(tokens(text_col)),
-            lambda tk: F.struct(
-                *[c for c in _profile_from_tokens(tk, text)]
-            ),
-        ),
-        0,
-    )
-    out = df.withColumn("__prof", prof)
-    fields = [
-        "n_tokens", "avg_token_len", "punct_ratio", "stopword_ratio",
-        "quality", "fp", "lang_pred",
-    ]
-    return out.select("*", *[F.col(f"__prof.{f}").alias(f) for f in fields]).drop(
-        "__prof"
-    )
 
 def chunk_documents(
     df: DataFrame,

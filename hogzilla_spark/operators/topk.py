@@ -1,4 +1,4 @@
-"""Sort / limit / top-k operators (SURVEY.md §2.6 O1-O3).
+"""Sort / limit / top-k operators (SURVEY.md §2.6 O1-O2).
 
 Spark plans ``orderBy(...).limit(N)`` as TakeOrderedAndProject — no
 global sort materialization, each partition keeps N candidates — which
@@ -8,22 +8,8 @@ is exactly the scalable version of the reference's ``sortBy + take``.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 def top_k(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:
     """O1+O2: global deterministic top-k.  order_by should end with a
     unique tiebreaker for reproducible output sets."""
     return df.orderBy(*order_by).limit(k)
-
-def render_flow_list(
-    flows_struct_col: Column, order_field: str, limit: int = 1000
-) -> Column:
-    """O3/W2: the reference renders each alert's supporting flows sorted
-    desc by bytes, capped at alert.maxFlowList=1000 (HogSFlow.scala:662-696).
-    Given a collect_list(struct(...)) column, sort desc by `order_field`
-    and slice — array expression, no extra shuffle."""
-    sorted_desc = F.reverse(F.array_sort(flows_struct_col))
-    # array_sort orders by struct fields left-to-right; callers put the
-    # order field first in the struct.
-    _ = order_field
-    return F.slice(sorted_desc, 1, limit)

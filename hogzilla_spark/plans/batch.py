@@ -294,6 +294,7 @@ def main() -> None:
     import argparse
 
     from hogzilla_spark import datagen, get_spark
+    from hogzilla_spark.sources.catalog import read_table
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default="/tmp/hogzilla_out")
@@ -311,13 +312,15 @@ def main() -> None:
     spark = get_spark(app_name="hogzilla_batch")
     spark.sparkContext.setLogLevel("ERROR")
     sflows = (
-        spark.read.parquet(args.sflows) if args.sflows else datagen.sflows_df(spark)
+        read_table(spark, args.sflows, "sflows")
+        if args.sflows
+        else datagen.sflows_df(spark)
     )
     flows = None
     if args.flows == "fixtures":
         flows = datagen.flows_df(spark)
     elif args.flows:
-        flows = spark.read.parquet(args.flows)
+        flows = read_table(spark, args.flows, "flows")
     out = args.out
     run_and_persist(
         spark,

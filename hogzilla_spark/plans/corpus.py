@@ -39,8 +39,9 @@ Scale notes: every stage is one of the independently plan-tested
 operators; stages hand off doc-id-keyed tables with a localCheckpoint
 per boundary, so the composed lineage never re-derives an earlier
 stage (the incremental-LSH checkpoint lesson applied at pipeline
-grain).  Counts are one action per stage boundary — the report is the
-observability a real ingest wants anyway.
+grain), and the run releases them all before it returns.  Counts are
+one action per stage boundary — the report is the observability a real
+ingest wants anyway.
 """
 
 from __future__ import annotations
@@ -128,136 +129,146 @@ def prepare_corpus(
         stages.append(rec)
         _mark[0] = now
 
-    docs = spread_small_scan(raw).localCheckpoint(eager=True)
-    report: dict = {"input_docs": docs.count()}
-    _stage("input_scan", report["input_docs"])
+    # the run returns counts, not frames: when it ends, release every
+    # RDD persisted while it ran (its stage cuts and the ones its
+    # operators make; the run is the session's only job meanwhile)
+    jsc = spark.sparkContext._jsc
+    held = set(jsc.getPersistentRDDs().keySet())
+    try:
+        docs = spread_small_scan(raw).localCheckpoint(eager=True)
+        report: dict = {"input_docs": docs.count()}
+        _stage("input_scan", report["input_docs"])
 
-    # 1. exact dedup
-    docs = DD.dedup_exact(docs).localCheckpoint(eager=True)
-    report["after_exact_dedup"] = docs.count()
-    _stage("exact_dedup", report["after_exact_dedup"], report["input_docs"])
+        # 1. exact dedup
+        docs = DD.dedup_exact(docs).localCheckpoint(eager=True)
+        report["after_exact_dedup"] = docs.count()
+        _stage("exact_dedup", report["after_exact_dedup"], report["input_docs"])
 
-    # 2. cross-document line dedup (rewrites text)
-    lines = DD.dedup_lines(docs)
-    docs = (
-        docs.drop("text")
-        .join(lines, "doc_id")
-        .withColumnRenamed("text_clean", "text")
-        .localCheckpoint(eager=True)
-    )
-    report["lines_removed"] = docs.agg(F.sum("n_removed")).collect()[0][0] or 0
-    _stage("line_dedup", report["after_exact_dedup"])
-    stages[-1]["lines_removed"] = int(report["lines_removed"])
-
-    # 3. quality flags on the cleaned text: rule signals + the two
-    # kernel signals (repetition battery tail, compression ratio)
-    from hogzilla_spark.operators.quality import (
-        compression_ratio,
-        dup_ngram_char_fractions,
-    )
-
-    # the same Arrow kernel the registry query q_doc_quality runs, so
-    # the DuckDB oracle gates this stage's signals too
-    sig = doc_quality_signals_kernel(docs).select(
-        "doc_id", "n_tok", "gopher_pass"
-    )
-    rep = dup_ngram_char_fractions(docs).select("doc_id", "repetition_pass")
-    comp = compression_ratio(docs).select("doc_id", F.col("ratio").alias("zlib_ratio"))
-    docs = (
-        docs.join(sig, "doc_id")
-        .join(rep, "doc_id")
-        .join(comp, "doc_id")
-        .localCheckpoint(eager=True)
-    )
-    report["gopher_pass"] = docs.filter("gopher_pass").count()
-    report["repetition_pass"] = docs.filter("repetition_pass").count()
-    _stage("quality_signals", report["after_exact_dedup"])
-    stages[-1]["gopher_pass"] = report["gopher_pass"]
-    stages[-1]["repetition_pass"] = report["repetition_pass"]
-    if drop_low_quality:
-        docs = docs.filter("gopher_pass").localCheckpoint(eager=True)
-        report["after_quality_drop"] = docs.count()
-        _stage("quality_drop", report["after_quality_drop"],
-               report["after_exact_dedup"])
-
-    # 3b. optional CCNet-style LM-perplexity filter: self-train the
-    # add-k bigram LM on the (deduped, line-cleaned) survivors, score
-    # every doc, drop the high-perplexity tail.  Runs AFTER the dedup
-    # stages so boilerplate mass doesn't dominate the model, BEFORE
-    # near-dup clustering so the expensive LSH pass never pays for
-    # docs the LM already rejected.
-    if lm_ppl_max is not None:
-        from hogzilla_spark.operators.text import lm_cross_entropy, perplexity_col
-
-        lm = lm_cross_entropy(docs).select(
-            "doc_id", perplexity_col().alias("ppl")
+        # 2. cross-document line dedup (rewrites text)
+        lines = DD.dedup_lines(docs)
+        docs = (
+            docs.drop("text")
+            .join(lines, "doc_id")
+            .withColumnRenamed("text_clean", "text")
+            .localCheckpoint(eager=True)
         )
-        docs = docs.join(lm, "doc_id", "left").localCheckpoint(eager=True)
-        report["lm_scored"] = docs.filter(F.col("ppl").isNotNull()).count()
-        rows_in = (
-            report["after_quality_drop"] if drop_low_quality
-            else report["after_exact_dedup"]
+        report["lines_removed"] = docs.agg(F.sum("n_removed")).collect()[0][0] or 0
+        _stage("line_dedup", report["after_exact_dedup"])
+        stages[-1]["lines_removed"] = int(report["lines_removed"])
+
+        # 3. quality flags on the cleaned text: rule signals + the two
+        # kernel signals (repetition battery tail, compression ratio)
+        from hogzilla_spark.operators.quality import (
+            compression_ratio,
+            dup_ngram_char_fractions,
         )
-        docs = docs.filter(
-            F.col("ppl").isNull() | (F.col("ppl") <= lm_ppl_max)
-        ).localCheckpoint(eager=True)
-        report["after_lm_filter"] = docs.count()
-        _stage("lm_perplexity_filter", report["after_lm_filter"], rows_in)
-        stages[-1]["lm_scored"] = report["lm_scored"]
 
-    # 3c. optional DSIR selection: keep the dsir_keep_frac of survivors
-    # whose hashed n-gram distribution best matches the target corpus.
-    # Runs AFTER the quality/LM gates (select among docs already worth
-    # keeping), BEFORE near-dup clustering for the same reason as 3b:
-    # the LSH pass never pays for docs the selector already rejected.
-    if dsir_target is not None:
-        from hogzilla_spark.operators.sampling import dsir_select
-
-        tgt = spark.read.parquet(dsir_target)
-        n_now = report[
-            "after_lm_filter" if lm_ppl_max is not None
-            else "after_quality_drop" if drop_low_quality
-            else "after_exact_dedup"
-        ]
-        k = max(1, int(round(dsir_keep_frac * n_now)))
-        sel = dsir_select(docs, tgt, k=k, n_buckets=dsir_buckets).select(
-            "doc_id", "logw_micro"
+        # the same Arrow kernel the registry query q_doc_quality runs, so
+        # the DuckDB oracle gates this stage's signals too
+        sig = doc_quality_signals_kernel(docs).select(
+            "doc_id", "n_tok", "gopher_pass"
         )
-        docs = docs.join(sel, "doc_id").localCheckpoint(eager=True)
-        report["after_dsir_select"] = docs.count()
-        _stage("dsir_select", report["after_dsir_select"], n_now)
+        rep = dup_ngram_char_fractions(docs).select("doc_id", "repetition_pass")
+        comp = compression_ratio(docs).select("doc_id", F.col("ratio").alias("zlib_ratio"))
+        docs = (
+            docs.join(sig, "doc_id")
+            .join(rep, "doc_id")
+            .join(comp, "doc_id")
+            .localCheckpoint(eager=True)
+        )
+        report["gopher_pass"] = docs.filter("gopher_pass").count()
+        report["repetition_pass"] = docs.filter("repetition_pass").count()
+        _stage("quality_signals", report["after_exact_dedup"])
+        stages[-1]["gopher_pass"] = report["gopher_pass"]
+        stages[-1]["repetition_pass"] = report["repetition_pass"]
+        if drop_low_quality:
+            docs = docs.filter("gopher_pass").localCheckpoint(eager=True)
+            report["after_quality_drop"] = docs.count()
+            _stage("quality_drop", report["after_quality_drop"],
+                   report["after_exact_dedup"])
 
-    # 4. near-dup clusters → keep canonical member per component
-    pairs = DD.minhash_lsh_pairs(docs, min_jaccard=min_jaccard)
-    comp = DD.connected_components(pairs)
-    losers = comp.filter("node_id != component_id").select(
-        F.col("node_id").alias("doc_id")
-    )
-    docs = docs.join(losers, "doc_id", "left_anti").localCheckpoint(eager=True)
-    report["after_neardup_dedup"] = docs.count()
-    _stage(
-        "lsh_component_dedup",
-        report["after_neardup_dedup"],
-        stages[-1]["rows_out"],
-    )
+        # 3b. optional CCNet-style LM-perplexity filter: self-train the
+        # add-k bigram LM on the (deduped, line-cleaned) survivors, score
+        # every doc, drop the high-perplexity tail.  Runs AFTER the dedup
+        # stages so boilerplate mass doesn't dominate the model, BEFORE
+        # near-dup clustering so the expensive LSH pass never pays for
+        # docs the LM already rejected.
+        if lm_ppl_max is not None:
+            from hogzilla_spark.operators.text import lm_cross_entropy, perplexity_col
 
-    # 5. shard packing at document grain, then chunking
-    packed = pack_token_shards(
-        docs, token_col="n_tok", budget=shard_budget, order_col="doc_id",
-        partition_cols=shard_partition_cols,
-    )
-    packed.write.mode("overwrite").parquet(f"{out_dir}/clean_docs.parquet")
-    _stage("shard_pack_write", report["after_neardup_dedup"])
-    chunks = chunk_documents(docs, chunk_tokens=chunk_tokens, stride=stride)
-    chunks.write.mode("overwrite").parquet(f"{out_dir}/chunks.parquet")
-    report["output_docs"] = report["after_neardup_dedup"]
-    report["output_chunks"] = spark.read.parquet(
-        f"{out_dir}/chunks.parquet"
-    ).count()
-    _stage("chunk_write", report["output_chunks"], report["output_docs"])
-    report["stages"] = stages
-    report["total_seconds"] = round(time.time() - _t0, 2)
-    return report
+            lm = lm_cross_entropy(docs).select(
+                "doc_id", perplexity_col().alias("ppl")
+            )
+            docs = docs.join(lm, "doc_id", "left").localCheckpoint(eager=True)
+            report["lm_scored"] = docs.filter(F.col("ppl").isNotNull()).count()
+            rows_in = (
+                report["after_quality_drop"] if drop_low_quality
+                else report["after_exact_dedup"]
+            )
+            docs = docs.filter(
+                F.col("ppl").isNull() | (F.col("ppl") <= lm_ppl_max)
+            ).localCheckpoint(eager=True)
+            report["after_lm_filter"] = docs.count()
+            _stage("lm_perplexity_filter", report["after_lm_filter"], rows_in)
+            stages[-1]["lm_scored"] = report["lm_scored"]
+
+        # 3c. optional DSIR selection: keep the dsir_keep_frac of survivors
+        # whose hashed n-gram distribution best matches the target corpus.
+        # Runs AFTER the quality/LM gates (select among docs already worth
+        # keeping), BEFORE near-dup clustering for the same reason as 3b:
+        # the LSH pass never pays for docs the selector already rejected.
+        if dsir_target is not None:
+            from hogzilla_spark.operators.sampling import dsir_select
+
+            tgt = spark.read.parquet(dsir_target)
+            n_now = report[
+                "after_lm_filter" if lm_ppl_max is not None
+                else "after_quality_drop" if drop_low_quality
+                else "after_exact_dedup"
+            ]
+            k = max(1, int(round(dsir_keep_frac * n_now)))
+            sel = dsir_select(docs, tgt, k=k, n_buckets=dsir_buckets).select(
+                "doc_id", "logw_micro"
+            )
+            docs = docs.join(sel, "doc_id").localCheckpoint(eager=True)
+            report["after_dsir_select"] = docs.count()
+            _stage("dsir_select", report["after_dsir_select"], n_now)
+
+        # 4. near-dup clusters → keep canonical member per component
+        pairs = DD.minhash_lsh_pairs(docs, min_jaccard=min_jaccard)
+        comp = DD.connected_components(pairs)
+        losers = comp.filter("node_id != component_id").select(
+            F.col("node_id").alias("doc_id")
+        )
+        docs = docs.join(losers, "doc_id", "left_anti").localCheckpoint(eager=True)
+        report["after_neardup_dedup"] = docs.count()
+        _stage(
+            "lsh_component_dedup",
+            report["after_neardup_dedup"],
+            stages[-1]["rows_out"],
+        )
+
+        # 5. shard packing at document grain, then chunking
+        packed = pack_token_shards(
+            docs, token_col="n_tok", budget=shard_budget, order_col="doc_id",
+            partition_cols=shard_partition_cols,
+        )
+        packed.write.mode("overwrite").parquet(f"{out_dir}/clean_docs.parquet")
+        _stage("shard_pack_write", report["after_neardup_dedup"])
+        chunks = chunk_documents(docs, chunk_tokens=chunk_tokens, stride=stride)
+        chunks.write.mode("overwrite").parquet(f"{out_dir}/chunks.parquet")
+        report["output_docs"] = report["after_neardup_dedup"]
+        report["output_chunks"] = spark.read.parquet(
+            f"{out_dir}/chunks.parquet"
+        ).count()
+        _stage("chunk_write", report["output_chunks"], report["output_docs"])
+        report["stages"] = stages
+        report["total_seconds"] = round(time.time() - _t0, 2)
+        return report
+    finally:
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in held:
+                rdd.unpersist(False)
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])

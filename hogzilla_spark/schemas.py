@@ -163,14 +163,6 @@ SIGNATURES = T.StructType(
     ]
 )
 
-SENSOR = T.StructType(
-    [
-        T.StructField("sensor_id", T.LongType()),
-        T.StructField("description", T.StringType()),
-        T.StructField("hostname", T.StringType()),
-    ]
-)
-
 CLUSTERS = T.StructType(
     [
         T.StructField("title", T.StringType()),
@@ -227,7 +219,6 @@ ALL_TABLES: dict[str, T.StructType] = {
     "histograms": HISTOGRAMS,
     "events": EVENTS,
     "signatures": SIGNATURES,
-    "sensor": SENSOR,
     "clusters": CLUSTERS,
     "cluster_members": CLUSTER_MEMBERS,
     "inventory": INVENTORY,

@@ -1,70 +1,22 @@
-"""Table catalog: readers/writers with scale-oriented physical layout.
+"""Table catalog: schema-enforced reads and scan-parallelism helpers.
 
 The reference reads everything from HBase region scans; the engine's
-storage contract is columnar tables with three layout tools:
-
-  - **date partitioning** for the time-series tables (sflows, events,
-    auth) → retention purges and time-window queries prune partitions
-    instead of scanning;
-  - **bucketing by entity key** (myIP / hist_name) for the tables that
-    join repeatedly on that key → co-located joins skip the shuffle
-    entirely (verified by plan in tests);
-  - **plain parquet** for small dimensions (broadcast anyway).
-
-Streaming inputs use the same schemas via readStream (file source here;
-a Kafka deployment swaps `.format`).
+storage contract is columnar tables with the typed schemas of
+`schemas.py`.  :func:`read_table` applies a table's schema at read
+time, so a missing or mistyped column surfaces at the scan instead of
+at first use.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from hogzilla_spark.schemas import ALL_TABLES
 
 def read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Schema-enforced parquet read (missing columns surface immediately
-    instead of at first use)."""
-    schema = ALL_TABLES.get(name)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-def write_time_partitioned(
-    df: DataFrame, path: str, ts_col: str = "timestamp", epoch_unit: str = "s"
-) -> None:
-    """Time-series layout: partition by UTC date derived from the epoch
-    column.  Retention (plans/prepare) and time-window scans then prune
-    by directory."""
-    secs = F.col(ts_col).cast("long")
-    if epoch_unit == "ms":
-        secs = F.expr(f"{ts_col} div 1000")
-    day = F.date_format(F.timestamp_seconds(secs), "yyyy-MM-dd")
-    df.withColumn("__day", day).write.mode("append").partitionBy("__day").parquet(path)
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 64,
-    sort_col: str | None = None,
-) -> None:
-    """Entity-keyed layout: hash-bucketed saveAsTable.  Two tables
-    bucketed the same way join WITHOUT an exchange (verified in
-    tests/test_sources.py by asserting the plan has no shuffle) — at
-    100 TB this is the difference between a co-located merge join and
-    re-shuffling the fact table every run."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table, format="parquet")
-
-def read_stream(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Structured-streaming file source with the table's schema (the
-    S17 replacement for the reference's destructive polling)."""
-    schema = ALL_TABLES[name]
-    return spark.readStream.schema(schema).parquet(path)
+    """Parquet read of engine table `name` under its catalog schema (a
+    mistyped column fails at the scan instead of at first use)."""
+    return spark.read.schema(ALL_TABLES[name]).parquet(path)
 
 def plan_input_bytes(df: DataFrame) -> int | None:
     """Catalyst-estimated input bytes of a frame: the sum of its
@@ -160,37 +112,3 @@ def spread_small_scan(
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    name: str | None = None,
-    schema=None,
-) -> DataFrame:
-    """Schema-enforced JSONL ingest with corrupt-record capture — the
-    wire format crawls and log shippers actually deliver documents in.
-
-    The schema comes from the engine catalog (`name`) or an explicit
-    `schema`; a `_corrupt_record` column is appended so malformed lines
-    land as quarantine rows instead of silently nulling fields
-    (PERMISSIVE mode) — at 100 TB a `DROPMALFORMED` read erases the
-    evidence a data-quality sweep needs.  Line-delimited JSON is
-    SPLITTABLE (unlike multiline JSON): input parallelism is file
-    splits, same as parquet.
-    """
-    from pyspark.sql import types as T
-
-    from hogzilla_spark.schemas import ALL_TABLES
-
-    base = schema if schema is not None else ALL_TABLES.get(name)
-    if base is None:
-        raise ValueError(f"no schema for table {name!r}; pass schema=")
-    with_quarantine = T.StructType(
-        list(base.fields) + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    return (
-        spark.read.schema(with_quarantine)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )

@@ -218,8 +218,8 @@ def mk_update(
 def saved_family(histograms: DataFrame, family: str, entity: str, prefix: str) -> DataFrame:
     """Saved state of one family keyed by entity: ``entity``,
     ``<prefix>size``, ``<prefix>values`` and, when the state carries
-    them, ``<prefix>labels``.  The one reader of the ``FAMILY-entity``
-    hist_name that :func:`mk_update` writes.
+    them, ``<prefix>labels``.  With :func:`name_parts`, the only reader
+    of the ``FAMILY-entity`` hist_name that :func:`mk_update` writes.
 
     Joins against this side carry NO broadcast() hint on purpose: state
     grows with entity count (per-IP and per-user maps), so at 100× scale
@@ -235,4 +235,13 @@ def saved_family(histograms: DataFrame, family: str, entity: str, prefix: str) -
     ).select(
         F.expr(f"substring(hist_name, {len(family) + 2})").alias(entity),
         *[F.col(c).alias(prefix + c) for c in cols],
+    )
+
+def name_parts() -> tuple[Column, Column]:
+    """(family, entity) Columns of each row's ``hist_name``, for reading
+    a frame of several families in one pass; :func:`saved_family` reads
+    one family."""
+    return (
+        F.substring_index("hist_name", "-", 1),
+        F.expr("substr(hist_name, instr(hist_name, '-') + 1)"),
     )

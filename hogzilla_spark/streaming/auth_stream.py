@@ -26,6 +26,9 @@ from hogzilla_spark.detectors.auth import prepare_auth, score_auth
 from hogzilla_spark.schemas import AUTHRECORDS
 from hogzilla_spark.state import store
 
+#: micro-batches between UA-cardinality probes (see start_auth_stream)
+UA_PROBE_EVERY = 10
+
 def start_auth_stream(
     spark: SparkSession,
     input_dir: str,
@@ -34,8 +37,6 @@ def start_auth_stream(
     checkpoint_dir: str,
     cfg: EngineConfig = DEFAULT,
     trigger: dict | None = None,
-    ua_probe_every: int = 10,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """File-source streaming: drop auth-record parquet/json files into
     input_dir; each micro-batch scores against saved state, appends
@@ -58,20 +59,13 @@ def start_auth_stream(
     needs a distinct-UA estimate; probing every micro-batch is a full
     extra pass over the (persisted) batch.  Login streams' UA mix is
     stable, so the HLL estimate is probed on the first processed batch
-    and then every `ua_probe_every`-th, carried in between
-    (`ua_probe_every=1` restores per-batch probing).  Staleness is
-    bounded: a UA-fuzzing storm can at worst win `ua_probe_every - 1`
+    and then every `UA_PROBE_EVERY`-th, carried in between.  Staleness
+    is bounded: a UA-fuzzing storm can at worst win `UA_PROBE_EVERY - 1`
     batches of a too-eager broadcast before the next probe flips the
     gate; each batch is persisted, so the micro-batch dictionary stays
     batch-sized either way.
     """
-    reader = spark.readStream.schema(AUTHRECORDS)
-    if max_files_per_trigger is not None:
-        # pins micro-batch granularity (one source file ≈ one batch) —
-        # rate limiting in production, deterministic batch counts in
-        # the throughput harness
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
+    stream = spark.readStream.schema(AUTHRECORDS).parquet(input_dir)
     probe = {"n_ua": None, "since": 0}
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -93,7 +87,7 @@ def start_auth_stream(
         rec = None
         try:
             sc.setJobDescription("auth_stream.score")
-            if probe["n_ua"] is None or probe["since"] + 1 >= ua_probe_every:
+            if probe["n_ua"] is None or probe["since"] + 1 >= UA_PROBE_EVERY:
                 from pyspark.sql import functions as F
 
                 probe["n_ua"] = batch_df.agg(
@@ -128,39 +122,3 @@ def start_auth_stream(
     )
     writer = writer.trigger(**(trigger or {"processingTime": "10 seconds"}))
     return writer.start()
-
-def wordcount(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """A13: running word counts over a line stream — the reference's
-    streaming aggregation (HogzillaStream.scala:56-63).  Works on any
-    line-shaped streaming OR batch DataFrame; on a stream the groupBy
-    keeps running counts in the state store (update/complete mode)."""
-    from pyspark.sql import functions as F
-
-    return (
-        lines.select(
-            F.explode(
-                F.filter(F.split(value_col, r"\s+"), lambda t: t != "")
-            ).alias("word")
-        )
-        .groupBy("word")
-        .count()
-    )
-
-def start_socket_wordcount(
-    spark: SparkSession, host: str, port: int
-) -> DataFrame:
-    """S18 parity: the reference's skeleton socket word-count
-    (HogzillaStream.scala:56-63) as Structured Streaming; returns the
-    streaming DataFrame for the caller to sink."""
-    lines = (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-    return wordcount(lines)
-
-def start_file_wordcount(spark: SparkSession, input_dir: str) -> DataFrame:
-    """A13 over a replayable file source (the production shape: exactly
-    -once via checkpoint, unlike the at-most-once socket skeleton)."""
-    return wordcount(spark.readStream.text(input_dir))

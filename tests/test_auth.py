@@ -7,7 +7,7 @@ import pytest
 from hogzilla_spark import datagen
 from hogzilla_spark.config import DEFAULT
 from hogzilla_spark.detectors.auth import auth_profile
-from hogzilla_spark.functions.scalar import ua_family
+from hogzilla_spark.functions.scalar import ua_family_sql
 
 @pytest.fixture(scope="module")
 def result(spark):
@@ -138,7 +138,7 @@ def test_ua_family_expression(spark):
         ],
         "ua string",
     )
-    got = [r.f for r in df.select(ua_family("ua").alias("f")).collect()]
+    got = [r.f for r in df.select(F.expr(ua_family_sql("ua")).alias("f")).collect()]
     assert got == ["Windows/Chrome", "Mac OS X/Safari", "Other/curl", ""]
 
 # Realistic user-agent strings → expected "OS family/browser family"
@@ -303,7 +303,7 @@ def test_ua_data_contract():
 
 def test_ua_family_realistic_fixture(spark):
     df = spark.createDataFrame([(ua,) for ua, _ in _UA_FIXTURE], "ua string")
-    got = [r.f for r in df.select(ua_family("ua").alias("f")).collect()]
+    got = [r.f for r in df.select(F.expr(ua_family_sql("ua")).alias("f")).collect()]
     want = [exp for _, exp in _UA_FIXTURE]
     mism = [
         (ua, g, w) for (ua, w), g in zip(_UA_FIXTURE, got) if g != w
@@ -325,119 +325,5 @@ _UA_EDGE_GOLDEN = [
 
 def test_ua_family_edge_golden(spark):
     df = spark.createDataFrame([(ua,) for ua, _ in _UA_EDGE_GOLDEN], "ua string")
-    got = [r.f for r in df.select(ua_family("ua").alias("f")).collect()]
+    got = [r.f for r in df.select(F.expr(ua_family_sql("ua")).alias("f")).collect()]
     assert got == [fam for _, fam in _UA_EDGE_GOLDEN]
-
-# UA → expected device (family, brand, model) under the uap-core-style
-# DEVICE_PARSERS table: Spider-first ordering, brand model-token rules,
-# the Build/ catch-all and its modern no-Build twin, desktop → Other.
-_DEVICE_FIXTURE = [
-    ("Mozilla/5.0 (iPhone; CPU iPhone OS 17_1 like Mac OS X) AppleWebKit/605.1.15 (KHTML, like Gecko) Version/17.1 Mobile/15E148 Safari/604.1",
-     ("iPhone", "Apple", "iPhone")),
-    ("Mozilla/5.0 (iPad; CPU OS 16_6 like Mac OS X) AppleWebKit/605.1.15 (KHTML, like Gecko) Version/16.6 Mobile/15E148 Safari/604.1",
-     ("iPad", "Apple", "iPad")),
-    ("Mozilla/5.0 (Linux; Android 13; SM-S918B) AppleWebKit/537.36 (KHTML, like Gecko) SamsungBrowser/23.0 Chrome/115.0.0.0 Mobile Safari/537.36",
-     ("Samsung SM-S918B", "Samsung", "SM-S918B")),
-    ("Mozilla/5.0 (Linux; Android 14; Pixel 8) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/120.0.6099.43 Mobile Safari/537.36",
-     ("Pixel 8", "Google", "Pixel 8")),
-    ("Mozilla/5.0 (Linux; U; Android 9; xx-xx; Redmi Note 8 Pro Build/PPR1.180610.011) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/71.0.3578.141 Mobile Safari/537.36",
-     ("XiaoMi Redmi Note 8 Pro", "XiaoMi", "Redmi Note 8 Pro")),
-    ("Mozilla/5.0 (Linux; Android 10; HUAWEI VOG-L29) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/88.0.4324.93 Mobile Safari/537.36",
-     ("Huawei VOG-L29", "Huawei", "VOG-L29")),
-    ("Mozilla/5.0 (Linux; Android 9; moto g(7) Build/PPOS29.114-134-4) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/74.0.3729.157 Mobile Safari/537.36",
-     ("Motorola moto g(7)", "Motorola", "moto g(7)")),
-    ("Mozilla/5.0 (Linux; Android 10; ONEPLUS A6003 Build/QKQ1.190716.003) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/85.0.4183.127 Mobile Safari/537.36",
-     ("OnePlus A6003", "OnePlus", "A6003")),
-    ("Mozilla/5.0 (Linux; Android 11; KFONWI Build/RS8332.1115N) AppleWebKit/537.36 (KHTML, like Gecko) Silk/112.5.1 like Chrome/112.0.5615.213 Safari/537.36",
-     ("Kindle Fire", "Amazon", "KFONWI")),
-    ("Mozilla/5.0 (Linux; Android 13; M2101K6G) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/119.0.6045.163 Mobile Safari/537.36",
-     ("M2101K6G", "Generic_Android", "M2101K6G")),
-    ("Mozilla/5.0 (Linux; Android 10; Weird Phone Build/QQ1A) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/90.0 Mobile Safari/537.36",
-     ("Weird Phone", "Generic_Android", "Weird Phone")),
-    ("Mozilla/5.0 (PlayStation 5/SmartTV) AppleWebKit/605.1.15 (KHTML, like Gecko)",
-     ("PlayStation 5", "Sony", "PlayStation 5")),
-    ("Mozilla/5.0 (Nintendo Switch; WifiWebAuthApplet) AppleWebKit/606.4 (KHTML, like Gecko) NF/6.0.1.15.4 NintendoBrowser/5.1.0.20393",
-     ("Nintendo Switch", "Nintendo", "Switch")),
-    ("Mozilla/5.0 (compatible; Googlebot/2.1; +http://www.google.com/bot.html)",
-     ("Spider", "Spider", "Desktop")),
-    # all-caps BOT inside a handset model must NOT read as a crawler
-    # (uap-core's own [Bb]ot case rule; found in review)
-    ("Mozilla/5.0 (Linux; Android 10; CUBOT X30 Build/QP1A.190711.020) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/88.0 Mobile Safari/537.36",
-     ("CUBOT X30", "Generic_Android", "CUBOT X30")),
-    # r11 residue: regional carrier builds (UA starts with the carrier
-    # token) and one-off handset brands — each must beat the generic
-    # Build/ catch-all's Generic_Android
-    ("DoCoMo/2.0 P906i(c100;TB;W24H15)",
-     ("DoCoMo P906i", "DoCoMo", "P906i")),
-    ("KDDI-CA31 UP.Browser/6.2.0.7.3.129 (GUI) MMP/2.0",
-     ("KDDI CA31", "KDDI", "CA31")),
-    ("SoftBank/1.0/910T/TJ001 Browser/NetFront/3.3 Profile/MIDP-2.0",
-     ("SoftBank 910T", "SoftBank", "910T")),
-    ("Vodafone/1.0/V705SH/SHJ001 Browser/UP.Browser/7.0.2.1",
-     ("Vodafone V705SH", "Vodafone", "V705SH")),
-    ("Mozilla/5.0 (Linux; Android 11; TECNO CH6i) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/88.0.4324.181 Mobile Safari/537.36",
-     ("Tecno CH6i", "Tecno", "CH6i")),
-    ("Mozilla/5.0 (Linux; Android 12; Infinix X669) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/110.0.0.0 Mobile Safari/537.36",
-     ("Infinix X669", "Infinix", "X669")),
-    ("Mozilla/5.0 (Linux; Android 11; itel A662L) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/94.0.4606.85 Mobile Safari/537.36",
-     ("itel A662L", "itel", "A662L")),
-    ("Mozilla/5.0 (Linux; Android 13; RMX3630 Build/TP1A.220905.001) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/115.0.0.0 Mobile Safari/537.36",
-     ("Realme RMX3630", "Realme", "RMX3630")),
-    ("Mozilla/5.0 (Linux; Android 9; ZTE Blade A7 Build/PPR1.180610.011) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/74.0.3729.157 Mobile Safari/537.36",
-     ("ZTE Blade A7", "ZTE", "Blade A7")),
-    ("Mozilla/5.0 (Linux; Android 11; Blade V30 Build/RP1A.200720.011) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/93.0.4577.82 Mobile Safari/537.36",
-     ("ZTE Blade V30", "ZTE", "Blade V30")),
-    ("Mozilla/5.0 (Linux; Android 8.1.0; ASUS_X00TD Build/OPM1.171019.011) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/69.0.3497.100 Mobile Safari/537.36",
-     ("ASUS_X00TD", "Asus", "ASUS_X00TD")),
-    ("Mozilla/5.0 (Linux; Android 9; HTC U12+ Build/PQ2A.190205.003) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/74.0.3729.157 Mobile Safari/537.36",
-     ("HTC U12+", "HTC", "U12+")),
-    ("Mozilla/5.0 (Linux; Android 4.4.2; ALCATEL ONE TOUCH 7041X Build/KOT49H) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/33.0.1750.136 Mobile Safari/537.36",
-     ("Alcatel 7041X", "Alcatel", "7041X")),
-    ("Mozilla/5.0 (Linux; Android 10; Lenovo TB-X606F Build/QP1A.190711.020) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/83.0.4103.101 Safari/537.36",
-     ("Lenovo TB-X606F", "Lenovo", "TB-X606F")),
-    ("Mozilla/5.0 (Linux; Android 7.1.1; MEIZU M6 Build/NMF26O) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/55.0.2883.91 Mobile Safari/537.36",
-     ("Meizu M6", "Meizu", "M6")),
-    ("Mozilla/5.0 (Linux; Android 5.1; MX4 Pro Build/LMY47D) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/50.0.2661.86 Mobile Safari/537.36",
-     ("Meizu MX4 Pro", "Meizu", "MX4 Pro")),
-    ("Mozilla/5.0 (Linux; Android 7.0; WIKO U FEEL Build/NRD90M) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/58.0.3029.83 Mobile Safari/537.36",
-     ("Wiko U FEEL", "Wiko", "U FEEL")),
-    ("Mozilla/5.0 (Linux; Android 11; BLU G91 Build/RP1A.200720.011) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/94.0.4606.85 Mobile Safari/537.36",
-     ("BLU G91", "BLU", "G91")),
-    ("Mozilla/5.0 (Linux; Android 10; Micromax IN 1b Build/QP1A.190711.020) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/88.0.4324.181 Mobile Safari/537.36",
-     ("Micromax IN 1b", "Micromax", "IN 1b")),
-    ("Mozilla/5.0 (Linux; Android 10; SH-01L Build/S2026) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/87.0.4280.141 Mobile Safari/537.36",
-     ("Sharp SH-01L", "Sharp", "SH-01L")),
-    ("Mozilla/5.0 (Macintosh; Intel Mac OS X 10_15_7) AppleWebKit/605.1.15 (KHTML, like Gecko) Version/17.1 Safari/605.1.15",
-     ("Mac", "Apple", "Mac")),
-    ("Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/120.0.0.0 Safari/537.36",
-     ("Other", "", "")),
-    ("Mozilla/5.0 (X11; Linux x86_64) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/119.0.0.0 Safari/537.36",
-     ("Other", "", "")),
-    ("", ("", "", "")),
-]
-
-def test_ua_device_fixture(spark):
-    from hogzilla_spark.functions.scalar import ua_device
-
-    df = spark.createDataFrame([(ua,) for ua, _ in _DEVICE_FIXTURE], "ua string")
-    got = [
-        (r.d.family, r.d.brand, r.d.model)
-        for r in df.select(ua_device("ua").alias("d")).collect()
-    ]
-    mism = [
-        (ua, g, w) for (ua, w), g in zip(_DEVICE_FIXTURE, got) if g != w
-    ]
-    assert not mism, mism
-
-def test_device_parsers_capture_group_sanity():
-    import re
-
-    from hogzilla_spark.functions.ua_data import DEVICE_PARSERS
-
-    assert len(DEVICE_PARSERS) > 0
-    for p in DEVICE_PARSERS:
-        rx = re.compile(p["regex"])  # Java∩RE2-safe subset sanity
-        for key in ("device_replacement", "brand_replacement", "model_replacement"):
-            if key not in p or "$1" in p.get(key, ""):
-                if key != "brand_replacement" or "$1" in p.get(key, ""):
-                    assert rx.groups >= 1, p

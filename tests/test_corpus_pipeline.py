@@ -287,6 +287,21 @@ def test_prepare_corpus_dsir_selection(spark, tmp_path):
     # gone and only target-like docs remain
     assert ids and ids <= set(range(10)), ids
 
+def test_prepare_corpus_releases_its_cached_frames(spark, tmp_path):
+    """prepare_corpus returns a report, not a frame, so it releases every
+    stage frame it materialized: a run with every optional stage on adds
+    no persisted RDD and sets no checkpoint dir."""
+    src = "/root/testdata/sf0.001"
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keySet())
+    prepare_corpus(
+        spark, src, str(tmp_path / "corpus"), drop_low_quality=True,
+        lm_ppl_max=1e9, dsir_target=f"{src}/documents.parquet", dsir_buckets=256,
+    )
+    # earlier frames may be cleaned up meanwhile; the run adds none
+    assert not set(jsc.getPersistentRDDs().keySet()) - cached_before
+    assert not jsc.sc().getCheckpointDir().isDefined()
+
 def test_corpus_ingest_stream_lm_filter(spark, tmp_path):
     """Streaming twin of stage 3b: a model trained once on a reference
     corpus scores every micro-batch; the gibberish doc is dropped at

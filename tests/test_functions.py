@@ -53,7 +53,7 @@ def test_haversine_error_sentinel(spark):
 
 def test_human_bytes(spark):
     df = spark.createDataFrame([(512.0,), (1536.0,), (1.5e9,)], "b double")
-    got = [r.h for r in df.select(S.human_bytes("b").alias("h")).collect()]
+    got = [r.h for r in df.select(F.expr(S.human_bytes_sql("b")).alias("h")).collect()]
     assert got == ["512.0b", "1.5K", "1.4G"]
 
 def test_strip_accents(spark):
@@ -61,18 +61,6 @@ def test_strip_accents(spark):
         one(spark, S.strip_accents(F.col("s")), s="São Paulo é ótima")
         == "Sao Paulo e otima"
     )
-
-def test_parse_long_default(spark):
-    assert one(spark, S.parse_long("x", -1), x="42") == 42
-    assert one(spark, S.parse_long("x", -1), x="nope") == -1
-
-def test_location_label(spark):
-    got = one(
-        spark,
-        S.location_label(F.lit(""), F.lit("SP"), F.lit("BR")),
-        dummy="x",
-    )
-    assert got == "N/A/SP/BR"
 
 # ---------------------------------------------------------------------------
 # Row goldens for the SQL-text builders.  Each expected value below is the
@@ -122,7 +110,7 @@ HUMAN_BYTES_GOLDEN = [
 
 def test_human_bytes_golden(spark):
     df = spark.createDataFrame([(v,) for v, _ in HUMAN_BYTES_GOLDEN], "b double")
-    got = [r.h for r in df.select(S.human_bytes("b").alias("h")).collect()]
+    got = [r.h for r in df.select(F.expr(S.human_bytes_sql("b")).alias("h")).collect()]
     assert got == [h for _, h in HUMAN_BYTES_GOLDEN]
 
 

@@ -131,7 +131,7 @@ def test_jpeg_420_subsampled_decode():
     assert (img[:, :, 0].astype(int) - img[:, :, 1].astype(int)).min() > 0
 
 def test_jpeg_in_media_pipeline(spark):
-    """synthetic_media's JPEG rows decode through the Spark featurize
+    """JPEG media rows decode through the Spark featurize
     path, and a JPEG of a flat image featurizes ≈ its PPM twin."""
     from hogzilla_spark.operators import multimodal as MM
 

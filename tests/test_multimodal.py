@@ -1,5 +1,5 @@
-"""Multimodal tests: real PPM/BMP/WAV codecs, resize math, Arrow batch
-shape, and stub gating for codecs that genuinely need PIL/ffmpeg."""
+"""Multimodal tests: real PPM/BMP/WAV codecs, Arrow batch shape, and
+stub gating for codecs that genuinely need PIL/ffmpeg."""
 
 import math
 import struct
@@ -8,6 +8,9 @@ import numpy as np
 import pytest
 
 from hogzilla_spark.operators import multimodal as MM
+
+def _media(spark, n):
+    return spark.createDataFrame(MM.synthetic_media_rows(n), MM.MEDIA_SCHEMA)
 
 def test_ppm_roundtrip_and_features():
     img = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
@@ -45,17 +48,8 @@ def test_wav_roundtrip_and_features():
     assert feats[0] == pytest.approx(0.5 / math.sqrt(2), abs=1e-2)  # sine RMS
     assert 0.05 < feats[1] < 0.2  # 440 Hz at 8 kHz → ~0.11 crossings/sample
 
-def test_resize_bilinear_constant_and_downsample():
-    flat = np.full((4, 4, 3), 77, dtype=np.uint8)
-    assert np.all(MM.resize_bilinear(flat, 2, 2) == 77)
-    # 2x2 checkerboard upsampled: corners keep source values
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    img[0, 0] = 200
-    up = MM.resize_bilinear(img, 4, 4)
-    assert up[0, 0, 0] == 200 and up[3, 3, 0] == 0
-
 def test_decode_and_featurize_real_codecs(spark):
-    media = MM.synthetic_media(spark, 12)
+    media = _media(spark, 12)
     out = MM.decode_and_featurize(media)
     rows = out.collect()
     assert len(rows) == 12
@@ -74,41 +68,11 @@ def test_decode_and_featurize_real_codecs(spark):
 def test_strict_mode_surfaces_stub_for_compressed_video_only(spark):
     # videos at i=2,5,8 cycle mjpeg-mp4, gif, avc1-mp4: only the avc1
     # row (media_id 8) is genuinely undecodable without ffmpeg
-    media = MM.synthetic_media(spark, 9)
+    media = _media(spark, 9)
     with pytest.raises(Exception, match="NotImplementedError|not decodable"):
         MM.decode_and_featurize(media, strict=True).collect()
     decodable = media.filter("media_id != 8")
     assert MM.decode_and_featurize(decodable, strict=True).count() == 8
-
-def test_resize_images_spark_path(spark):
-    media = MM.synthetic_media(spark, 12)
-    out = MM.resize_images(media, 4, 4).collect()
-    assert len(out) == 4  # the four image rows
-    for r in out:
-        img = MM.decode_ppm(bytes(r.payload))
-        assert img.shape == (4, 4, 3)
-
-def test_frame_sampling_rows(spark):
-    media = MM.synthetic_media(spark, 12)
-    frames = MM.sample_frames(media, every_ms=1000, max_frames=4).collect()
-    # only video rows explode; every frame row carries its timestamp
-    assert frames and all(f.frame_ms == f.frame_idx * 1000 for f in frames)
-    vids = {f.media_id for f in frames}
-    assert all(mid % 3 == 2 for mid in vids)  # synthetic: i%3==2 → video
-
-def test_media_summary_sql_only(spark):
-    media = MM.synthetic_media(spark, 12)
-    summ = {(r.modality, r.codec): r.n_items for r in MM.media_summary(media).collect()}
-    # images at i=0,3,6,9 cycle ppm, png, jpeg, jpeg-progressive
-    assert summ == {
-        ("image", "ppm"): 1,
-        ("image", "png"): 1,
-        ("image", "jpeg"): 2,
-        ("audio", "wav"): 4,
-        # videos at i=2,5,8,11 cycle mjpeg-mp4, gif, avc1-mp4, mjpeg-mp4
-        ("video", "mp4"): 3,
-        ("video", "gif"): 1,
-    }
 
 # --- PNG codec --------------------------------------------------------------
 
@@ -221,22 +185,6 @@ def test_gif_transparency_and_disposal():
     expect2 = red.copy()
     expect2[1, 1] = [0, 255, 0]
     assert np.array_equal(got[1][1], expect2)
-
-def test_gif_frame_sampling_real_frames(spark):
-    media = MM.synthetic_media(spark, 12)
-    frames = MM.sample_frames(media, every_ms=1000, max_frames=4).collect()
-    gif_rows = [f for f in frames if f.media_id in (5, 11)]
-    assert gif_rows, "synthetic gif videos must produce frames"
-    for f in gif_rows:
-        img = MM.decode_ppm(bytes(f.frame))  # real PPM-encoded frame
-        assert img.shape == (12, 16, 3)
-    # the sampled frame at t=1000 differs from t=0 (animation is real)
-    by_idx = {
-        (f.media_id, f.frame_idx): bytes(f.frame)
-        for f in gif_rows
-    }
-    if (5, 1) in by_idx:
-        assert by_idx[(5, 0)] != by_idx[(5, 1)]
 
 def test_png_features_match_ppm_features(spark):
     """A PNG and a PPM of the same pixels must featurize identically —

@@ -235,6 +235,8 @@ def test_text_quality_and_lang(spark):
     assert r.lang_pred == "en"
     assert 0.0 <= r.quality <= 1.0
     assert r.stopword_ratio > 0.4
+    with pytest.raises(ValueError):
+        TXT.text_profile(df.drop("doc_id"))
 
 def test_text_profile_duplicate_ids(spark):
     """The keyed fast path must give correct PER-ROW profiles even when
@@ -260,11 +262,14 @@ def test_text_profile_duplicate_ids(spark):
     (other,) = by_text["completely different words entirely here now"]
     assert other.n_tokens == 6
     assert other.stopword_ratio < cat_rows[0].stopword_ratio
-    # values must match the expression path exactly
-    expr = TXT._text_profile_expr(df).collect()
-    want = sorted(
-        (r.doc_id, r.text, r.n_tokens, r.quality, r.fp, r.lang_pred) for r in expr
-    )
+    # per-row values, recorded when the keyless expression form of the
+    # profile (which the keyed path used to be compared with) was deleted
+    cat = ("the cat sat on the mat", 6, 0.54, "03b8b4cdda05e6fef0ffd0c154ff8d65", "en")
+    want = [
+        (1, "completely different words entirely here now", 6, 0.706667,
+         "739841379c156c8fa3707a637fa95554", "und"),
+        (1, *cat), (1, *cat), (2, *cat),
+    ]
     got = sorted(
         (r.doc_id, r.text, r.n_tokens, r.quality, r.fp, r.lang_pred) for r in rows
     )
@@ -325,8 +330,8 @@ def test_hypertable_rollup_buckets(spark):
     ).collect()}
     assert out == {(0, "a"): 2, (60, "a"): 1, (0, "b"): 1}
 
-def test_bpe_tokens_and_ngram_lang(spark):
-    from hogzilla_spark.operators.text import lang_id_ngram, token_count_bpe
+def test_bpe_token_count(spark):
+    from hogzilla_spark.operators.text import token_count_bpe
 
     df = spark.createDataFrame(
         [
@@ -336,10 +341,8 @@ def test_bpe_tokens_and_ngram_lang(spark):
         ],
         "text string",
     )
-    out = df.select(
-        token_count_bpe("text").alias("n"), lang_id_ngram("text").alias("lang")
-    ).collect()
-    assert [(r.n, r.lang) for r in out] == [(17, "en"), (11, "de"), (2, "und")]
+    out = df.select(token_count_bpe("text").alias("n")).collect()
+    assert [r.n for r in out] == [17, 11, 2]
 
 def test_ann_recall_vs_brute_force(spark):
     """LSH and IVF approximate top-k must keep reasonable recall@5
@@ -442,6 +445,13 @@ def test_minhash_incremental_matches_full(spark, tmp_path):
     }
     assert via_index == want
 
+def _ngram_pairs(df, part, min_jaccard, max_shingle_freq=10_000):
+    """One variant ('uncapped' or 'capped') of the fused n-gram Jaccard
+    pair operator, as (id_a, id_b, jaccard) rows."""
+    return DD.ngram_jaccard_pairs_dual(
+        df, min_jaccard=min_jaccard, max_shingle_freq=max_shingle_freq
+    ).filter(F.col("part") == part).select("id_a", "id_b", "jaccard")
+
 def test_ngram_jaccard_exact_pairs(spark):
     """Exact jaccard on hand-computable docs, and recall-1 vs LSH: the
     relational plan must find every pair the LSH path finds."""
@@ -453,7 +463,7 @@ def test_ngram_jaccard_exact_pairs(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r.id_a, r.id_b): r.jaccard
-        for r in DD.ngram_jaccard_pairs(df, min_jaccard=0.1).collect()
+        for r in _ngram_pairs(df, "capped", min_jaccard=0.1).collect()
     }
     assert got == {(1, 2): 0.5}
 
@@ -464,7 +474,7 @@ def test_ngram_jaccard_exact_pairs(spark):
     }
     exact = {
         (r.id_a, r.id_b, r.jaccard)
-        for r in DD.ngram_jaccard_pairs(full, min_jaccard=0.3).collect()
+        for r in _ngram_pairs(full, "capped", min_jaccard=0.3).collect()
     }
     assert lsh <= exact  # LSH can only miss pairs, never disagree
 
@@ -545,34 +555,6 @@ def test_minhash_incremental_is_filtered_full(spark, sf):
     assert incr == filtered
     assert incr and filtered < full  # non-vacuous both ways
 
-def test_ngram_jaccard_dual_matches_two_runs(spark):
-    """r12 fusion guard: ngram_jaccard_pairs_dual (one shingle scan +
-    one self-join counting both intersections) must be row-identical —
-    including round-6 jaccards — to two separate ngram_jaccard_pairs
-    runs, on a corpus where the cap demonstrably fires (sf0.001 max
-    shingle doc-freq is 9 > cap 5)."""
-    full = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    dual = {
-        (r.part, r.id_a, r.id_b, r.jaccard)
-        for r in DD.ngram_jaccard_pairs_dual(
-            full, min_jaccard=0.3, max_shingle_freq=5
-        ).collect()
-    }
-    un = {
-        ("uncapped", r.id_a, r.id_b, r.jaccard)
-        for r in DD.ngram_jaccard_pairs(
-            full, min_jaccard=0.3, max_shingle_freq=None
-        ).collect()
-    }
-    cap = {
-        ("capped", r.id_a, r.id_b, r.jaccard)
-        for r in DD.ngram_jaccard_pairs(
-            full, min_jaccard=0.3, max_shingle_freq=5
-        ).collect()
-    }
-    assert dual == un | cap
-    assert un and cap  # both variants non-trivially exercised
-
 def test_ngram_jaccard_freq_cap_unbiased(spark):
     """Capped jaccard must be exact over the FILTERED shingle universe:
     for a pair whose overlap survives the cap, capped == uncapped once
@@ -596,11 +578,10 @@ def test_ngram_jaccard_freq_cap_unbiased(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
     def pairs(cap):
+        part, cap = ("uncapped", 10_000) if cap is None else ("capped", cap)
         return {
             (r.id_a, r.id_b): r.jaccard
-            for r in DD.ngram_jaccard_pairs(
-                df, min_jaccard=0.05, max_shingle_freq=cap
-            ).collect()
+            for r in _ngram_pairs(df, part, min_jaccard=0.05, max_shingle_freq=cap).collect()
         }
 
     capped = pairs(4)  # boiler-only shingles appear in all 9 docs → dropped
@@ -636,11 +617,11 @@ def _dedup_golden_call(name, docs):
             new, old, min_jaccard=0.3
         ),
         "decontaminate": lambda: DD.decontaminate(corpus, heldout, min_jaccard=0.3),
-        "ngram_jaccard_pairs_cap5": lambda: DD.ngram_jaccard_pairs(
-            docs, min_jaccard=0.3, max_shingle_freq=5
+        "ngram_jaccard_pairs_cap5": lambda: _ngram_pairs(
+            docs, "capped", min_jaccard=0.3, max_shingle_freq=5
         ),
-        "ngram_jaccard_pairs_uncapped": lambda: DD.ngram_jaccard_pairs(
-            docs, min_jaccard=0.3, max_shingle_freq=None
+        "ngram_jaccard_pairs_uncapped": lambda: _ngram_pairs(
+            docs, "uncapped", min_jaccard=0.3
         ),
         "ngram_jaccard_pairs_dual": lambda: DD.ngram_jaccard_pairs_dual(
             docs, min_jaccard=0.3, max_shingle_freq=5
@@ -709,15 +690,11 @@ def test_short_and_blank_docs_match_oracle(spark, tmp_path):
     )
     assert ("full", 10, 11, 0.833333) in minhash
     assert minhash == oracle("dedup_minhash")
-    ngram = tagged(
-        "uncapped", DD.ngram_jaccard_pairs(docs, min_jaccard=0.3, max_shingle_freq=None)
-    ) | tagged("capped", DD.ngram_jaccard_pairs(docs, min_jaccard=0.3, max_shingle_freq=5))
-    assert ngram == oracle("dedup_ngram_jaccard")
-    dual = rounded(
+    ngram = rounded(
         tuple(r)
         for r in DD.ngram_jaccard_pairs_dual(docs, min_jaccard=0.3, max_shingle_freq=5).collect()
     )
-    assert dual == ngram
+    assert ngram == oracle("dedup_ngram_jaccard")
     decon = rounded(
         tuple(r) for r in DD.decontaminate(corpus, heldout, min_jaccard=0.3).collect()
     )

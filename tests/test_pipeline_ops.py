@@ -11,7 +11,7 @@ from hogzilla_spark.operators.sampling import (
     portable_hash_unit,
     stratified_sample,
 )
-from hogzilla_spark.operators.sessions import sessionize, sessionize_stream
+from hogzilla_spark.operators.sessions import sessionize
 
 GAP = 1000  # ms
 
@@ -49,40 +49,6 @@ def test_sessionize_extra_aggs(spark):
         ).collect()
     }
     assert out == {0: 5.0, 5000: 9.0}
-
-def test_sessionize_stream_append_emits_closed_sessions(spark, tmp_path):
-    """Streaming session windows: sessions whose close precedes the
-    watermark are emitted in append mode."""
-    src = tmp_path / "events"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-    early = spark.createDataFrame(
-        [("a", 1_000), ("a", 1_500), ("b", 2_000)], "k string, t_ms long"
-    )
-    late = spark.createDataFrame(
-        [("a", 100_000_000)], "k string, t_ms long"  # advances the watermark
-    )
-    early.write.parquet(str(src / "f0"))
-    late.write.parquet(str(src / "f1"))
-    stream = spark.readStream.schema("k string, t_ms long").parquet(
-        str(src / "*")
-    )
-    q = (
-        sessionize_stream(stream, "t_ms", ["k"], gap_ms=GAP, watermark_delay="1 second")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.k, r.session_start_ms): r.n_events
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got[("a", 1_000)] == 2
-    assert got[("b", 2_000)] == 1
 
 def test_stratified_sample_deterministic_and_calibrated(spark):
     n = 4000

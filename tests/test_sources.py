@@ -1,61 +1,6 @@
-"""Physical-layout tests: partition pruning and shuffle-free bucketed
-joins — the storage half of the 100 TB story."""
-
-import io
-import contextlib
-
-import pyspark.sql.functions as F
+"""Catalog tests: reads apply the engine table's schema."""
 
 from hogzilla_spark.sources import catalog
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-def test_time_partitioned_write_prunes(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("a", 1_700_000_000), ("b", 1_700_000_000 + 5 * 86400)],
-        "k string, timestamp long",
-    )
-    path = str(tmp_path / "ts_table")
-    catalog.write_time_partitioned(df, path)
-    back = spark.read.parquet(path)
-    one_day = back.filter(F.col("__day") == "2023-11-14")
-    assert [r.k for r in one_day.collect()] == ["a"]
-    # partition filter appears in the scan, not as a post-filter
-    plan = _plan(one_day)
-    assert "PartitionFilters" in plan and "__day" in plan
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    # (spark.sql.warehouse.dir is static config — tables land in the
-    # default ./spark-warehouse, dropped afterwards and git-ignored)
-    left = spark.range(1000).select(
-        F.concat(F.lit("10.1.0."), (F.col("id") % 100).cast("string")).alias("myIP"),
-        (F.col("id") * 7).alias("bytes"),
-    )
-    right = spark.range(100).select(
-        F.concat(F.lit("10.1.0."), (F.col("id") % 100).cast("string")).alias("myIP"),
-        F.col("id").alias("risk"),
-    )
-    catalog.write_bucketed(left, "t_flows_bucketed", "myIP", num_buckets=8)
-    catalog.write_bucketed(right, "t_state_bucketed", "myIP", num_buckets=8)
-    l = spark.table("t_flows_bucketed")
-    r = spark.table("t_state_bucketed")
-    # disable broadcast so the join strategy decision is about bucketing
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = l.join(r, "myIP")
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        # co-located buckets: no Exchange feeds the join
-        assert "Exchange" not in plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS t_flows_bucketed")
-        spark.sql("DROP TABLE IF EXISTS t_state_bucketed")
 
 def test_schema_enforced_read(spark, tmp_path):
     from hogzilla_spark import datagen
@@ -65,21 +10,3 @@ def test_schema_enforced_read(spark, tmp_path):
     back = catalog.read_table(spark, path, "mynets")
     assert back.schema["prefix"].dataType.typeName() == "string"
     assert [r.prefix for r in back.collect()] == ["10.1."]
-
-def test_read_jsonl_documents_with_quarantine(spark, tmp_path):
-    """JSONL ingest: good lines parse under the catalog schema, corrupt
-    lines land in _corrupt_record instead of vanishing."""
-    from hogzilla_spark.sources.catalog import read_jsonl
-
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "hello world", "lang": "en", "source": "web", "n_chars": 11}\n'
-        '{"doc_id": 2, "text": "zwei", "lang": "de", "source": "web", "n_chars": 4}\n'
-        "this is not json at all\n"
-    )
-    df = read_jsonl(spark, str(p), "documents").cache()
-    good = df.filter(df._corrupt_record.isNull())
-    bad = df.filter(df._corrupt_record.isNotNull())
-    assert {r.doc_id for r in good.collect()} == {1, 2}
-    assert bad.count() == 1
-    assert "not json" in bad.collect()[0]._corrupt_record

@@ -1,22 +1,12 @@
 """Structured Streaming tests: the auth path (S17, read-once semantics
-replacing the reference's destructive consume) and the word-count
-aggregation (A13/S18) over file and socket sources."""
+replacing the reference's destructive consume) and the streaming dedup
+and near-duplicate paths."""
 
 import os
-import socket
-import threading
-import time
-
-import pyspark.sql.functions as F
 
 from hogzilla_spark import datagen
 from hogzilla_spark.state import store
-from hogzilla_spark.streaming.auth_stream import (
-    start_auth_stream,
-    start_file_wordcount,
-    start_socket_wordcount,
-    wordcount,
-)
+from hogzilla_spark.streaming.auth_stream import start_auth_stream
 
 def test_auth_stream_available_now(spark, tmp_path):
     input_dir = str(tmp_path / "auth_in")
@@ -161,95 +151,6 @@ def test_streaming_histogram_state_learn_and_score(spark, tmp_path):
     assert (a.entity, a.bucket) == ("u1", "login:WEIRD")
     assert a.ratio < 0.05
     assert 120 <= a.seen_total <= 130  # state learned across batches/restart
-
-def test_wordcount_batch_semantics(spark):
-    df = spark.createDataFrame(
-        [("a b  a",), ("",), ("b c",)], "value string"
-    )
-    got = {r.word: r["count"] for r in wordcount(df).collect()}
-    assert got == {"a": 2, "b": 2, "c": 1}
-
-def test_file_wordcount_cumulative_state(spark, tmp_path):
-    """A13: running counts must accumulate across micro-batches AND
-    across restarts from the same checkpoint (streaming agg state)."""
-    src = tmp_path / "lines"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    (src / "one.txt").write_text("spark streams words\nspark counts\n")
-    q = (
-        start_file_wordcount(spark, str(src))
-        .writeStream.format("memory")
-        .queryName("wc1")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.word: r["count"] for r in spark.sql("SELECT * FROM wc1").collect()}
-    assert got == {"spark": 2, "streams": 1, "words": 1, "counts": 1}
-
-    # restart from the same checkpoint with one more file: counts resume
-    (src / "two.txt").write_text("spark again\n")
-    q2 = (
-        start_file_wordcount(spark, str(src))
-        .writeStream.format("memory")
-        .queryName("wc2")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got2 = {r.word: r["count"] for r in spark.sql("SELECT * FROM wc2").collect()}
-    assert got2["spark"] == 3 and got2["again"] == 1
-
-def test_socket_wordcount_live(spark, tmp_path):
-    """S18: the socket-source skeleton actually consumes a live TCP
-    feed.  A local server pushes two lines; running counts appear in
-    the memory sink."""
-    server = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    server.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    server.bind(("127.0.0.1", 0))
-    port = server.getsockname()[1]
-    server.listen(1)
-
-    def feed():
-        conn, _ = server.accept()
-        conn.sendall(b"hog zilla hog\n")
-        time.sleep(0.5)
-        conn.sendall(b"zilla\n")
-        time.sleep(8)  # keep the source alive until the query is stopped
-        conn.close()
-
-    t = threading.Thread(target=feed, daemon=True)
-    t.start()
-
-    q = (
-        start_socket_wordcount(spark, "127.0.0.1", port)
-        .writeStream.format("memory")
-        .queryName("wc_sock")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        got = {}
-        while time.time() < deadline:
-            got = {
-                r.word: r["count"]
-                for r in spark.sql("SELECT * FROM wc_sock").collect()
-            }
-            if got.get("hog") == 2 and got.get("zilla") == 2:
-                break
-            time.sleep(0.5)
-        assert got.get("hog") == 2 and got.get("zilla") == 2, got
-    finally:
-        q.stop()
-        server.close()
 
 def test_dedup_stream_first_arrival_wins(spark, tmp_path):
     """Streaming exact dedup: a duplicate arriving in a LATER micro-batch
