@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from hogzilla_spark.functions.scalar import round6u
 from hogzilla_spark.operators.text import fingerprint
-from hogzilla_spark.sources.catalog import spread_small_scan
+from hogzilla_spark.sources.catalog import release_cut, spread_small_scan
 
 # --- exact dedup ------------------------------------------------------------
 
@@ -1181,13 +1181,16 @@ def connected_components(
         )
         # lazy checkpoint: the convergence sum is the materializing
         # action, so each round costs ONE job instead of two
-        labels = shortcut.localCheckpoint(eager=False)
+        superseded, labels = labels, shortcut.localCheckpoint(eager=False)
         cur = _sum(labels)
+        release_cut(superseded)
         if cur == prev:
             converged = True
             break
         prev = cur
+    release_cut(edges)
     if not converged:
+        release_cut(labels)
         # Partially-converged labels are silently WRONG (component_id
         # would not be the component minimum) — fail loudly instead.
         # With pointer jumping, rounds ~ log2(diameter): 25 covers any

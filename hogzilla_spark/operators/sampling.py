@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hogzilla_spark.functions.scalar import round6u
+from hogzilla_spark.sources.catalog import release_cut, spread_small_scan
 
 def portable_hash_unit(col: Column) -> Column:
     """Deterministic uniform [0,1) from any column: first 8 md5 hex
@@ -220,7 +221,6 @@ def _hashed_grams(
     of the lowercased whitespace tokenization (the text family's shared
     convention), bucketed by md5-first-8-hex % n_buckets."""
     from hogzilla_spark.operators.text import tokens
-    from hogzilla_spark.sources.catalog import spread_small_scan
 
     toks = tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     # tokenize+bigram explode is the heavy per-row stage and this frame
@@ -311,7 +311,7 @@ def dsir_log_ratio(
         .cast("long")
         .alias("__lam")
     )
-    return (
+    out = (
         rb.join(tb, "__b", "left")
         .select(
             "__b",
@@ -323,6 +323,9 @@ def dsir_log_ratio(
         )
         .localCheckpoint(eager=True)
     )
+    release_cut(tb)
+    release_cut(rb)
+    return out
 
 def dsir_weights(
     raw: DataFrame,

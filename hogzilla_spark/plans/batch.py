@@ -36,6 +36,7 @@ state writing is one upsert per run.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -196,9 +197,17 @@ def run_and_persist(
                 f"{out_dir}/{sink}.parquet"
             )
     result.inventory.write.mode("overwrite").parquet(f"{out_dir}/inventory.parquet")
-    result.new_reputation.write.mode("append").parquet(
-        f"{out_dir}/reputation_learned.parquet"
-    )
+    # learned reputation is a set on (ip, list, list_type): append only
+    # the rows earlier cycles have not learned already
+    learned_path = f"{out_dir}/reputation_learned.parquet"
+    learned = result.new_reputation.distinct()
+    if os.path.exists(learned_path):
+        learned = learned.join(
+            spark.read.schema(learned.schema).parquet(learned_path),
+            ["ip", "list", "list_type"],
+            "left_anti",
+        )
+    learned.write.mode("append").parquet(learned_path)
     signatures_df(spark).write.mode("overwrite").parquet(
         f"{out_dir}/signatures.parquet"
     )
@@ -350,10 +359,10 @@ def main() -> None:
     learned = spark.read.parquet(f"{out}/reputation_learned.parquet")
     if args.show_frames:
         print(f"inventory: {[tuple(r) for r in inventory.collect()]}")
-        print(f"learned reputation (all runs): {[tuple(r) for r in learned.collect()]}")
+        print(f"learned reputation (distinct, all runs): {[tuple(r) for r in learned.collect()]}")
     else:
         print(f"inventory rows: {inventory.count()}")
-        print(f"learned reputation rows (all runs): {learned.count()}")
+        print(f"learned reputation rows (distinct, all runs): {learned.count()}")
     spark.stop()
 
 if __name__ == "__main__":

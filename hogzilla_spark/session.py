@@ -60,6 +60,16 @@ def get_spark(
         at the call sites so plans do not depend on size estimation.
       - ``files.maxPartitionBytes`` left at 128m: at 100 TB that is ~800k
         input splits, which is what a 1000-executor cluster wants.
+      - Parquet sinks write zstd, not Spark's default snappy, and no call
+        site sets a codec of its own.  Every state commit rewrites the
+        whole store generation, so bytes per commit are what zstd buys,
+        at the same write time: a 200k-user HIST20-22 generation in
+        join order went 3,137,705 → 1,607,527 bytes (1.19-2.58 s →
+        1.10-1.17 s per write) and the same store as seeded went
+        2,488,184 → 468,416 bytes (0.98-3.17 s → 0.96-1.23 s), three
+        writes each, the first cold, local[2] on a 4-vCPU VM.  Readers
+        need nothing: Parquet records the codec per file, so snappy
+        files written before still load.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -91,6 +101,7 @@ def get_spark(
         # were already compressed (spark.shuffle.compress default);
         # this aligns cached blocks with them.
         .config("spark.rdd.compress", "true")
+        .config("spark.sql.parquet.compression.codec", "zstd")
     )
     # Verification harnesses (oracle comparisons) collect whole result
     # sets and opt in to a larger cap via SPARK_MAX_RESULT_SIZE; library

@@ -18,6 +18,13 @@ def read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     mistyped column fails at the scan instead of at first use)."""
     return spark.read.schema(ALL_TABLES[name]).parquet(path)
 
+def release_cut(df: DataFrame) -> None:
+    """Unpersist the RDD behind a frame cut by ``localCheckpoint``.
+    ``DataFrame.unpersist`` does not reach it: the cut is a
+    ``LogicalRDD`` over a persisted RDD, not a cache entry.  Call it
+    only once every frame that reads the cut is itself materialized."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
 def plan_input_bytes(df: DataFrame) -> int | None:
     """Catalyst-estimated input bytes of a frame: the sum of its
     optimized plan's LEAF relation sizes.

@@ -36,21 +36,28 @@ CYCLE_GOLDENS = {
 
 def test_cycle_row_goldens(spark, tmp_path):
     """`run_and_persist` writes the same events, state, inventory and
-    learned reputation as the recorded cycle.  The cycle releases every
-    frame it caches, and neither it nor a MinHash pair call leaves a
-    checkpoint directory behind."""
+    learned reputation as the recorded cycle.  A second cycle into the
+    same out dir (batch_time 21600) learns the BigProvider prefix again
+    and does not append it twice.  The cycles release every frame they
+    cache, and neither they nor a MinHash pair call leave a checkpoint
+    directory behind."""
     out = str(tmp_path)
     state = f"{out}/state/histograms.parquet"
     jsc = spark.sparkContext._jsc
     cached_before = set(jsc.getPersistentRDDs().keySet())
-    run_and_persist(
-        spark,
-        datagen.sflows_df(spark),
-        datagen.mynets_df(spark),
-        datagen.reputation_df(spark),
-        state_path=state,
-        out_dir=out,
-    )
+
+    def cycle(batch_time):
+        run_and_persist(
+            spark,
+            datagen.sflows_df(spark),
+            datagen.mynets_df(spark),
+            datagen.reputation_df(spark),
+            state_path=state,
+            out_dir=out,
+            batch_time=batch_time,
+        )
+
+    cycle(0)
     got = {
         "events": _digest(spark.read.parquet(f"{out}/events.parquet")),
         "state": _digest(store.load(spark, state)),
@@ -60,7 +67,12 @@ def test_cycle_row_goldens(spark, tmp_path):
         ),
     }
     assert got == CYCLE_GOLDENS
-    # earlier frames may be cleaned up meanwhile; the cycle adds none
+    cycle(21600)
+    learned = spark.read.parquet(f"{out}/reputation_learned.parquet").collect()
+    assert [tuple(r) for r in learned if r.list == "BigProvider"] == [
+        ("124.124.124.", "BigProvider", "whitelist")
+    ]
+    # earlier frames may be cleaned up meanwhile; the cycles add none
     assert not set(jsc.getPersistentRDDs().keySet()) - cached_before
     docs = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),

@@ -796,6 +796,44 @@ def test_connected_components_raises_on_max_iter(spark):
     with pytest.raises(RuntimeError, match="did not converge"):
         DD.connected_components(pairs, max_iter=1)
 
+def test_cut_operators_leave_only_the_frame_they_return(spark):
+    """A call registers one persisted RDD, the cut behind the frame it
+    returns: `connected_components` releases its edge cut and every
+    superseded label cut, and `dsir_log_ratio` its two count cuts, once
+    the frame they return is materialized.  The frames still read
+    after the release."""
+    from hogzilla_spark.operators.sampling import dsir_select
+
+    jsc = spark.sparkContext._jsc
+
+    def added(call):
+        before = set(jsc.getPersistentRDDs().keySet())
+        out = call()
+        return len(set(jsc.getPersistentRDDs().keySet()) - before), out
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy dog"),
+         (3, "an entirely different sentence about other things")],
+        "doc_id long, text string",
+    )
+    n, pairs = added(lambda: DD.minhash_lsh_pairs(docs))
+    assert (n, pairs.count()) == (1, 1)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(16)], "id_a long, id_b long"
+    )
+    n, comps = added(lambda: DD.connected_components(chain))
+    assert n == 1
+    assert {r.component_id for r in comps.collect()} == {0}
+    raw = spark.createDataFrame(
+        [(i, "alpha beta" if i % 2 else "qq zz") for i in range(20)],
+        "doc_id long, text string",
+    )
+    target = spark.createDataFrame([(100, "alpha beta gamma")], "doc_id long, text string")
+    n, sel = added(lambda: dsir_select(raw, target, k=8, n_buckets=128))
+    assert n == 1
+    assert sel.count() == 8
+
 def test_semantic_dedup_keeps_lowest_id(spark):
     from hogzilla_spark.operators.similarity import semantic_dedup
 

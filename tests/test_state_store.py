@@ -8,6 +8,9 @@ Contract under test:
   - DataFrames loaded before a save still resolve after it (the old
     generation survives one cycle)
   - upsert() is load → apply_updates → save
+  - a generation is zstd Parquet clustered by hist_name in each file,
+    and a generation written as snappy in join order still loads and
+    merges
   - apply_updates() is one projection over one full-outer join: each
     row merges per its mode, and the updates plan is evaluated once
 """
@@ -33,12 +36,40 @@ def _gens(path):
     return sorted(n for n in os.listdir(path) if n.startswith("gen-"))
 
 
+def _layout(gen_dir):
+    """(codecs of every column chunk, hist_name column of each file) of
+    one generation, read from the Parquet files themselves."""
+    import pyarrow.parquet as pq
+
+    codecs, names = set(), []
+    for f in sorted(os.listdir(gen_dir)):
+        if not f.endswith(".parquet"):
+            continue
+        pf = pq.ParquetFile(os.path.join(gen_dir, f))
+        md = pf.metadata
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            codecs |= {rg.column(j).compression for j in range(rg.num_columns)}
+        names.append(pf.read(columns=["hist_name"]).column(0).to_pylist())
+    return codecs, names
+
+
+def _current_layout(path):
+    return _layout(os.path.join(path, store._current_gen(path)))
+
+
 def test_save_load_roundtrip(spark, tmp_path):
+    """The generation is zstd and each file's rows are clustered by
+    hist_name, whatever order the saved frame had."""
     path = str(tmp_path / "st")
-    store.save(_mk_state(spark, ["HIST01-a", "HIST01-b"]), path)
-    assert store.load(spark, path).count() == 2
+    names = ["HIST22-u3", "HIST20-u1", "HIST21-u2", "HIST20-u0", "HIST01-b", "HIST01-a"]
+    store.save(_mk_state(spark, names).coalesce(1), path)
+    assert store.load(spark, path).count() == 6
     assert len(_gens(path)) == 1
     assert store._current_gen(path) in _gens(path)
+    codecs, files = _current_layout(path)
+    assert codecs == {"ZSTD"}
+    assert [n for f in files for n in f] == sorted(names)
 
 
 def test_load_missing_is_empty(spark, tmp_path):
@@ -170,6 +201,31 @@ def test_apply_updates_mixed_modes_golden(spark):
     saved = spark.createDataFrame(_MIXED_SAVED, HISTOGRAMS)
     merged = store.apply_updates(saved, _mk_updates(spark, _MIXED_UPDATES))
     assert _rows(merged) == _MIXED_GOLDEN
+
+
+def test_snappy_unsorted_generation_loads_and_upserts(spark, tmp_path):
+    """A store whose current generation was written as snappy in join
+    order (the layout before zstd and clustering) loads and merges to
+    the same rows, and the generation its upsert commits is zstd and
+    clustered by hist_name."""
+    path = str(tmp_path / "st")
+    old = os.path.join(path, "gen-snappy0")
+    rows = _MIXED_SAVED[::-1]
+    spark.createDataFrame(rows, HISTOGRAMS).coalesce(1).write.option(
+        "compression", "snappy"
+    ).parquet(old)
+    with open(os.path.join(path, "CURRENT"), "w", encoding="ascii") as fh:
+        fh.write("gen-snappy0\n")
+    codecs, files = _current_layout(path)
+    assert codecs == {"SNAPPY"}
+    assert files == [[r[0] for r in rows]]
+    assert _rows(store.load(spark, path)) == sorted(_MIXED_SAVED, key=lambda t: t[0])
+
+    store.upsert(spark, _mk_updates(spark, _MIXED_UPDATES), path)
+    assert _rows(store.load(spark, path)) == _MIXED_GOLDEN
+    codecs, files = _current_layout(path)
+    assert codecs == {"ZSTD"}
+    assert all(f == sorted(f) for f in files)
 
 
 def test_apply_updates_null_size_saved_row_emitted_once(spark):
