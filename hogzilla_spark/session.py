@@ -65,7 +65,7 @@ def get_spark(
         whole store generation, so bytes per commit are what zstd buys,
         at the same write time: a 200k-user HIST20-22 generation in
         join order went 3,137,705 → 1,607,527 bytes (1.19-2.58 s →
-        1.10-1.17 s per write) and the same store as seeded went
+        1.12-1.13 s per write) and the same store as seeded went
         2,488,184 → 468,416 bytes (0.98-3.17 s → 0.96-1.23 s), three
         writes each, the first cold, local[2] on a 4-vCPU VM.  Readers
         need nothing: Parquet records the codec per file, so snappy
