@@ -223,21 +223,13 @@ def _hashed_grams(
     from hogzilla_spark.operators.text import tokens
 
     toks = tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
-    # tokenize+bigram explode is the heavy per-row stage and this frame
-    # is built three times per dsir_select call — floor parallelism on
-    # small single-split scans (no-op at scale).  Work-aware (r13): the
-    # per-byte work here is moderate, so the floor only pays once the
-    # single split carries megabytes — at sf0.1 the unconditional r12
-    # floor inserted 3 round-robin exchanges for a 584 KB scan and the
-    # driver measured dsir_select 1.8× SLOWER (8 cores beat 32), while
-    # at sf1 (5.8 MB, still one split) the same floor won 2×.  Below
-    # min_bytes the scan passes through untouched; above it the target
-    # is sized so each task keeps >=128 KB of text.
-    d = spread_small_scan(
-        df.select(F.col(id_col), F.col(text_col)),
-        min_bytes=2 * 1024 * 1024,
-        bytes_per_task=128 * 1024,
-    ).select(F.col(id_col), toks.alias("__w"))
+    # the tokenize+bigram explode is the heavy per-row stage, built three
+    # times per dsir_select call.  On local[4] the plain floor ran
+    # q_dsir_select as fast as a byte-gated one or faster at sf0.1 and
+    # sf1, and 1.6x faster than no floor at sf1 (single-split scans).
+    d = spread_small_scan(df.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col), toks.alias("__w")
+    )
     # ONE explode over unigrams ++ bigrams: a union of two explodes
     # tokenizes every document twice, and this frame is built three
     # times per dsir_select call (fit target, fit raw, score raw)

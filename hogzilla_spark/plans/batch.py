@@ -189,7 +189,11 @@ def run_and_persist(
         result = run_sflow_batch(
             spark, sflows, mynets, reputation, histograms, cfg, batch_time
         )
-    result.alerts.write.mode("append").parquet(f"{out_dir}/events.parquet")
+    # AQE sizes the appended files from the alert bytes: a cycle's few
+    # alerts land as one file instead of one per detector partition
+    result.alerts.hint("rebalance").write.mode("append").parquet(
+        f"{out_dir}/events.parquet"
+    )
     # S11: persist the HIST01 server-profile clustering when present
     for name, sink in (("hist_clusters", "clusters"), ("hist_cluster_members", "cluster_members")):
         if name in result.per_detector:

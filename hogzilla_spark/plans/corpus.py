@@ -176,8 +176,9 @@ def prepare_corpus(
             .join(comp, "doc_id")
             .localCheckpoint(eager=True)
         )
-        report["gopher_pass"] = docs.filter("gopher_pass").count()
-        report["repetition_pass"] = docs.filter("repetition_pass").count()
+        report["gopher_pass"], report["repetition_pass"] = docs.agg(
+            F.count_if("gopher_pass"), F.count_if("repetition_pass")
+        ).first()
         _stage("quality_signals", report["after_exact_dedup"])
         stages[-1]["gopher_pass"] = report["gopher_pass"]
         stages[-1]["repetition_pass"] = report["repetition_pass"]

@@ -2,6 +2,7 @@
 sFlow + ML modules + histogram clustering in one pass."""
 
 import hashlib
+import os
 
 import pyspark.sql.functions as F
 
@@ -34,9 +35,13 @@ CYCLE_GOLDENS = {
     "reputation_learned": (1, "1878455519330231"),
 }
 
+def _part_files(path) -> int:
+    return sum(f.endswith(".parquet") for f in os.listdir(path))
+
 def test_cycle_row_goldens(spark, tmp_path):
     """`run_and_persist` writes the same events, state, inventory and
-    learned reputation as the recorded cycle.  A second cycle into the
+    learned reputation as the recorded cycle, and appends each cycle's
+    few alerts as one events file.  A second cycle into the
     same out dir (batch_time 21600) learns the BigProvider prefix again
     and does not append it twice.  The cycles release every frame they
     cache, and neither they nor a MinHash pair call leave a checkpoint
@@ -67,7 +72,9 @@ def test_cycle_row_goldens(spark, tmp_path):
         ),
     }
     assert got == CYCLE_GOLDENS
+    assert _part_files(f"{out}/events.parquet") == 1
     cycle(21600)
+    assert _part_files(f"{out}/events.parquet") == 2
     learned = spark.read.parquet(f"{out}/reputation_learned.parquet").collect()
     assert [tuple(r) for r in learned if r.list == "BigProvider"] == [
         ("124.124.124.", "BigProvider", "whitelist")

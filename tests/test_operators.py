@@ -81,6 +81,18 @@ def test_minhash_finds_near_dups(spark):
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
     assert pairs[0].jaccard > 0.6
 
+def test_dedup_eager_pair_sets_still_materialize(spark):
+    """q_dedup_minhash-class wins depend on the pair set materializing
+    at EVERY size: the returned frame must not re-run the LSH self-join
+    per consumer."""
+    import __spark_entry__ as E
+
+    docs = spark.read.parquet(f"{E.SF_DEFAULT}/documents.parquet")
+    out = DD.minhash_lsh_pairs(docs, min_jaccard=0.3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan
+    assert "Exchange" not in plan
+
 def test_simhash_hamming(spark):
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tomorrow")

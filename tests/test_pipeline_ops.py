@@ -408,3 +408,18 @@ def test_dsir_select_gumbel_deterministic(spark):
         h = int(hashlib.md5(str(r.doc_id).encode()).hexdigest()[:8], 16)
         g = round(-math.log(-math.log((h + 0.5) / 2**32)) * 1e6)
         assert r.score_micro == r.logw_micro + g
+
+def test_dsir_grams_floor_single_split_scan(spark):
+    """The sf0.001 documents file is one unsplittable split; the gram
+    frame the DSIR fit and scoring passes explode from it runs on
+    every core, like every other spread_small_scan caller."""
+    import __spark_entry__ as E
+    from hogzilla_spark.operators.sampling import _hashed_grams
+
+    docs = spark.read.parquet(f"{E.SF_DEFAULT}/documents.parquet")
+    assert docs.rdd.getNumPartitions() == 1
+    grams = _hashed_grams(docs, "doc_id", "text", 256)
+    assert (
+        grams.rdd.getNumPartitions()
+        == spark.sparkContext.defaultParallelism
+    )
