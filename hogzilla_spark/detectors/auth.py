@@ -8,8 +8,10 @@ and the 300 km haversine radius against every saved location.
 
 The reference processes records one-by-one with per-record HBase
 get/merge; the engine scores the whole batch against saved state with
-one join per family and emits one combined per-user-record alert row
-(sig 826001204 — the only live alert path, :414-432).
+one join to the touched users' HIST20-22 rows, derives all three
+families' updates from one aggregate, and emits one combined
+per-user-record alert row (sig 826001204 — the only live alert path,
+:414-432).
 
 Reference-parity note: the service branch's learn gate reads the
 USER-AGENT histogram size (HogAuth.scala:398 — a copy/paste slip in the
@@ -18,35 +20,32 @@ reference); we reproduce actual behavior and flag it here.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hogzilla_spark.config import AuthConfig, HistogramConfig
 from hogzilla_spark.detectors.base import SIGNATURES, mk_alert
 from hogzilla_spark.functions.scalar import (
     haversine_from_coords,
+    sql_quote,
     strip_accents,
     ua_family_sql,
 )
 from hogzilla_spark.operators.histogram import EPSILON
-from hogzilla_spark.state.store import mk_update, saved_family
+from hogzilla_spark.state.store import mk_update, saved_families
 
 def prepare_auth(auth: DataFrame, ua_count_hint: int | None = None) -> DataFrame:
     """Projection + validity filter (HogAuth.scala:272-316): accents
     stripped, UA parsed to family, coords sanity, non-empty user.
 
-    CONTRACT NOTE — this function is not fully lazy by default: unless
-    `ua_count_hint` is given, it runs ONE eager Spark job (the
-    shuffle-free ``approx_count_distinct`` probe below) at
-    plan-construction time to pick the dictionary-join strategy.
-    Callers that (a) loop per micro-batch or (b) read a
-    non-deterministic source should persist the input and/or pass a
-    carried `ua_count_hint` so the gate, the dictionary, and the fact
-    join all observe the same data and the probe isn't re-paid per
-    call.  streaming/auth_stream.py does both, and also persists this
-    function's OUTPUT, which `score_auth` reads for the alerts and for
-    each update family: the dictionary join and the CASE tree run once
-    per micro-batch, not once per consumer.
+    Not fully lazy by default: unless `ua_count_hint` is given, it
+    runs ONE eager Spark job (the shuffle-free
+    ``approx_count_distinct`` probe below) at plan-construction time
+    to pick the dictionary-join strategy.  A caller that already
+    aggregates its input passes the estimate instead:
+    streaming/auth_stream.py takes it from the same aggregate that
+    counts the micro-batch, so the gate reads the rows it plans and no
+    probe job runs.
 
     UA parsing is dictionary-encoded: the ~140-rule uap-core rlike
     chain evaluates once per DISTINCT user-agent string and the
@@ -104,11 +103,13 @@ def prepare_auth(auth: DataFrame, ua_count_hint: int | None = None) -> DataFrame
         .filter((F.length("coords") < 30) & (F.length("userName") > 0))
     )
 
-def _ends_with_any(c: Column, suffixes: list[str]) -> Column:
-    out = F.lit(False)
-    for s in sorted(suffixes):
-        out = out | c.endswith(s)
-    return out
+def _not_in_sql(x: str, values: frozenset[str]) -> str:
+    """`x` is none of `values`, as SQL text (true for an empty set)."""
+    return f"NOT {x} IN ({', '.join(map(sql_quote, sorted(values)))})" if values else "true"
+
+def _not_ends_with_sql(x: str, suffixes: frozenset[str]) -> str:
+    """`x` ends with none of `suffixes`, as SQL text."""
+    return " AND ".join(["true"] + [f"NOT endswith({x}, {sql_quote(s)})" for s in sorted(suffixes)])
 
 def auth_profile(
     auth: DataFrame,
@@ -134,74 +135,65 @@ def score_auth(
     batch_time: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """Score `prepare_auth`'s output against saved state: returns
-    (combined alerts 826001204, state updates for HIST20/21/22).  The
-    alerts and all three update families read `rec`; a caller that
-    persists it (streaming/auth_stream.py) runs the UA dictionary join
-    and the CASE tree once for all four."""
-    loc_label = F.concat(
-        F.regexp_replace(F.trim("city"), " ", "_"),
-        F.lit("/"),
-        F.regexp_replace(F.trim("country"), " ", "_"),
-    )
-    service_label = F.concat(
-        F.regexp_replace(F.trim("agent"), " ", "_"),
-        F.lit("/"),
-        F.regexp_replace(F.trim("service"), " ", "_"),
-    )
-    rec = rec.withColumn("loc_label", loc_label).withColumn("service_label", service_label)
+    (combined alerts 826001204, state updates for HIST20/21/22).
 
-    s20 = saved_family(histograms, "HIST20", "userName", "HIST20_")
-    s21 = saved_family(histograms, "HIST21", "userName", "HIST21_")
-    s22 = saved_family(histograms, "HIST22", "userName", "HIST22_")
-    # no broadcast hint on saved state: per-user histograms grow with the
-    # user population — let the planner/AQE pick the strategy by size
-    # (see store.saved_family)
-    joined = (
-        rec.join(s20, "userName", "left")
-        .join(s21, "userName", "left")
-        .join(s22, "userName", "left")
+    The records join, once, the saved HIST20-22 rows of the users they
+    touch, pivoted to user grain (store.saved_families).  The updates
+    of all three families come from one two-level aggregate keyed by
+    family and user.  The expressions are parsed from SQL text, with
+    the haversine test bound first (mk_alert's shape): a Column-API
+    build of these plans costs ~4,500 py4j round trips per call."""
+    label = lambda a, b: (
+        f"concat(regexp_replace(trim({a}), ' ', '_'), '/', regexp_replace(trim({b}), ' ', '_'))"
     )
-
-    sentinel = lambda c: (F.col(c) == "N/A") | (F.col(c) == " ") | (F.col(c) == "")
+    rec = rec.selectExpr(
+        "*", f"{label('city', 'country')} AS loc_label",
+        f"{label('agent', 'service')} AS service_label",
+    )
+    saved = saved_families(
+        histograms, ["HIST20", "HIST21", "HIST22"], "userName", rec.select("userName")
+    )
+    atypical = lambda hist, key: (
+        f"coalesce(element_at({hist}_values, {key}), 0.0D) <= CAST({EPSILON!r} AS DOUBLE)"
+    )
+    learned = lambda hist: f"coalesce({hist}_size, 0) >= {hcfg.gate_auth}"
+    not_sentinel = lambda c: _not_in_sql(c, frozenset({"N/A", " ", ""}))
+    # the one haversine implementation is a Column expression
     near_known = F.exists(
         F.map_keys(F.coalesce("HIST20_labels", F.map_from_arrays(F.array(), F.array()))),
         lambda k: haversine_from_coords(F.col("coords"), k) < cfg.location_radius_km,
     )
-    city_event = (
-        (F.col("city") != "")
-        & (F.coalesce("HIST20_size", F.lit(0)) >= hcfg.gate_auth)
-        & (F.coalesce(F.element_at("HIST20_values", F.col("coords")), F.lit(0.0)) <= EPSILON)
-        & ~F.col("city").isin(sorted(cfg.location_excluded_cities))
-        & ~_ends_with_any(F.col("clientReverse"), list(cfg.location_domain_whitelist))
-        & ~near_known
-        & ~sentinel("city") & ~sentinel("region") & ~sentinel("country")
-    )
-    ua_event = (
-        F.col("userAgent").isNotNull()
-        & (F.col("userAgent") != "")
-        & (F.coalesce("HIST21_size", F.lit(0)) >= hcfg.gate_auth)
-        & (F.coalesce(F.element_at("HIST21_values", F.col("userAgent")), F.lit(0.0)) <= EPSILON)
-        & ~_ends_with_any(F.col("clientReverse"), list(cfg.ua_domain_whitelist))
-    )
-    if cfg.ua_excluded_cities:  # HogAuth.scala:383-384 (default empty)
-        ua_event = ua_event & ~F.col("city").isin(sorted(cfg.ua_excluded_cities))
+    city_event = " AND ".join([
+        "city <> ''", learned("HIST20"), atypical("HIST20", "coords"),
+        _not_in_sql("city", cfg.location_excluded_cities),
+        _not_ends_with_sql("clientReverse", cfg.location_domain_whitelist),
+        "NOT __near_known",
+        not_sentinel("city"), not_sentinel("region"), not_sentinel("country"),
+    ])
+    # HogAuth.scala:383-384 and :401-402: per-branch excluded cities
+    # (empty by default)
+    ua_event = " AND ".join([
+        "userAgent IS NOT NULL", "userAgent <> ''", learned("HIST21"),
+        atypical("HIST21", "userAgent"),
+        _not_ends_with_sql("clientReverse", cfg.ua_domain_whitelist),
+        _not_in_sql("city", cfg.ua_excluded_cities),
+    ])
     # gate reads HIST21 size — reference slip preserved (HogAuth.scala:398)
-    service_event = (
-        (F.coalesce("HIST21_size", F.lit(0)) >= hcfg.gate_auth)
-        & (F.coalesce(F.element_at("HIST22_values", F.col("service_label")), F.lit(0.0)) <= EPSILON)
-        & ~_ends_with_any(F.col("clientReverse"), list(cfg.system_domain_whitelist))
-    )
-    if cfg.system_excluded_cities:  # HogAuth.scala:401-402 (default empty)
-        service_event = service_event & ~F.col("city").isin(
-            sorted(cfg.system_excluded_cities)
+    service_event = " AND ".join([
+        learned("HIST21"), atypical("HIST22", "service_label"),
+        _not_ends_with_sql("clientReverse", cfg.system_domain_whitelist),
+        _not_in_sql("city", cfg.system_excluded_cities),
+    ])
+    scored = (
+        rec.join(saved, "userName", "left")
+        .select("*", near_known.alias("__near_known"))
+        .selectExpr(
+            "*", f"{city_event} AS cityEvent", f"{ua_event} AS UAEvent",
+            f"{service_event} AS systemEvent",
         )
-    scored = joined.select(
-        "*",
-        city_event.alias("cityEvent"),
-        ua_event.alias("UAEvent"),
-        service_event.alias("systemEvent"),
-    ).filter(F.col("cityEvent") | F.col("UAEvent") | F.col("systemEvent"))
-
+        .where("cityEvent OR UAEvent OR systemEvent")
+    )
+    flag = lambda event, then: F.expr(f"CASE WHEN {event} THEN {then} ELSE '' END")
     alerts = mk_alert(
         scored,
         SIGNATURES["auth_combined"],
@@ -211,57 +203,44 @@ def score_auth(
         {
             "userName": F.col("userName"),
             "coords": F.col("coords"),
-            "atypicalCities": F.when(
-                F.col("cityEvent"),
-                F.concat(F.trim("city"), F.lit("/"), F.trim("country")),
-            ).otherwise(F.lit("")),
-            "atypicalUserAgents": F.when(F.col("UAEvent"), F.col("userAgent")).otherwise(F.lit("")),
-            "atypicalServices": F.when(
-                F.col("systemEvent"),
-                F.concat(F.trim("agent"), F.lit("/"), F.trim("service")),
-            ).otherwise(F.lit("")),
-            "atypicalVars": F.concat(
-                F.when(F.col("systemEvent"), F.lit("S")).otherwise(F.lit("")),
-                F.when(F.col("UAEvent"), F.lit("U")).otherwise(F.lit("")),
-                F.when(F.col("cityEvent"), F.lit("C")).otherwise(F.lit("")),
+            "atypicalCities": flag("cityEvent", "concat(trim(city), '/', trim(country))"),
+            "atypicalUserAgents": flag("UAEvent", "userAgent"),
+            "atypicalServices": flag("systemEvent", "concat(trim(agent), '/', trim(service))"),
+            "atypicalVars": F.expr(
+                "concat(CASE WHEN systemEvent THEN 'S' ELSE '' END, "
+                "CASE WHEN UAEvent THEN 'U' ELSE '' END, "
+                "CASE WHEN cityEvent THEN 'C' ELSE '' END)"
             ),
         },
         batch_time,
     )
 
-    def batch_hist(df: DataFrame, bucket: Column, label: Column | None = None):
-        per = df.groupBy("userName", bucket.alias("bucket")).agg(
-            F.count(F.lit(1)).cast("double").alias("cnt"),
-            *( [F.first(label).alias("lbl")] if label is not None else [] ),
-        )
-        aggs = [
-            F.sum("cnt").alias("total"),
-            F.map_from_entries(F.collect_list(F.struct("bucket", "cnt"))).alias("raw"),
-        ]
-        if label is not None:
-            aggs.append(
-                F.map_from_entries(F.collect_list(F.struct("bucket", "lbl"))).alias("labels")
-            )
-        out = per.groupBy("userName").agg(*aggs)
-        return out.select(
-            "userName",
-            F.col("total").cast("long").alias("size"),
-            F.transform_values("raw", lambda k, v: v / F.col("total")).alias("values"),
-            *( [F.col("labels")] if label is not None else [] ),
-        )
-
-    upd20 = mk_update(
-        batch_hist(rec.filter(F.col("city") != ""), F.col("coords"), F.col("loc_label")),
-        "HIST20",
-        "userName",
+    # one (family, user, bucket) row per record and family it updates:
+    # HIST20 city-bearing records by coords (labelled "city/country"),
+    # HIST21 records with a user agent, HIST22 every record
+    entry = lambda fam, bucket, lbl, keep: (
+        f"named_struct('family', '{fam}', 'bucket', {bucket}, 'label', {lbl}, 'keep', {keep})"
     )
-    upd21 = mk_update(
-        batch_hist(
-            rec.filter(F.col("userAgent").isNotNull() & (F.col("userAgent") != "")),
-            F.col("userAgent"),
-        ),
-        "HIST21",
-        "userName",
+    no_label = "CAST(NULL AS STRING)"
+    hist = (
+        rec.selectExpr("userName", "inline(array(" + ", ".join([
+            entry("HIST20", "coords", "loc_label", "city <> ''"),
+            entry("HIST21", "userAgent", no_label, "userAgent IS NOT NULL AND userAgent <> ''"),
+            entry("HIST22", "service_label", no_label, "true"),
+        ]) + "))")
+        .where("keep")
+        .groupBy("family", "userName", "bucket")
+        .agg(F.expr("CAST(count(1) AS DOUBLE) AS cnt"), F.expr("first(label) AS label"))
+        .groupBy("family", "userName")
+        .agg(
+            F.expr("sum(cnt) AS total"),
+            F.expr("map_from_entries(collect_list(struct(bucket, cnt))) AS raw"),
+            F.expr("map_from_entries(collect_list(struct(bucket, label))) AS labels"),
+        )
+        .selectExpr(
+            "family", "userName", "CAST(total AS BIGINT) AS size",
+            "transform_values(raw, (k, v) -> v / total) AS values",
+            "map_filter(labels, (k, v) -> v IS NOT NULL) AS labels",
+        )
     )
-    upd22 = mk_update(batch_hist(rec, F.col("service_label")), "HIST22", "userName")
-    return alerts, upd20.unionByName(upd21, allowMissingColumns=False).unionByName(upd22)
+    return alerts, mk_update(hist, F.col("family"), "userName")

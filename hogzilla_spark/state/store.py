@@ -31,6 +31,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hogzilla_spark.functions.scalar import sql_quote
 from hogzilla_spark.operators.histogram import (
     merge_histograms,
     merge_labels,
@@ -233,11 +234,22 @@ def mk_update(
         (F.lit(mode) if isinstance(mode, str) else mode).alias("mode"),
     )
 
+def _family_sql(family: str) -> tuple[str, str]:
+    """(is-a-``family``-row predicate, entity) as SQL text over
+    ``hist_name``, for the ``FAMILY-entity`` names :func:`mk_update`
+    writes."""
+    # "HIST02-" must not match "HIST02.1-..." names
+    return (
+        f"startswith(hist_name, {sql_quote(family + '-')})",
+        f"substring(hist_name, {len(family) + 2})",
+    )
+
 def saved_family(histograms: DataFrame, family: str, entity: str, prefix: str) -> DataFrame:
     """Saved state of one family keyed by entity: ``entity``,
     ``<prefix>size``, ``<prefix>values`` and, when the state carries
-    them, ``<prefix>labels``.  With :func:`name_parts`, the only reader
-    of the ``FAMILY-entity`` hist_name that :func:`mk_update` writes.
+    them, ``<prefix>labels``.  With :func:`saved_families` and
+    :func:`name_parts`, the only reader of the ``FAMILY-entity``
+    hist_name that :func:`mk_update` writes.
 
     Joins against this side carry NO broadcast() hint on purpose: state
     grows with entity count (per-IP and per-user maps), so at 100× scale
@@ -247,18 +259,38 @@ def saved_family(histograms: DataFrame, family: str, entity: str, prefix: str) -
     `autoBroadcastJoinThreshold`; beyond that the equi-join shuffles on
     the entity key, which is the shape we want."""
     cols = ["size", "values"] + (["labels"] if "labels" in histograms.columns else [])
-    return histograms.filter(
-        # "HIST02-" must not match "HIST02.1-..." names
-        F.col("hist_name").startswith(family + "-")
-    ).select(
-        F.expr(f"substring(hist_name, {len(family) + 2})").alias(entity),
+    pred, ent = _family_sql(family)
+    return histograms.filter(F.expr(pred)).select(
+        F.expr(ent).alias(entity),
         *[F.col(c).alias(prefix + c) for c in cols],
+    )
+
+def saved_families(
+    histograms: DataFrame, families: list[str], entity: str, entities: DataFrame
+) -> DataFrame:
+    """Saved state of several families for the entities `entities` holds
+    (its ``entity`` column), one row per entity: ``entity`` and, per
+    family, ``<family>_size``, ``<family>_values`` and
+    ``<family>_labels``, NULL where the entity has no row of that family.
+
+    One scan of the store: its rows of `families` are cut to the
+    touched entities by a semi-join, then pivoted to entity grain, so
+    the pivot's cost follows the batch, not the store.  Like
+    :func:`saved_family`, no broadcast hint on the state side."""
+    parts = {f: _family_sql(f) for f in families}
+    picked = [(f, c) for f in families for c in ("size", "values", "labels")]
+    rows = histograms.where(" OR ".join(p for p, _ in parts.values())).selectExpr(
+        f"CASE {' '.join(f'WHEN {p} THEN {e}' for p, e in parts.values())} END AS `{entity}`",
+        *[f"IF({parts[f][0]}, {c}, NULL) AS `{f}_{c}`" for f, c in picked],
+    )
+    return rows.join(entities, entity, "left_semi").groupBy(entity).agg(
+        *[F.expr(f"first(`{f}_{c}`, true) AS `{f}_{c}`") for f, c in picked]
     )
 
 def name_parts() -> tuple[Column, Column]:
     """(family, entity) Columns of each row's ``hist_name``, for reading
     a frame of several families in one pass; :func:`saved_family` reads
-    one family."""
+    one family, :func:`saved_families` several at entity grain."""
     return (
         F.substring_index("hist_name", "-", 1),
         F.expr("substr(hist_name, instr(hist_name, '-') + 1)"),

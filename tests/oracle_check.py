@@ -30,7 +30,12 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+HERE = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(HERE)
+sys.path.insert(0, ROOT)
+# the subprocess programs below import the engine and this module from
+# the same checkout as this file
+_PATHS = f"import sys\nsys.path[:0] = [{ROOT!r}, {HERE!r}]\n"
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -229,10 +234,8 @@ def _arrow_kinds(schema) -> dict[str, str]:
             out[field.name] = "O"
     return out
 
-_DUCK_DIGEST_PROG = """
+_DUCK_DIGEST_PROG = _PATHS + """
 import json, os, sys
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 from oracle_check import duck_con, _digest_chunks, _arrow_kinds, _exact_pandas
 sf_dir, sql_path = sys.argv[1], sys.argv[2]
 shards, shard_idx = int(sys.argv[3]), int(sys.argv[4])
@@ -296,10 +299,8 @@ if cols is None:
 print(json.dumps({"rows": rows, "cols": cols, "kinds": kinds, "digest": digest}))
 """
 
-_DUCK_COUNT_PROG = """
+_DUCK_COUNT_PROG = _PATHS + """
 import json, os, sys
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
 from oracle_check import duck_con
 sf_dir, sql_path = sys.argv[1], sys.argv[2]
 os.environ.setdefault("DUCKDB_THREADS", "16")
@@ -432,9 +433,8 @@ def _duck_digest_subprocess(
     finally:
         os.unlink(sql_path)
 
-_SPARK_WRITE_PROG = """
+_SPARK_WRITE_PROG = _PATHS + """
 import os, sys
-sys.path.insert(0, "/root/repo")
 name, sf_dir, out_dir = sys.argv[1], sys.argv[2], sys.argv[3]
 os.environ.setdefault("SPARK_MAX_RESULT_SIZE", "8g")
 from hogzilla_spark import get_spark

@@ -17,6 +17,8 @@ Contract under test:
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from hogzilla_spark.operators import dedup as DD
@@ -125,7 +127,7 @@ def test_planted_band_recall_production(spark):
     import numpy as np
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from tools.ann_recall import plant_near_duplicates
 
     emb = _emb(spark)

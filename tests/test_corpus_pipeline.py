@@ -3,11 +3,14 @@ streaming twin plans/corpus_stream.py): the beyond-reference operators
 chained as one ingest run."""
 
 import datetime as dt
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from hogzilla_spark.plans.corpus import prepare_corpus
 from hogzilla_spark.plans.corpus_stream import corpus_ingest_stream
+
+ROOT = Path(__file__).resolve().parents[1]
 
 def test_prepare_corpus_end_to_end(spark, tmp_path):
     out = str(tmp_path / "corpus")
@@ -72,7 +75,7 @@ def test_prepare_corpus_stage_report(spark, tmp_path):
     import json
     import os
 
-    path = "/root/repo/CORPUS_E2E.json"
+    path = ROOT / "CORPUS_E2E.json"
     assert os.path.exists(path), "committed corpus e2e record missing"
     doc = json.load(open(path))
     assert {"_note", "src", "config", "report"} <= set(doc)
@@ -149,7 +152,7 @@ def test_prepare_corpus_planted_all_stages_select(spark, tmp_path):
 
     src = str(tmp_path / "planted_src")
     subprocess.run(
-        [_sys.executable, "/root/repo/tools/scale_testdata.py",
+        [_sys.executable, str(ROOT / "tools" / "scale_testdata.py"),
          "/root/testdata/sf0.01", src, "1", "--plant-gopher", "5"],
         check=True, capture_output=True,
     )

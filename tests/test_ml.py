@@ -1,6 +1,8 @@
 """ML module tests (M1-M8): z-score recipe, k-means taint selection,
 histogram clustering, RF train/score."""
 
+from pathlib import Path
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -93,8 +95,9 @@ def test_ml_goldens_match_committed(spark):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    root = Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(root))
     from tools.ml_goldens import record
 
-    committed = json.load(open("/root/repo/ML_GOLDENS.json"))
+    committed = json.load(open(root / "ML_GOLDENS.json"))
     assert record(spark, "/root/testdata/sf0.1") == committed["sf0.1"]

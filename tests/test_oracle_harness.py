@@ -3,10 +3,11 @@ commutative row-hash must be order- and chunking-invariant, detect any
 single-value change, and track int/float dtype-family drift."""
 
 import sys
+from pathlib import Path
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from oracle_check import _digest_chunks, _exact_pandas
 

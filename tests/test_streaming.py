@@ -2,11 +2,95 @@
 replacing the reference's destructive consume) and the streaming dedup
 and near-duplicate paths."""
 
+import hashlib
 import os
 
 from hogzilla_spark import datagen
+from hogzilla_spark.config import DEFAULT
+from hogzilla_spark.detectors.auth import auth_profile
 from hogzilla_spark.state import store
 from hogzilla_spark.streaming.auth_stream import start_auth_stream
+
+def _canon(v):
+    """Order-free value: maps become sorted (key, value) items, floats
+    are rounded to 12 decimals."""
+    if isinstance(v, dict):
+        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
+    if isinstance(v, (tuple, list)):
+        return tuple(_canon(x) for x in v)
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v).hex()
+    if isinstance(v, float):
+        return round(v, 12)
+    return v
+
+def _digest(df) -> tuple[int, str]:
+    """(rows, sha256 prefix of the sorted canonical row reprs)."""
+    rows = sorted(repr(_canon(r)) for r in df.collect())
+    return len(rows), hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
+
+def _drain(spark, tmp_path):
+    q = start_auth_stream(
+        spark, str(tmp_path / "auth_in"), str(tmp_path / "state"),
+        str(tmp_path / "alerts"), str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+# The auth fixture scored from the mature fixture state: two drains of
+# the stream (the same rows twice, so the second batch scores against
+# the first one's merge) and one `auth_profile` call.  Recorded before
+# the micro-batch was cut to one probe, one state join and one update
+# aggregate.
+AUTH_STREAM_GOLDENS = {
+    "stream_alerts": (3, "b01833a982553145"),
+    "stream_state": (6, "cad9829a88e3d58d"),
+    "profile_alerts": (3, "46a29bbe58e8ee58"),
+    "profile_updates": (6, "23f239b9e8f13a2a"),
+}
+
+def test_auth_stream_row_goldens(spark, tmp_path):
+    state_path = str(tmp_path / "state")
+    store.save(datagen.auth_histograms_df(spark), state_path)
+    for _ in range(2):
+        datagen.auth_df(spark).write.mode("append").parquet(str(tmp_path / "auth_in"))
+        _drain(spark, tmp_path)
+    assert store.last_applied_batch(state_path) == 1
+    alerts, updates = auth_profile(
+        datagen.auth_df(spark), datagen.auth_histograms_df(spark),
+        DEFAULT.auth, DEFAULT.hist,
+    )
+    got = {
+        "stream_alerts": _digest(spark.read.parquet(str(tmp_path / "alerts"))),
+        "stream_state": _digest(store.load(spark, state_path)),
+        "profile_alerts": _digest(alerts),
+        "profile_updates": _digest(updates),
+    }
+    assert got == AUTH_STREAM_GOLDENS
+
+def _jobs(spark) -> list[tuple[int, str]]:
+    """(id, description) of every job the session's status store holds."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    seq = sc.statusStore().jobsList(None)
+    descs = [(j.jobId(), j.description()) for j in map(seq.apply, range(seq.size()))]
+    return [(i, d.get() if d.isDefined() else "") for i, d in descs]
+
+def test_auth_stream_first_batch_job_bound(spark, tmp_path):
+    """The first micro-batch runs a bounded number of Spark jobs under
+    its `auth_stream.*` descriptions: one aggregate for the row count
+    and the UA estimate, the alert write over one state join, and the
+    merge of one update aggregate.  The bound is that shape's count on
+    this fixture; a probe job, a per-family state join or aggregate, or
+    an eager cache fill added back fails here (a separate probe, three
+    family joins and three aggregates ran 22)."""
+    store.save(datagen.auth_histograms_df(spark), str(tmp_path / "state"))
+    datagen.auth_df(spark).write.mode("append").parquet(str(tmp_path / "auth_in"))
+    last = max((i for i, _ in _jobs(spark)), default=-1)
+    _drain(spark, tmp_path)
+    jobs = sorted(d for i, d in _jobs(spark) if i > last and d.startswith("auth_stream."))
+    assert len(jobs) <= 15, jobs
 
 def test_auth_stream_available_now(spark, tmp_path):
     input_dir = str(tmp_path / "auth_in")
